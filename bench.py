@@ -107,10 +107,11 @@ def _pipeline_comparison(spark, sf: str) -> dict[str, float]:
     the reference reads its input from storage (`modelling.py:50`), and
     timing the synthetic generator instead measured ~6 s of md5-uniform
     math re-executed by every estimator fit on both sides (the r1↔r2
-    'regression' noise).  The engine side persists the prepared frame
-    across its iterative ML passes — deliberate engine behavior, not a
-    bench trick (cache-before-iterate is the documented scale posture);
-    the transcription stays faithful to the reference, which re-derives
+    'regression' noise).  ``prepare_flow_features`` materializes the
+    prepared frame once (a local checkpoint) for the split and the fit
+    to read — deliberate engine behavior, not a bench trick
+    (materialize-before-iterate is the documented scale posture); the
+    transcription stays faithful to the reference, which re-derives
     its lineage per action.  Engine runs FIRST (cold JIT), so the
     measured speedup is conservative."""
     from pyspark.ml.classification import DecisionTreeClassifier
@@ -136,7 +137,7 @@ def _pipeline_comparison(spark, sf: str) -> dict[str, float]:
 
         t0 = time.monotonic()
         flows = spark.read.parquet(path).persist()
-        prepared = prepare_flow_features(flows).persist()
+        prepared = prepare_flow_features(flows)
         val = hash_sample(prepared, "flow_id", 0.1, seed="bench")
         train = anti_join_split(prepared, val, "flow_id")
         model = DecisionTreeClassifier(
@@ -145,7 +146,6 @@ def _pipeline_comparison(spark, sf: str) -> dict[str, float]:
         model.transform(val).select("encoded_label", "prediction").write.format(
             "noop"
         ).mode("overwrite").save()
-        prepared.unpersist()
         flows.unpersist()
         pipeline["engine_pipeline_dt_sec"] = round(time.monotonic() - t0, 3)
 

@@ -9,12 +9,25 @@ minus its scaling anti-patterns:
   (``modelling.py:181-194``);
 * the train/validation split is hash/anti-join based (see
   ``operators/sampling.py``), never collect + NOT-IN;
-* the imputer is fit once and reused; all sampling is seeded.
+* the imputer is fit once and reused; all sampling is seeded;
+* the prepared frame is materialized once (``prepare_flow_features``),
+  never re-derived from the source per action.
 
 Every ``fit`` here is a Spark aggregation job (min/max for the scaler,
 label frequencies for the indexer, approx-quantile sketch for the
 imputer); every ``transform`` is a projection — so the whole pipeline
 scales like the relational ops do.
+
+``prepare_flow_features`` ends in ``localCheckpoint(eager=True)``: its
+three fits scan the source once each, one more job writes the prepared
+rows to the block manager (memory and disk), and every later action —
+split, classifier fits, evaluation, confusion matrix, prediction sink —
+reads those blocks.  The lazy frame it replaced made each of those
+actions re-parse the source: a reference-width CSV training pass
+(dt/rf/nb, ``perfbench`` ``ids_train_serve``) read its CSV 30.6× over.
+Callers add no ``cache()``/``persist()`` of their own and need no
+release: ``DataFrame.unpersist`` is a no-op on a local checkpoint, and
+the ContextCleaner frees its blocks once the frame is garbage-collected.
 """
 
 from __future__ import annotations
@@ -224,7 +237,16 @@ def prepare_flow_features(
 
     ``features`` defaults to the compact 13-column fixture set; pass the
     canonicalized ``CICFLOWMETER_FEATURES`` for the reference's real
-    78-dimension shape (``modelling.py:95-96``)."""
+    78-dimension shape (``modelling.py:95-96``).
+
+    The result is materialized once, after the imputer, scaler and
+    indexer fits, as a local checkpoint (memory and disk, the scan's
+    partitioning kept, so seeded tree fits downstream are unchanged).
+    Every later action reads the checkpoint instead of re-parsing the
+    source — on the reference-width CSV pass the lazy frame was read
+    30.6× over.  Do not ``cache()`` or ``unpersist()`` it: unpersist is
+    a no-op on a local checkpoint, and the ContextCleaner frees the
+    blocks once the frame is garbage-collected."""
     df = canonicalize_columns(flows)
     df = replace_inf(df, ["flow_pkts_per_s"], 4_000_000.0)
     df = df.withColumn(
@@ -236,4 +258,4 @@ def prepare_flow_features(
     df = assemble_features(df, features or FLOW_FEATURES)
     df = scale_minmax(df)
     df = encode_label(df, "label", "encoded_label")
-    return df
+    return df.localCheckpoint(eager=True)

@@ -41,23 +41,18 @@ def _n_rows(sf_dir: str) -> int:
 def _prepared_split(spark, sf_dir):
     """Fixture prep + deterministic 80/20 hash split; anti-join for the
     complement — the scalable replacement for collect + NOT-IN
-    (modelling.py:91-93).  The prepared frame is cached WITHIN the
-    query (MEMORY_AND_DISK, spillable) — iterative fitters re-read
-    their input every iteration, and recomputing the full prep lineage
-    100× is both slow and a JVM-heap hazard.
-
-    The caller MUST unpersist the returned ``prepared`` handle once its
-    outputs are materialized: Spark's cache is keyed by logical plan,
-    so an orphaned cache is silently REUSED by the next ml query —
-    which both fakes that query's bench timing (round-1 demerit #1 in
-    disguise: the first ml query paid ~15 s, the rest read its cache)
-    and parks ~600k vector rows on the executor heap for the rest of
-    the session (the r2 bench-pollution mechanism)."""
+    (modelling.py:91-93).  ``prepare_flow_features`` returns a local
+    checkpoint (MEMORY_AND_DISK, spillable), so iterative fitters
+    re-read materialized blocks, never the full prep lineage.  Each
+    call checkpoints afresh: unlike a plan-keyed ``cache()``, the next
+    ml query cannot silently reuse this one's prepared rows (round-1
+    demerit #1), and the ContextCleaner frees them once the returned
+    frames are dropped."""
     flows = synth_flows(spark, _n_rows(sf_dir))
-    prepared = prepare_flow_features(flows).cache()
+    prepared = prepare_flow_features(flows)
     test = hash_sample(prepared, "flow_id", 0.2, seed="ml-split")
     train = anti_join_split(prepared, test, "flow_id")
-    return train, test, prepared
+    return train, test
 
 
 # BASELINE.md-anchored metric floors (VERDICT r5 ask #4), mirroring the
@@ -144,30 +139,27 @@ def _metrics_df(spark, model_name: str, metrics: dict[str, float]):
 
 
 def _train_eval(spark, sf_dir, kind: str, **kw):
-    """Train + eval; metrics jobs run eagerly here, so callers that
-    only need the metrics frame can unpersist ``prepared`` immediately
-    (the returned metrics frame is a local relation, lineage-free)."""
-    train, test, prepared = _prepared_split(spark, sf_dir)
+    """Train + eval; metrics jobs run eagerly here (the returned
+    metrics frame is a local relation, lineage-free)."""
+    train, test = _prepared_split(spark, sf_dir)
     feat = "scaled_features" if kind == "nb" else "features"
     model = train_classifier(train, kind, features_col=feat, **kw)
     preds = model.transform(test)
-    return preds, _metrics_df(spark, kind, evaluate_multiclass(preds)), prepared
+    return preds, _metrics_df(spark, kind, evaluate_multiclass(preds))
 
 
 @register("ml_train_rf", None)
 def q_ml_train_rf(spark, sf_dir):
     """M5+M9: RandomForest train+eval → (model, metric, value) rows,
     incl. per-label precision/recall (modelling.py:158-170)."""
-    _, m, prepared = _train_eval(spark, sf_dir, "rf")
-    prepared.unpersist()
+    _, m = _train_eval(spark, sf_dir, "rf")
     return m
 
 
 @register("ml_train_dt", None)
 def q_ml_train_dt(spark, sf_dir):
     """M6: DecisionTree train+eval."""
-    _, m, prepared = _train_eval(spark, sf_dir, "dt")
-    prepared.unpersist()
+    _, m = _train_eval(spark, sf_dir, "dt")
     return m
 
 
@@ -176,8 +168,7 @@ def q_ml_train_nb(spark, sf_dir):
     """M7: multinomial NaiveBayes (smoothing=1.0) on min-max-scaled
     features — the scaling is what keeps the multinomial likelihoods
     defined, exactly as in the reference (modelling.py:130-137)."""
-    _, m, prepared = _train_eval(spark, sf_dir, "nb")
-    prepared.unpersist()
+    _, m = _train_eval(spark, sf_dir, "nb")
     return m
 
 
@@ -186,8 +177,7 @@ def q_ml_train_mlp(spark, sf_dir):
     """M8: MLP, layers [13 features, 8, 4, 3 classes], maxIter=100,
     blockSize=128, seed=1234 — the reference's notebook configuration
     shape (ISAA_Review_3.ipynb:920,935-946) at this fixture's width."""
-    _, m, prepared = _train_eval(spark, sf_dir, "mlp", layers=[13, 8, 4, 3])
-    prepared.unpersist()
+    _, m = _train_eval(spark, sf_dir, "mlp", layers=[13, 8, 4, 3])
     return m
 
 
@@ -196,15 +186,14 @@ def q_ml_confusion_rf(spark, sf_dir):
     """M10/G8: confusion matrix as a distributed k×k aggregate (tall
     form) — never a driver-side collect.  Trains its own RF (time shown
     in BENCH includes the fit — honest attribution).  The k×k result is
-    checkpointed eagerly (k=3 → 9 rows) so the prepared cache can be
-    released before returning."""
-    preds, _, prepared = _train_eval(spark, sf_dir, "rf")
+    checkpointed eagerly (k=3 → 9 rows), so the audit below and the
+    returned frame do not re-run the fit's predictions."""
+    preds, _ = _train_eval(spark, sf_dir, "rf")
     cm = (
         confusion_matrix(preds)
         .orderBy("label", "prediction")
         .localCheckpoint(eager=True)
     )
-    prepared.unpersist()
     # self-asserting floor (VERDICT r5 ask #4): diagonal accuracy from
     # the k×k matrix itself must hold the RF floor; violation raises so
     # the driver's rows-only check records an err.  k=3 → ≤9 rows, so
@@ -255,7 +244,8 @@ def q_ml_e2e_ref_width(spark, sf_dir):
         "split_key", F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in feats]))
     )
     # keep only what the fit/eval needs, cached: the 100-iteration LBFGS
-    # must not recompute the CSV-scan → 78-col prep lineage per pass
+    # reads four narrow columns with the md5 split key computed once,
+    # not the full-width checkpoint that prepare_flow_features returns
     prepared = prepared.select("split_key", "features", "scaled_features", "encoded_label").cache()
     test = hash_sample(prepared, "split_key", 0.2, seed="ml-split")
     train = anti_join_split(prepared, test, "split_key")
@@ -476,11 +466,11 @@ def q_ml_train_gbt_binary(spark, sf_dir):
     GBTClassifier is binary-only, hence the label collapse).  Seeded,
     rows-only; AUC/accuracy floors asserted in tests/test_ml.py.
     Scale: each boosting iteration is a distributed tree fit over the
-    cached prepared frame — linear scans, no driver data."""
+    checkpointed prepared frame — linear scans, no driver data."""
     from pyspark.ml.classification import GBTClassifier
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
-    train, test, prepared = _prepared_split(spark, sf_dir)
+    train, test = _prepared_split(spark, sf_dir)
     to_bin = F.when(F.col("encoded_label") == 0.0, 0.0).otherwise(1.0)
     train_b = train.withColumn("bin_label", to_bin)
     test_b = test.withColumn("bin_label", to_bin)
@@ -504,7 +494,6 @@ def q_ml_train_gbt_binary(spark, sf_dir):
         F.count(F.lit(1)).alias("total"),
     ).collect()[0]
     acc = hit_total["hit"] / max(hit_total["total"], 1)
-    prepared.unpersist()
     return _metrics_df(spark, "gbt_binary", {"auc_roc": auc, "accuracy": acc})
 
 
@@ -523,7 +512,7 @@ def q_ml_tuned_dt_depth(spark, sf_dir):
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
 
-    train, _, prepared = _prepared_split(spark, sf_dir)
+    train, _ = _prepared_split(spark, sf_dir)
     dt = DecisionTreeClassifier(
         featuresCol="features", labelCol="encoded_label", seed=1234
     )
@@ -536,7 +525,6 @@ def q_ml_tuned_dt_depth(spark, sf_dir):
         trainRatio=0.75, parallelism=1, seed=1234,
     )
     model = tvs.fit(train)
-    prepared.unpersist()
     best = max(range(len(model.validationMetrics)), key=lambda i: model.validationMetrics[i])
     # self-asserting floor (VERDICT r5 ask #4): the WINNER must reach
     # the tree-family floor — a tuning surface whose best candidate
@@ -564,13 +552,13 @@ def q_ml_train_lr_binary(spark, sf_dir):
     uniform ASCII word-soup — so the flow fixture carries the provable
     floors; see tests/test_ml.py).  Rows-only: L-BFGS internals aren't
     cross-engine.  Scale: each iteration is one gradient aggregate over
-    the cached prepared frame; the model is a single dense vector."""
+    the checkpointed prepared frame; the model is a single dense vector."""
     import tempfile
 
     from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
-    train, test, prepared = _prepared_split(spark, sf_dir)
+    train, test = _prepared_split(spark, sf_dir)
     to_bin = F.when(F.col("encoded_label") == 0.0, 0.0).otherwise(1.0)
     train_b = train.withColumn("bin_label", to_bin)
     test_b = test.withColumn("bin_label", to_bin)
@@ -605,7 +593,6 @@ def q_ml_train_lr_binary(spark, sf_dir):
         F.count(F.lit(1)).alias("total"),
     ).collect()[0]
     acc = hit_total["hit"] / max(hit_total["total"], 1)
-    prepared.unpersist()
     return _metrics_df(spark, "lr_binary", {"auc_roc": auc, "accuracy": acc})
 
 
@@ -831,7 +818,7 @@ def q_ml_cv_dt_kfold(spark, sf_dir):
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    train, _, prepared = _prepared_split(spark, sf_dir)
+    train, _ = _prepared_split(spark, sf_dir)
     tune = hash_sample(train, "flow_id", 0.3, seed="cv-tune").cache()
     tune.count()
     dt = DecisionTreeClassifier(
@@ -847,7 +834,6 @@ def q_ml_cv_dt_kfold(spark, sf_dir):
     )
     model = cv.fit(tune)
     tune.unpersist()
-    prepared.unpersist()
     best = max(range(len(model.avgMetrics)), key=lambda i: model.avgMetrics[i])
     # self-asserting floor (VERDICT r5 ask #4), as in ml_tuned_dt_depth
     best_f1 = float(model.avgMetrics[best])
@@ -887,7 +873,7 @@ def q_ml_isotonic_calibration(spark, sf_dir):
 
     from .ml import _prepared_split  # self-import safe at call time
 
-    train, test, prepared = _prepared_split(spark, sf_dir)
+    train, test = _prepared_split(spark, sf_dir)
     to_bin = F.when(F.col("encoded_label") == 0.0, 0.0).otherwise(1.0)
     train_b = train.withColumn("bin_label", to_bin)
     test_b = test.withColumn("bin_label", to_bin)
@@ -920,7 +906,6 @@ def q_ml_isotonic_calibration(spark, sf_dir):
     )
     calibrated = iso_model.transform(scored_test).select("p_raw", "p_cal", "label")
     decile = F.least(F.floor(F.col("p_raw") * 10), F.lit(9)).cast("long")
-    prepared.unpersist()
     table = (
         calibrated.groupBy(decile.alias("decile"))
         .agg(
@@ -971,7 +956,7 @@ def q_ml_conformal_coverage(spark, sf_dir):
 
     from ..functions.hashing import hash_bucket
 
-    train, test, prepared = _prepared_split(spark, sf_dir)
+    train, test = _prepared_split(spark, sf_dir)
     to_bin = F.when(F.col("encoded_label") == 0.0, 0.0).otherwise(1.0)
     train_b = train.withColumn("bin_label", to_bin)
     lr = LogisticRegression(
@@ -1077,10 +1062,9 @@ def q_ml_conformal_coverage(spark, sf_dir):
                  float(stats["mean_set_size"]), round(cov_floor, 6), True)
             )
     finally:
-        # release the caches even if the coverage-floor assertion fires
+        # release the cache even if the coverage-floor assertion fires
         # mid-loop — a leaked persist lingers for the whole warm session
         scored.unpersist()
-        prepared.unpersist()
     return spark.createDataFrame(
         rows,
         "alpha double, qhat double, n_cal long, n_test long, "

@@ -23,11 +23,10 @@ N = 20_000
 
 @pytest.fixture(scope="module")
 def split(spark):
-    prepared = prepare_flow_features(synth_flows(spark, N)).cache()
+    prepared = prepare_flow_features(synth_flows(spark, N))
     test = hash_sample(prepared, "flow_id", 0.2, seed="ml-split")
     train = anti_join_split(prepared, test, "flow_id")
-    yield train, test
-    prepared.unpersist()
+    return train, test
 
 
 def test_tree_models_hit_floor(split):
@@ -68,14 +67,31 @@ def test_ref_width_feature_shape(spark):
     assert len(flows.columns) == 80
     feats = [canonical_name(c) for c in CICFLOWMETER_FEATURES]
     assert len(feats) == 78
-    prepared = prepare_flow_features(flows, features=feats).cache()
+    prepared = prepare_flow_features(flows, features=feats)
     dim = prepared.select(F.size(vector_to_array("features")).alias("d")).first()["d"]
     assert dim == 78
     test = prepared.sample(0.2, seed=7).cache()
     model = train_classifier(prepared, "dt")
     m = evaluate_multiclass(model.transform(test))
     assert m["f1"] >= 0.97, m
-    prepared.unpersist()
+
+
+def test_prepared_frame_outlives_its_csv(spark, tmp_path):
+    """prepare_flow_features materializes its output once: with the
+    source CSV deleted, counting, an NB fit and evaluation still run
+    (a lazy frame re-parses the CSV on every action and fails here)."""
+    import shutil
+
+    from network_ids_using_pyspark_spark.sources.tables import scan_flows
+
+    src = str(tmp_path / "flows")
+    synth_flows(spark, 2_000).coalesce(1).write.option("header", True).csv(src)
+    prepared = prepare_flow_features(scan_flows(spark, src))
+    shutil.rmtree(src)
+    assert prepared.count() == 2_000
+    model = train_classifier(prepared, "nb", features_col="scaled_features")
+    m = evaluate_multiclass(model.transform(prepared))
+    assert m["f1"] >= 0.5, m
 
 
 def test_e2e_ref_width_query_floor(spark):
