@@ -40,6 +40,16 @@ def dec_sum_sql(expr: str) -> str:
     return f"CAST(CAST(SUM(CAST({expr} AS {DEC_SQL})) AS VARCHAR) AS DOUBLE)"
 
 
+def q9_sum_sql(term: str) -> str:
+    """Oracle twin of ``q9_lane_sum``: the row term quantized to the
+    1e-9 grid, summed exactly in DECIMAL(38, 9), then read back as a
+    correctly rounded double (same VARCHAR hop as ``dec_sum_sql``)."""
+    return (
+        f"CAST(CAST(SUM(CAST(round({term}, 9) AS DECIMAL(38, 9))) AS VARCHAR)"
+        " AS DOUBLE)"
+    )
+
+
 def dec_avg(col: Column | str) -> Column:
     """Order-independent mean: exact decimal sum, then one double divide.
     Both engines divide the same two numbers → identical bits."""

@@ -28,7 +28,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_lane_sum
+from ..functions.numeric import q9_lane_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -39,13 +39,6 @@ _NCH = len(_CHANNELS)
 # so phi * n! is an exact BIGINT sum and the one division happens last.
 _W_INT = {0: 6, 1: 2, 2: 2, 3: 6}
 _NFACT = 24  # 4!
-
-
-def _q9_sum_sql(expr: str) -> str:
-    return (
-        f"CAST(CAST(SUM(CAST(round({expr}, 9) AS DECIMAL(38, 9))) AS VARCHAR)"
-        " AS DOUBLE)"
-    )
 
 
 _JOURNEY_CTES = """
@@ -107,7 +100,7 @@ def _attribution_sql() -> str:
         for k in range(1, _K + 1):
             parts.append(
                 f"v{k}_{tag} AS MATERIALIZED (SELECT m.dst AS state, "
-                + _q9_sum_sql("v.prob * m.p")
+                + q9_sum_sql("v.prob * m.p")
                 + f" AS prob FROM v{k-1}_{tag} v JOIN pm_{tag} m ON m.src = v.state "
                 "GROUP BY 1)"
             )
@@ -500,7 +493,7 @@ np AS (
 per_src AS (
   SELECT src, CAST(SUM(n) AS BIGINT) AS tot,
          """
-    + _q9_sum_sql("-p * round(log2(p), 6)")
+    + q9_sum_sql("-p * round(log2(p), 6)")
     + """ AS h_bits
   FROM np GROUP BY src
 ),

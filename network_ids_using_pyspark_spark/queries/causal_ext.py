@@ -31,10 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum
+from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
-from .stats_ext import _irls_q9_sum
 
 
 def _ols3(p: str) -> tuple[str, str, str]:
@@ -100,10 +99,10 @@ def _rdd_sql() -> str:
         only = lambda t: f"CASE WHEN {pred} THEN {t} END"  # noqa: E731
         return (
             f"SUM(CASE WHEN {pred} THEN 1 ELSE 0 END) * 1.0 AS {tag}_n,\n"
-            f"  {_irls_q9_sum(only('u'))} AS {tag}_s1,\n"
-            f"  {_irls_q9_sum(only('u * u'))} AS {tag}_s11,\n"
+            f"  {q9_sum_sql(only('u'))} AS {tag}_s1,\n"
+            f"  {q9_sum_sql(only('u * u'))} AS {tag}_s11,\n"
             f"  CAST(CAST(SUM({only('y')}) AS VARCHAR) AS DOUBLE) AS {tag}_sy,\n"
-            f"  {_irls_q9_sum(only('u * y'))} AS {tag}_s1y"
+            f"  {q9_sum_sql(only('u * y'))} AS {tag}_s1y"
         )
 
     return f"""
@@ -153,17 +152,14 @@ def q_rdd_cutoff_effect(spark, sf_dir):
         .withColumn("side", F.when(F.col("u") < 0, F.lit("l")).otherwise(F.lit("r")))
     )
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     def side_agg(tag):
         only = lambda t: F.when(F.col("side") == tag, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}_n"),
-            q9_sum(only(F.col("u"))).alias(f"{tag}_s1"),
-            q9_sum(only(F.col("u") * F.col("u"))).alias(f"{tag}_s11"),
+            q9_lane_sum(only(F.col("u"))).alias(f"{tag}_s1"),
+            q9_lane_sum(only(F.col("u") * F.col("u"))).alias(f"{tag}_s11"),
             to_d(F.sum(only(F.col("y")))).alias(f"{tag}_sy"),
-            q9_sum(only(F.col("u") * F.col("y"))).alias(f"{tag}_s1y"),
+            q9_lane_sum(only(F.col("u") * F.col("y"))).alias(f"{tag}_s1y"),
         ]
 
     m = u.agg(*(side_agg("l") + side_agg("r")))
@@ -338,7 +334,7 @@ agg AS (
          CAST(CAST(SUM(CASE WHEN m_t > 0 AND m_c > 0
                             THEN CAST(sy_t AS DECIMAL(38, 9)) END) AS VARCHAR)
               AS DOUBLE) AS sum_y_t,
-         {_irls_q9_sum(
+         {q9_sum_sql(
              "CASE WHEN m_t > 0 AND m_c > 0 "
              "THEN (CAST(m_t AS DOUBLE) / CAST(m_c AS DOUBLE)) * sy_c END"
          )} AS sum_wy_c
@@ -437,11 +433,11 @@ def _chow_moments_sql(tag: str, pred: str) -> str:
     only = lambda t: f"CASE WHEN {pred} THEN {t} END"  # noqa: E731
     return (
         f"SUM(CASE WHEN {pred} THEN 1 ELSE 0 END) * 1.0 AS {tag}_n,\n"
-        f"  {_irls_q9_sum(only('t'))} AS {tag}_s1,\n"
-        f"  {_irls_q9_sum(only('t * t'))} AS {tag}_s11,\n"
-        f"  {_irls_q9_sum(only('r'))} AS {tag}_sy,\n"
-        f"  {_irls_q9_sum(only('t * r'))} AS {tag}_s1y,\n"
-        f"  {_irls_q9_sum(only('r * r'))} AS {tag}_syy"
+        f"  {q9_sum_sql(only('t'))} AS {tag}_s1,\n"
+        f"  {q9_sum_sql(only('t * t'))} AS {tag}_s11,\n"
+        f"  {q9_sum_sql(only('r'))} AS {tag}_sy,\n"
+        f"  {q9_sum_sql(only('t * r'))} AS {tag}_s1y,\n"
+        f"  {q9_sum_sql(only('r * r'))} AS {tag}_syy"
     )
 
 
@@ -608,15 +604,15 @@ def q_causal_e2e_readout(spark, sf_dir):
     optimization, VERDICT r11 #2): both members fit the identical
     3-step Newton chain over the identical design matrix from the
     identical zero start, so the betas are bit-equal by construction —
-    the readout fits them once (`_fit_propensity_beta`) and hands the
-    materialized 1-row relation to both members, removing _IRLS_T
-    fact scans + one checkpoint from the composition.  The standalone
-    member queries still fit their own chain (beta=None default), so
-    their independent certification is untouched."""
-    from .stats_causal import _fit_propensity_beta, _urgent_src
-    from .stats_ext import q_aipw_doubly_robust_ate, q_propensity_ipw_ate
+    the readout fits them once (`irls_fit`) and hands the same
+    (b0, b1, b2) tuple to both members, removing _IRLS_T fact scans
+    from the composition.  The standalone member queries still fit
+    their own chain (beta=None default), so their independent
+    certification is untouched."""
+    from .stats_causal import _urgent_src
+    from .stats_ext import irls_fit, q_aipw_doubly_robust_ate, q_propensity_ipw_ate
 
-    shared_beta = _fit_propensity_beta(_urgent_src(spark, sf_dir))
+    shared_beta = irls_fit(_urgent_src(spark, sf_dir))
 
     o = load_table(spark, sf_dir, "orders")
     to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
@@ -820,8 +816,8 @@ def q_rdd_density_check(spark, sf_dir):
 def _smd_sql() -> str:
     mom = lambda p, arm, x: (  # noqa: E731
         f"SUM(CASE WHEN t = {arm} THEN 1 ELSE 0 END) * 1.0 AS {p}n,\n"
-        f"    {_irls_q9_sum(f'CASE WHEN t = {arm} THEN {x} END')} AS {p}s,\n"
-        f"    {_irls_q9_sum(f'CASE WHEN t = {arm} THEN {x} * {x} END')} AS {p}ss"
+        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN {x} END')} AS {p}s,\n"
+        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN {x} * {x} END')} AS {p}ss"
     )
     var = lambda p: f"(({p}ss - {p}s * {p}s / {p}n) / ({p}n - 1.0))"  # noqa: E731
     smd = (
@@ -842,7 +838,7 @@ FROM (
     {mom('c_', 0, x)}
   FROM s
 ) raw CROSS JOIN (
-  SELECT {_irls_q9_sum(f'w * {x}')} AS wc_s, {_irls_q9_sum('w')} AS wc_n
+  SELECT {q9_sum_sql(f'w * {x}')} AS wc_s, {q9_sum_sql('w')} AS wc_n
   FROM sw WHERE t = 0
 ) wtd
 """
@@ -881,15 +877,11 @@ def q_covariate_balance_smd(spark, sf_dir):
     Scale plan: one stratum group-by + a stratum-keyed broadcast join
     for weights + conditional-moment aggregates — no windows."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = o.select(
         F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("x2"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("t"),
     )
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
 
     strata = s.groupBy(
         F.col("x1").alias("k1"), F.col("x2").alias("k2")
@@ -917,15 +909,15 @@ def q_covariate_balance_smd(spark, sf_dir):
         only = lambda arm, term: F.when(F.col("t") == arm, term)  # noqa: E731
         raw = sw.agg(
             F.count(only(1, F.lit(1))).cast("double").alias("t_n"),
-            q9_sum(only(1, x)).alias("t_s"),
-            q9_sum(only(1, x * x)).alias("t_ss"),
+            q9_lane_sum(only(1, x)).alias("t_s"),
+            q9_lane_sum(only(1, x * x)).alias("t_ss"),
             F.count(only(0, F.lit(1))).cast("double").alias("c_n"),
-            q9_sum(only(0, x)).alias("c_s"),
-            q9_sum(only(0, x * x)).alias("c_ss"),
+            q9_lane_sum(only(0, x)).alias("c_s"),
+            q9_lane_sum(only(0, x * x)).alias("c_ss"),
         )
         wtd = sw.filter(F.col("t") == 0).agg(
-            q9_sum(F.col("w") * x).alias("wc_s"),
-            q9_sum(F.col("w")).alias("wc_n"),
+            q9_lane_sum(F.col("w") * x).alias("wc_s"),
+            q9_lane_sum(F.col("w")).alias("wc_n"),
         )
         var = lambda p: (  # noqa: E731
             (F.col(f"{p}ss") - F.col(f"{p}s") * F.col(f"{p}s") / F.col(f"{p}n"))

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_lane_sum
+from ..functions.numeric import q9_lane_sum, q9_sum_sql
 from ..sources.tables import load_table
 from ..operators.similarity import as_double_array, cosine_topk
 from . import register
@@ -839,33 +839,26 @@ _PCA_T = 5
 _PCA_TOP = 8
 
 
-def _pca_q9s(t: str) -> str:
-    return (
-        f"CAST(CAST(SUM(CAST(round({t}, 9) AS DECIMAL(38, 9))) AS VARCHAR)"
-        " AS DOUBLE)"
-    )
-
-
 def _pca_sql() -> str:
     parts = [
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
         f"dims AS (SELECT unnest(range(1, {_PCA_D + 1})) AS i)",
         "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM e)",
-        f"m AS (SELECT d.i, {_pca_q9s('e.v[d.i]')} / ANY_VALUE(nn.n) AS mi "
+        f"m AS (SELECT d.i, {q9_sum_sql('e.v[d.i]')} / ANY_VALUE(nn.n) AS mi "
         "FROM e CROSS JOIN dims d CROSS JOIN nn GROUP BY d.i)",
         "cells AS (SELECT e.vec_id, d.i, e.v[d.i] - m.mi AS c "
         "FROM e CROSS JOIN dims d JOIN m ON m.i = d.i)",
-        f"cov AS MATERIALIZED (SELECT a.i, b.i AS j, {_pca_q9s('a.c * b.c')} / ANY_VALUE(nn.n) AS cij "
+        f"cov AS MATERIALIZED (SELECT a.i, b.i AS j, {q9_sum_sql('a.c * b.c')} / ANY_VALUE(nn.n) AS cij "
         "FROM cells a JOIN cells b USING (vec_id) CROSS JOIN nn GROUP BY a.i, b.i)",
         "w0 AS (SELECT i, 1.0 AS w FROM dims)",
     ]
     for t in range(1, _PCA_T + 1):
         parts.append(
-            f"u{t} AS (SELECT cov.i, {_pca_q9s('cov.cij * w.w')} AS u "
+            f"u{t} AS (SELECT cov.i, {q9_sum_sql('cov.cij * w.w')} AS u "
             f"FROM cov JOIN w{t-1} w ON w.i = cov.j GROUP BY cov.i)"
         )
         parts.append(
-            f"nm{t} AS (SELECT round(sqrt({_pca_q9s('u * u')}), 9) AS s FROM u{t})"
+            f"nm{t} AS (SELECT round(sqrt({q9_sum_sql('u * u')}), 9) AS s FROM u{t})"
         )
         parts.append(
             f"w{t} AS (SELECT u.i, u.u / nm.s AS w FROM u{t} u CROSS JOIN nm{t} nm)"
@@ -913,10 +906,6 @@ def q_pca_power_iteration_exact(spark, sf_dir):
     from ..operators.similarity import dot  # noqa: F401  (family marker)
 
     emb = load_table(spark, sf_dir, "embeddings")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-
-    def q9s(t):
-        return q9_lane_sum(t)
 
     # The outer-product explode multiplies each input row D²-fold, so
     # the map side must be as parallel as the cluster even when the
@@ -936,7 +925,7 @@ def q_pca_power_iteration_exact(spark, sf_dir):
     m = (
         base.crossJoin(F.broadcast(nn))
         .groupBy("i")
-        .agg((q9s(F.col("xi")) / F.first("n")).alias("mi"))
+        .agg((q9_lane_sum(F.col("xi")) / F.first("n")).alias("mi"))
     )
     # Centered vectors via the 1-row broadcast mean array; the outer
     # product explodes MAP-SIDE (flatten of the nested transform), so
@@ -966,7 +955,7 @@ def q_pca_power_iteration_exact(spark, sf_dir):
             (F.floor(F.col("p") / _PCA_D) + 1).cast("int").alias("i"),
             (F.col("p") % _PCA_D + 1).cast("int").alias("j"),
         )
-        .agg((q9s(F.col("val")) / F.first("n")).alias("cij"))
+        .agg((q9_lane_sum(F.col("val")) / F.first("n")).alias("cij"))
     )
     # Config-bounded reduced collect (D² = 4096 exact cells): the five
     # matvec steps below are float-identical to the former Spark
@@ -1578,16 +1567,13 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     vals = emb.select(
         F.posexplode(as_double_array("embedding")).alias("dim", "val")
     )
     per_dim = vals.groupBy("dim").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q9_sum(F.col("val")).alias("s"),
-        q9_sum(F.col("val") * F.col("val")).alias("ss"),
+        q9_lane_sum(F.col("val")).alias("s"),
+        q9_lane_sum(F.col("val") * F.col("val")).alias("ss"),
     )
     vars_ = per_dim.select(
         "dim",
@@ -1600,7 +1586,7 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     agg = vars_.agg(
         F.count(F.lit(1)).cast("long").alias("n_dims"),
         to_d(F.sum(F.col("var").cast("decimal(38, 9)"))).alias("sv"),
-        q9_sum(F.col("var") * F.col("var")).alias("svv"),
+        q9_lane_sum(F.col("var") * F.col("var")).alias("svv"),
         F.min(F.struct("var", "dim")).alias("lo"),
         F.max(F.struct("var", "dim")).alias("hi"),
     )

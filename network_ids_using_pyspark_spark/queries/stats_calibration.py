@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum
+from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
 from ..functions.hashing import (
     HASH_SPACE,
     hash_bucket,
@@ -25,10 +25,11 @@ from .stats_regression import (  # noqa: F401
     _IRLS_P,
     _IRLS_SRC,
     _IRLS_T,
-    _OLS_B0,
-    _OLS_B1,
-    _OLS_B2,
-    _irls_q9_sum,
+    _PGLM_MU,
+    _logreg_src,
+    irls_fit,
+    irls_score,
+    irls_sql_ctes,
 )
 
 # ---------------------------------------------------------------------------
@@ -406,8 +407,8 @@ def _circ_sql() -> str:
 WITH m AS (
   SELECT event_type,
          CAST(COUNT(*) AS BIGINT) AS n,
-         {_irls_q9_sum(f'cos({theta})')} AS c,
-         {_irls_q9_sum(f'sin({theta})')} AS s
+         {q9_sum_sql(f'cos({theta})')} AS c,
+         {q9_sum_sql(f'sin({theta})')} AS s
   FROM events GROUP BY event_type
 )
 SELECT event_type, n,
@@ -432,20 +433,16 @@ def q_circular_hour_stats(spark, sf_dir):
     Scale plan: ONE map-side combined aggregate per type — circular
     moments are as mergeable as linear ones."""
     ev = load_table(spark, sf_dir, "events")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     theta = (
         F.lit(_TWO_PI)
         * (F.floor(F.col("ts").cast("double")).cast("long") % 86400)
         / 86400.0
     )
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        q9_sum(F.cos(theta)).alias("c"),
-        q9_sum(F.sin(theta)).alias("s"),
+        q9_lane_sum(F.cos(theta)).alias("c"),
+        q9_lane_sum(F.sin(theta)).alias("s"),
     )
     ang = F.atan2(F.col("s"), F.col("c"))
     return m.select(
@@ -472,8 +469,6 @@ def q_circular_hour_stats(spark, sf_dir):
 # quantized AFTER exp, every sum rides the 1e-9 DECIMAL grid.
 # ---------------------------------------------------------------------------
 
-_PGLM_T = 3
-_PGLM_MU = "greatest(round(exp(b0 + b1 * x1 + b2 * x2), 9), 0.000000001)"
 _PGLM_SRC = """
   SELECT CAST(EXTRACT(month FROM CAST(o.o_orderdate AS DATE)) AS BIGINT) AS x1,
          CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS x2,
@@ -483,39 +478,13 @@ _PGLM_SRC = """
 """
 
 
-def _pglm_sql(iters: int = _PGLM_T) -> str:
-    parts = [
-        f"s AS ({_PGLM_SRC})",
-        "b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT x1, x2, y, {_PGLM_MU} AS mu, b0, b1, b2 "
-            f"FROM s CROSS JOIN b{i-1}_)"
-        )
-        parts.append(
-            f"a{i} AS (SELECT ANY_VALUE(b0) AS b0, ANY_VALUE(b1) AS b1, "
-            f"ANY_VALUE(b2) AS b2, "
-            f"{_irls_q9_sum('mu')} AS n, "
-            f"{_irls_q9_sum('mu * x1')} AS s1, "
-            f"{_irls_q9_sum('mu * x2')} AS s2, "
-            f"{_irls_q9_sum('mu * x1 * x1')} AS s11, "
-            f"{_irls_q9_sum('mu * x1 * x2')} AS s12, "
-            f"{_irls_q9_sum('mu * x2 * x2')} AS s22, "
-            f"{_irls_q9_sum('(y - mu)')} AS sy, "
-            f"{_irls_q9_sum('(y - mu) * x1')} AS s1y, "
-            f"{_irls_q9_sum('(y - mu) * x2')} AS s2y "
-            f"FROM r{i})"
-        )
-        parts.append(
-            f"b{i}_ AS (SELECT b0 + {_OLS_B0} AS b0, b1 + {_OLS_B1} AS b1, "
-            f"b2 + {_OLS_B2} AS b2 FROM a{i})"
-        )
-    t = iters
+def _pglm_sql() -> str:
+    parts = [f"s AS ({_PGLM_SRC})", *irls_sql_ctes("log")]
+    t = _IRLS_T
     parts.append(f"rf AS (SELECT x1, x2, y, {_PGLM_MU} AS mu FROM s CROSS JOIN b{t}_)")
     parts.append(
         "dev AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        + _irls_q9_sum(
+        + q9_sum_sql(
             "2.0 * (CASE WHEN y > 0 THEN y * round(ln(y / mu), 9) ELSE 0.0 END"
             " - (y - mu))"
         )
@@ -546,11 +515,11 @@ def q_poisson_glm_exact(spark, sf_dir):
 
     Scale plan: the count outcome is one orderkey-grouped join
     (shuffle on the PK), then T+1 map-side combined scans over the
-    per-order relation with 1-row betas broadcast in — identical
-    shape to `logreg_irls_exact` at any scale."""
+    per-order relation with the 3 coefficients carried between passes
+    as driver-side literals — identical shape to `logreg_irls_exact`
+    at any scale."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .groupBy("o_orderkey")
@@ -566,38 +535,7 @@ def q_poisson_glm_exact(spark, sf_dir):
         .select("x1", "x2", "y")
         .localCheckpoint(eager=True)
     )
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
-    mu_expr = F.expr(_PGLM_MU)
-    beta = src.sparkSession.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
-    )
-    for _ in range(_PGLM_T):
-        r = src.crossJoin(F.broadcast(beta)).withColumn("mu", mu_expr)
-        w = F.col("mu")
-        resid = F.col("y") - F.col("mu")
-        a = r.agg(
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.first("b2").alias("b2"),
-            q9_sum(w).alias("n"),
-            q9_sum(w * F.col("x1")).alias("s1"),
-            q9_sum(w * F.col("x2")).alias("s2"),
-            q9_sum(w * F.col("x1") * F.col("x1")).alias("s11"),
-            q9_sum(w * F.col("x1") * F.col("x2")).alias("s12"),
-            q9_sum(w * F.col("x2") * F.col("x2")).alias("s22"),
-            q9_sum(resid).alias("sy"),
-            q9_sum(resid * F.col("x1")).alias("s1y"),
-            q9_sum(resid * F.col("x2")).alias("s2y"),
-        )
-        beta = a.select(
-            (F.col("b0") + F.expr(_OLS_B0)).alias("b0"),
-            (F.col("b1") + F.expr(_OLS_B1)).alias("b1"),
-            (F.col("b2") + F.expr(_OLS_B2)).alias("b2"),
-        ).localCheckpoint(eager=True)
-    rf = src.crossJoin(F.broadcast(beta)).withColumn("mu", mu_expr)
+    beta = irls_fit(src, "log")
     dev_term = 2.0 * (
         F.when(
             F.col("y") > 0,
@@ -605,16 +543,13 @@ def q_poisson_glm_exact(spark, sf_dir):
         ).otherwise(0.0)
         - (F.col("y") - F.col("mu"))
     )
-    dev = rf.agg(
+    return irls_score(src, beta, "log").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        q9_sum(dev_term).alias("d"),
-    )
-    return dev.crossJoin(F.broadcast(beta)).select(
-        "n",
-        F.round(F.col("b0"), 6).alias("b_intercept"),
-        F.round(F.col("b1"), 6).alias("b_month"),
-        F.round(F.col("b2"), 6).alias("b_urgent"),
-        F.round(F.col("d") / F.col("n"), 6).alias("mean_deviance"),
+        *[
+            F.round(F.lit(b), 6).alias(c)
+            for b, c in zip(beta, ("b_intercept", "b_month", "b_urgent"))
+        ],
+        F.round(q9_lane_sum(dev_term) / F.count(F.lit(1)), 6).alias("mean_deviance"),
     )
 
 
@@ -627,31 +562,9 @@ def q_poisson_glm_exact(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _brier_sql(iters: int = _IRLS_T) -> str:
-    parts = [f"s AS ({_IRLS_SRC})", "b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT x1, x2, y, {_IRLS_P} AS p, b0, b1, b2 "
-            f"FROM s CROSS JOIN b{i-1}_)"
-        )
-        parts.append(
-            f"a{i} AS (SELECT ANY_VALUE(b0) AS b0, ANY_VALUE(b1) AS b1, ANY_VALUE(b2) AS b2, "
-            f"{_irls_q9_sum('p * (1.0 - p)')} AS n, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1')} AS s1, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2')} AS s2, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x1')} AS s11, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x2')} AS s12, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2 * x2')} AS s22, "
-            f"{_irls_q9_sum('(y - p)')} AS sy, "
-            f"{_irls_q9_sum('(y - p) * x1')} AS s1y, "
-            f"{_irls_q9_sum('(y - p) * x2')} AS s2y "
-            f"FROM r{i})"
-        )
-        parts.append(
-            f"b{i}_ AS (SELECT b0 + {_OLS_B0} AS b0, b1 + {_OLS_B1} AS b1, "
-            f"b2 + {_OLS_B2} AS b2 FROM a{i})"
-        )
-    t = iters
+def _brier_sql() -> str:
+    parts = [f"s AS ({_IRLS_SRC})", *irls_sql_ctes()]
+    t = _IRLS_T
     parts.append(
         f"scored AS (SELECT y, {_IRLS_P} AS p, "
         f"CAST(least(floor({_IRLS_P} * 10), 9) AS BIGINT) AS bin "
@@ -668,17 +581,17 @@ def _brier_sql(iters: int = _IRLS_T) -> str:
     )
     parts.append(
         "bs AS (SELECT "
-        + _irls_q9_sum("(p - y) * (p - y)")
+        + q9_sum_sql("(p - y) * (p - y)")
         + " AS sq FROM scored)"
     )
     parts.append(
         "decomp AS (SELECT "
-        + _irls_q9_sum(
+        + q9_sum_sql(
             "n_b * (sp / n_b - CAST(sy_b AS DOUBLE) / n_b)"
             " * (sp / n_b - CAST(sy_b AS DOUBLE) / n_b)"
         )
         + " AS rel_num, "
-        + _irls_q9_sum(
+        + q9_sum_sql(
             "n_b * (CAST(sy_b AS DOUBLE) / n_b - CAST(tot.sy AS DOUBLE) / tot.n)"
             " * (CAST(sy_b AS DOUBLE) / n_b - CAST(tot.sy AS DOUBLE) / tot.n)"
         )
@@ -711,48 +624,12 @@ def q_brier_decomposition(spark, sf_dir):
 
     Scale plan: T Newton scans + one scoring scan to the 10-bin
     relation + one squared-error aggregate — all map-side combined,
-    1-row betas broadcast."""
-    o = load_table(spark, sf_dir, "orders")
+    the 3 coefficients carried between passes as driver-side
+    literals."""
     to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    src = o.select(
-        F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("x2"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    )
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
-    p_expr = F.expr(_IRLS_P)
-    beta = src.sparkSession.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
-    )
-    for _ in range(_IRLS_T):
-        r = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
-        w = F.col("p") * (1.0 - F.col("p"))
-        resid = F.col("y") - F.col("p")
-        a = r.agg(
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.first("b2").alias("b2"),
-            q9_sum(w).alias("n"),
-            q9_sum(w * F.col("x1")).alias("s1"),
-            q9_sum(w * F.col("x2")).alias("s2"),
-            q9_sum(w * F.col("x1") * F.col("x1")).alias("s11"),
-            q9_sum(w * F.col("x1") * F.col("x2")).alias("s12"),
-            q9_sum(w * F.col("x2") * F.col("x2")).alias("s22"),
-            q9_sum(resid).alias("sy"),
-            q9_sum(resid * F.col("x1")).alias("s1y"),
-            q9_sum(resid * F.col("x2")).alias("s2y"),
-        )
-        beta = a.select(
-            (F.col("b0") + F.expr(_OLS_B0)).alias("b0"),
-            (F.col("b1") + F.expr(_OLS_B1)).alias("b1"),
-            (F.col("b2") + F.expr(_OLS_B2)).alias("b2"),
-        ).localCheckpoint(eager=True)
+    src = _logreg_src(spark, sf_dir)
     scored = (
-        src.crossJoin(F.broadcast(beta))
-        .withColumn("p", p_expr)
+        irls_score(src, irls_fit(src))
         .select(
             "y",
             "p",
@@ -769,14 +646,14 @@ def q_brier_decomposition(spark, sf_dir):
         F.sum("n_b").cast("long").alias("n"), F.sum("sy_b").cast("long").alias("sy")
     )
     bs = scored.agg(
-        q9_sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias("sq")
+        q9_lane_sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias("sq")
     )
     pbar = F.col("sp") / F.col("n_b")
     ybar_b = F.col("sy_b").cast("double") / F.col("n_b")
     ybar = F.col("sy").cast("double") / F.col("n")
     decomp = bins.crossJoin(F.broadcast(tot)).agg(
-        q9_sum(F.col("n_b") * (pbar - ybar_b) * (pbar - ybar_b)).alias("rel_num"),
-        q9_sum(F.col("n_b") * (ybar_b - ybar) * (ybar_b - ybar)).alias("res_num"),
+        q9_lane_sum(F.col("n_b") * (pbar - ybar_b) * (pbar - ybar_b)).alias("rel_num"),
+        q9_lane_sum(F.col("n_b") * (ybar_b - ybar) * (ybar_b - ybar)).alias("res_num"),
     )
     return (
         tot.crossJoin(F.broadcast(bs))
@@ -801,8 +678,8 @@ def q_brier_decomposition(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _gains_sql(iters: int = _IRLS_T) -> str:
-    base = _brier_sql(iters)
+def _gains_sql() -> str:
+    base = _brier_sql()
     head, _, _ = base.partition("tot AS (")
     return (
         head
@@ -834,47 +711,9 @@ def q_model_gains_table(spark, sf_dir):
 
     Scale plan: identical to brier's (T Newton scans + one scoring
     scan to 10 bins); the gains windows are constant-size."""
-    o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    src = o.select(
-        F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("x2"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    )
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
-    p_expr = F.expr(_IRLS_P)
-    beta = src.sparkSession.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
-    )
-    for _ in range(_IRLS_T):
-        r = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
-        w = F.col("p") * (1.0 - F.col("p"))
-        resid = F.col("y") - F.col("p")
-        a = r.agg(
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.first("b2").alias("b2"),
-            q9_sum(w).alias("n"),
-            q9_sum(w * F.col("x1")).alias("s1"),
-            q9_sum(w * F.col("x2")).alias("s2"),
-            q9_sum(w * F.col("x1") * F.col("x1")).alias("s11"),
-            q9_sum(w * F.col("x1") * F.col("x2")).alias("s12"),
-            q9_sum(w * F.col("x2") * F.col("x2")).alias("s22"),
-            q9_sum(resid).alias("sy"),
-            q9_sum(resid * F.col("x1")).alias("s1y"),
-            q9_sum(resid * F.col("x2")).alias("s2y"),
-        )
-        beta = a.select(
-            (F.col("b0") + F.expr(_OLS_B0)).alias("b0"),
-            (F.col("b1") + F.expr(_OLS_B1)).alias("b1"),
-            (F.col("b2") + F.expr(_OLS_B2)).alias("b2"),
-        ).localCheckpoint(eager=True)
+    src = _logreg_src(spark, sf_dir)
     bins = (
-        src.crossJoin(F.broadcast(beta))
-        .withColumn("p", p_expr)
+        irls_score(src, irls_fit(src))
         .select(
             "y",
             F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("long").alias("bin"),
@@ -1041,8 +880,8 @@ def _mde_moments(tag: str, arm: int) -> str:
     only = lambda t: f"CASE WHEN t = {arm} THEN {t} END"  # noqa: E731
     return (
         f"SUM(CASE WHEN t = {arm} THEN 1 ELSE 0 END) * 1.0 AS {tag}n,\n"
-        f"  {_irls_q9_sum(only('yo'))} AS {tag}s,\n"
-        f"  {_irls_q9_sum(only('yo * yo'))} AS {tag}ss"
+        f"  {q9_sum_sql(only('yo'))} AS {tag}s,\n"
+        f"  {q9_sum_sql(only('yo * yo'))} AS {tag}ss"
     )
 
 
@@ -1087,21 +926,17 @@ def q_ab_mde_readout(spark, sf_dir):
     Scale plan: ONE conditional-moment aggregate; the readout is
     arithmetic on a 1-row relation."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = o.select(
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("t"),
         F.col("o_totalprice").cast("double").alias("yo"),
     )
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     def arm(tag, a):
         only = lambda c: F.when(F.col("t") == a, c)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}n"),
-            q9_sum(only(F.col("yo"))).alias(f"{tag}s"),
-            q9_sum(only(F.col("yo") * F.col("yo"))).alias(f"{tag}ss"),
+            q9_lane_sum(only(F.col("yo"))).alias(f"{tag}s"),
+            q9_lane_sum(only(F.col("yo") * F.col("yo"))).alias(f"{tag}ss"),
         ]
 
     m = s.agg(*(arm("t_", 1) + arm("c_", 0)))
@@ -1149,8 +984,8 @@ def _gs_sql() -> str:
     )
     m = lambda p, arm: (  # noqa: E731
         f"SUM(CASE WHEN t = {arm} THEN 1 ELSE 0 END) * 1.0 AS {p}n,\n"
-        f"    {_irls_q9_sum(f'CASE WHEN t = {arm} THEN yo END')} AS {p}s,\n"
-        f"    {_irls_q9_sum(f'CASE WHEN t = {arm} THEN yo * yo END')} AS {p}ss"
+        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN yo END')} AS {p}s,\n"
+        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN yo * yo END')} AS {p}ss"
     )
     var = lambda p: f"(({p}ss_c - {p}s_c * {p}s_c / {p}n_c) / ({p}n_c - 1.0))"  # noqa: E731
     return f"""
@@ -1203,7 +1038,6 @@ def q_group_sequential_obf(spark, sf_dir):
     Scale plan: ONE map-side combined group-by to the 4-slice grid;
     the look×slice join and every statistic live on ≤16 rows."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     slice_col = F.when(
         F.col("o_orderdate").cast("date") < F.lit(_GS_LOOKS[0]).cast("date"), 1
     )
@@ -1218,15 +1052,12 @@ def q_group_sequential_obf(spark, sf_dir):
         F.col("o_totalprice").cast("double").alias("yo"),
     )
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     def arm(p, a):
         only = lambda c: F.when(F.col("t") == a, c)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{p}n"),
-            q9_sum(only(F.col("yo"))).alias(f"{p}s"),
-            q9_sum(only(F.col("yo") * F.col("yo"))).alias(f"{p}ss"),
+            q9_lane_sum(only(F.col("yo"))).alias(f"{p}s"),
+            q9_lane_sum(only(F.col("yo") * F.col("yo"))).alias(f"{p}ss"),
         ]
 
     per_slice = (
@@ -1352,9 +1183,6 @@ def q_theil_index_decomposition(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     def dec_sum(term):
         # lane_sum_dec at scale 6: same value; the string cast renders
         # 6 instead of 9 fractional digits, which parses to the same double
@@ -1373,7 +1201,7 @@ def q_theil_index_decomposition(spark, sf_dir):
         .groupBy("nation", "n_g", "sx_g")
         .agg(
             F.round(
-                q9_sum(
+                q9_lane_sum(
                     F.col("x") / mu_g * F.round(F.log(F.col("x") / mu_g), 6)
                 )
                 / F.col("n_g").cast("double"),
@@ -1386,7 +1214,7 @@ def q_theil_index_decomposition(spark, sf_dir):
         grp.crossJoin(F.broadcast(tot))
         .agg(
             F.round(
-                q9_sum(
+                q9_lane_sum(
                     (F.col("sx_g") / F.col("sx"))
                     * F.round(F.log(mu_g / mu), 6)
                 ),
@@ -1465,18 +1293,14 @@ def q_jarque_bera_normality(spark, sf_dir):
     sums per type — the entire test is moment arithmetic on the
     |types|-row relation."""
     ev = load_table(spark, sf_dir, "events")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     v = F.col("value")
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
 
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q9_sum(v).alias("s1"),
-        q9_sum(v * v).alias("s2"),
-        q9_sum(v * v * v).alias("s3"),
-        q9_sum(v * v * v * v).alias("s4"),
+        q9_lane_sum(v).alias("s1"),
+        q9_lane_sum(v * v).alias("s2"),
+        q9_lane_sum(v * v * v).alias("s3"),
+        q9_lane_sum(v * v * v * v).alias("s4"),
     )
     mu = F.col("s1") / F.col("n")
     m2 = F.col("s2") / F.col("n") - mu * mu

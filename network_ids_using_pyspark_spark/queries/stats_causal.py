@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum
+from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
 from ..functions.hashing import (
     HASH_SPACE,
     hash_bucket,
@@ -28,7 +28,9 @@ from .stats_regression import (  # noqa: F401
     _OLS_B0,
     _OLS_B1,
     _OLS_B2,
-    _irls_q9_sum,
+    irls_fit,
+    irls_score,
+    irls_sql_ctes,
 )
 
 # ---------------------------------------------------------------------------
@@ -101,7 +103,6 @@ def q_huber_location_irls(spark, sf_dir):
     it for the GK-sketch quantiles, the iterations are unchanged."""
     o = load_table(spark, sf_dir, "orders")
     vals = o.select(F.col("o_totalprice").alias("v")).localCheckpoint(eager=False)
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     mu = vals.agg(F.round(F.median("v"), 9).alias("m"))
     scale = (
         vals.crossJoin(F.broadcast(mu))
@@ -486,44 +487,22 @@ _IPW_SRC = """
 """
 
 
-def _ipw_sql(iters: int = _IRLS_T) -> str:
-    parts = [f"s AS ({_IPW_SRC})", "b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT x1, x2, y, {_IRLS_P} AS p, b0, b1, b2 "
-            f"FROM s CROSS JOIN b{i-1}_)"
-        )
-        parts.append(
-            f"a{i} AS (SELECT ANY_VALUE(b0) AS b0, ANY_VALUE(b1) AS b1, ANY_VALUE(b2) AS b2, "
-            f"{_irls_q9_sum('p * (1.0 - p)')} AS n, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1')} AS s1, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2')} AS s2, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x1')} AS s11, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x2')} AS s12, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2 * x2')} AS s22, "
-            f"{_irls_q9_sum('(y - p)')} AS sy, "
-            f"{_irls_q9_sum('(y - p) * x1')} AS s1y, "
-            f"{_irls_q9_sum('(y - p) * x2')} AS s2y "
-            f"FROM r{i})"
-        )
-        parts.append(
-            f"b{i}_ AS (SELECT b0 + {_OLS_B0} AS b0, b1 + {_OLS_B1} AS b1, "
-            f"b2 + {_OLS_B2} AS b2 FROM a{i})"
-        )
-    t = iters
+def _ipw_sql() -> str:
+    parts = [f"s AS ({_IPW_SRC})", *irls_sql_ctes()]
+    t = _IRLS_T
     parts.append(
         f"rf AS (SELECT x1, x2, y, yo, {_IRLS_P} AS p FROM s CROSS JOIN b{t}_)"
     )
     parts.append(
         "ipw AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
         "CAST(SUM(y) AS BIGINT) AS n_treated, "
-        + _irls_q9_sum("y / p")
+        + q9_sum_sql("y / p")
         + " AS sw_t, "
-        + _irls_q9_sum("y * yo / p")
+        + q9_sum_sql("y * yo / p")
         + " AS swy_t, "
-        + _irls_q9_sum("(1 - y) / (1.0 - p)")
+        + q9_sum_sql("(1 - y) / (1.0 - p)")
         + " AS sw_c, "
-        + _irls_q9_sum("(1 - y) * yo / (1.0 - p)")
+        + q9_sum_sql("(1 - y) * yo / (1.0 - p)")
         + " AS swy_c FROM rf)"
     )
     return (
@@ -556,85 +535,37 @@ def _urgent_src(spark, sf_dir):
     )
 
 
-def _fit_propensity_beta(src):
-    """The `logreg_irls_exact` template: _IRLS_T unrolled Newton/IRLS
-    steps of P(y | x1, x2) over ``src``, every moment 1e-9-quantized
-    and DECIMAL-summed, returning the eagerly-checkpointed 1-row
-    (b0, b1, b2) relation.  Shared verbatim by `propensity_ipw_ate`
-    and `aipw_doubly_robust_ate` (and fitted ONCE by
-    `causal_e2e_readout`, which passes the same 1-row relation to both
-    members — r12 optimization; the chain is deterministic, so sharing
-    the materialized betas is bit-identical to refitting them)."""
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
-    beta = src.sparkSession.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
-    )
-    p_expr = F.expr(_IRLS_P)
-    for _ in range(_IRLS_T):
-        r = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
-        w = F.col("p") * (1.0 - F.col("p"))
-        resid = F.col("y") - F.col("p")
-        a = r.agg(
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.first("b2").alias("b2"),
-            q9_sum(w).alias("n"),
-            q9_sum(w * F.col("x1")).alias("s1"),
-            q9_sum(w * F.col("x2")).alias("s2"),
-            q9_sum(w * F.col("x1") * F.col("x1")).alias("s11"),
-            q9_sum(w * F.col("x1") * F.col("x2")).alias("s12"),
-            q9_sum(w * F.col("x2") * F.col("x2")).alias("s22"),
-            q9_sum(resid).alias("sy"),
-            q9_sum(resid * F.col("x1")).alias("s1y"),
-            q9_sum(resid * F.col("x2")).alias("s2y"),
-        )
-        beta = a.select(
-            (F.col("b0") + F.expr(_OLS_B0)).alias("b0"),
-            (F.col("b1") + F.expr(_OLS_B1)).alias("b1"),
-            (F.col("b2") + F.expr(_OLS_B2)).alias("b2"),
-        )
-    return beta.localCheckpoint(eager=True)
-
-
 @register("propensity_ipw_ate", _ipw_sql())
 def q_propensity_ipw_ate(spark, sf_dir, beta=None):
     """Average treatment effect of URGENT priority on order value by
     inverse-propensity weighting (Horvitz-Thompson weights, Hájek
     normalization): the propensity P(urgent | month, finished-status)
-    is fitted by three unrolled Newton/IRLS steps (the
+    is fitted by three unrolled Newton/IRLS steps (`irls_fit`, the
     `logreg_irls_exact` template verbatim), then treated and control
     means are reweighted by 1/p and 1/(1-p).  The sigmoid's 1e-9 clamp
-    doubles as the standard IPW overlap clamp.
+    doubles as the standard IPW overlap clamp.  ``beta`` lets
+    `causal_e2e_readout` pass in the (b0, b1, b2) it already fitted.
 
     Scale plan: T+1 map-side-combined fact scans (T Newton steps + one
-    weighted-mean pass) with a 3-coefficient 1-row broadcast between
-    passes — identical shape to `quality_classifier_filter`; nothing
-    driver-side but the 1-row beta."""
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    weighted-mean pass) with the 3 coefficients carried between passes
+    as driver-side literals — identical shape to
+    `quality_classifier_filter`."""
     src = _urgent_src(spark, sf_dir)
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     if beta is None:
-        beta = _fit_propensity_beta(src)
-    p_expr = F.expr(_IRLS_P)
-    rf = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
+        beta = irls_fit(src)
     t_col, p_col, yo = F.col("y"), F.col("p"), F.col("yo")
-    agg = rf.agg(
+    agg = irls_score(src, beta).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("n_treated"),
-        F.round(F.first("b0"), 6).alias("b_intercept"),
-        F.round(F.first("b1"), 6).alias("b_month"),
-        F.round(F.first("b2"), 6).alias("b_fstatus"),
-        q9_sum(t_col / p_col).alias("sw_t"),
-        q9_sum(t_col * yo / p_col).alias("swy_t"),
-        q9_sum((1 - t_col) / (1.0 - p_col)).alias("sw_c"),
-        q9_sum((1 - t_col) * yo / (1.0 - p_col)).alias("swy_c"),
+        *[
+            F.round(F.lit(b), 6).alias(c)
+            for b, c in zip(beta, ("b_intercept", "b_month", "b_fstatus"))
+        ],
+        q9_lane_sum(t_col / p_col).alias("sw_t"),
+        q9_lane_sum(t_col * yo / p_col).alias("swy_t"),
+        q9_lane_sum((1 - t_col) / (1.0 - p_col)).alias("sw_c"),
+        q9_lane_sum((1 - t_col) * yo / (1.0 - p_col)).alias("swy_c"),
     )
     return agg.select(
         "n",
@@ -683,31 +614,9 @@ _AIPW_DR = (
 )
 
 
-def _aipw_sql(iters: int = _IRLS_T) -> str:
-    parts = [f"s AS ({_IPW_SRC})", "b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT x1, x2, y, {_IRLS_P} AS p, b0, b1, b2 "
-            f"FROM s CROSS JOIN b{i-1}_)"
-        )
-        parts.append(
-            f"a{i} AS (SELECT ANY_VALUE(b0) AS b0, ANY_VALUE(b1) AS b1, ANY_VALUE(b2) AS b2, "
-            f"{_irls_q9_sum('p * (1.0 - p)')} AS n, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1')} AS s1, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2')} AS s2, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x1')} AS s11, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x2')} AS s12, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2 * x2')} AS s22, "
-            f"{_irls_q9_sum('(y - p)')} AS sy, "
-            f"{_irls_q9_sum('(y - p) * x1')} AS s1y, "
-            f"{_irls_q9_sum('(y - p) * x2')} AS s2y "
-            f"FROM r{i})"
-        )
-        parts.append(
-            f"b{i}_ AS (SELECT b0 + {_OLS_B0} AS b0, b1 + {_OLS_B1} AS b1, "
-            f"b2 + {_OLS_B2} AS b2 FROM a{i})"
-        )
-    t = iters
+def _aipw_sql() -> str:
+    parts = [f"s AS ({_IPW_SRC})", *irls_sql_ctes()]
+    t = _IRLS_T
     parts.append(f"mtm AS ({_aipw_moments_sql('y = 1')})")
     parts.append(
         f"mt AS (SELECT {_OLS_B0} AS a0, {_OLS_B1} AS a1, {_OLS_B2} AS a2 FROM mtm)"
@@ -724,7 +633,7 @@ def _aipw_sql(iters: int = _IRLS_T) -> str:
         "fin AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
         "CAST(SUM(y) AS BIGINT) AS n_treated, "
         "ANY_VALUE(a0) AS a0, ANY_VALUE(c0) AS c0, "
-        + _irls_q9_sum(_AIPW_DR)
+        + q9_sum_sql(_AIPW_DR)
         + " AS sdr FROM rf)"
     )
     return (
@@ -752,19 +661,19 @@ def q_aipw_doubly_robust_ate(spark, sf_dir, beta=None):
     treated/control splits, and the per-row augmented term rides the
     1e-9 DECIMAL grid.
 
+    ``beta`` lets `causal_e2e_readout` pass in the (b0, b1, b2) it
+    already fitted.
+
     Scale plan: T Newton scans + ONE grouped-moment scan for both
-    outcome models + one estimation scan, with three 1-row coefficient
-    relations broadcast into the final pass — every pass map-side
-    combined; nothing driver-side but 1-row betas."""
+    outcome models + one estimation scan.  The propensity betas enter
+    the final pass as driver-side literals and the two 1-row outcome
+    coefficient relations are broadcast into it — every pass map-side
+    combined."""
     to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = _urgent_src(spark, sf_dir)
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     if beta is None:
-        beta = _fit_propensity_beta(src)
-    p_expr = F.expr(_IRLS_P)
+        beta = irls_fit(src)
 
     # BOTH outcome-model arms in ONE conditional-aggregate scan (r11
     # optimization, guide §2.3 "aggregate before you shuffle" applied to
@@ -811,8 +720,7 @@ def q_aipw_doubly_robust_ate(spark, sf_dir, beta=None):
     mt = _arm_coefs("t", ("a0", "a1", "a2"))
     mc = _arm_coefs("c", ("c0", "c1", "c2"))
     rf = (
-        src.crossJoin(F.broadcast(beta))
-        .withColumn("p", p_expr)
+        irls_score(src, beta)
         .crossJoin(F.broadcast(mt))
         .crossJoin(F.broadcast(mc))
     )
@@ -821,8 +729,8 @@ def q_aipw_doubly_robust_ate(spark, sf_dir, beta=None):
         F.sum("y").cast("long").alias("n_treated"),
         F.round(F.first("a0"), 6).alias("mt_intercept"),
         F.round(F.first("c0"), 6).alias("mc_intercept"),
-        F.round(F.first("b0"), 6).alias("ps_intercept"),
-        q9_sum(F.expr(_AIPW_DR)).alias("sdr"),
+        F.round(F.lit(beta[0]), 6).alias("ps_intercept"),
+        q9_lane_sum(F.expr(_AIPW_DR)).alias("sdr"),
     )
     return fin.select(
         "n",
@@ -865,8 +773,8 @@ _BH_Z = (
 def _bh_sql() -> str:
     side = lambda p, g: (  # noqa: E731
         f"SUM(CASE WHEN grp = {g} THEN 1 ELSE 0 END) * 1.0 AS {p}n,\n"
-        f"  {_irls_q9_sum(f'CASE WHEN grp = {g} THEN v END')} AS {p}sv,\n"
-        f"  {_irls_q9_sum(f'CASE WHEN grp = {g} THEN v * v END')} AS {p}svv"
+        f"  {q9_sum_sql(f'CASE WHEN grp = {g} THEN v END')} AS {p}sv,\n"
+        f"  {q9_sum_sql(f'CASE WHEN grp = {g} THEN v * v END')} AS {p}svv"
     )
     return f"""
 WITH s AS (
@@ -924,22 +832,18 @@ def q_fdr_bh_metric_screen(spark, sf_dir):
     relation (≤ a few hundred metrics in practice), never the fact
     grain."""
     ev = load_table(spark, sf_dir, "events")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = ev.select(
         "event_type",
         (F.col("event_id") % 2).cast("long").alias("grp"),
         F.col("value").cast("double").alias("v"),
     )
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     def side(p, g):
         only = lambda t: F.when(F.col("grp") == g, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{p}n"),
-            q9_sum(only(F.col("v"))).alias(f"{p}sv"),
-            q9_sum(only(F.col("v") * F.col("v"))).alias(f"{p}svv"),
+            q9_lane_sum(only(F.col("v"))).alias(f"{p}sv"),
+            q9_lane_sum(only(F.col("v") * F.col("v"))).alias(f"{p}svv"),
         ]
 
     m = s.groupBy("event_type").agg(*(side("a_", 0) + side("b_", 1)))
@@ -1048,13 +952,13 @@ b0_ AS (SELECT 0.0 AS b)"""
     parts = [pre]
     for i in range(1, iters + 1):
         parts.append(
-            f"i{i} AS (SELECT ANY_VALUE(b) AS b, {_irls_q9_sum(_COX_U)} AS su, "
-            f"{_irls_q9_sum(_COX_I)} AS si FROM ev CROSS JOIN b{i-1}_)"
+            f"i{i} AS (SELECT ANY_VALUE(b) AS b, {q9_sum_sql(_COX_U)} AS su, "
+            f"{q9_sum_sql(_COX_I)} AS si FROM ev CROSS JOIN b{i-1}_)"
         )
         parts.append(f"b{i}_ AS (SELECT round(b + su / si, 9) AS b FROM i{i})")
     t = iters
     parts.append(
-        f"fin AS (SELECT ANY_VALUE(b) AS b, {_irls_q9_sum(_COX_I)} AS si "
+        f"fin AS (SELECT ANY_VALUE(b) AS b, {q9_sum_sql(_COX_I)} AS si "
         f"FROM ev CROSS JOIN b{t}_)"
     )
     return (
@@ -1544,27 +1448,24 @@ def q_james_stein_source_means(spark, sf_dir):
         9,
     )
 
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
     per_src = (
         docs.select("source", q.alias("q"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             to_d(F.sum(F.col("q").cast("decimal(38, 9)"))).alias("sq"),
-            q9_sum(F.col("q") * F.col("q")).alias("sqq"),
+            q9_lane_sum(F.col("q") * F.col("q")).alias("sqq"),
         )
         .localCheckpoint(eager=True)
     )
     g = per_src.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        q9_sum(F.col("sq") / F.col("n")).alias("sum_means"),
-        q9_sum(F.col("sqq") - F.col("sq") * F.col("sq") / F.col("n")).alias(
+        q9_lane_sum(F.col("sq") / F.col("n")).alias("sum_means"),
+        q9_lane_sum(F.col("sqq") - F.col("sq") * F.col("sq") / F.col("n")).alias(
             "sum_within"
         ),
         F.sum(F.col("n") - 1).cast("double").alias("df_within"),
-        q9_sum(F.lit(1.0) / F.col("n")).alias("sum_inv_n"),
+        q9_lane_sum(F.lit(1.0) / F.col("n")).alias("sum_inv_n"),
     ).selectExpr(
         "k",
         "sum_means / k AS grand",
@@ -1574,7 +1475,7 @@ def q_james_stein_source_means(spark, sf_dir):
     spread = (
         per_src.crossJoin(F.broadcast(g))
         .agg(
-            q9_sum(
+            q9_lane_sum(
                 (F.col("sq") / F.col("n") - F.col("grand"))
                 * (F.col("sq") / F.col("n") - F.col("grand"))
             ).alias("ss")

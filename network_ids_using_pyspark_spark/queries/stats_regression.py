@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum
+from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
 from ..functions.hashing import (
     HASH_SPACE,
     hash_bucket,
@@ -297,6 +297,10 @@ def q_ols_regression_exact(spark, sf_dir):
 # Newton step solves with the SAME adjugate template as OLS, and the
 # sigmoid is quantized to the 1e-9 grid so exp() library differences
 # can't leak through.  Three iterations unrolled on both engines.
+#
+# The loop exists once per engine: `irls_fit` / `irls_score` (Spark)
+# and `irls_sql_ctes` (oracle).  Every IRLS consumer — logistic
+# (`link="logit"`) or Poisson (`link="log"`) — goes through them.
 # ---------------------------------------------------------------------------
 
 _IRLS_T = 3
@@ -306,6 +310,92 @@ _IRLS_P = (
     "least(greatest(round(1.0 / (1.0 + exp(-(b0 + b1 * x1 + b2 * x2))), 9),"
     " 0.000000001), 0.999999999)"
 )
+# Poisson mean (log link): quantized AFTER exp, floored away from 0
+_PGLM_MU = "greatest(round(exp(b0 + b1 * x1 + b2 * x2), 9), 0.000000001)"
+
+# link -> (fitted-mean column, its SQL, Newton weight)
+_IRLS_LINKS = {
+    "logit": ("p", _IRLS_P, "p * (1.0 - p)"),
+    "log": ("mu", _PGLM_MU, "mu"),
+}
+
+
+def _irls_moments(link: str) -> list[tuple[str, str]]:
+    """The nine per-step moments as (name, row term).  The names REUSE
+    the OLS adjugate/det template: H -> (n,s1,s2,s11,s12,s22),
+    g -> (sy,s1y,s2y)."""
+    m, _, w = _IRLS_LINKS[link]
+    r = f"(y - {m})"
+    return [
+        ("n", w),
+        ("s1", f"{w} * x1"),
+        ("s2", f"{w} * x2"),
+        ("s11", f"{w} * x1 * x1"),
+        ("s12", f"{w} * x1 * x2"),
+        ("s22", f"{w} * x2 * x2"),
+        ("sy", r),
+        ("s1y", f"{r} * x1"),
+        ("s2y", f"{r} * x2"),
+    ]
+
+
+def irls_sql_ctes(link: str = "logit") -> list[str]:
+    """Oracle twin of `irls_fit`: the CTEs ``b0_`` .. ``b{_IRLS_T}_``
+    of the unrolled Newton chain from zero over a CTE ``s`` with
+    columns (x1, x2, y).  The caller prepends ``s`` and scores against
+    the last 1-row ``b{_IRLS_T}_``."""
+    m, mean_sql, _ = _IRLS_LINKS[link]
+    sums = ", ".join(f"{q9_sum_sql(t)} AS {n}" for n, t in _irls_moments(link))
+    parts = ["b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"]
+    for i in range(1, _IRLS_T + 1):
+        parts.append(
+            f"r{i} AS (SELECT x1, x2, y, {mean_sql} AS {m}, b0, b1, b2 "
+            f"FROM s CROSS JOIN b{i-1}_)"
+        )
+        parts.append(
+            f"a{i} AS (SELECT ANY_VALUE(b0) AS b0, ANY_VALUE(b1) AS b1, "
+            f"ANY_VALUE(b2) AS b2, {sums} FROM r{i})"
+        )
+        parts.append(
+            f"b{i}_ AS (SELECT b0 + {_OLS_B0} AS b0, b1 + {_OLS_B1} AS b1, "
+            f"b2 + {_OLS_B2} AS b2 FROM a{i})"
+        )
+    return parts
+
+
+def irls_score(src, beta, link: str = "logit"):
+    """``src`` plus the coefficients as literal columns b0..b2 and the
+    fitted mean (``p`` for logit, ``mu`` for log) from the same SQL
+    template the oracle uses.  Works on batch and streaming frames."""
+    m, mean_sql, _ = _IRLS_LINKS[link]
+    b0, b1, b2 = beta
+    return src.select(
+        "*", F.lit(b0).alias("b0"), F.lit(b1).alias("b1"), F.lit(b2).alias("b2")
+    ).withColumn(m, F.expr(mean_sql))
+
+
+def irls_fit(src, link: str = "logit") -> tuple[float, float, float]:
+    """_IRLS_T unrolled Newton/IRLS steps from zero over ``src``
+    (columns x1, x2, y).  Each step is one aggregate of the nine q9
+    moments and one ``.first()`` of ``b_k + _OLS_Bk``.  The betas live
+    on the driver as Python floats (a Spark double round-trips through
+    a Python float exactly) and enter the next scan as literals:
+    nothing is joined or persisted between steps."""
+    beta = (0.0, 0.0, 0.0)
+    for _ in range(_IRLS_T):
+        a = irls_score(src, beta, link).agg(
+            *[q9_lane_sum(F.expr(t)).alias(n) for n, t in _irls_moments(link)]
+        )
+        beta = tuple(
+            a.select(
+                *[
+                    F.lit(b) + F.expr(step)
+                    for b, step in zip(beta, (_OLS_B0, _OLS_B1, _OLS_B2))
+                ]
+            ).first()
+        )
+    return beta
+
 
 _IRLS_SRC = """
   SELECT CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS x1,
@@ -315,46 +405,27 @@ _IRLS_SRC = """
 """
 
 
-def _irls_q9_sum(term: str) -> str:
-    return (
-        f"CAST(CAST(SUM(CAST(round({term}, 9) AS DECIMAL(38, 9))) AS VARCHAR)"
-        " AS DOUBLE)"
+def _logreg_src(spark, sf_dir):
+    """Spark twin of `_IRLS_SRC`: x1 = order month, x2 = urgent flag,
+    y = finished-status.  Shared by the logistic model's consumers
+    (`logreg_irls_exact`, `brier_decomposition`, `model_gains_table`)."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.select(
+        F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
+        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("x2"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
     )
 
 
-def _irls_sql(iters: int = _IRLS_T) -> str:
-    parts = [f"s AS ({_IRLS_SRC})", "b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT x1, x2, y, {_IRLS_P} AS p, b0, b1, b2 "
-            f"FROM s CROSS JOIN b{i-1}_)"
-        )
-        # moment names chosen to REUSE the OLS adjugate/det template:
-        # H -> (n,s1,s2,s11,s12,s22), g -> (sy,s1y,s2y)
-        parts.append(
-            f"a{i} AS (SELECT ANY_VALUE(b0) AS b0, ANY_VALUE(b1) AS b1, ANY_VALUE(b2) AS b2, "
-            f"{_irls_q9_sum('p * (1.0 - p)')} AS n, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1')} AS s1, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2')} AS s2, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x1')} AS s11, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x2')} AS s12, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2 * x2')} AS s22, "
-            f"{_irls_q9_sum('(y - p)')} AS sy, "
-            f"{_irls_q9_sum('(y - p) * x1')} AS s1y, "
-            f"{_irls_q9_sum('(y - p) * x2')} AS s2y "
-            f"FROM r{i})"
-        )
-        parts.append(
-            f"b{i}_ AS (SELECT b0 + {_OLS_B0} AS b0, b1 + {_OLS_B1} AS b1, "
-            f"b2 + {_OLS_B2} AS b2 FROM a{i})"
-        )
-    t = iters
+def _irls_sql() -> str:
+    parts = [f"s AS ({_IRLS_SRC})", *irls_sql_ctes()]
+    t = _IRLS_T
     parts.append(
         f"rf AS (SELECT x1, x2, y, {_IRLS_P} AS p FROM s CROSS JOIN b{t}_)"
     )
     parts.append(
         "loss AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        + _irls_q9_sum(
+        + q9_sum_sql(
             "y * round(ln(p), 9) + (1 - y) * round(ln(1.0 - p), 9)"
         )
         + " AS ll FROM rf)"
@@ -388,66 +459,23 @@ def q_logreg_irls_exact(spark, sf_dir):
     off {0,1}.
 
     Scale plan: T iterations = T map-side-combined aggregates over the
-    scan — no gradient state, no driver-side vectors beyond the 3
-    coefficients riding a 1-row broadcast.  Convergence is textbook
-    Newton (quadratic near the optimum; the unit test pins the fit
-    against scikit-free numpy IRLS run to convergence)."""
-    o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    src = o.select(
-        F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("x2"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    )
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
-    beta = src.sparkSession.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
-    )
-    p_expr = F.expr(_IRLS_P)
-    for _ in range(_IRLS_T):
-        r = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
-        w = F.col("p") * (1.0 - F.col("p"))
-        resid = F.col("y") - F.col("p")
-        a = r.agg(
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.first("b2").alias("b2"),
-            q9_sum(w).alias("n"),
-            q9_sum(w * F.col("x1")).alias("s1"),
-            q9_sum(w * F.col("x2")).alias("s2"),
-            q9_sum(w * F.col("x1") * F.col("x1")).alias("s11"),
-            q9_sum(w * F.col("x1") * F.col("x2")).alias("s12"),
-            q9_sum(w * F.col("x2") * F.col("x2")).alias("s22"),
-            q9_sum(resid).alias("sy"),
-            q9_sum(resid * F.col("x1")).alias("s1y"),
-            q9_sum(resid * F.col("x2")).alias("s2y"),
-        )
-        beta = a.select(
-            (F.col("b0") + F.expr(_OLS_B0)).alias("b0"),
-            (F.col("b1") + F.expr(_OLS_B1)).alias("b1"),
-            (F.col("b2") + F.expr(_OLS_B2)).alias("b2"),
-        )
-    # the fitted coefficients feed BOTH the output row and the loss
-    # pass — materialize once (a 1-row, 3-column frame; the 3-scan
-    # training job runs here) so the iteration lineage isn't recomputed
-    # per consumer
-    beta = beta.localCheckpoint(eager=True)
-    rf = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
+    scan — no gradient state; the 3 coefficients come back to the
+    driver after each step and enter the next scan as literals.
+    Convergence is textbook Newton (quadratic near the optimum; the
+    unit test pins the fit against scikit-free numpy IRLS run to
+    convergence)."""
+    src = _logreg_src(spark, sf_dir)
+    beta = irls_fit(src)
     ll_term = F.col("y") * F.round(F.log("p"), 9) + (1 - F.col("y")) * F.round(
         F.log(1.0 - F.col("p")), 9
     )
-    loss = rf.agg(
-        F.count(F.lit(1)).cast("long").alias("n"), q9_sum(ll_term).alias("ll")
-    )
-    return beta.crossJoin(F.broadcast(loss)).select(
-        "n",
-        F.round("b0", 6).alias("b_intercept"),
-        F.round("b1", 6).alias("b_month"),
-        F.round("b2", 6).alias("b_urgent"),
-        F.round(-F.col("ll") / F.col("n"), 6).alias("log_loss"),
+    return irls_score(src, beta).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        *[
+            F.round(F.lit(b), 6).alias(c)
+            for b, c in zip(beta, ("b_intercept", "b_month", "b_urgent"))
+        ],
+        F.round(-q9_lane_sum(ll_term) / F.count(F.lit(1)), 6).alias("log_loss"),
     )
 
 
@@ -465,9 +493,6 @@ _GNB_PI2 = "6.283185307179586"  # 2*pi as an exact literal on both engines
 
 def _gnb_sql() -> str:
     split = hash_bucket_sql("o_orderkey", 10, seed="gnb:")
-    q9s = lambda t: (  # noqa: E731
-        f"CAST(CAST(SUM(CAST(round({t}, 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)"
-    )
     ll = (
         "(prior_ln - 0.5 * (lnv1 + (x1 - m1) * (x1 - m1) / v1)"
         " - 0.5 * (lnv2 + (x2 - m2) * (x2 - m2) / v2))"
@@ -484,10 +509,10 @@ train AS (SELECT * FROM src WHERE bkt < 8),
 test AS (SELECT * FROM src WHERE bkt >= 8),
 stats AS (
   SELECT cls, COUNT(*) AS n_c,
-         {q9s('x1')} / COUNT(*) AS m1,
-         {q9s('x1 * x1')} / COUNT(*) AS s11,
-         {q9s('x2')} / COUNT(*) AS m2,
-         {q9s('x2 * x2')} / COUNT(*) AS s22
+         {q9_sum_sql('x1')} / COUNT(*) AS m1,
+         {q9_sum_sql('x1 * x1')} / COUNT(*) AS s11,
+         {q9_sum_sql('x2')} / COUNT(*) AS m2,
+         {q9_sum_sql('x2 * x2')} / COUNT(*) AS s22
   FROM train GROUP BY cls
 ),
 model AS (
@@ -533,7 +558,6 @@ def q_gnb_train_confusion_exact(spark, sf_dir):
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         "o_orderkey",
         F.col("o_orderstatus").alias("cls"),
@@ -544,15 +568,12 @@ def q_gnb_train_confusion_exact(spark, sf_dir):
     train = src.filter(F.col("bkt") < 8)
     test = src.filter(F.col("bkt") >= 8)
 
-    def q9s(t):
-        return q9_lane_sum(t)
-
     stats = train.groupBy("cls").agg(
         F.count(F.lit(1)).alias("n_c"),
-        (q9s(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9s(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9s(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9s(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
+        (q9_lane_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
+        (q9_lane_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
+        (q9_lane_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
+        (q9_lane_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
     )
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
@@ -717,9 +738,6 @@ def _gnb_calib_sql() -> str:
         "(prior_ln - 0.5 * (lnv1 + (x1 - m1) * (x1 - m1) / v1)"
         " - 0.5 * (lnv2 + (x2 - m2) * (x2 - m2) / v2))"
     )
-    q9s = lambda t: (  # noqa: E731
-        f"CAST(CAST(SUM(CAST(round({t}, 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)"
-    )
     return f"""
 WITH src AS (
   SELECT o_orderkey, o_orderstatus AS cls,
@@ -732,10 +750,10 @@ train AS (SELECT * FROM src WHERE bkt < 8),
 test AS (SELECT * FROM src WHERE bkt >= 8),
 stats AS (
   SELECT cls, COUNT(*) AS n_c,
-         {q9s('x1')} / COUNT(*) AS m1,
-         {q9s('x1 * x1')} / COUNT(*) AS s11,
-         {q9s('x2')} / COUNT(*) AS m2,
-         {q9s('x2 * x2')} / COUNT(*) AS s22
+         {q9_sum_sql('x1')} / COUNT(*) AS m1,
+         {q9_sum_sql('x1 * x1')} / COUNT(*) AS s11,
+         {q9_sum_sql('x2')} / COUNT(*) AS m2,
+         {q9_sum_sql('x2 * x2')} / COUNT(*) AS s22
   FROM train GROUP BY cls
 ),
 model AS (
@@ -766,7 +784,7 @@ conf AS (
 )
 SELECT LEAST(CAST(floor(confidence * 100) AS BIGINT), 99) AS conf_pctbin,
        CAST(COUNT(*) AS BIGINT) AS n,
-       {q9s('confidence')} / COUNT(*) AS avg_confidence,
+       {q9_sum_sql('confidence')} / COUNT(*) AS avg_confidence,
        round(CAST(SUM(CASE WHEN actual = predicted THEN 1 ELSE 0 END) AS DOUBLE)
              / COUNT(*), 6) AS accuracy
 FROM conf GROUP BY 1
@@ -793,7 +811,6 @@ def q_gnb_calibration_curve(spark, sf_dir):
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         "o_orderkey",
         F.col("o_orderstatus").alias("cls"),
@@ -804,15 +821,12 @@ def q_gnb_calibration_curve(spark, sf_dir):
     train = src.filter(F.col("bkt") < 8)
     test = src.filter(F.col("bkt") >= 8)
 
-    def q9s(t):
-        return q9_lane_sum(t)
-
     stats = train.groupBy("cls").agg(
         F.count(F.lit(1)).alias("n_c"),
-        (q9s(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9s(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9s(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9s(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
+        (q9_lane_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
+        (q9_lane_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
+        (q9_lane_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
+        (q9_lane_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
     )
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
@@ -880,7 +894,7 @@ def q_gnb_calibration_curve(spark, sf_dir):
         )
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        (q9s(F.col("confidence")) / F.count(F.lit(1))).alias("avg_confidence"),
+        (q9_lane_sum(F.col("confidence")) / F.count(F.lit(1))).alias("avg_confidence"),
         F.round(
             F.sum(F.when(F.col("actual") == F.col("predicted"), 1).otherwise(0)).cast(
                 "double"
@@ -978,9 +992,6 @@ def _gnb_auc_sql() -> str:
         "(prior_ln - 0.5 * (lnv1 + (x1 - m1) * (x1 - m1) / v1)"
         " - 0.5 * (lnv2 + (x2 - m2) * (x2 - m2) / v2))"
     )
-    q9s = lambda t: (  # noqa: E731
-        f"CAST(CAST(SUM(CAST(round({t}, 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)"
-    )
     return f"""
 WITH src AS (
   SELECT o_orderkey, o_orderstatus AS cls,
@@ -993,10 +1004,10 @@ train AS (SELECT * FROM src WHERE bkt < 8),
 test AS (SELECT * FROM src WHERE bkt >= 8),
 stats AS (
   SELECT cls, COUNT(*) AS n_c,
-         {q9s('x1')} / COUNT(*) AS m1,
-         {q9s('x1 * x1')} / COUNT(*) AS s11,
-         {q9s('x2')} / COUNT(*) AS m2,
-         {q9s('x2 * x2')} / COUNT(*) AS s22
+         {q9_sum_sql('x1')} / COUNT(*) AS m1,
+         {q9_sum_sql('x1 * x1')} / COUNT(*) AS s11,
+         {q9_sum_sql('x2')} / COUNT(*) AS m2,
+         {q9_sum_sql('x2 * x2')} / COUNT(*) AS s22
   FROM train GROUP BY cls
 ),
 model AS (
@@ -1062,7 +1073,6 @@ def q_gnb_auc_exact(spark, sf_dir):
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         "o_orderkey",
         F.col("o_orderstatus").alias("cls"),
@@ -1073,15 +1083,12 @@ def q_gnb_auc_exact(spark, sf_dir):
     train = src.filter(F.col("bkt") < 8)
     test = src.filter(F.col("bkt") >= 8)
 
-    def q9s(t):
-        return q9_lane_sum(t)
-
     stats = train.groupBy("cls").agg(
         F.count(F.lit(1)).alias("n_c"),
-        (q9s(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9s(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9s(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9s(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
+        (q9_lane_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
+        (q9_lane_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
+        (q9_lane_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
+        (q9_lane_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
     )
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
@@ -1183,7 +1190,7 @@ def q_gnb_auc_exact(spark, sf_dir):
 _QCF_T = 0.44  # retention threshold on the 1e-9-grid score
 
 
-def _qcf_sql(iters: int = _IRLS_T) -> str:
+def _qcf_sql() -> str:
     stop_sql = "['the', 'a', 'and', 'of', 'to', 'in']"  # queries/text.py list
     toks = r"regexp_split_to_array(trim(text), '\s+')"
     parts = [
@@ -1195,32 +1202,10 @@ def _qcf_sql(iters: int = _IRLS_T) -> str:
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
   FROM documents WHERE len({toks}) > 0
 )""",
-        "b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)",
+        *irls_sql_ctes(),
     ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"r{i} AS (SELECT x1, x2, y, {_IRLS_P} AS p, b0, b1, b2 "
-            f"FROM s CROSS JOIN b{i-1}_)"
-        )
-        parts.append(
-            f"a{i} AS (SELECT ANY_VALUE(b0) AS b0, ANY_VALUE(b1) AS b1, ANY_VALUE(b2) AS b2, "
-            f"{_irls_q9_sum('p * (1.0 - p)')} AS n, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1')} AS s1, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2')} AS s2, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x1')} AS s11, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x1 * x2')} AS s12, "
-            f"{_irls_q9_sum('p * (1.0 - p) * x2 * x2')} AS s22, "
-            f"{_irls_q9_sum('(y - p)')} AS sy, "
-            f"{_irls_q9_sum('(y - p) * x1')} AS s1y, "
-            f"{_irls_q9_sum('(y - p) * x2')} AS s2y "
-            f"FROM r{i})"
-        )
-        parts.append(
-            f"b{i}_ AS (SELECT b0 + {_OLS_B0} AS b0, b1 + {_OLS_B1} AS b1, "
-            f"b2 + {_OLS_B2} AS b2 FROM a{i})"
-        )
     parts.append(
-        f"rf AS (SELECT lang, {_IRLS_P} AS p FROM s CROSS JOIN b{iters}_)"
+        f"rf AS (SELECT lang, {_IRLS_P} AS p FROM s CROSS JOIN b{_IRLS_T}_)"
     )
     return (
         "WITH "
@@ -1228,13 +1213,40 @@ def _qcf_sql(iters: int = _IRLS_T) -> str:
         + f"""
 SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n,
-       round({_irls_q9_sum('p')} / COUNT(*), 6) AS mean_score,
+       round({q9_sum_sql('p')} / COUNT(*), 6) AS mean_score,
        CAST(SUM(CASE WHEN p >= {_QCF_T} THEN 1 ELSE 0 END) AS BIGINT)
          AS n_retained,
        round(CAST(SUM(CASE WHEN p >= {_QCF_T} THEN 1 ELSE 0 END) AS DOUBLE)
              / COUNT(*), 6) AS retained_share
 FROM rf GROUP BY lang
 """
+    )
+
+
+def _qcf_features(df):
+    """(lang, x1 = stopword ratio, x2 = tokens/100, y = is-English)
+    over the non-empty documents of ``df`` (batch or stream)."""
+    stop = ["the", "a", "and", "of", "to", "in"]
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    nstop = F.size(F.filter(toks, lambda t: t.isin(stop)))
+    return df.filter(F.size(toks) > 0).select(
+        "lang",
+        F.round(nstop.cast("double") / F.size(toks), 9).alias("x1"),
+        F.round(F.size(toks) / F.lit(100.0), 9).alias("x2"),
+        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
+    )
+
+
+def _qcf_retention(scored):
+    """Per-language n, mean score and retention at `_QCF_T`."""
+    keep = F.when(F.col("p") >= _QCF_T, 1).otherwise(0)
+    return scored.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.round(q9_lane_sum(F.col("p")) / F.count(F.lit(1)), 6).alias("mean_score"),
+        F.sum(keep).cast("long").alias("n_retained"),
+        F.round(
+            F.sum(keep).cast("double") / F.count(F.lit(1)), 6
+        ).alias("retained_share"),
     )
 
 
@@ -1250,67 +1262,12 @@ def q_quality_classifier_filter(spark, sf_dir):
     comparison are bit-identical across engines and partitionings.
 
     Scale plan: T+1 map-side-combined scans of the corpus (T Newton
-    steps + final scoring), a 3-coefficient 1-row broadcast between
-    passes — the cheapest honest "train a filter model on 100 TB and
-    apply it" shape; the per-language rollup is |langs|-sized."""
-    docs = load_table(spark, sf_dir, "documents")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    stop = ["the", "a", "and", "of", "to", "in"]
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    nstop = F.size(
-        F.filter(toks, lambda t: t.isin(stop))
-    )
-    src = (
-        docs.filter(F.size(toks) > 0)
-        .select(
-            "lang",
-            F.round(nstop.cast("double") / F.size(toks), 9).alias("x1"),
-            F.round(F.size(toks) / F.lit(100.0), 9).alias("x2"),
-            F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        )
-    )
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
-    beta = src.sparkSession.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
-    )
-    p_expr = F.expr(_IRLS_P)
-    for _ in range(_IRLS_T):
-        r = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
-        w = F.col("p") * (1.0 - F.col("p"))
-        resid = F.col("y") - F.col("p")
-        a = r.agg(
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.first("b2").alias("b2"),
-            q9_sum(w).alias("n"),
-            q9_sum(w * F.col("x1")).alias("s1"),
-            q9_sum(w * F.col("x2")).alias("s2"),
-            q9_sum(w * F.col("x1") * F.col("x1")).alias("s11"),
-            q9_sum(w * F.col("x1") * F.col("x2")).alias("s12"),
-            q9_sum(w * F.col("x2") * F.col("x2")).alias("s22"),
-            q9_sum(resid).alias("sy"),
-            q9_sum(resid * F.col("x1")).alias("s1y"),
-            q9_sum(resid * F.col("x2")).alias("s2y"),
-        )
-        beta = a.select(
-            (F.col("b0") + F.expr(_OLS_B0)).alias("b0"),
-            (F.col("b1") + F.expr(_OLS_B1)).alias("b1"),
-            (F.col("b2") + F.expr(_OLS_B2)).alias("b2"),
-        )
-    beta = beta.localCheckpoint(eager=True)
-    rf = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
-    keep = F.when(F.col("p") >= _QCF_T, 1).otherwise(0)
-    return rf.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(q9_sum(F.col("p")) / F.count(F.lit(1)), 6).alias("mean_score"),
-        F.sum(keep).cast("long").alias("n_retained"),
-        F.round(
-            F.sum(keep).cast("double") / F.count(F.lit(1)), 6
-        ).alias("retained_share"),
-    )
+    steps + final scoring), the 3 coefficients carried between passes
+    as driver-side literals — the cheapest honest "train a filter
+    model on 100 TB and apply it" shape; the per-language rollup is
+    |langs|-sized."""
+    src = _qcf_features(load_table(spark, sf_dir, "documents"))
+    return _qcf_retention(irls_score(src, irls_fit(src)))
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_lane_sum
 from ..streaming.stream import (
     run_folded_agg,
     run_to_memory,
@@ -1222,7 +1221,7 @@ def q_stream_bpe_tokenize_totals(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Streaming model-based quality filtering: the IRLS classifier is
 # trained offline on the static corpus; arriving documents are scored
-# map-side against the broadcast coefficients — the "filter the crawl
+# map-side against the literal coefficients — the "filter the crawl
 # as it lands" shape.
 # ---------------------------------------------------------------------------
 
@@ -1239,77 +1238,21 @@ def q_stream_quality_filter_totals(spark, sf_dir):
     scoring grid as `quality_classifier_filter` (whose oracle this
     reuses verbatim — the strongest batch-equivalence statement), but
     the scored relation is the document STREAM: features are map-side
-    expressions per micro-batch, the 3 coefficients ride a broadcast,
-    and per-language retention aggregates in complete mode.  The
-    decimal score sums are order-independent, so micro-batch slicing
-    cannot move a bit.
+    expressions per micro-batch, the 3 coefficients ride in as
+    literals, and per-language retention aggregates in complete mode.
+    The decimal score sums are order-independent, so micro-batch
+    slicing cannot move a bit.
 
     Scale plan: per-batch cost is one map-side pass + a |langs|-row
-    state; the model is a 1-row broadcast — no retraining on stream."""
+    state; the model is 3 driver-side literals — no retraining on
+    stream."""
     from ..sources.tables import load_table
     from ..streaming.stream import run_to_memory, stream_documents
-    from .stats_ext import _IRLS_P, _IRLS_T, _OLS_B0, _OLS_B1, _OLS_B2, _QCF_T
+    from .stats_ext import _qcf_features, _qcf_retention, irls_fit, irls_score
 
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    stop = ["the", "a", "and", "of", "to", "in"]
-
-    def features(df):
-        toks = F.split(F.trim(F.col("text")), r"\s+")
-        nstop = F.size(F.filter(toks, lambda t: t.isin(stop)))
-        return df.filter(F.size(toks) > 0).select(
-            "lang",
-            F.round(nstop.cast("double") / F.size(toks), 9).alias("x1"),
-            F.round(F.size(toks) / F.lit(100.0), 9).alias("x2"),
-            F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        )
-
-    def q9_sum(term):
-        return q9_lane_sum(term)
-
-    src = features(load_table(spark, sf_dir, "documents"))
-    beta = src.sparkSession.range(1).select(
-        F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
-    )
-    p_expr = F.expr(_IRLS_P)
-    for _ in range(_IRLS_T):
-        r = src.crossJoin(F.broadcast(beta)).withColumn("p", p_expr)
-        w = F.col("p") * (1.0 - F.col("p"))
-        resid = F.col("y") - F.col("p")
-        a = r.agg(
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.first("b2").alias("b2"),
-            q9_sum(w).alias("n"),
-            q9_sum(w * F.col("x1")).alias("s1"),
-            q9_sum(w * F.col("x2")).alias("s2"),
-            q9_sum(w * F.col("x1") * F.col("x1")).alias("s11"),
-            q9_sum(w * F.col("x1") * F.col("x2")).alias("s12"),
-            q9_sum(w * F.col("x2") * F.col("x2")).alias("s22"),
-            q9_sum(resid).alias("sy"),
-            q9_sum(resid * F.col("x1")).alias("s1y"),
-            q9_sum(resid * F.col("x2")).alias("s2y"),
-        )
-        beta = a.select(
-            (F.col("b0") + F.expr(_OLS_B0)).alias("b0"),
-            (F.col("b1") + F.expr(_OLS_B1)).alias("b1"),
-            (F.col("b2") + F.expr(_OLS_B2)).alias("b2"),
-        )
-    beta = beta.localCheckpoint(eager=True)
-    scored = (
-        features(stream_documents(spark, sf_dir))
-        .crossJoin(F.broadcast(beta))
-        .withColumn("p", p_expr)
-    )
-    keep = F.when(F.col("p") >= _QCF_T, 1).otherwise(0)
-    agg = scored.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(q9_sum(F.col("p")) / F.count(F.lit(1)), 6).alias("mean_score"),
-        F.sum(keep).cast("long").alias("n_retained"),
-        F.round(
-            F.sum(keep).cast("double") / F.count(F.lit(1)), 6
-        ).alias("retained_share"),
-    )
-    return run_to_memory(agg, "complete")
+    beta = irls_fit(_qcf_features(load_table(spark, sf_dir, "documents")))
+    scored = irls_score(_qcf_features(stream_documents(spark, sf_dir)), beta)
+    return run_to_memory(_qcf_retention(scored), "complete")
 
 
 @register(

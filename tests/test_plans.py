@@ -875,14 +875,14 @@ def test_exact_k_samplers_take_ordered(spark):
 
 def test_logreg_irls_scan_count_is_linear_in_iterations(spark):
     """3 Newton steps + the loss pass + the point estimate = bounded
-    scans, no per-row state: coefficients must ride broadcasts, never
-    a SortMergeJoin."""
+    scans, no per-row state: coefficients must ride in as literals,
+    never a SortMergeJoin."""
     df = _df(spark, "logreg_irls_exact")
     plan = explain_str(df, "simple")
-    # the T-scan training job materializes into the checkpointed 1-row
-    # coefficient frame; the serving plan re-scans orders exactly once
-    # (the loss pass) — referencing the coefficients twice must NOT
-    # replay the iteration lineage
+    # the T Newton scans run at build time and leave the coefficients
+    # on the driver as literals; the serving plan re-scans orders
+    # exactly once (the loss pass) — it must NOT replay the iteration
+    # lineage
     assert plan.count("FileScan") == 1, plan.count("FileScan")
     assert "SortMergeJoin" not in plan
 
@@ -948,9 +948,9 @@ def test_mmr_loop_pool_sized(spark):
 
 
 def test_quality_filter_scan_linear_in_iterations(spark):
-    """Same contract as logreg_irls: referencing the checkpointed
-    coefficients must not replay training lineage — the serving plan
-    re-scans documents exactly once for the scoring pass."""
+    """Same contract as logreg_irls: the literal coefficients carry
+    no training lineage — the serving plan re-scans documents exactly
+    once for the scoring pass."""
     df = _df(spark, "quality_classifier_filter")
     plan = explain_str(df, "simple")
     assert plan.count("FileScan") == 1, plan.count("FileScan")
@@ -1228,8 +1228,8 @@ def test_kn_lm_relations_broadcast(spark):
 
 def test_ipw_final_pass_is_single_scan_broadcast_beta(spark):
     """The IPW estimate is one fact scan with the fitted 3-coefficient
-    beta attached as a 1-row broadcast (Newton passes already ran at
-    checkpoint time) — no wide joins anywhere."""
+    beta attached as literals (the Newton passes already ran at build
+    time) — no wide joins anywhere."""
     df = _df(spark, "propensity_ipw_ate")
     plan = explain_str(df, "simple")
     assert "SortMergeJoin" not in plan
@@ -1249,8 +1249,8 @@ def test_geo_grid_join_is_hash_join_never_theta(spark):
 
 
 def test_aipw_final_pass_is_single_scan_broadcast_models(spark):
-    """AIPW estimation = one fact scan with three 1-row coefficient
-    relations (propensity beta + two outcome models) broadcast in."""
+    """AIPW estimation = one fact scan with the propensity beta as
+    literals and the two 1-row outcome-model relations broadcast in."""
     df = _df(spark, "aipw_doubly_robust_ate")
     plan = explain_str(df, "simple")
     assert "SortMergeJoin" not in plan
@@ -1524,7 +1524,7 @@ def test_circular_stats_single_aggregate(spark):
 
 def test_poisson_glm_iterations_on_checkpointed_counts(spark):
     """The PK-grouped count relation is built once (checkpointed); the
-    Newton scans read it with 1-row betas broadcast in."""
+    Newton scans read it with the betas carried in as literals."""
     df = _df(spark, "poisson_glm_exact")
     plan = explain_str(df, "simple")
     assert plan.count("FileScan parquet") == 0
@@ -1542,8 +1542,9 @@ def test_mantel_haenszel_single_fact_pass(spark):
 
 def test_causal_e2e_no_fact_grain_joins(spark):
     """The five-estimator union inherits its members' contracts: every
-    join in the plan is a broadcast (1-row coefficient relations), no
-    sort-merge join, no window over any fact grain."""
+    join in the plan is a broadcast (1-row coefficient relations; the
+    propensity betas are literals), no sort-merge join, no window over
+    any fact grain."""
     df = _df(spark, "causal_e2e_readout")
     plan = explain_str(df, "simple")
     assert "SortMergeJoin" not in plan

@@ -319,6 +319,17 @@ def test_logreg_irls_matches_numpy_newton(spark):
     assert abs(r["log_loss"] - ll) < 1e-4
 
 
+def test_logreg_irls_persists_nothing(spark):
+    """The Newton betas come back to the driver as literals, so fitting
+    and serving `logreg_irls_exact` leaves no persisted or
+    checkpointed RDD behind."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    df = REGISTRY["logreg_irls_exact"][0](spark, SF_DIR)
+    df.collect()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_kmeans_lloyd_matches_numpy(spark):
     """Engine Lloyd's vs a numpy reimplementation: same init, same
     tiebreak, same iteration count — sizes equal, WCSS within 1e-6
