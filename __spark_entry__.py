@@ -18,7 +18,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# make the package importable regardless of the harness's cwd
+# make the package importable in this Python process whatever the
+# harness's cwd; Python workers only see it if the JVM was started with
+# the root on PYTHONPATH, which session.get_spark arranges
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)

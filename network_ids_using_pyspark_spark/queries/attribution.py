@@ -28,7 +28,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_lane_sum, q9_sum_sql
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -556,11 +556,7 @@ def q_markov_entropy_rate(spark, sf_dir):
         .groupBy("src")
         .agg(
             F.sum("n").cast("long").alias("tot"),
-            # |states|^2-grain input: decimal optimal at every scale (r12 audit)
-            F.sum(F.round(F.col("term"), 9).cast("decimal(38, 9)"))
-            .cast("string")
-            .cast("double")
-            .alias("h_bits"),
+            q9_sum(F.col("term")).alias("h_bits"),
         )
     )
     t = per_src.agg(F.sum("tot").cast("long").alias("t"))

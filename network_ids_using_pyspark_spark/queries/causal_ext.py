@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -156,10 +156,10 @@ def q_rdd_cutoff_effect(spark, sf_dir):
         only = lambda t: F.when(F.col("side") == tag, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}_n"),
-            q9_lane_sum(only(F.col("u"))).alias(f"{tag}_s1"),
-            q9_lane_sum(only(F.col("u") * F.col("u"))).alias(f"{tag}_s11"),
+            q9_sum(only(F.col("u"))).alias(f"{tag}_s1"),
+            q9_sum(only(F.col("u") * F.col("u"))).alias(f"{tag}_s11"),
             to_d(F.sum(only(F.col("y")))).alias(f"{tag}_sy"),
-            q9_lane_sum(only(F.col("u") * F.col("y"))).alias(f"{tag}_s1y"),
+            q9_sum(only(F.col("u") * F.col("y"))).alias(f"{tag}_s1y"),
         ]
 
     m = u.agg(*(side_agg("l") + side_agg("r")))
@@ -392,10 +392,7 @@ def q_cem_matching_att(spark, sf_dir):
         to_d(F.sum(F.when(matched, F.col("sy_t").cast("decimal(38, 9)")))).alias(
             "sum_y_t"
         ),
-        # strata-grain input: decimal optimal at every scale (r12 audit)
-        to_d(
-            F.sum(F.round(F.when(matched, w_term), 9).cast("decimal(38, 9)"))
-        ).alias("sum_wy_c"),
+        q9_sum(F.when(matched, w_term)).alias("sum_wy_c"),
     )
     return agg.select(
         "n_strata_total",
@@ -513,12 +510,6 @@ def q_chow_break_test(spark, sf_dir):
         )
     )
 
-    def q9_sum(term):
-        # day/strata-grain aggregate input (non-scaling cardinality):
-        # the raw decimal sum is optimal at EVERY scale here — the lane
-        # expansion only adds fixed planning/codegen cost (r12 grain audit)
-        return to_d(F.sum(F.round(term, 9).cast("decimal(38, 9)")))
-
     def seg(tag, flag):
         only = lambda c: F.when(F.col("pre") == flag, c)  # noqa: E731
         return [
@@ -580,8 +571,7 @@ UNION ALL
 SELECT 'd_cem_att' AS estimator, att_cem AS estimate FROM ({_CEM_SQL})
 UNION ALL
 SELECT 'e_tlearner_pop' AS estimator,
-       round(CAST(CAST(SUM(CAST(round((n_t + n_c) * uplift_pred, 9)
-                                AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)
+       round({q9_sum_sql("(n_t + n_c) * uplift_pred")}
              / SUM(n_t + n_c), 6) AS estimate
 FROM ({_TL_SQL})
 ORDER BY estimator
@@ -642,13 +632,7 @@ def q_causal_e2e_readout(spark, sf_dir):
         q_uplift_tlearner_segments(spark, sf_dir)
         .agg(
             F.round(
-                to_d(
-                    F.sum(
-                        F.round(
-                            (F.col("n_t") + F.col("n_c")) * F.col("uplift_pred"), 9
-                        ).cast("decimal(38, 9)")
-                    )
-                )
+                q9_sum((F.col("n_t") + F.col("n_c")) * F.col("uplift_pred"))
                 / F.sum(F.col("n_t") + F.col("n_c")),
                 6,
             ).alias("estimate")
@@ -909,15 +893,15 @@ def q_covariate_balance_smd(spark, sf_dir):
         only = lambda arm, term: F.when(F.col("t") == arm, term)  # noqa: E731
         raw = sw.agg(
             F.count(only(1, F.lit(1))).cast("double").alias("t_n"),
-            q9_lane_sum(only(1, x)).alias("t_s"),
-            q9_lane_sum(only(1, x * x)).alias("t_ss"),
+            q9_sum(only(1, x)).alias("t_s"),
+            q9_sum(only(1, x * x)).alias("t_ss"),
             F.count(only(0, F.lit(1))).cast("double").alias("c_n"),
-            q9_lane_sum(only(0, x)).alias("c_s"),
-            q9_lane_sum(only(0, x * x)).alias("c_ss"),
+            q9_sum(only(0, x)).alias("c_s"),
+            q9_sum(only(0, x * x)).alias("c_ss"),
         )
         wtd = sw.filter(F.col("t") == 0).agg(
-            q9_lane_sum(F.col("w") * x).alias("wc_s"),
-            q9_lane_sum(F.col("w")).alias("wc_n"),
+            q9_sum(F.col("w") * x).alias("wc_s"),
+            q9_sum(F.col("w")).alias("wc_n"),
         )
         var = lambda p: (  # noqa: E731
             (F.col(f"{p}ss") - F.col(f"{p}s") * F.col(f"{p}s") / F.col(f"{p}n"))

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_lane_sum, q9_sum_sql
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from ..operators.similarity import as_double_array, cosine_topk
 from . import register
@@ -925,7 +925,7 @@ def q_pca_power_iteration_exact(spark, sf_dir):
     m = (
         base.crossJoin(F.broadcast(nn))
         .groupBy("i")
-        .agg((q9_lane_sum(F.col("xi")) / F.first("n")).alias("mi"))
+        .agg((q9_sum(F.col("xi")) / F.first("n")).alias("mi"))
     )
     # Centered vectors via the 1-row broadcast mean array; the outer
     # product explodes MAP-SIDE (flatten of the nested transform), so
@@ -955,7 +955,7 @@ def q_pca_power_iteration_exact(spark, sf_dir):
             (F.floor(F.col("p") / _PCA_D) + 1).cast("int").alias("i"),
             (F.col("p") % _PCA_D + 1).cast("int").alias("j"),
         )
-        .agg((q9_lane_sum(F.col("val")) / F.first("n")).alias("cij"))
+        .agg((q9_sum(F.col("val")) / F.first("n")).alias("cij"))
     )
     # Config-bounded reduced collect (D² = 4096 exact cells): the five
     # matvec steps below are float-identical to the former Spark
@@ -1511,7 +1511,7 @@ def q_kcenter_coreset_select(spark, sf_dir):
 # `cosine_topk_*` family's thresholds on a new embedding version.
 # ---------------------------------------------------------------------------
 
-_ISO_SQL = """
+_ISO_SQL = f"""
 WITH vals AS (
   SELECT i - 1 AS dim, v[i] AS val
   FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1520,10 +1520,8 @@ WITH vals AS (
 per_dim AS (
   SELECT dim,
          CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(CAST(round(val, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS s,
-         CAST(CAST(SUM(CAST(round(val * val, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS ss
+         {q9_sum_sql("val")} AS s,
+         {q9_sum_sql("val * val")} AS ss
   FROM vals GROUP BY dim
 ),
 vars_ AS (
@@ -1532,10 +1530,9 @@ vars_ AS (
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_dims,
          CAST(CAST(SUM(CAST(var AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS sv,
-         CAST(CAST(SUM(CAST(round(var * var, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS svv,
-         MIN({'var': var, 'dim': dim}) AS lo,
-         MAX({'var': var, 'dim': dim}) AS hi
+         {q9_sum_sql("var * var")} AS svv,
+         MIN({{'var': var, 'dim': dim}}) AS lo,
+         MAX({{'var': var, 'dim': dim}}) AS hi
   FROM vars_
 ),
 nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs FROM embeddings)
@@ -1572,8 +1569,8 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     )
     per_dim = vals.groupBy("dim").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q9_lane_sum(F.col("val")).alias("s"),
-        q9_lane_sum(F.col("val") * F.col("val")).alias("ss"),
+        q9_sum(F.col("val")).alias("s"),
+        q9_sum(F.col("val") * F.col("val")).alias("ss"),
     )
     vars_ = per_dim.select(
         "dim",
@@ -1586,7 +1583,7 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     agg = vars_.agg(
         F.count(F.lit(1)).cast("long").alias("n_dims"),
         to_d(F.sum(F.col("var").cast("decimal(38, 9)"))).alias("sv"),
-        q9_lane_sum(F.col("var") * F.col("var")).alias("svv"),
+        q9_sum(F.col("var") * F.col("var")).alias("svv"),
         F.min(F.struct("var", "dim")).alias("lo"),
         F.max(F.struct("var", "dim")).alias("hi"),
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..functions.hashing import (
     HASH_SPACE,
     hash_bucket,
@@ -441,8 +441,8 @@ def q_circular_hour_stats(spark, sf_dir):
 
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        q9_lane_sum(F.cos(theta)).alias("c"),
-        q9_lane_sum(F.sin(theta)).alias("s"),
+        q9_sum(F.cos(theta)).alias("c"),
+        q9_sum(F.sin(theta)).alias("s"),
     )
     ang = F.atan2(F.col("s"), F.col("c"))
     return m.select(
@@ -549,7 +549,7 @@ def q_poisson_glm_exact(spark, sf_dir):
             F.round(F.lit(b), 6).alias(c)
             for b, c in zip(beta, ("b_intercept", "b_month", "b_urgent"))
         ],
-        F.round(q9_lane_sum(dev_term) / F.count(F.lit(1)), 6).alias("mean_deviance"),
+        F.round(q9_sum(dev_term) / F.count(F.lit(1)), 6).alias("mean_deviance"),
     )
 
 
@@ -646,14 +646,14 @@ def q_brier_decomposition(spark, sf_dir):
         F.sum("n_b").cast("long").alias("n"), F.sum("sy_b").cast("long").alias("sy")
     )
     bs = scored.agg(
-        q9_lane_sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias("sq")
+        q9_sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias("sq")
     )
     pbar = F.col("sp") / F.col("n_b")
     ybar_b = F.col("sy_b").cast("double") / F.col("n_b")
     ybar = F.col("sy").cast("double") / F.col("n")
     decomp = bins.crossJoin(F.broadcast(tot)).agg(
-        q9_lane_sum(F.col("n_b") * (pbar - ybar_b) * (pbar - ybar_b)).alias("rel_num"),
-        q9_lane_sum(F.col("n_b") * (ybar_b - ybar) * (ybar_b - ybar)).alias("res_num"),
+        q9_sum(F.col("n_b") * (pbar - ybar_b) * (pbar - ybar_b)).alias("rel_num"),
+        q9_sum(F.col("n_b") * (ybar_b - ybar) * (ybar_b - ybar)).alias("res_num"),
     )
     return (
         tot.crossJoin(F.broadcast(bs))
@@ -761,7 +761,7 @@ def q_model_gains_table(spark, sf_dir):
 # interval (Mantel & Haenszel 1959; Robins et al. 1986).
 # ---------------------------------------------------------------------------
 
-_MH_SQL = """
+_MH_SQL = f"""
 WITH s AS (
   SELECT CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS month,
          CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS t,
@@ -779,17 +779,11 @@ cells AS (
 ),
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
-         CAST(CAST(SUM(CAST(round(a * d / n, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS r,
-         CAST(CAST(SUM(CAST(round(b * c / n, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS sstat,
-         CAST(CAST(SUM(CAST(round((a + d) / n * (a * d / n), 9)
-                            AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS prr,
-         CAST(CAST(SUM(CAST(round((a + d) / n * (b * c / n)
-                                  + (b + c) / n * (a * d / n), 9)
-                            AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS psrq,
-         CAST(CAST(SUM(CAST(round((b + c) / n * (b * c / n), 9)
-                            AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS qss
+         {q9_sum_sql("a * d / n")} AS r,
+         {q9_sum_sql("b * c / n")} AS sstat,
+         {q9_sum_sql("(a + d) / n * (a * d / n)")} AS prr,
+         {q9_sum_sql("(a + d) / n * (b * c / n) + (b + c) / n * (a * d / n)")} AS psrq,
+         {q9_sum_sql("(b + c) / n * (b * c / n)")} AS qss
   FROM cells
 )
 SELECT n_strata,
@@ -819,7 +813,6 @@ def q_mantel_haenszel_or(spark, sf_dir):
     Scale plan: one map-side combined group-by to the 12-stratum
     grid; the estimator is one aggregate over THAT."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = o.select(
         F.month(F.col("o_orderdate").cast("date")).cast("long").alias("month"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("t"),
@@ -832,12 +825,6 @@ def q_mantel_haenszel_or(spark, sf_dir):
         F.sum((1 - F.col("t")) * (1 - F.col("y"))).cast("double").alias("d"),
         F.count(F.lit(1)).cast("double").alias("n"),
     )
-
-    def q9_sum(term):
-        # day/strata-grain aggregate input (non-scaling cardinality):
-        # the raw decimal sum is optimal at EVERY scale here — the lane
-        # expansion only adds fixed planning/codegen cost (r12 grain audit)
-        return to_d(F.sum(F.round(term, 9).cast("decimal(38, 9)")))
 
     a, b, c, d, n = (F.col(x) for x in "abcdn")
     agg = cells.agg(
@@ -935,8 +922,8 @@ def q_ab_mde_readout(spark, sf_dir):
         only = lambda c: F.when(F.col("t") == a, c)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}n"),
-            q9_lane_sum(only(F.col("yo"))).alias(f"{tag}s"),
-            q9_lane_sum(only(F.col("yo") * F.col("yo"))).alias(f"{tag}ss"),
+            q9_sum(only(F.col("yo"))).alias(f"{tag}s"),
+            q9_sum(only(F.col("yo") * F.col("yo"))).alias(f"{tag}ss"),
         ]
 
     m = s.agg(*(arm("t_", 1) + arm("c_", 0)))
@@ -1056,8 +1043,8 @@ def q_group_sequential_obf(spark, sf_dir):
         only = lambda c: F.when(F.col("t") == a, c)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{p}n"),
-            q9_lane_sum(only(F.col("yo"))).alias(f"{p}s"),
-            q9_lane_sum(only(F.col("yo") * F.col("yo"))).alias(f"{p}ss"),
+            q9_sum(only(F.col("yo"))).alias(f"{p}s"),
+            q9_sum(only(F.col("yo") * F.col("yo"))).alias(f"{p}ss"),
         ]
 
     per_slice = (
@@ -1114,7 +1101,9 @@ def q_group_sequential_obf(spark, sf_dir):
 # decomposable, which is why regional attribution needs Theil).
 # ---------------------------------------------------------------------------
 
-_THEIL_SQL = """
+_THEIL_WITHIN = "x / (sx_g / n_g) * round(ln(x / (sx_g / n_g)), 6)"
+_THEIL_BETWEEN = "(sx_g / tot.sx) * round(ln((sx_g / n_g) / (tot.sx / tot.n)), 6)"
+_THEIL_SQL = f"""
 WITH cust AS (
   SELECT c.c_nationkey AS nation, o.o_custkey,
          CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30, 6))) AS VARCHAR)
@@ -1136,16 +1125,12 @@ grp AS (
 ),
 within AS (
   SELECT nation, n_g, sx_g,
-         round(CAST(CAST(SUM(CAST(round(
-             x / (sx_g / n_g) * round(ln(x / (sx_g / n_g)), 6), 9)
-           AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) / n_g, 9) AS t_within
+         round({q9_sum_sql(_THEIL_WITHIN)} / n_g, 9) AS t_within
   FROM cust JOIN grp USING (nation)
   GROUP BY nation, n_g, sx_g
 ),
 btw AS (
-  SELECT round(CAST(CAST(SUM(CAST(round(
-             (sx_g / tot.sx) * round(ln((sx_g / n_g) / (tot.sx / tot.n)), 6), 9)
-           AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE), 9) AS t_between
+  SELECT round({q9_sum_sql(_THEIL_BETWEEN)}, 9) AS t_between
   FROM grp CROSS JOIN tot
 )
 SELECT w.nation, w.n_g AS n_customers,
@@ -1183,17 +1168,13 @@ def q_theil_index_decomposition(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
 
-    def dec_sum(term):
-        # lane_sum_dec at scale 6: same value; the string cast renders
-        # 6 instead of 9 fractional digits, which parses to the same double
-        return to_d(lane_sum_dec(term, 6))
-
+    sx = q9_sum(F.round(F.col("x"), 6))
     tot = cust.agg(
-        F.count(F.lit(1)).cast("double").alias("n"), dec_sum(F.col("x")).alias("sx")
+        F.count(F.lit(1)).cast("double").alias("n"), sx.alias("sx")
     )
     grp = cust.groupBy("nation").agg(
         F.count(F.lit(1)).cast("long").alias("n_g"),
-        dec_sum(F.col("x")).alias("sx_g"),
+        sx.alias("sx_g"),
     )
     mu_g = F.col("sx_g") / F.col("n_g")
     within = (
@@ -1201,7 +1182,7 @@ def q_theil_index_decomposition(spark, sf_dir):
         .groupBy("nation", "n_g", "sx_g")
         .agg(
             F.round(
-                q9_lane_sum(
+                q9_sum(
                     F.col("x") / mu_g * F.round(F.log(F.col("x") / mu_g), 6)
                 )
                 / F.col("n_g").cast("double"),
@@ -1214,7 +1195,7 @@ def q_theil_index_decomposition(spark, sf_dir):
         grp.crossJoin(F.broadcast(tot))
         .agg(
             F.round(
-                q9_lane_sum(
+                q9_sum(
                     (F.col("sx_g") / F.col("sx"))
                     * F.round(F.log(mu_g / mu), 6)
                 ),
@@ -1247,18 +1228,14 @@ def q_theil_index_decomposition(spark, sf_dir):
 # normality of the mean; JB says how non-normal the raw metric is).
 # ---------------------------------------------------------------------------
 
-_JB_SQL = """
+_JB_SQL = f"""
 WITH m AS (
   SELECT event_type,
          CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(CAST(round(value, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS s1,
-         CAST(CAST(SUM(CAST(round(value * value, 9) AS DECIMAL(38, 9)))
-                   AS VARCHAR) AS DOUBLE) AS s2,
-         CAST(CAST(SUM(CAST(round(value * value * value, 9)
-                            AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS s3,
-         CAST(CAST(SUM(CAST(round(value * value * value * value, 9)
-                            AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS s4
+         {q9_sum_sql("value")} AS s1,
+         {q9_sum_sql("value * value")} AS s2,
+         {q9_sum_sql("value * value * value")} AS s3,
+         {q9_sum_sql("value * value * value * value")} AS s4
   FROM events GROUP BY event_type
 ),
 c AS (
@@ -1297,10 +1274,10 @@ def q_jarque_bera_normality(spark, sf_dir):
 
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q9_lane_sum(v).alias("s1"),
-        q9_lane_sum(v * v).alias("s2"),
-        q9_lane_sum(v * v * v).alias("s3"),
-        q9_lane_sum(v * v * v * v).alias("s4"),
+        q9_sum(v).alias("s1"),
+        q9_sum(v * v).alias("s2"),
+        q9_sum(v * v * v).alias("s3"),
+        q9_sum(v * v * v * v).alias("s4"),
     )
     mu = F.col("s1") / F.col("n")
     m2 = F.col("s2") / F.col("n") - mu * mu

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..functions.hashing import (
     HASH_SPACE,
     hash_bucket,
@@ -45,16 +45,13 @@ from .stats_regression import (  # noqa: F401
 _HUB_K = 1.345
 _HUB_T = 3
 
-_HUB_D9 = "CAST(round({x}, 9) AS DECIMAL(38, 9))"
-
-
 def _huber_iter_sql(i: int) -> str:
     w = f"LEAST(1.0, {_HUB_K} * (SELECT s FROM scale) / abs(v - (SELECT m FROM mu{i})))"
     return f"""
 mu{i + 1} AS MATERIALIZED (
   SELECT round(
-    CAST(CAST(SUM({_HUB_D9.format(x=f'({w}) * v')}) AS VARCHAR) AS DOUBLE)
-    / CAST(CAST(SUM({_HUB_D9.format(x=w)}) AS VARCHAR) AS DOUBLE), 9) AS m
+    {q9_sum_sql(f"({w}) * v")}
+    / {q9_sum_sql(w)}, 9) AS m
   FROM vals
   WHERE v <> (SELECT m FROM mu{i}) OR abs(v - (SELECT m FROM mu{i})) > 0
 )"""
@@ -73,7 +70,7 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM vals) AS n,
        round((SELECT m FROM mu0), 6) AS median_init,
        round((SELECT s FROM scale), 6) AS mad_scale,
        round((SELECT m FROM mu{_HUB_T}), 6) AS mu_huber,
-       round((SELECT CAST(CAST(SUM({_HUB_D9.format(x='v')}) AS VARCHAR) AS DOUBLE) / COUNT(*) FROM vals), 6) AS mean_plain,
+       round((SELECT {q9_sum_sql("v")} / COUNT(*) FROM vals), 6) AS mean_plain,
        (SELECT CAST(SUM(CASE WHEN abs(v - (SELECT m FROM mu{_HUB_T}))
                               > {_HUB_K} * (SELECT s FROM scale) THEN 1 ELSE 0 END) AS BIGINT)
         FROM vals) AS n_downweighted
@@ -122,7 +119,7 @@ def q_huber_location_irls(spark, sf_dir):
             )
             .agg(
                 F.round(
-                    q9_lane_sum(w * F.col("v")) / q9_lane_sum(w), 9
+                    q9_sum(w * F.col("v")) / q9_sum(w), 9
                 ).alias("m")
             )
             .localCheckpoint(eager=True)  # 1 row; cut the per-pass lineage
@@ -142,7 +139,7 @@ def q_huber_location_irls(spark, sf_dir):
     )
     stats = vals.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(q9_lane_sum(F.col("v")) / F.count(F.lit(1)), 6).alias("mean_plain"),
+        F.round(q9_sum(F.col("v")) / F.count(F.lit(1)), 6).alias("mean_plain"),
     )
     mu0 = vals.agg(F.round(F.median("v"), 9).alias("m0"))
     return (
@@ -562,10 +559,10 @@ def q_propensity_ipw_ate(spark, sf_dir, beta=None):
             F.round(F.lit(b), 6).alias(c)
             for b, c in zip(beta, ("b_intercept", "b_month", "b_fstatus"))
         ],
-        q9_lane_sum(t_col / p_col).alias("sw_t"),
-        q9_lane_sum(t_col * yo / p_col).alias("swy_t"),
-        q9_lane_sum((1 - t_col) / (1.0 - p_col)).alias("sw_c"),
-        q9_lane_sum((1 - t_col) * yo / (1.0 - p_col)).alias("swy_c"),
+        q9_sum(t_col / p_col).alias("sw_t"),
+        q9_sum(t_col * yo / p_col).alias("swy_t"),
+        q9_sum((1 - t_col) / (1.0 - p_col)).alias("sw_c"),
+        q9_sum((1 - t_col) * yo / (1.0 - p_col)).alias("swy_c"),
     )
     return agg.select(
         "n",
@@ -730,7 +727,7 @@ def q_aipw_doubly_robust_ate(spark, sf_dir, beta=None):
         F.round(F.first("a0"), 6).alias("mt_intercept"),
         F.round(F.first("c0"), 6).alias("mc_intercept"),
         F.round(F.lit(beta[0]), 6).alias("ps_intercept"),
-        q9_lane_sum(F.expr(_AIPW_DR)).alias("sdr"),
+        q9_sum(F.expr(_AIPW_DR)).alias("sdr"),
     )
     return fin.select(
         "n",
@@ -842,8 +839,8 @@ def q_fdr_bh_metric_screen(spark, sf_dir):
         only = lambda t: F.when(F.col("grp") == g, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{p}n"),
-            q9_lane_sum(only(F.col("v"))).alias(f"{p}sv"),
-            q9_lane_sum(only(F.col("v") * F.col("v"))).alias(f"{p}svv"),
+            q9_sum(only(F.col("v"))).alias(f"{p}sv"),
+            q9_sum(only(F.col("v") * F.col("v"))).alias(f"{p}svv"),
         ]
 
     m = s.groupBy("event_type").agg(*(side("a_", 0) + side("b_", 1)))
@@ -992,7 +989,6 @@ def q_cox_ph_exact(spark, sf_dir):
     at-risk prefix windows AND all three Newton iterations — the fact
     table is scanned once, the iterations never touch it."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     mx = o.agg(F.max(F.col("o_orderdate").cast("date")).alias("maxd"))
     w_cust = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     g = o.crossJoin(F.broadcast(mx)).select(
@@ -1030,23 +1026,18 @@ def q_cox_ph_exact(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
 
-    def q9_sum(expr):
-        # distinct-time-grain input (calendar-bounded): decimal is optimal
-        # at every scale; lanes only add fixed cost (r12 grain audit)
-        return to_d(F.sum(F.round(F.expr(expr), 9).cast("decimal(38, 9)")))
-
     beta = ev.sparkSession.range(1).select(F.lit(0.0).alias("b"))
     for _ in range(_COX_T):
         it = ev.crossJoin(F.broadcast(beta)).agg(
             F.first("b").alias("b"),
-            q9_sum(_COX_U).alias("su"),
-            q9_sum(_COX_I).alias("si"),
+            q9_sum(F.expr(_COX_U)).alias("su"),
+            q9_sum(F.expr(_COX_I)).alias("si"),
         )
         beta = it.select(
             F.round(F.col("b") + F.col("su") / F.col("si"), 9).alias("b")
         )
     fin = ev.crossJoin(F.broadcast(beta)).agg(
-        F.first("b").alias("b"), q9_sum(_COX_I).alias("si")
+        F.first("b").alias("b"), q9_sum(F.expr(_COX_I)).alias("si")
     )
     tot = obs.agg(
         F.count(F.lit(1)).cast("long").alias("n_obs"),
@@ -1375,7 +1366,7 @@ def q_simpson_paradox_detector(spark, sf_dir):
 # sizes (documented approximation for unequal n).
 # ---------------------------------------------------------------------------
 
-_JS_SQL = """
+_JS_SQL = f"""
 WITH per_doc AS (
   SELECT source,
          round(CAST(length(regexp_replace(text, '[^0-9a-zA-Z]', '', 'g'))
@@ -1386,19 +1377,15 @@ per_src AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n,
          CAST(CAST(SUM(CAST(q AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS sq,
-         CAST(CAST(SUM(CAST(round(q * q, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS sqq
+         {q9_sum_sql("q * q")} AS sqq
   FROM per_doc GROUP BY source
 ),
 g AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS k,
-         CAST(CAST(SUM(CAST(round(sq / n, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS sum_means,
-         CAST(CAST(SUM(CAST(round(sqq - sq * sq / n, 9) AS DECIMAL(38, 9)))
-                   AS VARCHAR) AS DOUBLE) AS sum_within,
+         {q9_sum_sql("sq / n")} AS sum_means,
+         {q9_sum_sql("sqq - sq * sq / n")} AS sum_within,
          CAST(SUM(n - 1) AS DOUBLE) AS df_within,
-         CAST(CAST(SUM(CAST(round(1.0 / n, 9) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS sum_inv_n
+         {q9_sum_sql("1.0 / n")} AS sum_inv_n
   FROM per_src
 ),
 g2 AS (
@@ -1407,9 +1394,7 @@ g2 AS (
   FROM g
 ),
 spread AS (
-  SELECT CAST(CAST(SUM(CAST(round((sq / n - g2.grand)
-                                  * (sq / n - g2.grand), 9)
-                            AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS ss
+  SELECT {q9_sum_sql("(sq / n - g2.grand) * (sq / n - g2.grand)")} AS ss
   FROM per_src CROSS JOIN g2
 ),
 fac AS (
@@ -1454,18 +1439,18 @@ def q_james_stein_source_means(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             to_d(F.sum(F.col("q").cast("decimal(38, 9)"))).alias("sq"),
-            q9_lane_sum(F.col("q") * F.col("q")).alias("sqq"),
+            q9_sum(F.col("q") * F.col("q")).alias("sqq"),
         )
         .localCheckpoint(eager=True)
     )
     g = per_src.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        q9_lane_sum(F.col("sq") / F.col("n")).alias("sum_means"),
-        q9_lane_sum(F.col("sqq") - F.col("sq") * F.col("sq") / F.col("n")).alias(
+        q9_sum(F.col("sq") / F.col("n")).alias("sum_means"),
+        q9_sum(F.col("sqq") - F.col("sq") * F.col("sq") / F.col("n")).alias(
             "sum_within"
         ),
         F.sum(F.col("n") - 1).cast("double").alias("df_within"),
-        q9_lane_sum(F.lit(1.0) / F.col("n")).alias("sum_inv_n"),
+        q9_sum(F.lit(1.0) / F.col("n")).alias("sum_inv_n"),
     ).selectExpr(
         "k",
         "sum_means / k AS grand",
@@ -1475,7 +1460,7 @@ def q_james_stein_source_means(spark, sf_dir):
     spread = (
         per_src.crossJoin(F.broadcast(g))
         .agg(
-            q9_lane_sum(
+            q9_sum(
                 (F.col("sq") / F.col("n") - F.col("grand"))
                 * (F.col("sq") / F.col("n") - F.col("grand"))
             ).alias("ss")

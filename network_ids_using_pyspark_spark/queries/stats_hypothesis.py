@@ -19,6 +19,7 @@ from ..functions.hashing import (
     portable_hash64,
     portable_hash64_sql,
 )
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 
 from . import register
@@ -1421,6 +1422,12 @@ def q_mann_whitney_auc(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+_CRAMER_CELL = (
+    "CAST((nxy * nn - nx * ny) AS DOUBLE) * (nxy * nn - nx * ny)"
+    " / (CAST(nn AS DOUBLE) * nx * ny)"
+)
+
+
 def _cramer_pair_sql(pair: str, table: str, x: str, y: str) -> str:
     # per-cell χ² term (o·N − n_x·n_y)² / (N·n_x·n_y), quantized 1e-9,
     # DECIMAL-summed; V = sqrt(χ²/(N·min(r−1, c−1)))
@@ -1433,10 +1440,7 @@ def _cramer_pair_sql(pair: str, table: str, x: str, y: str) -> str:
            COUNT(DISTINCT x) AS rx, COUNT(DISTINCT y) AS cy,
            -- observed-cell terms + the closed-form zero-cell mass:
            -- Σ_zero n_x·n_y/N = (N² − Σ_obs n_x·n_y)/N
-           CAST(CAST(SUM(CAST(round(
-             CAST((nxy * nn - nx * ny) AS DOUBLE)
-               * (nxy * nn - nx * ny) / (CAST(nn AS DOUBLE) * nx * ny), 9)
-             AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)
+           {q9_sum_sql(_CRAMER_CELL)}
            + round(CAST(ANY_VALUE(nn) AS DOUBLE)
                    - CAST(SUM(CAST(nx AS DECIMAL(38, 0)) * ny) AS DOUBLE)
                      / ANY_VALUE(nn), 9) AS chi2
@@ -1489,9 +1493,7 @@ def q_cramers_v_report(spark, sf_dir):
             .crossJoin(F.broadcast(nn))
         )
         dev = (F.col("nxy") * F.col("nn") - F.col("nx") * F.col("ny")).cast("double")
-        term = F.round(
-            dev * dev / (F.col("nn").cast("double") * F.col("nx") * F.col("ny")), 9
-        ).cast("decimal(38, 9)")
+        term = dev * dev / (F.col("nn").cast("double") * F.col("nx") * F.col("ny"))
         # observed-cell terms + closed-form zero-cell mass
         # (N² − Σ_obs n_x·n_y)/N — without it χ² understates whenever a
         # contingency cell is empty
@@ -1500,7 +1502,7 @@ def q_cramers_v_report(spark, sf_dir):
             F.countDistinct("x").alias("rx"),
             F.countDistinct("y").alias("cy"),
             (
-                F.sum(term).cast("string").cast("double")
+                q9_sum(term)
                 + F.round(
                     F.first("nn").cast("double")
                     - F.sum(

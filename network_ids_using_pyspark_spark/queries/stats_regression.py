@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import lane_sum_dec, q9_lane_sum, q9_sum_sql
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..functions.hashing import (
     HASH_SPACE,
     hash_bucket,
@@ -384,7 +384,7 @@ def irls_fit(src, link: str = "logit") -> tuple[float, float, float]:
     beta = (0.0, 0.0, 0.0)
     for _ in range(_IRLS_T):
         a = irls_score(src, beta, link).agg(
-            *[q9_lane_sum(F.expr(t)).alias(n) for n, t in _irls_moments(link)]
+            *[q9_sum(F.expr(t)).alias(n) for n, t in _irls_moments(link)]
         )
         beta = tuple(
             a.select(
@@ -475,7 +475,7 @@ def q_logreg_irls_exact(spark, sf_dir):
             F.round(F.lit(b), 6).alias(c)
             for b, c in zip(beta, ("b_intercept", "b_month", "b_urgent"))
         ],
-        F.round(-q9_lane_sum(ll_term) / F.count(F.lit(1)), 6).alias("log_loss"),
+        F.round(-q9_sum(ll_term) / F.count(F.lit(1)), 6).alias("log_loss"),
     )
 
 
@@ -570,10 +570,10 @@ def q_gnb_train_confusion_exact(spark, sf_dir):
 
     stats = train.groupBy("cls").agg(
         F.count(F.lit(1)).alias("n_c"),
-        (q9_lane_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9_lane_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9_lane_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9_lane_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
+        (q9_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
+        (q9_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
+        (q9_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
+        (q9_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
     )
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
@@ -778,7 +778,7 @@ conf AS (
   SELECT o_orderkey,
          MAX(CASE WHEN rk = 1 THEN actual END) AS actual,
          MAX(CASE WHEN rk = 1 THEN predicted END) AS predicted,
-         round(1.0 / (CAST(CAST(SUM(CAST(round(exp(ll - mx), 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)), 9) AS confidence
+         round(1.0 / ({q9_sum_sql("exp(ll - mx)")}), 9) AS confidence
   FROM (SELECT *, MAX(ll) OVER (PARTITION BY o_orderkey) AS mx FROM scored)
   GROUP BY o_orderkey
 )
@@ -823,10 +823,10 @@ def q_gnb_calibration_curve(spark, sf_dir):
 
     stats = train.groupBy("cls").agg(
         F.count(F.lit(1)).alias("n_c"),
-        (q9_lane_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9_lane_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9_lane_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9_lane_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
+        (q9_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
+        (q9_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
+        (q9_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
+        (q9_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
     )
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
@@ -894,7 +894,7 @@ def q_gnb_calibration_curve(spark, sf_dir):
         )
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        (q9_lane_sum(F.col("confidence")) / F.count(F.lit(1))).alias("avg_confidence"),
+        (q9_sum(F.col("confidence")) / F.count(F.lit(1))).alias("avg_confidence"),
         F.round(
             F.sum(F.when(F.col("actual") == F.col("predicted"), 1).otherwise(0)).cast(
                 "double"
@@ -1029,7 +1029,7 @@ probs AS (
          round(
            (CASE WHEN MAX(CASE WHEN mcls = 'F' THEN ll END) IS NULL THEN 0.0
                  ELSE exp(MAX(CASE WHEN mcls = 'F' THEN ll END) - MAX(ll)) END)
-           / (CAST(CAST(SUM(CAST(round(exp(ll - mx), 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)),
+           / ({q9_sum_sql("exp(ll - mx)")}),
            9) AS score
   FROM (SELECT *, MAX(ll) OVER (PARTITION BY o_orderkey) AS mx FROM scored)
   GROUP BY o_orderkey
@@ -1085,10 +1085,10 @@ def q_gnb_auc_exact(spark, sf_dir):
 
     stats = train.groupBy("cls").agg(
         F.count(F.lit(1)).alias("n_c"),
-        (q9_lane_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9_lane_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9_lane_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9_lane_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
+        (q9_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
+        (q9_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
+        (q9_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
+        (q9_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
     )
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
@@ -1242,7 +1242,7 @@ def _qcf_retention(scored):
     keep = F.when(F.col("p") >= _QCF_T, 1).otherwise(0)
     return scored.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(q9_lane_sum(F.col("p")) / F.count(F.lit(1)), 6).alias("mean_score"),
+        F.round(q9_sum(F.col("p")) / F.count(F.lit(1)), 6).alias("mean_score"),
         F.sum(keep).cast("long").alias("n_retained"),
         F.round(
             F.sum(keep).cast("double") / F.count(F.lit(1)), 6
@@ -1549,11 +1549,11 @@ def q_holt_winters_seasonal_forecast(spark, sf_dir):
 
 _DID_CUT = "2024-01-16"  # treatment switch-on date (fixture spans Jan 2024)
 
-_DID_CELL = """
+_DID_CELL = f"""
   SELECT CASE WHEN user_id % 2 = 1 THEN 'T' ELSE 'C' END AS grp,
-         CASE WHEN CAST(ts AS DATE) >= DATE '{cut}' THEN 'post' ELSE 'pre' END AS period,
+         CASE WHEN CAST(ts AS DATE) >= DATE '{{cut}}' THEN 'post' ELSE 'pre' END AS period,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(CAST(SUM(CAST(round(value, 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS s,
+         {q9_sum_sql("value")} AS s,
          CAST(CAST(SUM(CAST(round(value, 9) AS DECIMAL(38, 9))
                        * CAST(round(value, 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS ss
   FROM events WHERE event_type = 'purchase'
@@ -1620,7 +1620,7 @@ def q_diff_in_diff_readout(spark, sf_dir):
         .alias("period"),
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        to_d(F.sum(x)).alias("s"),
+        q9_sum(F.col("value")).alias("s"),
         to_d(F.sum(x * x)).alias("ss"),
     )
     mean = F.col("s") / F.col("n")
@@ -1711,7 +1711,7 @@ resid AS (
 SELECT s.dow, s.n_days, round(s.seasonal, 6) AS seasonal,
        round(CAST(CAST(SUM(CAST(r.r AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)
              / s.n_days, 6) + 0.0 AS resid_mean,
-       round(CAST(CAST(SUM(CAST(round(r.r * r.r, 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)
+       round({q9_sum_sql("r.r * r.r")}
              / s.n_days, 6) AS resid_msq
 FROM seas s JOIN resid r ON r.dow = s.dow
 GROUP BY s.dow, s.n_days, s.seasonal
@@ -1770,9 +1770,7 @@ def q_stl_decompose_profile(spark, sf_dir):
             + F.lit(0.0)  # −0.0 → +0.0: DuckDB's round keeps the sign bit
         ).alias("resid_mean"),
         F.round(
-            # dow-grain input: decimal optimal at every scale (r12 grain audit)
-            to_d(F.sum(F.round(F.col("r") * F.col("r"), 9).cast("decimal(38, 9)")))
-            / F.col("n_days"),
+            q9_sum(F.col("r") * F.col("r")) / F.col("n_days"),
             6,
         ).alias("resid_msq"),
     ).select("dow", "n_days", F.round("seasonal", 6).alias("seasonal"), "resid_mean", "resid_msq")

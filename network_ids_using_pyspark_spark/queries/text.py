@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64_sql
-from ..functions.numeric import q9_lane_sum
+from ..functions.numeric import q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from ..operators.textops import (
     doc_fingerprint,
@@ -931,10 +931,6 @@ _RAKE_TOPK = 20
 
 
 def _rake_sql() -> str:
-    q9 = (
-        "CAST(CAST(SUM(CAST(round(wscore, 9) AS DECIMAL(38, 9))) AS VARCHAR)"
-        " AS DOUBLE)"
-    )
     return f"""
 WITH toks AS (
   SELECT doc_id, i AS pos, l[i] AS w
@@ -968,7 +964,7 @@ ws AS (
   FROM mem GROUP BY w
 ),
 oscore AS (
-  SELECT m.doc_id, m.phrase_id, m.phrase, m.plen, {q9} AS score
+  SELECT m.doc_id, m.phrase_id, m.phrase, m.plen, {q9_sum_sql("wscore")} AS score
   FROM mem m JOIN ws USING (w)
   GROUP BY m.doc_id, m.phrase_id, m.phrase, m.plen
 )
@@ -1043,7 +1039,7 @@ def q_rake_keyword_extraction(spark, sf_dir):
         mem.join(ws, "w")
         .groupBy("doc_id", "phrase_id", "phrase", "plen")
         .agg(
-            q9_lane_sum(F.col("wscore")).alias("score")
+            q9_sum(F.col("wscore")).alias("score")
         )
     )
     return (

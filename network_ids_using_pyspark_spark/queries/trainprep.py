@@ -23,7 +23,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_bucket, hash_bucket_sql
-from ..functions.numeric import dec_avg, dec_avg_sql, q9_lane_sum
+from ..functions.numeric import dec_avg, dec_avg_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -1287,7 +1287,17 @@ def q_loo_source_ablation(spark, sf_dir):
 # materialized.
 # ---------------------------------------------------------------------------
 
-_KL_SQL = """
+_KL_LGP_W = "round(log2((wc.c_w + 1.0) / (corpus.n + corpus.v)), 6)"
+_KL_OBS_TERM = (
+    "(sw.c_sw + 1.0) / (src.n_s + corpus.v)"
+    " * (round(log2((sw.c_sw + 1.0) / (src.n_s + corpus.v)), 6)"
+    f" - {_KL_LGP_W})"
+)
+_KL_OBS_CORR = (
+    "1.0 / (src.n_s + corpus.v)"
+    f" * (round(log2(1.0 / (src.n_s + corpus.v)), 6) - {_KL_LGP_W})"
+)
+_KL_SQL = f"""
 WITH toks AS (
   SELECT source, UNNEST(regexp_split_to_array(trim(lower(text)), '[^0-9a-z]+'))
            AS w
@@ -1314,14 +1324,8 @@ src AS (
 ),
 terms AS (
   SELECT sw.source,
-         CAST(CAST(SUM(CAST(round((sw.c_sw + 1.0) / (src.n_s + corpus.v)
-                 * (round(log2((sw.c_sw + 1.0) / (src.n_s + corpus.v)), 6)
-                    - round(log2((wc.c_w + 1.0) / (corpus.n + corpus.v)), 6)), 9)
-               AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS obs_term,
-         CAST(CAST(SUM(CAST(round(1.0 / (src.n_s + corpus.v)
-                 * (round(log2(1.0 / (src.n_s + corpus.v)), 6)
-                    - round(log2((wc.c_w + 1.0) / (corpus.n + corpus.v)), 6)), 9)
-               AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS obs_corr
+         {q9_sum_sql(_KL_OBS_TERM)} AS obs_term,
+         {q9_sum_sql(_KL_OBS_CORR)} AS obs_corr
   FROM sw JOIN wc USING (w) JOIN src ON sw.source = src.source
   CROSS JOIN corpus
   GROUP BY sw.source
@@ -1397,8 +1401,8 @@ def q_kl_divergence_by_source(spark, sf_dir):
     p_sw = (F.col("c_sw") + 1.0) / (F.col("n_s") + F.col("v"))
     lgp_w = lg6((F.col("c_w") + 1.0) / (F.col("n") + F.col("v")))
     terms = j.groupBy("source").agg(
-        q9_lane_sum(p_sw * (lg6(p_sw) - lgp_w)).alias("obs_term"),
-        q9_lane_sum(q_s * (lg6(q_s) - lgp_w)).alias("obs_corr"),
+        q9_sum(p_sw * (lg6(p_sw) - lgp_w)).alias("obs_term"),
+        q9_sum(q_s * (lg6(q_s) - lgp_w)).alias("obs_corr"),
     )
     out = (
         src.join(terms, "source")

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "network_ids_using_pyspark_spark",
@@ -29,6 +31,13 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    # Python workers import query code (UDFs) from this package; they
+    # inherit PYTHONPATH from the JVM, which copies this process's
+    # environment when it starts, so the root must be on it whatever
+    # the caller's cwd.
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if _REPO_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_REPO_ROOT, *filter(None, paths)])
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
