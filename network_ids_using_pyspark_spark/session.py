@@ -52,6 +52,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.warehouse.dir", "/tmp/nids_warehouse")
+        # Spark keeps 100 generated classes by default, fewer than one
+        # pass of the stats cohort compiles (156 at sf0.001), so every
+        # repeat of a query compiled all of its classes again
+        .config("spark.sql.codegen.cache.maxEntries", "512")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

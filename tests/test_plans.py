@@ -1104,7 +1104,8 @@ def test_cms_join_size_sketch_sized_dot_product(spark):
 
 def test_huber_iterations_are_broadcast_scalar(spark):
     """Each IRLS pass re-scans the checkpointed value relation with the
-    iterate as a 1-row broadcast — no joins wider than scalars."""
+    iterate and scale as driver literals — no join at all, and the
+    returned frame reads the checkpoint, not the parquet file."""
     df = _df(spark, "huber_location_irls")
     plan = explain_str(df, "simple")
     assert "SortMergeJoin" not in plan

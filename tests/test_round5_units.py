@@ -61,6 +61,17 @@ def test_huber_location_irls_matches_python(spark):
     assert row["n_downweighted"] == n_down
 
 
+def test_huber_irls_persists_only_its_values(spark):
+    """μ and s come back to the driver as literals between passes, so
+    building and collecting `huber_location_irls` leaves exactly one
+    persisted RDD behind: the checkpointed value column."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    df = REGISTRY["huber_location_irls"][0](spark, SF_DIR)
+    df.collect()
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+
+
 def test_median_ci_order_stats_matches_python(spark):
     et, val = _col("events", "event_type", "value")
     z = 1.959964
