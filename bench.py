@@ -16,7 +16,7 @@ import sys
 import time
 
 from network_ids_using_pyspark_spark.queries import REGISTRY
-from network_ids_using_pyspark_spark.session import get_spark
+from network_ids_using_pyspark_spark.session import get_spark, scratch_dir
 
 
 # The stdout line is machine-parsed by the driver; 322 per-query
@@ -129,10 +129,7 @@ def _pipeline_comparison(spark, sf: str) -> dict[str, float]:
     pipeline: dict[str, float] = {}
     n_rows = max(2_000, int(6_000_000 * float(sf)))
     try:
-        # fixed per-sf path + overwrite: bounds /tmp to ONE copy per
-        # scale factor across repeated runs (tempfile.mkdtemp leaked a
-        # full synthetic flow table per invocation)
-        path = f"/tmp/nids_bench_flows_{sf.replace('.', '_')}/flows"
+        path = scratch_dir(spark, "bench-flows")
         synth_flows(spark, n_rows).write.mode("overwrite").parquet(path)
 
         t0 = time.monotonic()
@@ -199,17 +196,11 @@ def _warm_streaming_machinery(spark) -> None:
     (stateful agg, symmetric-hash stream-stream join, streaming dedup)
     over a 200-row slice BEFORE the timed sweep, exactly like the
     batch-side table warmup above; ~5 s once, independent of sf."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from network_ids_using_pyspark_spark.streaming.stream import run_to_memory
 
-    # ADVICE r7: a fixed /tmp path races when two bench processes share
-    # a host (one rmtree's the other's warmup input mid-stream, and the
-    # warmup silently degrades via the except) — mkdtemp is per-process.
-    base = tempfile.mkdtemp(prefix="nids_bench_stream_warmup_")
+    base = scratch_dir(spark, "stream-warmup")
     try:
         spark.range(200).select(
             F.col("id").alias("user_id"),
@@ -247,8 +238,6 @@ def _warm_streaming_machinery(spark) -> None:
         )
     except Exception as e:  # warmup must never take down the sweep
         print(f"bench: streaming warmup failed: {e}", file=sys.stderr)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _load_factor() -> float:

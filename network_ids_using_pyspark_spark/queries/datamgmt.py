@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_bucket, hash_bucket_sql
 from ..functions.numeric import dec_sum_sql
+from ..session import scratch_dir
 from ..sources.tables import load_table
 from . import register
 
@@ -193,17 +194,16 @@ def q_bucketed_colocated_join(spark, sf_dir):
     parquet join — layout must never change answers."""
     from ..sources.bucketed import bucketed_table, write_bucketed
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    write_bucketed(l, f"nids_bkt_lineitem_{tag}", "l_orderkey", _N_BUCKETS,
-                   f"/tmp/nids_bucketed_{tag}/lineitem")
-    write_bucketed(o, f"nids_bkt_orders_{tag}", "o_orderkey", _N_BUCKETS,
-                   f"/tmp/nids_bucketed_{tag}/orders")
-    lb = bucketed_table(spark, f"nids_bkt_lineitem_{tag}")
-    ob = bucketed_table(spark, f"nids_bkt_orders_{tag}")
+    write_bucketed(l, "nids_bkt_lineitem", "l_orderkey", _N_BUCKETS,
+                   scratch_dir(spark, "bucketed-lineitem"))
+    write_bucketed(o, "nids_bkt_orders", "o_orderkey", _N_BUCKETS,
+                   scratch_dir(spark, "bucketed-orders"))
+    lb = bucketed_table(spark, "nids_bkt_lineitem")
+    ob = bucketed_table(spark, "nids_bkt_orders")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         lb.hint("merge").join(ob, lb.l_orderkey == ob.o_orderkey)
@@ -242,8 +242,7 @@ def q_partition_pruned_scan(spark, sf_dir):
     date is the first line of defense — queries with time predicates
     never see the other years.  Plan test pins the PartitionFilters;
     the oracle pins that layout never changes answers."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"/tmp/nids_partitioned_{tag}/orders"
+    path = scratch_dir(spark, "partitioned-orders")
     o = load_table(spark, sf_dir, "orders")
     (
         o.withColumn("o_year", F.year("o_orderdate"))
@@ -312,8 +311,7 @@ def q_small_files_compaction_plan(spark, sf_dir):
     yields the same residual plan.  The oracle recomputes the
     inventory from the source table independently — the physical
     round-trip must lose nothing."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"/tmp/nids_fragmented_{tag}/orders"
+    path = scratch_dir(spark, "fragmented-orders")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         hash_bucket("o_orderkey", _FRAG_FILES, seed=_FRAG_SEED).alias("file_grp"),
@@ -422,8 +420,7 @@ def q_schema_evolution_union(spark, sf_dir):
     oracle's recompute from the unsplit source.  This is the ingest
     reality of any long-lived 100 TB table — schema-on-read union, no
     rewrite of history."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"/tmp/nids_evolved_{tag}/orders"
+    path = scratch_dir(spark, "evolved-orders")
     o = load_table(spark, sf_dir, "orders")
     cutoff = F.year("o_orderdate") >= _EVOLVE_CUTOFF_YEAR
     o.filter(~cutoff).select("o_orderkey", "o_orderdate", "o_totalprice").write.mode(
@@ -589,8 +586,7 @@ def q_dynamic_partition_pruning_join(spark, sf_dir):
 
     The static sibling is `partition_pruned_scan` (literal predicate →
     PartitionFilters from directory names)."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = f"/tmp/nids_dpp_{tag}/lineitem"
+    path = scratch_dir(spark, "dpp-lineitem")
     l = load_table(spark, sf_dir, "lineitem")
     (
         l.withColumn("l_year", F.year("l_shipdate"))
@@ -877,10 +873,7 @@ def q_dynamic_partition_overwrite_roundtrip(spark, sf_dir):
     rewrite cost is one partition, not the table; readers see other
     partitions unchanged (no table-wide rewrite, no read amplification),
     and partition pruning on the read side is untouched."""
-    import shutil
-
-    base = f"/tmp/nids_dpo_{sf_dir.rstrip('/').rsplit('/', 1)[-1].replace('.', '_')}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "dpo-orders")
     o = load_table(spark, sf_dir, "orders").withColumn(
         "yr", F.year("o_orderdate")
     )

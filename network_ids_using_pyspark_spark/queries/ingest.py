@@ -17,10 +17,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import scratch_dir
 from ..sources.synthetic import synth_flows
 from ..sources.tables import load_table, scan_flows
 from . import register
 
+# fixed: the DuckDB oracle below reads these files by this literal path
 _CSV_DIR = "/tmp/nids_scan_flows_csv"
 _N = 60_000
 
@@ -84,8 +86,6 @@ def q_scan_flows_csv_profile(spark, sf_dir):
     )
 
 
-_RECORDLOG_DIR = "/tmp/nids_recordlog_shards"
-
 _RECORDLOG_SQL = """
 SELECT COUNT(*) AS n_records,
        CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_payload_bytes,
@@ -108,23 +108,15 @@ def q_recordlog_roundtrip_profile(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         F.encode("text", "utf-8").alias("payload")
     )
-    import shutil
+    shards = scratch_dir(spark, "recordlog-shards")
+    write_recordlog(docs.repartition(4), "payload", shards)
 
-    shutil.rmtree(_RECORDLOG_DIR, ignore_errors=True)
-    write_recordlog(docs.repartition(4), "payload", _RECORDLOG_DIR)
-
-    back = scan_recordlog(spark, _RECORDLOG_DIR)
+    back = scan_recordlog(spark, shards)
     return back.agg(
         F.count(F.lit(1)).alias("n_records"),
         F.sum(F.length("payload")).alias("total_payload_bytes"),
         F.countDistinct(F.md5("payload")).alias("n_distinct_payloads"),
     )
-
-
-def _sf_tag(sf_dir: str) -> str:
-    """Per-scale-factor /tmp tag: concurrent runs at different SFs must
-    not overwrite each other's materialized inputs mid-scan."""
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
 
 
 _BINARY_SCAN_SQL = """
@@ -153,7 +145,7 @@ def q_binary_file_scan_profile(spark, sf_dir):
     pathGlobFilter; payload bytes stay executor-side (the md5 reduces
     them before any exchange).  The small-files tax this query embodies
     is exactly what `small_files_compaction_plan` measures/fixes."""
-    bf_dir = f"/tmp/nids_binary_files_{_sf_tag(sf_dir)}"
+    bf_dir = scratch_dir(spark, "binary-files")
     docs = load_table(spark, sf_dir, "documents")
     sub = docs.filter((F.col("doc_id") % 13) == 0).select("doc_id", "text")
     sub.write.partitionBy("doc_id").mode("overwrite").text(bf_dir)
@@ -194,7 +186,7 @@ def q_xml_scan_profile(spark, sf_dir):
     Scale: the XML reader splits by rowTag like any text-delimited
     source — per-file parallel scans, schema enforced, no discovery
     pass."""
-    xml_dir = f"/tmp/nids_xml_docs_{_sf_tag(sf_dir)}"
+    xml_dir = scratch_dir(spark, "xml-docs")
     docs = load_table(spark, sf_dir, "documents")
     sub = docs.filter(
         ((F.col("doc_id") % 11) == 0) & (F.length(F.trim("text")) > 0)
@@ -245,12 +237,9 @@ def q_stream_recordlog_ingest(spark, sf_dir):
     from ..sources.recordlog import stream_recordlog, write_recordlog
     from ..streaming.stream import run_to_memory
 
-    rl_dir = f"/tmp/nids_recordlog_stream_{_sf_tag(sf_dir)}"
+    rl_dir = scratch_dir(spark, "recordlog-stream")
     docs = load_table(spark, sf_dir, "documents").filter((F.col("doc_id") % 7) == 0)
     payloads = docs.select(F.encode("text", "utf-8").alias("payload"))
-    import shutil
-
-    shutil.rmtree(rl_dir, ignore_errors=True)
     write_recordlog(payloads.repartition(4), "payload", rl_dir)
 
     stream = stream_recordlog(spark, rl_dir)
@@ -288,7 +277,7 @@ def q_jsonl_scan_profile(spark, sf_dir):
     Scale: JSONL is line-splittable, so the scan parallelizes per
     block like CSV; the pinned schema keeps the reader single-pass and
     projection-pruned (only the requested fields are parsed)."""
-    json_dir = f"/tmp/nids_jsonl_docs_{_sf_tag(sf_dir)}"
+    json_dir = scratch_dir(spark, "jsonl-docs")
     docs = load_table(spark, sf_dir, "documents")
     sub = docs.filter(
         ((F.col("doc_id") % 13) == 0) & (F.length(F.trim("text")) > 0)
@@ -326,7 +315,7 @@ def q_orc_scan_profile(spark, sf_dir):
     Scale: columnar + splittable + stats-pruned — operationally
     interchangeable with parquet; this query certifies that nothing in
     the engine is parquet-specific."""
-    orc_dir = f"/tmp/nids_orc_docs_{_sf_tag(sf_dir)}"
+    orc_dir = scratch_dir(spark, "orc-docs")
     docs = load_table(spark, sf_dir, "documents")
     sub = docs.filter((F.col("doc_id") % 3) == 0).select(
         "doc_id", "lang", "text", "n_chars"

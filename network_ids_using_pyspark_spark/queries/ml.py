@@ -25,6 +25,7 @@ from ..ml.pipeline import (
     train_classifier,
 )
 from ..operators.sampling import anti_join_split, hash_sample
+from ..session import scratch_dir
 from ..sources.synthetic import synth_flows
 from ..sources.tables import load_table
 from . import register
@@ -230,9 +231,7 @@ def q_ml_e2e_ref_width(spark, sf_dir):
     from ..sources.synthetic import synth_flows_ref_width
     from ..sources.tables import canonical_name, scan_flows
 
-    # per-sf tag: content is sf-independent (fixed n), but concurrent
-    # runs at different SFs must not race on overwrite-vs-scan
-    out_dir = f"/tmp/nids_ref_width_csv_{sf_dir.rstrip('/').rsplit('/', 1)[-1].replace('.', '_')}"
+    out_dir = scratch_dir(spark, "ref-width-csv")
     synth_flows_ref_width(spark, 12_000).repartition(4).write.mode(
         "overwrite"
     ).option("header", True).csv(out_dir)
@@ -553,8 +552,6 @@ def q_ml_train_lr_binary(spark, sf_dir):
     floors; see tests/test_ml.py).  Rows-only: L-BFGS internals aren't
     cross-engine.  Scale: each iteration is one gradient aggregate over
     the checkpointed prepared frame; the model is a single dense vector."""
-    import tempfile
-
     from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
@@ -573,7 +570,7 @@ def q_ml_train_lr_binary(spark, sf_dir):
     # in Spark 4 once any observe() has run in the session ("Task not
     # serializable" only in warm sessions; GBT has no summary, which is
     # why only LR hit it).
-    mpath = tempfile.mkdtemp(prefix="nids_lr_") + "/model"
+    mpath = scratch_dir(spark, "lr-model")
     model.write().overwrite().save(mpath)
     model = LogisticRegressionModel.load(mpath)
     preds = model.transform(test_b)
@@ -885,11 +882,9 @@ def q_ml_isotonic_calibration(spark, sf_dir):
     # summary DataFrame drags the session ObservationManager into the
     # transform closure (Task not serializable in warm sessions; same
     # fix as ml_train_lr_binary)
-    import tempfile
-
     from pyspark.ml.classification import LogisticRegressionModel
 
-    _mp = tempfile.mkdtemp(prefix="nids_iso_lr_") + "/model"
+    _mp = scratch_dir(spark, "iso-lr-model")
     lr.write().overwrite().save(_mp)
     lr = LogisticRegressionModel.load(_mp)
     p1 = vector_to_array(F.col("probability")).getItem(1)
@@ -965,11 +960,9 @@ def q_ml_conformal_coverage(spark, sf_dir):
     ).fit(train_b)
     # strip the training summary (warm-session serializability; see
     # ml_train_lr_binary)
-    import tempfile
-
     from pyspark.ml.classification import LogisticRegressionModel
 
-    _mp = tempfile.mkdtemp(prefix="nids_conf_lr_") + "/model"
+    _mp = scratch_dir(spark, "conf-lr-model")
     lr.write().overwrite().save(_mp)
     lr = LogisticRegressionModel.load(_mp)
     p = vector_to_array(F.col("probability"))

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import scratch_dir
 from ..streaming.stream import (
     run_folded_agg,
     run_to_memory,
@@ -169,8 +170,6 @@ def q_stream_score_sink_roundtrip(spark, sf_dir):
     foreachBatch model scoring → predictions sink → readback.  Every
     event is scored exactly once, so the readback count equals the
     event count — the oracle."""
-    import tempfile
-
     from pyspark.ml import Pipeline
     from pyspark.ml.classification import DecisionTreeClassifier
     from pyspark.ml.feature import StringIndexer, VectorAssembler
@@ -188,7 +187,7 @@ def q_stream_score_sink_roundtrip(spark, sf_dir):
         ]
     ).fit(events)
 
-    base = tempfile.mkdtemp(prefix="nids_sink_")
+    base = scratch_dir(spark, "score-sink")
     q = score_to_sink(stream_events(spark, sf_dir), model, f"{base}/preds", f"{base}/ckpt")
     q.awaitTermination()
     return scan_predictions(spark, f"{base}/preds").agg(
@@ -609,7 +608,7 @@ def q_stream_flow_bruteforce_alerts(spark, sf_dir):
         syn.alias("syn"),
     )
 
-    path = "/tmp/nids_flow_stream"
+    path = scratch_dir(spark, "flow-stream")
     flows.write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema("ts timestamp, dst_port int, syn int").parquet(
         path
@@ -649,8 +648,6 @@ def q_stream_late_data_metrics(spark, sf_dir):
     i.e. after map-side partial aggregation — N raw late events in one
     window surface as one dropped partial-agg row, which is also why
     the metric stays cheap at 100 TB."""
-    import shutil
-
     from ..sources.tables import load_table
     from ..streaming.stream import attach_late_data_metrics
 
@@ -661,10 +658,7 @@ def q_stream_late_data_metrics(spark, sf_dir):
     late = ev.filter(F.col("ts") < F.lit(lo) + F.expr("INTERVAL 1 HOUR"))
     n_late = late.count()
 
-    # fixed per-sf path, cleared up front: bounds /tmp to one copy per
-    # scale factor across invocations (mkdtemp leaked a dir per run)
-    base = f"/tmp/nids_late_{sf_dir.rstrip('/').rsplit('/', 1)[-1].replace('.', '_')}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "late-data")
     src, ckpt = f"{base}/src", f"{base}/ckpt"
 
     def run_once() -> None:
@@ -741,17 +735,13 @@ def q_stream_restart_state_recovery(spark, sf_dir):
     Scale: restart recovery is the mechanism that makes streaming state
     durable across executor/driver loss at 100 TB — certified here at
     the semantic level (counts, not internals)."""
-    import shutil
-
     from ..sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     b = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     mid = b["lo"] + (b["hi"] - b["lo"]) / 2
 
-    # fixed per-sf path, cleared up front (see stream_late_data_metrics)
-    base = f"/tmp/nids_restart_{sf_dir.rstrip('/').rsplit('/', 1)[-1].replace('.', '_')}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "restart")
     src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
 
     def run_once() -> None:
@@ -811,12 +801,9 @@ def q_stream_state_store_read(spark, sf_dir):
     ops — per-partition, no stop-the-world export.  The read
     parallelizes over state-store partitions exactly like a shuffle
     read."""
-    import shutil
-
     from ..streaming.stream import stream_events
 
-    base = f"/tmp/nids_ssread_{sf_dir.rstrip('/').rsplit('/', 1)[-1].replace('.', '_')}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "state-store-read")
     ev = stream_events(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -869,13 +856,10 @@ def q_stream_recordlog_sink_roundtrip(spark, sf_dir):
     shuffle); commit cost is one rename per shard; the monotonic
     ``batch-{id}-{seq}`` names keep the output itself streamable by
     the offset-into-sorted-listing reader."""
-    import shutil
-
     from ..sources.recordlog import register_recordlog, scan_recordlog
     from ..streaming.stream import stream_documents
 
-    base = f"/tmp/nids_rlsink_{sf_dir.rstrip('/').rsplit('/', 1)[-1].replace('.', '_')}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "recordlog-sink")
     register_recordlog(spark)
     docs = stream_documents(spark, sf_dir).filter((F.col("doc_id") % 5) == 0)
     payloads = docs.select(F.encode("text", "utf-8").alias("payload"))
@@ -1103,7 +1087,7 @@ def q_stream_beaconing_alerts(spark, sf_dir):
             ).otherwise(F.col("t_us"))
         ).alias("ts"),
     )
-    path = f"/tmp/nids_beacon_stream_{sf_dir.rstrip('/').rsplit('/', 1)[-1].replace('.', '_')}"
+    path = scratch_dir(spark, "beacon-stream")
     eff.write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema(
         "user_id long, is_beacon_truth boolean, ts timestamp"

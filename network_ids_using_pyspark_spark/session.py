@@ -10,6 +10,7 @@ actual parallelism instead of the 200 default.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -51,6 +52,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # a static conf, read before the SparkContext (and so any
+        # scratch_dir) exists, so it cannot live under scratch_dir
         .config("spark.sql.warehouse.dir", "/tmp/nids_warehouse")
         # Spark keeps 100 generated classes by default, fewer than one
         # pass of the stats cohort compiles (156 at sf0.001), so every
@@ -62,3 +65,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """A fresh, empty directory for one call's intermediate files.
+
+    It sits in the application's own driver temp dir (the SparkFiles
+    root, ``<SPARK_LOCAL_DIRS>/spark-<uuid>/userFiles-<uuid>`` in local
+    mode, the only mode ``get_spark`` builds), so no other process on
+    the host shares it, and Spark deletes it at ``spark.stop()``.  Each
+    call returns a new directory, so a lazy frame an earlier call
+    returned keeps its input.  ``name`` is a readable prefix; keep it
+    free of ``=``, which partition-path regexes read.
+    """
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    return tempfile.mkdtemp(prefix=f"{name}-", dir=root)

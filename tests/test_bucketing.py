@@ -8,6 +8,8 @@ from __future__ import annotations
 import pytest
 
 from network_ids_using_pyspark_spark.plans.inspect import count_shuffles
+from network_ids_using_pyspark_spark.session import scratch_dir
+from network_ids_using_pyspark_spark.sources.bucketed import write_bucketed
 from network_ids_using_pyspark_spark.sources.tables import load_table
 
 from .conftest import SF_DIR
@@ -24,15 +26,8 @@ def no_broadcast(spark):
 def test_bucketed_join_has_no_shuffle(spark, no_broadcast):
     li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
-    import shutil
-
-    for t in ("li_b", "o_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        # in-memory catalog forgets tables between sessions but the
-        # managed location survives — clear it or saveAsTable refuses
-        shutil.rmtree(f"/tmp/nids_warehouse/{t}", ignore_errors=True)
-    li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").mode("overwrite").saveAsTable("li_b")
-    o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").mode("overwrite").saveAsTable("o_b")
+    write_bucketed(li, "li_b", "l_orderkey", 8, path=scratch_dir(spark, "li-b"))
+    write_bucketed(o, "o_b", "o_orderkey", 8, path=scratch_dir(spark, "o-b"))
 
     bucketed = spark.table("li_b").join(
         spark.table("o_b"), spark.table("li_b").l_orderkey == spark.table("o_b").o_orderkey

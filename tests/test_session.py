@@ -3,10 +3,14 @@ caller's working directory: UDF-backed queries unpickle their
 functions on Python workers, which can only import the package if
 ``get_spark`` put its root on the workers' PYTHONPATH or, for a session
 the harness built itself, ``__spark_entry__`` shipped the package.
-Repeated queries must reuse their generated classes."""
+Repeated queries must reuse their generated classes.  Scratch data
+lives in the application's own ``scratch_dir``, never in paths another
+process on the host shares."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import subprocess
 import sys
@@ -44,6 +48,31 @@ print("shipped", sum(f.endswith(".zip") for f in spark.sparkContext.listFiles))
 spark.stop()
 """
 
+# the cheapest scratch-writing entry of each query module that writes
+# any; the two fixed /tmp paths left (the oracle's CSV dir, the
+# warehouse conf) are not these entries' to write
+_SCRATCH_SCRIPT = """
+import glob, os, sys, time
+sys.path.insert(0, {repo!r})
+from network_ids_using_pyspark_spark.queries import REGISTRY
+from network_ids_using_pyspark_spark.session import get_spark
+start = time.time()
+spark = get_spark(app_name="scratch-test", cpus=2)
+spark.sparkContext.setLogLevel("ERROR")
+root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+rows = 0
+for name in ("jsonl_scan_profile", "partition_pruned_scan",
+             "stream_state_store_read", "ml_train_lr_binary"):
+    rows += len(REGISTRY[name][0](spark, {sf!r}).collect())
+print("rows", rows)
+print("scratch", len(os.listdir(root)))
+spark.stop()
+fixed = ("/tmp/nids_scan_flows_csv", "/tmp/nids_warehouse")
+print("fresh", sum(os.stat(p).st_mtime >= start
+                   for p in glob.glob("/tmp/nids_*") if p not in fixed))
+print("left", int(os.path.exists(root)))
+"""
+
 # the benchmark's stats_cohort entries
 _COHORT = (
     "q6_forecast_revenue",
@@ -69,7 +98,8 @@ def _run_from_tmp_cwd(script: str, tmp_path) -> dict[str, int]:
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     lines = proc.stdout.splitlines()
-    out = dict(ln.split() for ln in lines if ln.startswith(("rows ", "shipped ")))
+    keys = ("rows ", "shipped ", "scratch ", "fresh ", "left ")
+    out = dict(ln.split() for ln in lines if ln.startswith(keys))
     assert "rows" in out, proc.stdout[-2000:]
     return {k: int(v) for k, v in out.items()}
 
@@ -84,6 +114,39 @@ def test_harness_session_workers_import_the_package(tmp_path):
     out = _run_from_tmp_cwd(_HARNESS_SCRIPT, tmp_path)
     assert out["rows"] > 0
     assert out["shipped"] == 1
+
+
+def test_scratch_data_lives_and_dies_with_the_application(tmp_path):
+    """Entries write into their own application's scratch dirs, which
+    ``spark.stop()`` removes, and touch no shared /tmp path."""
+    out = _run_from_tmp_cwd(_SCRATCH_SCRIPT, tmp_path)
+    assert out["rows"] > 0
+    assert out["scratch"] >= 4
+    assert out["fresh"] == 0
+    assert out["left"] == 0
+
+
+def test_package_builds_no_scratch_path_of_its_own():
+    """Every scratch path comes from ``session.scratch_dir``: no /tmp
+    literal and no other ``mkdtemp`` anywhere in the package, apart
+    from the oracle's CSV dir and the warehouse conf."""
+    allowed = {
+        ("queries/ingest.py", "/tmp/nids_scan_flows_csv"),
+        ("session.py", "/tmp/nids_warehouse"),
+        ("session.py", "mkdtemp"),
+    }
+    pkg = os.path.join(REPO, "network_ids_using_pyspark_spark")
+    found = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and str(node.value).startswith("/tmp"):
+                found.append((rel, node.value))
+            elif getattr(node, "attr", getattr(node, "id", None)) == "mkdtemp":
+                found.append((rel, "mkdtemp"))
+    assert [f for f in found if f not in allowed] == []
 
 
 def test_repeated_queries_reuse_generated_classes(spark):

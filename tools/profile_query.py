@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Per-query optimization profiler (guide §1): runs named registry
 queries through the noop sink N times in one warm session, prints
-per-run wall seconds, and optionally dumps `.explain("formatted")` to a
-file per query.  Usage:
+per-run wall seconds and Spark job counts (plan-structural, immune to
+box noise), and optionally dumps `.explain("formatted")` to a file per
+query.  Usage:
 
     python tools/profile_query.py [--sf DIR] [--reps N] \
         [--explain-dir plans/r11] [--suffix before] name [name ...]
@@ -33,7 +34,10 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    spark = get_spark(app_name="nids-profile", cpus=cpus, shuffle_partitions=cpus)
+    # retainedJobs: keep every job id of a query for the count
+    spark = get_spark(app_name="nids-profile", cpus=cpus, shuffle_partitions=cpus,
+                      extra_conf={"spark.ui.retainedJobs": "100000"})
+    sc = spark.sparkContext
 
     # same table warmup as bench.py so run 1 isn't charged file-index costs
     from network_ids_using_pyspark_spark.sources.tables import TABLES, load_table
@@ -46,15 +50,17 @@ def main() -> None:
             print(f"{name}: NOT IN REGISTRY", flush=True)
             continue
         fn, _ = REGISTRY[name]
-        times = []
+        times, jobs = [], []
         for i in range(args.reps):
-            spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
+            group = f"profile:{name}#{i}"
+            sc.setJobGroup(group, name)
             t0 = time.monotonic()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             times.append(round(time.monotonic() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        print(f"{name}: runs={times} min={min(times)}", flush=True)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setJobGroup(None, None)
+        print(f"{name}: runs={times} jobs={jobs} min={min(times)}", flush=True)
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             df = fn(spark, args.sf)
