@@ -44,6 +44,18 @@ def portable_hash64_sql(expr: str, seed: str = "") -> str:
     return f"CAST(concat('0x', substring(md5({inner}), 1, 15)) AS BIGINT)"
 
 
+def portable_uniform(col: Column | str, seed: str = "") -> Column:
+    """Spark side: uniform draw h / 2^60 in [0, 1] (a 60-bit h can round
+    up to 2^60 in the double).  Dividing by a power of two is exact, so
+    the draw has the same bits on both engines."""
+    return portable_hash64(col, seed) / F.lit(float(HASH_SPACE))
+
+
+def portable_uniform_sql(expr: str, seed: str = "") -> str:
+    """DuckDB side of :func:`portable_uniform` (same bits)."""
+    return f"({portable_hash64_sql(expr, seed)} / {float(HASH_SPACE)})"
+
+
 def hash_bucket(col: Column | str, n_buckets: int, seed: str = "") -> Column:
     """Uniform bucket id in [0, n_buckets) — basis of hash sampling and
     deterministic stratified splits."""

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import portable_hash64
+
 # Whitespace tokenization shared by token counting / shingling.
 _WS = r"\s+"
 
@@ -121,12 +123,7 @@ def winnow_fingerprints(
         F.sequence(F.lit(1), F.size("wds") - (k - 1)),
         lambda i: F.concat_ws(" ", F.slice("wds", i, k)),
     )
-    hs = F.transform(
-        grams,
-        lambda g: F.conv(
-            F.substring(F.md5(F.concat(F.lit("winnow:"), g)), 1, 15), 16, 10
-        ).cast("long"),
-    )
+    hs = F.transform(grams, lambda g: portable_hash64(g, seed="winnow:"))
     d = d.select(id_col, hs.alias("hs"))
     fps = F.transform(
         F.sequence(F.lit(1), F.size("hs") - (w - 1)),

@@ -61,7 +61,10 @@ from . import graph  # noqa: E402,F401
 from . import trainprep  # noqa: E402,F401
 from . import entity  # noqa: E402,F401
 from . import assoc  # noqa: E402,F401
-from . import stats_ext  # noqa: E402,F401
+from . import stats_hypothesis  # noqa: E402,F401
+from . import stats_regression  # noqa: E402,F401
+from . import stats_causal  # noqa: E402,F401
+from . import stats_calibration  # noqa: E402,F401
 from . import tokenizer  # noqa: E402,F401
 from . import rangescale  # noqa: E402,F401
 from . import quality_ext  # noqa: E402,F401

@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import HASH_SPACE, portable_hash64, portable_hash64_sql
+from ..functions.hashing import (
+    portable_hash64,
+    portable_hash64_sql,
+    portable_uniform,
+    portable_uniform_sql,
+)
 from ..sources.tables import load_table
 from . import register
 
@@ -206,11 +211,7 @@ _FANOUT_T = 20
 
 def _portscan_sql(n: int = _N_FLOWS, threshold: int = _FANOUT_T) -> str:
     def u(seed: str) -> str:
-        h = (
-            f"CAST(concat('0x', substring(md5(concat('flows:{seed}', "
-            f"CAST(id AS VARCHAR))), 1, 15)) AS BIGINT)"
-        )
-        return f"({h} / {float(HASH_SPACE)})"
+        return portable_uniform_sql("id", seed=f"flows:{seed}")
 
     return f"""
     WITH raw AS (
@@ -247,9 +248,7 @@ def q_portscan_detection(spark, sf_dir):
     df = spark.range(_N_FLOWS)
 
     def u(seed: str):
-        return portable_hash64(F.col("id"), seed=f"flows:{seed}") / F.lit(
-            float(HASH_SPACE)
-        )
+        return portable_uniform(F.col("id"), seed=f"flows:{seed}")
 
     u_scan, u_src = u("scan"), u("src")
     is_scan = u_scan < _SCAN_RATE

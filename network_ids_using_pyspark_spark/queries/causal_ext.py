@@ -39,7 +39,7 @@ from . import register
 def _ols3(p: str) -> tuple[str, str, str]:
     """Prefix-parameterized 3x3 normal-equation solve over moments
     {p}n, {p}s1, {p}s2, {p}s11, {p}s12, {p}s22, {p}sy, {p}s1y, {p}s2y.
-    With p='' this reproduces stats_ext._OLS_B0/B1/B2 byte-for-byte
+    With p='' this reproduces stats_regression._OLS_B0/B1/B2 byte-for-byte
     (asserted by tests/test_causal_ext.py), so both engines and every
     consumer share ONE expression tree."""
     det = (
@@ -552,7 +552,7 @@ def q_chow_break_test(spark, sf_dir):
 
 
 def _causal_e2e_sql() -> str:
-    from .stats_ext import _aipw_sql, _ipw_sql
+    from .stats_causal import _aipw_sql, _ipw_sql
 
     naive = f"""
 SELECT 'a_naive_diff' AS estimator, round(
@@ -599,8 +599,8 @@ def q_causal_e2e_readout(spark, sf_dir):
     from the composition.  The standalone member queries still fit
     their own chain (beta=None default), so their independent
     certification is untouched."""
-    from .stats_causal import _urgent_src
-    from .stats_ext import irls_fit, q_aipw_doubly_robust_ate, q_propensity_ipw_ate
+    from .stats_causal import _urgent_src, q_aipw_doubly_robust_ate, q_propensity_ipw_ate
+    from .stats_regression import irls_fit
 
     shared_beta = irls_fit(_urgent_src(spark, sf_dir))
 

@@ -297,8 +297,7 @@ thresholds AS (
 )
 SELECT d.doc_id, d.lang
 FROM documents d JOIN thresholds th ON d.lang = th.lang
-WHERE (CAST(concat('0x', substring(md5(concat('langbal', CAST(d.doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-       % {_BALANCE_GRAIN}) < th.thr
+WHERE {hash_bucket_sql('d.doc_id', _BALANCE_GRAIN, seed='langbal')} < th.thr
 """
 
 
@@ -311,8 +310,6 @@ def q_lang_balanced_sample(spark, sf_dir):
     same query self-adjusts as the corpus mixture drifts.  The
     train-mixture control knob of an LLM data pipeline, reproducible on
     any engine/cluster."""
-    from ..functions.hashing import portable_hash64
-
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     floor_n = counts.agg(F.min("n").alias("floor_n"))
@@ -320,7 +317,7 @@ def q_lang_balanced_sample(spark, sf_dir):
         "lang",
         (F.col("floor_n") * _BALANCE_GRAIN / F.col("n")).cast("long").alias("thr"),
     )
-    h = F.pmod(portable_hash64(F.col("doc_id"), seed="langbal"), F.lit(_BALANCE_GRAIN))
+    h = hash_bucket("doc_id", _BALANCE_GRAIN, seed="langbal")
     return (
         docs.join(F.broadcast(thresholds), "lang")
         .filter(h < F.col("thr"))
@@ -1002,22 +999,25 @@ def q_span_mask_augment(spark, sf_dir):
     Scale plan: pure map-side array transform inside the scan stage —
     zero shuffles; the mask decision is built-in md5 arithmetic, no
     UDF."""
-    from ..functions.hashing import portable_hash64
-
     docs = load_table(spark, sf_dir, "documents")
     from ..operators.textops import tokens as tok_arr
 
     t = docs.select("doc_id", tok_arr("text").alias("w"))
-    mask_expr = (
-        "transform(sequence(1, size(w)), i -> "
-        "CASE WHEN pmod(cast(conv(substring(md5(concat('"
-        + _MASK_SEED
-        + "', cast(doc_id as string), ':', cast(i as string))), 1, 15), 16, 10) "
-        f"as bigint), 100) < {_MASK_RATE} THEN '<MASK>' ELSE w[i - 1] END)"
+    mw = F.transform(
+        F.sequence(F.lit(1), F.size("w")),
+        lambda i: F.when(
+            hash_bucket(
+                F.concat(F.col("doc_id").cast("string"), F.lit(":"), i.cast("string")),
+                100,
+                seed=_MASK_SEED,
+            )
+            < _MASK_RATE,
+            F.lit("<MASK>"),
+        ).otherwise(F.col("w")[i - 1]),
     )
     m = t.select(
         "doc_id",
-        F.expr(mask_expr).alias("mw"),
+        mw.alias("mw"),
         F.size("w").alias("n_tok"),
     )
     return m.select(

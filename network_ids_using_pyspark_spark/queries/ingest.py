@@ -4,8 +4,9 @@ Certifies the CSV edge of the engine: a multi-file flow CSV written by
 Spark, scanned back through ``scan_flows`` with the PINNED schema
 (never ``inferSchema`` — the reference pays a full extra discovery scan
 per run, ``modelling.py:50``), canonicalized, and profiled.  The DuckDB
-oracle reads the very same CSV files with ``read_csv`` and an explicit
-column spec, so the round-trip itself is what gets hash-checked.
+oracle regenerates the fixture itself (``synth_flows_sql``), so Spark's
+CSV write and its pinned-schema scan together must reproduce values
+from an independent generator.
 
 The aggregate touches only integer/string columns: CSV round-trips of
 NaN/±Inf doubles are representation-sensitive ("Infinity" vs "Inf")
@@ -18,46 +19,19 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..session import scratch_dir
-from ..sources.synthetic import synth_flows
+from ..sources.synthetic import synth_flows, synth_flows_sql
 from ..sources.tables import load_table, scan_flows
 from . import register
 
-# fixed: the DuckDB oracle below reads these files by this literal path
-_CSV_DIR = "/tmp/nids_scan_flows_csv"
 _N = 60_000
 
-# (name, duckdb type) in synth_flows/FLOW_SCHEMA file order; doubles are
-# read as VARCHAR (unused in the aggregate — see module docstring).
-_ORACLE_COLS = [
-    ("flow_id", "BIGINT"),
-    ("Dst Port", "INTEGER"),
-    ("Protocol", "INTEGER"),
-    ("Timestamp", "VARCHAR"),
-    ("Flow Duration", "BIGINT"),
-    ("Tot Fwd Pkts", "INTEGER"),
-    ("TotLen Fwd Pkts", "INTEGER"),
-    ("Fwd Pkt Len Mean", "VARCHAR"),
-    ("Flow Byts/s", "VARCHAR"),
-    ("Flow Pkts/s", "VARCHAR"),
-    ("Flow IAT Mean", "VARCHAR"),
-    ("SYN Flag Cnt", "INTEGER"),
-    ("ACK Flag Cnt", "INTEGER"),
-    ("Down/Up Ratio", "INTEGER"),
-    ("Init Fwd Win Byts", "INTEGER"),
-    ("Label", "VARCHAR"),
-]
-
-_COLSPEC = ", ".join(f"'{n}': '{t}'" for n, t in _ORACLE_COLS)
-
 _SCAN_FLOWS_SQL = f"""
-SELECT "Label" AS label,
-       "Dst Port" AS dst_port,
-       "Protocol" AS protocol,
+SELECT label, dst_port, protocol,
        COUNT(*) AS n,
-       CAST(SUM("SYN Flag Cnt") AS BIGINT) AS n_syn,
-       MAX("Flow Duration") AS max_duration,
-       MIN("Flow Duration") AS min_duration
-FROM read_csv('{_CSV_DIR}/*.csv', header=true, columns={{{_COLSPEC}}})
+       CAST(SUM(syn) AS BIGINT) AS n_syn,
+       MAX(flow_duration) AS max_duration,
+       MIN(flow_duration) AS min_duration
+FROM ({synth_flows_sql(_N)})
 GROUP BY 1, 2, 3
 """
 
@@ -67,13 +41,14 @@ def q_scan_flows_csv_profile(spark, sf_dir):
     """A1: write the 60k flow fixture as a 4-file CSV, scan it back with
     the pinned ``FLOW_SCHEMA`` (union-of-files handled by the scan node,
     no driver loop), canonicalize names, profile per (label, port,
-    protocol).  The oracle re-reads the same files via DuckDB
-    ``read_csv`` — certifying the CSV boundary end to end."""
+    protocol).  The oracle regenerates the fixture in DuckDB — a defect
+    in the CSV writer or the scan shows up as a mismatch."""
+    csv_dir = scratch_dir(spark, "flows-csv")
     synth_flows(spark, _N).repartition(4).write.mode("overwrite").option(
         "header", True
-    ).csv(_CSV_DIR)
+    ).csv(csv_dir)
 
-    flows = scan_flows(spark, _CSV_DIR, fmt="csv")  # pinned FLOW_SCHEMA
+    flows = scan_flows(spark, csv_dir, fmt="csv")  # pinned FLOW_SCHEMA
     return flows.groupBy(
         F.col("label"),
         F.col("dst_port"),

@@ -26,7 +26,7 @@ from ..ml.pipeline import (
 )
 from ..operators.sampling import anti_join_split, hash_sample
 from ..session import scratch_dir
-from ..sources.synthetic import synth_flows
+from ..sources.synthetic import synth_flows, synth_flows_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -260,60 +260,19 @@ def q_ml_e2e_ref_width(spark, sf_dir):
     return m
 
 
-def _flows_profile_sql(n: int = 60_000) -> str:
-    """Oracle that REGENERATES the synthetic flow fixture in DuckDB via
-    the same md5 arithmetic as sources/synthetic.py, then profiles it —
-    proving generator + profile are engine-independent end to end.
-    Only exp/pow-free columns (transcendentals are not cross-engine
-    portable; see functions/numeric.py docs)."""
-
-    def u(seed: str) -> str:
-        h = (
-            f"CAST(concat('0x', substring(md5(concat('flows:{seed}', "
-            f"CAST(id AS VARCHAR))), 1, 15)) AS BIGINT)"
-        )
-        return f"({h} / 1152921504606846976.0)"
-
-    return f"""
-    WITH raw AS (
-      SELECT id,
-             {u('label')} AS u_label,
-             {u('dur')} AS u_dur, {u('dneg')} AS u_dneg,
-             {u('port')} AS u_port, {u('proto')} AS u_proto,
-             {u('syn')} AS u_syn, {u('ack')} AS u_ack
-      FROM range(0, {n}) t(id)
-    ), flows AS (
-      SELECT
-        CASE WHEN u_label < 0.85 THEN 'Benign'
-             WHEN u_label < 0.95 THEN 'FTP-BruteForce'
-             ELSE 'SSH-BruteForce' END AS label,
-        CASE WHEN u_label < 0.85 THEN 0 WHEN u_label < 0.95 THEN 1 ELSE 2 END AS cls,
-        CASE WHEN u_dneg < 0.001 THEN -919011000000
-             ELSE CAST(1 + floor(u_dur * 120000000) AS BIGINT) END AS flow_duration,
-        CAST(CASE WHEN u_proto < 0.8 THEN 6 ELSE 17 END AS INTEGER) AS protocol,
-        CAST(CASE WHEN u_label >= 0.85 AND u_label < 0.95 THEN 21
-                  WHEN u_label >= 0.95 THEN 22
-                  WHEN u_port < 0.4 THEN 80
-                  WHEN u_port < 0.7 THEN 443
-                  WHEN u_port < 0.8 THEN 3389
-                  ELSE 65533 END AS INTEGER) AS dst_port,
-        CASE WHEN u_syn < 0.2 + (CASE WHEN u_label < 0.85 THEN 0 WHEN u_label < 0.95 THEN 1 ELSE 2 END) * 0.3
-             THEN 1 ELSE 0 END AS syn,
-        CASE WHEN u_ack < 0.6 THEN 1 ELSE 0 END AS ack
-      FROM raw
-    )
-    SELECT label, dst_port, protocol,
-           COUNT(*) AS n,
-           CAST(SUM(syn) AS BIGINT) AS n_syn,
-           CAST(SUM(ack) AS BIGINT) AS n_ack,
-           MAX(flow_duration) AS max_duration,
-           MIN(flow_duration) AS min_duration
-    FROM flows
-    GROUP BY label, dst_port, protocol
-    """
+_FLOWS_PROFILE_SQL = f"""
+SELECT label, dst_port, protocol,
+       COUNT(*) AS n,
+       CAST(SUM(syn) AS BIGINT) AS n_syn,
+       CAST(SUM(ack) AS BIGINT) AS n_ack,
+       MAX(flow_duration) AS max_duration,
+       MIN(flow_duration) AS min_duration
+FROM ({synth_flows_sql(60_000)})
+GROUP BY label, dst_port, protocol
+"""
 
 
-@register("flows_port_label_profile", _flows_profile_sql())
+@register("flows_port_label_profile", _FLOWS_PROFILE_SQL)
 def q_flows_port_label_profile(spark, sf_dir):
     """Reference-shaped IDS profile over the synthetic flow fixture
     (fixed n=60k for sf-independence): flows per (label, port,
@@ -739,15 +698,14 @@ def q_ml_train_linreg(spark, sf_dir):
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import LinearRegression
 
-    from ..functions.hashing import HASH_SPACE, portable_hash64
+    from ..functions.hashing import portable_uniform
 
     l = load_table(spark, sf_dir, "lineitem")
     noise = (
-        portable_hash64(
+        portable_uniform(
             F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber")),
             seed="linreg",
-        ).cast("double")
-        / F.lit(float(HASH_SPACE))
+        )
         - 0.5
     ) * 20.0
     data = l.select(
@@ -867,8 +825,6 @@ def q_ml_isotonic_calibration(spark, sf_dir):
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.functions import vector_to_array
     from pyspark.ml.regression import IsotonicRegression
-
-    from .ml import _prepared_split  # self-import safe at call time
 
     train, test = _prepared_split(spark, sf_dir)
     to_bin = F.when(F.col("encoded_label") == 0.0, 0.0).otherwise(1.0)

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import portable_uniform, portable_uniform_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -95,6 +96,10 @@ def q_k_anonymity_risk(spark, sf_dir):
 
 _DP_EPS = 1.0  # per-release epsilon; sensitivity 1 → Laplace scale 1/eps
 
+_DP_U = portable_uniform_sql(
+    "concat(event_type, ':', CAST(epoch_day AS VARCHAR))", seed="dp1:"
+)
+
 _DP_SQL = f"""
 WITH daily AS (
   SELECT event_type,
@@ -104,7 +109,7 @@ WITH daily AS (
 ),
 u AS (
   SELECT event_type, epoch_day, n,
-         CAST({{h}} AS DOUBLE) / {{space}} - 0.5 AS u
+         {_DP_U} - 0.5 AS u
   FROM daily
 )
 SELECT event_type, CAST(epoch_day AS BIGINT) AS epoch_day,
@@ -115,14 +120,7 @@ FROM u
 """
 
 
-def _dp_sql() -> str:
-    from ..functions.hashing import HASH_SPACE, portable_hash64_sql
-
-    h = portable_hash64_sql("concat(event_type, ':', CAST(epoch_day AS VARCHAR))", seed="dp1:")
-    return _DP_SQL.replace("{h}", h).replace("{space}", f"{HASH_SPACE}.0")
-
-
-@register("dp_noisy_daily_counts", _dp_sql())
+@register("dp_noisy_daily_counts", _DP_SQL)
 def q_dp_noisy_daily_counts(spark, sf_dir):
     """Seeded-Laplace noisy daily counts per event type (inverse-CDF
     over the portable md5 uniform, scale 1/ε with ε={_DP_EPS}).  Noise
@@ -133,8 +131,6 @@ def q_dp_noisy_daily_counts(spark, sf_dir):
     Scale plan: one scan → map-side-combined (type, day) aggregate;
     the noise term is a per-row built-in expression (md5/ln), no
     shuffle beyond the aggregate, output calendar-bounded."""
-    from ..functions.hashing import HASH_SPACE, portable_hash64
-
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
@@ -143,11 +139,10 @@ def q_dp_noisy_daily_counts(spark, sf_dir):
         ),
     ).agg(F.count(F.lit(1)).alias("n"))
     u = (
-        portable_hash64(
+        portable_uniform(
             F.concat(F.col("event_type"), F.lit(":"), F.col("epoch_day").cast("string")),
             seed="dp1:",
-        ).cast("double")
-        / F.lit(float(HASH_SPACE))
+        )
         - 0.5
     )
     noise = (
@@ -469,6 +464,8 @@ _DPK_DELTA = 1e-6
 # τ = 1 + 2·ln(2/δ)/ε, evaluated once so both engines share the literal
 _DPK_TAU = f"(1.0 + 2.0 * ln(2.0 / {_DPK_DELTA}) / {_DPK_EPS})"
 
+_DPK_U = portable_uniform_sql("concat(event_type, '@', CAST(qh AS VARCHAR))", seed="dpk1:")
+
 _DPK_SQL = f"""
 WITH cells AS (
   SELECT event_type, EXTRACT(hour FROM ts) AS qh, COUNT(*) AS n
@@ -480,7 +477,7 @@ noisy AS (
            * CASE WHEN u < 0 THEN 1 ELSE -1 END * ln(1 - 2 * abs(u)) AS noisy_n
   FROM (
     SELECT event_type, qh, n,
-           CAST({{h}} AS DOUBLE) / {{space}} - 0.5 AS u
+           {_DPK_U} - 0.5 AS u
     FROM cells
   )
 )
@@ -493,16 +490,7 @@ WHERE noisy_n > {_DPK_TAU}
 """
 
 
-def _dpk_sql() -> str:
-    from ..functions.hashing import HASH_SPACE, portable_hash64_sql
-
-    h = portable_hash64_sql(
-        "concat(event_type, '@', CAST(qh AS VARCHAR))", seed="dpk1:"
-    )
-    return _DPK_SQL.replace("{h}", h).replace("{space}", f"{HASH_SPACE}.0")
-
-
-@register("dp_stability_histogram", _dpk_sql())
+@register("dp_stability_histogram", _DPK_SQL)
 def q_dp_stability_histogram(spark, sf_dir):
     """Stability-based noisy histogram release over (event_type, hour):
     seeded-Laplace noise (ε=1), cells published only when the noisy
@@ -513,19 +501,16 @@ def q_dp_stability_histogram(spark, sf_dir):
     noise/threshold are per-row expressions on the ≤|types|·24-cell
     relation, and the rank window partitions by type over that bounded
     relation — never the fact table."""
-    from ..functions.hashing import HASH_SPACE, portable_hash64
-
     cells = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.hour("ts").alias("qh"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     u = (
-        portable_hash64(
+        portable_uniform(
             F.concat(F.col("event_type"), F.lit("@"), F.col("qh").cast("string")),
             seed="dpk1:",
-        ).cast("double")
-        / F.lit(float(HASH_SPACE))
+        )
         - 0.5
     )
     noisy = cells.select(

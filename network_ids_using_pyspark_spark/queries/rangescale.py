@@ -48,7 +48,7 @@ from .entity import _SNM_SQL, _SNM_T, _SNM_W
 from . import functions_ext as _functions_ext
 from .functions_ext import _ED_BINS, _EQUIDEPTH_SQL
 from .relational_ext import _PARETO_SQL
-from .stats_ext import _RFM_SQL, _STUMP_BINS, _stump_sql, stump_gains_from_bucketed
+from .stats_hypothesis import _RFM_SQL, _STUMP_BINS, _stump_sql, stump_gains_from_bucketed
 
 _N_BUCKETS = 32  # range buckets for the sort-family twins; ≫ at scale
 

@@ -194,8 +194,7 @@ def q_random_split_invariants(spark, sf_dir):
 _CV_K = 5
 
 _KFOLD_SQL = f"""
-SELECT (CAST(concat('0x', substring(md5(concat('cv', CAST(event_id AS VARCHAR))), 1, 15))
-        AS BIGINT) % {_CV_K}) AS fold,
+SELECT {hash_bucket_sql('event_id', _CV_K, seed='cv')} AS fold,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
 FROM events

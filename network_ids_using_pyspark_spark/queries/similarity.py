@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_bucket_sql
 from ..functions.numeric import q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from ..operators.similarity import as_double_array, cosine_topk
@@ -1015,7 +1016,7 @@ _KNN_NQ = 40  # hash-held-out query set
 
 def _knn_sql() -> str:
     l2 = _KM_L2
-    split = f"(CAST(concat('0x', substring(md5(concat('knn:', CAST(vec_id AS VARCHAR))), 1, 15)) AS BIGINT) % 10)"
+    split = hash_bucket_sql("vec_id", 10, seed="knn:")
     return f"""
 WITH e AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v, ({split}) AS bkt

@@ -12,13 +12,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import q9_sum, q9_sum_sql
-from ..functions.hashing import (
-    HASH_SPACE,
-    hash_bucket,
-    hash_bucket_sql,
-    portable_hash64,
-    portable_hash64_sql,
-)
 from ..sources.tables import load_table
 from . import register
 from .stats_regression import (  # noqa: F401

@@ -13,11 +13,10 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
-    HASH_SPACE,
-    hash_bucket,
-    hash_bucket_sql,
     portable_hash64,
     portable_hash64_sql,
+    portable_uniform,
+    portable_uniform_sql,
 )
 from ..functions.numeric import q9_sum, q9_sum_sql
 from ..sources.tables import load_table
@@ -136,7 +135,7 @@ _POIS_CDF = [
 
 
 def _boot_sql() -> str:
-    h = portable_hash64_sql(
+    u = portable_uniform_sql(
         "concat(CAST(rep AS VARCHAR), ':', CAST(o_orderkey AS VARCHAR))",
         seed="boot:",
     )
@@ -146,7 +145,7 @@ def _boot_sql() -> str:
     return f"""
 WITH reps AS (SELECT unnest(range(0, {_B})) AS rep),
 w AS (
-  SELECT rep, o_totalprice, {h} / {float(HASH_SPACE)} AS u
+  SELECT rep, o_totalprice, {u} AS u
   FROM orders CROSS JOIN reps
 ),
 pw AS (
@@ -197,12 +196,9 @@ def q_poisson_bootstrap_ci(spark, sf_dir):
     w = spread_scan(o.select("o_orderkey", "o_totalprice")).select(
         "o_orderkey", "o_totalprice", reps
     )
-    u = (
-        portable_hash64(
-            F.concat(F.col("rep").cast("string"), F.lit(":"), F.col("o_orderkey").cast("string")),
-            seed="boot:",
-        )
-        / F.lit(float(HASH_SPACE))
+    u = portable_uniform(
+        F.concat(F.col("rep").cast("string"), F.lit(":"), F.col("o_orderkey").cast("string")),
+        seed="boot:",
     )
     wt = None
     for i, p in enumerate(_POIS_CDF):

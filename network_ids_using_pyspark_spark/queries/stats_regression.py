@@ -10,14 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_bucket, hash_bucket_sql
 from ..functions.numeric import q9_sum, q9_sum_sql
-from ..functions.hashing import (
-    HASH_SPACE,
-    hash_bucket,
-    hash_bucket_sql,
-    portable_hash64,
-    portable_hash64_sql,
-)
 from ..sources.tables import load_table
 from . import register
 

@@ -9,7 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_bucket, hash_bucket_sql
 from ..session import scratch_dir
+from ..sources.synthetic import synth_flow_columns, synth_flows_sql
 from ..streaming.stream import (
     run_folded_agg,
     run_to_memory,
@@ -528,45 +530,19 @@ def q_stream_ingest_pipeline_e2e(spark, sf_dir):
     return run_to_memory(agg, "complete")
 
 
-def _flow_alerts_sql(n: int = 60_000, threshold: int = 80) -> str:
-    def u(seed: str) -> str:
-        h = (
-            f"CAST(concat('0x', substring(md5(concat('flows:{seed}', "
-            f"CAST(id AS VARCHAR))), 1, 15)) AS BIGINT)"
-        )
-        return f"({h} / 1152921504606846976.0)"
-
-    return f"""
-    WITH raw AS (
-      SELECT id, {u('label')} AS u_label, {u('ts')} AS u_ts,
-             {u('syn')} AS u_syn, {u('port')} AS u_port
-      FROM range(0, {n}) t(id)
-    ), flows AS (
-      SELECT (1518568261 + CAST(floor(u_ts * 86400) AS BIGINT)) AS epoch,
-             CASE WHEN u_syn < 0.2 + (CASE WHEN u_label < 0.85 THEN 0
-                                           WHEN u_label < 0.95 THEN 1
-                                           ELSE 2 END) * 0.3
-                  THEN 1 ELSE 0 END AS syn,
-             CASE WHEN u_label >= 0.85 AND u_label < 0.95 THEN 21
-                  WHEN u_label >= 0.95 THEN 22
-                  WHEN u_port < 0.4 THEN 80
-                  WHEN u_port < 0.7 THEN 443
-                  WHEN u_port < 0.8 THEN 3389
-                  ELSE 65533 END AS dst_port
-      FROM raw
-    )
-    SELECT epoch // 3600 AS hour_bucket,
-           dst_port,
-           COUNT(*) AS n_flows,
-           CAST(SUM(syn) AS BIGINT) AS n_syn
-    FROM flows
-    WHERE dst_port IN (21, 22)
-    GROUP BY 1, 2
-    HAVING SUM(syn) >= {threshold}
-    """
+_FLOW_ALERTS_SQL = f"""
+SELECT epoch // 3600 AS hour_bucket,
+       dst_port,
+       COUNT(*) AS n_flows,
+       CAST(SUM(syn) AS BIGINT) AS n_syn
+FROM ({synth_flows_sql(60_000)})
+WHERE dst_port IN (21, 22)
+GROUP BY 1, 2
+HAVING SUM(syn) >= 80
+"""
 
 
-@register("stream_flow_bruteforce_alerts", _flow_alerts_sql())
+@register("stream_flow_bruteforce_alerts", _FLOW_ALERTS_SQL)
 def q_stream_flow_bruteforce_alerts(spark, sf_dir):
     """The north-star IDS serving path end to end: flow records arrive
     as a stream, and per-hour SYN-flood pressure on the brute-force
@@ -579,33 +555,11 @@ def q_stream_flow_bruteforce_alerts(spark, sf_dir):
     never a string parse) so windowing is timezone-independent under
     ANY session; the oracle regenerates the identical flow stream in
     SQL and windows by integer hour-bucket arithmetic."""
-    from ..functions.hashing import HASH_SPACE, portable_hash64
-
-    df = spark.range(60_000)
-
-    def u(seed: str):
-        return portable_hash64(F.col("id"), seed=f"flows:{seed}") / F.lit(
-            float(HASH_SPACE)
-        )
-
-    u_label = u("label")
-    cls = F.when(u_label < 0.85, 0).when(u_label < 0.95, 1).otherwise(2)
-    port_u = u("port")
-    dst_port = (
-        F.when(cls == 1, 21)
-        .when(cls == 2, 22)
-        .when(port_u < 0.4, 80)
-        .when(port_u < 0.7, 443)
-        .when(port_u < 0.8, 3389)
-        .otherwise(65533)
-        .cast("int")
-    )
-    syn = (u("syn") < 0.2 + cls * 0.3).cast("int")
-    epoch = (F.lit(1518568261) + F.floor(u("ts") * 86400)).cast("long")
-    flows = df.select(
-        F.timestamp_seconds(epoch).alias("ts"),
-        dst_port.alias("dst_port"),
-        syn.alias("syn"),
+    c = synth_flow_columns()
+    flows = spark.range(60_000).select(
+        F.timestamp_seconds(c["epoch"]).alias("ts"),
+        c["dst_port"].alias("dst_port"),
+        c["syn"].alias("syn"),
     )
 
     path = scratch_dir(spark, "flow-stream")
@@ -984,9 +938,8 @@ _SB_T0_US = 1_500_000_150_000_000
 
 
 def _stream_beacon_sql() -> str:
-    h = (
-        "CAST(concat('0x', substring(md5(concat('bjit:', "
-        "concat(CAST(user_id AS VARCHAR), ':', CAST(rn AS VARCHAR)))), 1, 15)) AS BIGINT)"
+    jit = hash_bucket_sql(
+        "concat(CAST(user_id AS VARCHAR), ':', CAST(rn AS VARCHAR))", 5000000, seed="bjit:"
     )
     return f"""
 WITH ranked AS (
@@ -1000,7 +953,7 @@ eff AS (
   SELECT user_id, is_beacon_truth,
          CASE WHEN is_beacon_truth
               THEN {_SB_T0_US} + rn * 300000000
-                   + ({h} % 5000000) - 2500000
+                   + {jit} - 2500000
               ELSE t_us END AS t_eff
   FROM ranked
 ),
@@ -1047,9 +1000,7 @@ def q_stream_beaconing_alerts(spark, sf_dir):
     weeks-of-windows sized, never events."""
     from pyspark.sql import Window
 
-    from ..functions.hashing import portable_hash64
     from ..sources.tables import load_table
-    from ..streaming.stream import run_to_memory
 
     ev = load_table(spark, sf_dir, "events")
     w_rank = Window.partitionBy("user_id").orderBy(
@@ -1062,16 +1013,10 @@ def q_stream_beaconing_alerts(spark, sf_dir):
         (F.col("user_id") % 97 == 0).alias("is_beacon_truth"),
     )
     jit = (
-        F.pmod(
-            portable_hash64(
-                F.concat(
-                    F.col("user_id").cast("string"),
-                    F.lit(":"),
-                    F.col("rn").cast("string"),
-                ),
-                seed="bjit:",
-            ),
-            F.lit(5_000_000),
+        hash_bucket(
+            F.concat(F.col("user_id").cast("string"), F.lit(":"), F.col("rn").cast("string")),
+            5_000_000,
+            seed="bjit:",
         )
         - 2_500_000
     )
@@ -1171,7 +1116,7 @@ def q_stream_bpe_tokenize_totals(spark, sf_dir):
     in production); the stream side shuffles only (lang, partial sums)
     — per-batch cost is linear in batch tokens, state is |langs| rows."""
     from ..sources.tables import load_table
-    from ..streaming.stream import run_to_memory, stream_documents
+    from ..streaming.stream import stream_documents
     from .tokenizer import _learn_merges, _split_syms, _word_histogram
 
     _, words = _learn_merges(
@@ -1209,14 +1154,22 @@ def q_stream_bpe_tokenize_totals(spark, sf_dir):
 # as it lands" shape.
 # ---------------------------------------------------------------------------
 
+# The four stats modules register their entries here, in this order:
+# building this entry's oracle has always imported them at this point,
+# and the correctness window covers entries in registry order.
+from . import stats_hypothesis  # noqa: E402,F401,I001
+from .stats_regression import (  # noqa: E402
+    _qcf_features,
+    _qcf_retention,
+    _qcf_sql,
+    irls_fit,
+    irls_score,
+)
+from . import stats_causal, stats_calibration  # noqa: E402,F401
 
-def _stream_qcf_sql() -> str:
-    from .stats_ext import _qcf_sql
 
-    return _qcf_sql()  # batch-equivalent: identical per-lang retention
-
-
-@register("stream_quality_filter_totals", _stream_qcf_sql())
+# batch-equivalent oracle: identical per-lang retention
+@register("stream_quality_filter_totals", _qcf_sql())
 def q_stream_quality_filter_totals(spark, sf_dir):
     """Stream-static quality filtering: same training pass and 1e-9
     scoring grid as `quality_classifier_filter` (whose oracle this
@@ -1231,8 +1184,7 @@ def q_stream_quality_filter_totals(spark, sf_dir):
     state; the model is 3 driver-side literals — no retraining on
     stream."""
     from ..sources.tables import load_table
-    from ..streaming.stream import run_to_memory, stream_documents
-    from .stats_ext import _qcf_features, _qcf_retention, irls_fit, irls_score
+    from ..streaming.stream import stream_documents
 
     beta = irls_fit(_qcf_features(load_table(spark, sf_dir, "documents")))
     scored = irls_score(_qcf_features(stream_documents(spark, sf_dir)), beta)

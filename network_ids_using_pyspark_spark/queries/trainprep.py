@@ -22,7 +22,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hash_bucket, hash_bucket_sql
+from ..functions.hashing import (
+    hash_bucket,
+    hash_bucket_sql,
+    portable_hash64,
+    portable_hash64_sql,
+)
 from ..functions.numeric import dec_avg, dec_avg_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
@@ -30,11 +35,9 @@ from . import register
 _N_EPOCHS = 2
 _N_SHARDS = 32
 
-# the per-epoch salted portable hash, written out (the helper's fixed-
-# seed form can't splice a column into the salt)
-_EPOCH_KEY_SQL = (
-    "CAST(concat('0x', substring(md5(concat('epoch-', CAST(e.epoch AS VARCHAR), "
-    "'-', CAST(d.doc_id AS VARCHAR))), 1, 15)) AS BIGINT)"
+# the per-epoch salted portable hash
+_EPOCH_KEY_SQL = portable_hash64_sql(
+    "concat(CAST(e.epoch AS VARCHAR), '-', CAST(d.doc_id AS VARCHAR))", seed="epoch-"
 )
 
 _EPOCH_SQL = f"""
@@ -66,22 +69,10 @@ def q_epoch_shuffle_order(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     epochs = spark.range(_N_EPOCHS).select(F.col("id").cast("int").alias("epoch"))
     out = d.crossJoin(F.broadcast(epochs))
-    salted = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("epoch-"),
-                    F.col("epoch").cast("string"),
-                    F.lit("-"),
-                    F.col("doc_id").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    salted = portable_hash64(
+        F.concat(F.col("epoch").cast("string"), F.lit("-"), F.col("doc_id").cast("string")),
+        seed="epoch-",
+    )
     return out.select(
         "doc_id",
         "epoch",

@@ -17,7 +17,7 @@ from network_ids_using_pyspark_spark.queries.causal_ext import (
     _RDD_CUT,
     _ols3,
 )
-from network_ids_using_pyspark_spark.queries.stats_ext import (
+from network_ids_using_pyspark_spark.queries.stats_regression import (
     _OLS_B0,
     _OLS_B1,
     _OLS_B2,

@@ -42,32 +42,12 @@ def _base_types(type_str: str):
     return re.findall(r"[A-Z_]+", type_str)
 
 
-def _ensure_csv_bind_fixture():
-    """``scan_flows_csv_profile``'s oracle reads the /tmp CSV its query
-    writes at run time; DuckDB's ``read_csv`` opens the glob eagerly at
-    BIND time, so on a fresh box (empty /tmp) this plan-only gate failed
-    before any query had ever run.  Seed a header-only shard so the bind
-    succeeds; the query's ``mode("overwrite")`` replaces it wholesale the
-    first time it runs, and the driver always runs the query before its
-    oracle, so execution order is unaffected."""
-    import glob
-
-    from network_ids_using_pyspark_spark.queries.ingest import _CSV_DIR, _ORACLE_COLS
-
-    if not glob.glob(f"{_CSV_DIR}/*.csv"):
-        os.makedirs(_CSV_DIR, exist_ok=True)
-        with open(f"{_CSV_DIR}/_bindseed.csv", "w") as f:
-            f.write(",".join(f'"{n}"' for n, _ in _ORACLE_COLS) + "\n")
-
-
 @pytest.mark.parametrize("scope", ["registry"])
 def test_every_oracle_result_type_is_driver_safe(scope):
     if not os.path.isdir(SF_DIR):
         pytest.skip(f"{SF_DIR} missing")
     import __spark_entry__ as entry
     from network_ids_using_pyspark_spark.sources.tables import TABLES
-
-    _ensure_csv_bind_fixture()
 
     con = duckdb.connect()
     for t in TABLES:

@@ -12,6 +12,7 @@ from __future__ import annotations
 import ast
 import glob
 import os
+import re
 import subprocess
 import sys
 
@@ -49,8 +50,8 @@ spark.stop()
 """
 
 # the cheapest scratch-writing entry of each query module that writes
-# any; the two fixed /tmp paths left (the oracle's CSV dir, the
-# warehouse conf) are not these entries' to write
+# any; the one fixed /tmp path left (the warehouse conf) is not these
+# entries' to write
 _SCRATCH_SCRIPT = """
 import glob, os, sys, time
 sys.path.insert(0, {repo!r})
@@ -67,7 +68,7 @@ for name in ("jsonl_scan_profile", "partition_pruned_scan",
 print("rows", rows)
 print("scratch", len(os.listdir(root)))
 spark.stop()
-fixed = ("/tmp/nids_scan_flows_csv", "/tmp/nids_warehouse")
+fixed = ("/tmp/nids_warehouse",)
 print("fresh", sum(os.stat(p).st_mtime >= start
                    for p in glob.glob("/tmp/nids_*") if p not in fixed))
 print("left", int(os.path.exists(root)))
@@ -126,27 +127,98 @@ def test_scratch_data_lives_and_dies_with_the_application(tmp_path):
     assert out["left"] == 0
 
 
+def _package_trees():
+    pkg = os.path.join(REPO, "network_ids_using_pyspark_spark")
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            yield os.path.relpath(path, pkg), ast.parse(f.read(), path)
+
+
+def _scoped_nodes(tree):
+    """Every node with the name of its top-level function, class or
+    assigned module constant."""
+    for top in tree.body:
+        if isinstance(top, (ast.FunctionDef, ast.ClassDef)):
+            scope = top.name
+        elif isinstance(top, ast.Assign) and isinstance(top.targets[0], ast.Name):
+            scope = top.targets[0].id
+        else:
+            scope = None
+        for node in ast.walk(top):
+            yield scope, node
+
+
 def test_package_builds_no_scratch_path_of_its_own():
     """Every scratch path comes from ``session.scratch_dir``: no /tmp
     literal and no other ``mkdtemp`` anywhere in the package, apart
-    from the oracle's CSV dir and the warehouse conf."""
+    from the warehouse conf."""
     allowed = {
-        ("queries/ingest.py", "/tmp/nids_scan_flows_csv"),
         ("session.py", "/tmp/nids_warehouse"),
         ("session.py", "mkdtemp"),
     }
-    pkg = os.path.join(REPO, "network_ids_using_pyspark_spark")
     found = []
-    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        rel = os.path.relpath(path, pkg)
-        with open(path) as f:
-            tree = ast.parse(f.read(), path)
+    for rel, tree in _package_trees():
         for node in ast.walk(tree):
             if isinstance(node, ast.Constant) and str(node.value).startswith("/tmp"):
                 found.append((rel, node.value))
             elif getattr(node, "attr", getattr(node, "id", None)) == "mkdtemp":
                 found.append((rel, "mkdtemp"))
     assert [f for f in found if f not in allowed] == []
+
+
+_INLINE_HASH = re.compile(r"substring\(md5\(.*1,\s*15\)", re.S)
+_HASH_SPACE_SQL = re.compile(r"\bconv\(|/\s*(1152921504606846976|1\.152921504606847e\+18)")
+
+
+def _is_hash_space(node, names) -> bool:
+    """``HASH_SPACE`` (under any import alias in ``names``), ``16**15``,
+    2^60 as a number, or any of these wrapped in ``float(...)`` /
+    ``F.lit(...)``."""
+    if isinstance(node, ast.Call) and len(node.args) == 1:
+        return _is_hash_space(node.args[0], names)
+    if isinstance(node, ast.Constant):
+        return node.value == 16**15
+    return ast.unparse(node).split(".")[-1] in names or ast.unparse(node) == "16 ** 15"
+
+
+def test_package_has_one_portable_hash_kernel():
+    """``functions/hashing.py`` is the only place that spells out the
+    portable hash or divides by its 2^60 range: no inline
+    ``substring(md5(…), 1, 15)`` string, no ``conv(`` (Spark call or SQL
+    text) and no division by ``HASH_SPACE`` / ``16**15`` elsewhere.
+    Two divisions stay, each a different formula: the Efraimidis-
+    Spirakis sampler's ``(h + 0.5) / 2^60`` and the host-side
+    hyperplane literals of the embedding near-dup LSH."""
+    allowed = {
+        ("queries/sampling.py", "_ES_KEY_SQL"),
+        ("queries/sampling.py", "q_weighted_topk_sample_es"),
+        ("operators/dedup.py", "hyperplanes"),
+    }
+    found = []
+    for rel, tree in _package_trees():
+        if rel == os.path.join("functions", "hashing.py"):
+            continue
+        names = {"HASH_SPACE"} | {
+            a.asname for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.name == "HASH_SPACE" and a.asname
+        }
+        for scope, node in _scoped_nodes(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                hit = _INLINE_HASH.search(node.value) or _HASH_SPACE_SQL.search(node.value)
+            elif isinstance(node, ast.JoinedStr):
+                # SQL text that splices in the 2^60 range
+                hit = _INLINE_HASH.search(ast.unparse(node)) or any(
+                    isinstance(v, ast.FormattedValue) and _is_hash_space(v.value, names)
+                    for v in node.values
+                )
+            elif isinstance(node, ast.Call):
+                hit = getattr(node.func, "attr", getattr(node.func, "id", None)) == "conv"
+            else:
+                hit = (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Div)
+                       and _is_hash_space(node.right, names))
+            if hit and (rel, scope) not in allowed:
+                found.append((rel, scope, node.lineno))
+    assert found == []
 
 
 def test_repeated_queries_reuse_generated_classes(spark):

@@ -186,7 +186,7 @@ def test_quality_filter_matches_numpy_newton(spark):
     comparison tolerance covers the engine's 1e-9 grid."""
     import numpy as np
 
-    from network_ids_using_pyspark_spark.queries.stats_ext import (
+    from network_ids_using_pyspark_spark.queries.stats_regression import (
         _IRLS_T,
         _QCF_T,
     )
@@ -228,7 +228,7 @@ def test_holt_linear_matches_python_fold(spark):
     """The engine's struct-accumulator fold vs an explicit plain-Python
     recurrence (also guards the oracle's recursive-CTE rewrite — the
     naive DuckDB list_reduce twin was verifiably wrong, see the SQL
-    comment in stats_ext.py)."""
+    comment in stats_regression.py)."""
     import math
 
     con = duckdb.connect()
