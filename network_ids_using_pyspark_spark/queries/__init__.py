@@ -9,6 +9,8 @@ rows-only checks).
 Cross-engine reproducibility rules used throughout (see
 ``functions/numeric.py`` and ``functions/hashing.py``):
   * double SUM/AVG → exact DECIMAL accumulation, final cast to double;
+  * DECIMAL → double read-back: a plain ``.cast("double")`` on Spark,
+    ``dec_double_sql`` (the correctly rounded VARCHAR hop) on DuckDB;
   * anything hash-dependent → the portable md5-based hash;
   * query outputs never contain NaN/±Inf *values* (only counts of them) —
     cleaning ops exist precisely to strip those;

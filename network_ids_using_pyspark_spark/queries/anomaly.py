@@ -21,6 +21,7 @@ from ..functions.hashing import (
     portable_uniform,
     portable_uniform_sql,
 )
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -967,8 +968,8 @@ gaps AS (
 stats AS (
   SELECT user_id, is_beacon_truth,
          COUNT(g) AS n_gaps,
-         CAST(CAST(SUM(CAST(g AS DECIMAL(19, 0))) AS VARCHAR) AS DOUBLE) AS s,
-         CAST(CAST(SUM(CAST(g AS DECIMAL(19, 0)) * CAST(g AS DECIMAL(19, 0))) AS VARCHAR) AS DOUBLE) AS ss
+         {dec_double_sql("SUM(CAST(g AS DECIMAL(19, 0)))")} AS s,
+         {dec_double_sql("SUM(CAST(g AS DECIMAL(19, 0)) * CAST(g AS DECIMAL(19, 0)))")} AS ss
   FROM gaps WHERE g IS NOT NULL
   GROUP BY user_id, is_beacon_truth
 ),
@@ -1047,8 +1048,8 @@ def q_beaconing_periodicity_detection(spark, sf_dir):
     g0 = F.col("g").cast("decimal(19, 0)")
     stats = gaps.groupBy("user_id", "is_beacon_truth").agg(
         F.count("g").alias("n_gaps"),
-        F.sum(g0).cast("string").cast("double").alias("s"),
-        F.sum(g0 * g0).cast("string").cast("double").alias("ss"),
+        F.sum(g0).cast("double").alias("s"),
+        F.sum(g0 * g0).cast("double").alias("ss"),
     )
     mean = F.col("s") / F.col("n_gaps")
     cv2 = (F.col("ss") / F.col("n_gaps") - mean * mean) / (mean * mean)
@@ -1080,13 +1081,13 @@ WITH RECURSIVE daily AS MATERIALIZED (
   FROM orders GROUP BY 1
 ),
 m AS (
-  SELECT CAST(CAST(SUM(CAST(y AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS mean,
+  SELECT {dec_sum_sql("y")} / COUNT(*) AS mean,
          COUNT(*) AS n
   FROM daily
 ),
 v AS (
   SELECT round(sqrt(
-           CAST(CAST(SUM(CAST(round((y - m.mean) * (y - m.mean), 6) AS DECIMAL(38, 6))) AS VARCHAR) AS DOUBLE)
+           {dec_double_sql("SUM(CAST(round((y - m.mean) * (y - m.mean), 6) AS DECIMAL(38, 6)))")}
            / (ANY_VALUE(m.n) - 1)), 9) AS sd
   FROM daily CROSS JOIN m
 ),
@@ -1132,16 +1133,15 @@ def q_cusum_mean_shift_daily(spark, sf_dir):
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.count(F.lit(1)).cast("double").alias("y")
     )
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     m = daily.agg(
-        (to_d(F.sum(F.col("y").cast("decimal(30, 6)"))) / F.count(F.lit(1))).alias("mean"),
+        (dec_sum("y") / F.count(F.lit(1))).alias("mean"),
         F.count(F.lit(1)).alias("n"),
     )
     dm = daily.crossJoin(F.broadcast(m))
     sq = F.round((F.col("y") - F.col("mean")) * (F.col("y") - F.col("mean")), 6)
     sd = dm.agg(
         F.round(
-            F.sqrt(to_d(F.sum(sq.cast("decimal(38, 6)"))) / (F.first("n") - 1)), 9
+            F.sqrt(F.sum(sq.cast("decimal(38, 6)")).cast("double") / (F.first("n") - 1)), 9
         ).alias("sd")
     )
     ser = (

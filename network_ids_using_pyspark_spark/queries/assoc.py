@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.numeric import dec_double_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -147,7 +148,7 @@ prof AS (
 ),
 scored AS (
   SELECT p.u, s.ib AS item,
-         CAST(CAST(SUM(CAST(s.sim AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS score,
+         {dec_double_sql("SUM(CAST(s.sim AS DECIMAL(38, 9)))")} AS score,
          CAST(COUNT(*) AS BIGINT) AS n_contrib
   FROM prof p JOIN sims s ON s.ia = p.item
   WHERE NOT EXISTS (SELECT 1 FROM prof q WHERE q.u = p.u AND q.item = s.ib)
@@ -227,7 +228,6 @@ def q_itemcf_topk_recs(spark, sf_dir):
     )
     scored = cand.groupBy("u", "cand_item").agg(
         F.sum(F.col("sim").cast("decimal(38, 9)"))
-        .cast("string")
         .cast("double")
         .alias("score"),
         F.count(F.lit(1)).cast("long").alias("n_contrib"),

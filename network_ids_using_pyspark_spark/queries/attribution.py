@@ -28,7 +28,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -116,8 +116,7 @@ def _attribution_sql() -> str:
     )
     parts.append(f"res AS MATERIALIZED ({union})")
     parts.append(
-        "tot AS (SELECT CAST(CAST(SUM(CAST(re AS DECIMAL(38, 9))) AS VARCHAR)"
-        " AS DOUBLE) AS re_sum FROM res)"
+        f"tot AS (SELECT {dec_double_sql('SUM(CAST(re AS DECIMAL(38, 9)))')} AS re_sum FROM res)"
     )
     return (
         "WITH "

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -97,11 +97,12 @@ def _ll_b1(p: str) -> str:
 def _rdd_sql() -> str:
     def side(tag: str, pred: str) -> str:
         only = lambda t: f"CASE WHEN {pred} THEN {t} END"  # noqa: E731
+        sy = dec_double_sql(f"SUM({only('y')})")
         return (
             f"SUM(CASE WHEN {pred} THEN 1 ELSE 0 END) * 1.0 AS {tag}_n,\n"
             f"  {q9_sum_sql(only('u'))} AS {tag}_s1,\n"
             f"  {q9_sum_sql(only('u * u'))} AS {tag}_s11,\n"
-            f"  CAST(CAST(SUM({only('y')}) AS VARCHAR) AS DOUBLE) AS {tag}_sy,\n"
+            f"  {sy} AS {tag}_sy,\n"
             f"  {q9_sum_sql(only('u * y'))} AS {tag}_s1y"
         )
 
@@ -142,7 +143,6 @@ def q_rdd_cutoff_effect(spark, sf_dir):
     from ONE map-side combined aggregate with conditional sums, and
     everything after lives on a 1-row relation."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     u = (
         o.select(
             ((F.col("o_totalprice").cast("double") - _RDD_CUT) / _RDD_BW).alias("u"),
@@ -158,7 +158,7 @@ def q_rdd_cutoff_effect(spark, sf_dir):
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}_n"),
             q9_sum(only(F.col("u"))).alias(f"{tag}_s1"),
             q9_sum(only(F.col("u") * F.col("u"))).alias(f"{tag}_s11"),
-            to_d(F.sum(only(F.col("y")))).alias(f"{tag}_sy"),
+            F.sum(only(F.col("y"))).cast("double").alias(f"{tag}_sy"),
             q9_sum(only(F.col("u") * F.col("y"))).alias(f"{tag}_s1y"),
         ]
 
@@ -194,14 +194,14 @@ _TL_SRC = """
 def _tl_arm_sql(arm: int) -> str:
     return f"""
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(x1) AS VARCHAR) AS DOUBLE) AS s1,
-         CAST(CAST(SUM(x2) AS VARCHAR) AS DOUBLE) AS s2,
-         CAST(CAST(SUM(x1 * x1) AS VARCHAR) AS DOUBLE) AS s11,
-         CAST(CAST(SUM(x1 * x2) AS VARCHAR) AS DOUBLE) AS s12,
-         CAST(CAST(SUM(x2 * x2) AS VARCHAR) AS DOUBLE) AS s22,
-         CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(x1 * y) AS VARCHAR) AS DOUBLE) AS s1y,
-         CAST(CAST(SUM(x2 * y) AS VARCHAR) AS DOUBLE) AS s2y
+         {dec_double_sql("SUM(x1)")} AS s1,
+         {dec_double_sql("SUM(x2)")} AS s2,
+         {dec_double_sql("SUM(x1 * x1)")} AS s11,
+         {dec_double_sql("SUM(x1 * x2)")} AS s12,
+         {dec_double_sql("SUM(x2 * x2)")} AS s22,
+         {dec_double_sql("SUM(y)")} AS sy,
+         {dec_double_sql("SUM(x1 * y)")} AS s1y,
+         {dec_double_sql("SUM(x2 * y)")} AS s2y
   FROM s WHERE t = {arm}
 """
 
@@ -216,8 +216,8 @@ cells AS (
   SELECT x1, x2,
          CAST(SUM(t) AS BIGINT) AS n_t,
          CAST(SUM(1 - t) AS BIGINT) AS n_c,
-         CAST(CAST(SUM(CASE WHEN t = 1 THEN y END) AS VARCHAR) AS DOUBLE) AS sy_t,
-         CAST(CAST(SUM(CASE WHEN t = 0 THEN y END) AS VARCHAR) AS DOUBLE) AS sy_c
+         {dec_double_sql("SUM(CASE WHEN t = 1 THEN y END)")} AS sy_t,
+         {dec_double_sql("SUM(CASE WHEN t = 0 THEN y END)")} AS sy_c
   FROM s GROUP BY x1, x2
 )
 SELECT x1 AS month, x2 AS finished, n_t, n_c,
@@ -246,7 +246,6 @@ def q_uplift_tlearner_segments(spark, sf_dir):
     two 1-row coefficient relations broadcast onto the grid.  No
     windows, no fact-grain joins."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("x2"),
@@ -258,14 +257,14 @@ def q_uplift_tlearner_segments(spark, sf_dir):
         only = lambda t: F.when(F.col("t") == arm, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{p}n"),
-            to_d(F.sum(only(F.col("x1")))).alias(f"{p}s1"),
-            to_d(F.sum(only(F.col("x2")))).alias(f"{p}s2"),
-            to_d(F.sum(only(F.col("x1") * F.col("x1")))).alias(f"{p}s11"),
-            to_d(F.sum(only(F.col("x1") * F.col("x2")))).alias(f"{p}s12"),
-            to_d(F.sum(only(F.col("x2") * F.col("x2")))).alias(f"{p}s22"),
-            to_d(F.sum(only(F.col("y")))).alias(f"{p}sy"),
-            to_d(F.sum(only(F.col("x1") * F.col("y")))).alias(f"{p}s1y"),
-            to_d(F.sum(only(F.col("x2") * F.col("y")))).alias(f"{p}s2y"),
+            F.sum(only(F.col("x1"))).cast("double").alias(f"{p}s1"),
+            F.sum(only(F.col("x2"))).cast("double").alias(f"{p}s2"),
+            F.sum(only(F.col("x1") * F.col("x1"))).cast("double").alias(f"{p}s11"),
+            F.sum(only(F.col("x1") * F.col("x2"))).cast("double").alias(f"{p}s12"),
+            F.sum(only(F.col("x2") * F.col("x2"))).cast("double").alias(f"{p}s22"),
+            F.sum(only(F.col("y"))).cast("double").alias(f"{p}sy"),
+            F.sum(only(F.col("x1") * F.col("y"))).cast("double").alias(f"{p}s1y"),
+            F.sum(only(F.col("x2") * F.col("y"))).cast("double").alias(f"{p}s2y"),
         ]
 
     tb0, tb1, tb2 = _ols3("t_")
@@ -281,8 +280,8 @@ def q_uplift_tlearner_segments(spark, sf_dir):
     cells = src.groupBy("x1", "x2").agg(
         F.sum("t").cast("long").alias("n_t"),
         F.sum(1 - F.col("t")).cast("long").alias("n_c"),
-        to_d(F.sum(F.when(F.col("t") == 1, F.col("y")))).alias("sy_t"),
-        to_d(F.sum(F.when(F.col("t") == 0, F.col("y")))).alias("sy_c"),
+        F.sum(F.when(F.col("t") == 1, F.col("y"))).cast("double").alias("sy_t"),
+        F.sum(F.when(F.col("t") == 0, F.col("y"))).cast("double").alias("sy_c"),
     )
     return (
         cells.filter((F.col("n_t") > 0) & (F.col("n_c") > 0))
@@ -319,8 +318,8 @@ strata AS (
   SELECT x1, x2,
          CAST(SUM(t) AS BIGINT) AS m_t,
          CAST(SUM(1 - t) AS BIGINT) AS m_c,
-         CAST(CAST(SUM(CASE WHEN t = 1 THEN y END) AS VARCHAR) AS DOUBLE) AS sy_t,
-         CAST(CAST(SUM(CASE WHEN t = 0 THEN y END) AS VARCHAR) AS DOUBLE) AS sy_c
+         {dec_double_sql("SUM(CASE WHEN t = 1 THEN y END)")} AS sy_t,
+         {dec_double_sql("SUM(CASE WHEN t = 0 THEN y END)")} AS sy_c
   FROM s GROUP BY x1, x2
 ),
 agg AS (
@@ -331,9 +330,9 @@ agg AS (
            AS n_treated_matched,
          CAST(SUM(CASE WHEN m_t > 0 AND m_c > 0 THEN m_c ELSE 0 END) AS BIGINT)
            AS n_control_matched,
-         CAST(CAST(SUM(CASE WHEN m_t > 0 AND m_c > 0
-                            THEN CAST(sy_t AS DECIMAL(38, 9)) END) AS VARCHAR)
-              AS DOUBLE) AS sum_y_t,
+         {dec_double_sql(
+             "SUM(CASE WHEN m_t > 0 AND m_c > 0 THEN CAST(sy_t AS DECIMAL(38, 9)) END)"
+         )} AS sum_y_t,
          {q9_sum_sql(
              "CASE WHEN m_t > 0 AND m_c > 0 "
              "THEN (CAST(m_t AS DOUBLE) / CAST(m_c AS DOUBLE)) * sy_c END"
@@ -363,7 +362,6 @@ def q_cem_matching_att(spark, sf_dir):
     tiny strata relation — matching without any row-level join, the
     reason CEM is THE matching estimator that survives 100 TB."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("x2"),
@@ -373,8 +371,8 @@ def q_cem_matching_att(spark, sf_dir):
     strata = src.groupBy("x1", "x2").agg(
         F.sum("t").cast("long").alias("m_t"),
         F.sum(1 - F.col("t")).cast("long").alias("m_c"),
-        to_d(F.sum(F.when(F.col("t") == 1, F.col("y")))).alias("sy_t"),
-        to_d(F.sum(F.when(F.col("t") == 0, F.col("y")))).alias("sy_c"),
+        F.sum(F.when(F.col("t") == 1, F.col("y"))).cast("double").alias("sy_t"),
+        F.sum(F.when(F.col("t") == 0, F.col("y"))).cast("double").alias("sy_c"),
     )
     matched = (F.col("m_t") > 0) & (F.col("m_c") > 0)
     w_term = (F.col("m_t").cast("double") / F.col("m_c").cast("double")) * F.col(
@@ -389,7 +387,7 @@ def q_cem_matching_att(spark, sf_dir):
         F.sum(F.when(matched, F.col("m_c")).otherwise(0))
         .cast("long")
         .alias("n_control_matched"),
-        to_d(F.sum(F.when(matched, F.col("sy_t").cast("decimal(38, 9)")))).alias(
+        F.sum(F.when(matched, F.col("sy_t").cast("decimal(38, 9)"))).cast("double").alias(
             "sum_y_t"
         ),
         q9_sum(F.when(matched, w_term)).alias("sum_wy_c"),
@@ -453,8 +451,7 @@ def _chow_sql() -> str:
 WITH daily AS (
   SELECT CAST(date_diff('day', DATE '{_CHOW_EPOCH}',
                         CAST(o_orderdate AS DATE)) AS DOUBLE) AS t,
-         CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30, 6))) AS VARCHAR)
-              AS DOUBLE) AS r,
+         {dec_sum_sql("o_totalprice")} AS r,
          CASE WHEN CAST(o_orderdate AS DATE) < DATE '{_CHOW_BREAK}'
               THEN 1 ELSE 0 END AS pre
   FROM orders GROUP BY 1, 3
@@ -493,12 +490,11 @@ def q_chow_break_test(spark, sf_dir):
     thus the pooled) moments with conditional sums — the fact is
     scanned once, the test is arithmetic on a 1-row relation."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     daily = (
         o.groupBy(
             F.col("o_orderdate").cast("date").alias("day"),
         )
-        .agg(to_d(F.sum(F.col("o_totalprice").cast("decimal(30, 6)"))).alias("r"))
+        .agg(dec_sum("o_totalprice").alias("r"))
         .select(
             F.datediff(F.col("day"), F.lit(_CHOW_EPOCH).cast("date"))
             .cast("double")
@@ -556,9 +552,9 @@ def _causal_e2e_sql() -> str:
 
     naive = f"""
 SELECT 'a_naive_diff' AS estimator, round(
-  (SELECT CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) / COUNT(*)
+  (SELECT {dec_double_sql("SUM(y)")} / COUNT(*)
    FROM ({_TL_SRC}) WHERE t = 1)
-  - (SELECT CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) / COUNT(*)
+  - (SELECT {dec_double_sql("SUM(y)")} / COUNT(*)
      FROM ({_TL_SRC}) WHERE t = 0), 6) AS estimate
 """
     return f"""
@@ -605,16 +601,15 @@ def q_causal_e2e_readout(spark, sf_dir):
     shared_beta = irls_fit(_urgent_src(spark, sf_dir))
 
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("t"),
         F.col("o_totalprice").cast("decimal(30, 6)").alias("yo"),
     )
     naive = src.agg(
         F.round(
-            to_d(F.sum(F.when(F.col("t") == 1, F.col("yo"))))
+            F.sum(F.when(F.col("t") == 1, F.col("yo"))).cast("double")
             / F.sum(F.when(F.col("t") == 1, 1).otherwise(0))
-            - to_d(F.sum(F.when(F.col("t") == 0, F.col("yo"))))
+            - F.sum(F.when(F.col("t") == 0, F.col("yo"))).cast("double")
             / F.sum(F.when(F.col("t") == 0, 1).otherwise(0)),
             6,
         ).alias("estimate")
@@ -656,7 +651,7 @@ def q_causal_e2e_readout(spark, sf_dir):
 # matching can fix it.
 # ---------------------------------------------------------------------------
 
-_IV_SQL = """
+_IV_SQL = f"""
 WITH s AS (
   SELECT CASE WHEN CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE))
                     AS BIGINT) <= 6 THEN 1 ELSE 0 END AS z,
@@ -669,9 +664,9 @@ m AS (
          SUM(CASE WHEN z = 0 THEN 1 ELSE 0 END) * 1.0 AS n0,
          CAST(SUM(CASE WHEN z = 1 THEN x ELSE 0 END) AS DOUBLE) AS x1,
          CAST(SUM(CASE WHEN z = 0 THEN x ELSE 0 END) AS DOUBLE) AS x0,
-         CAST(CAST(SUM(CASE WHEN z = 1 THEN y END) AS VARCHAR) AS DOUBLE)
+         {dec_double_sql("SUM(CASE WHEN z = 1 THEN y END)")}
            AS y1,
-         CAST(CAST(SUM(CASE WHEN z = 0 THEN y END) AS VARCHAR) AS DOUBLE)
+         {dec_double_sql("SUM(CASE WHEN z = 0 THEN y END)")}
            AS y0
   FROM s
 )
@@ -697,7 +692,6 @@ def q_iv_wald_estimator(spark, sf_dir):
     Scale plan: ONE conditional-sum aggregate over the fact scan —
     identical shape to `ab_mde_readout`."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = o.select(
         F.when(F.month(F.col("o_orderdate").cast("date")) <= 6, 1)
         .otherwise(0)
@@ -714,8 +708,8 @@ def q_iv_wald_estimator(spark, sf_dir):
         F.sum(F.when(F.col("z") == 0, F.col("x")).otherwise(0))
         .cast("double")
         .alias("x0"),
-        to_d(F.sum(F.when(F.col("z") == 1, F.col("y")))).alias("y1"),
-        to_d(F.sum(F.when(F.col("z") == 0, F.col("y")))).alias("y0"),
+        F.sum(F.when(F.col("z") == 1, F.col("y"))).cast("double").alias("y1"),
+        F.sum(F.when(F.col("z") == 0, F.col("y"))).cast("double").alias("y0"),
     )
     fs = F.col("x1") / F.col("n1") - F.col("x0") / F.col("n0")
     rf = F.col("y1") / F.col("n1") - F.col("y0") / F.col("n0")

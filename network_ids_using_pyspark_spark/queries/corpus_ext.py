@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.numeric import dec_sum_sql
 from ..operators.textops import (
     PII_PATTERNS,
     chunk_documents,
@@ -336,8 +337,7 @@ probs AS (
 )
 SELECT t.doc_id,
        COUNT(*) AS n_tokens,
-       (-CAST(CAST(SUM(CAST(round(log2(p), 6) AS DECIMAL(30, 6))) AS VARCHAR)
-              AS DOUBLE) / COUNT(*)) AS mean_surprisal_bits
+       (-{dec_sum_sql("round(log2(p), 6)")} / COUNT(*)) AS mean_surprisal_bits
 FROM toks t JOIN probs pr ON t.tok = pr.tok
 GROUP BY t.doc_id
 """

@@ -14,7 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_bucket, hash_bucket_sql
-from ..functions.numeric import dec_sum_sql
+from ..functions.numeric import dec_sum, dec_sum_sql
 from ..session import scratch_dir
 from ..sources.tables import load_table
 from . import register
@@ -209,7 +209,7 @@ def q_bucketed_colocated_join(spark, sf_dir):
         lb.hint("merge").join(ob, lb.l_orderkey == ob.o_orderkey)
         .groupBy("o_orderpriority")
         .agg(
-            F.sum(revenue.cast("decimal(30,6)")).cast("double").alias("revenue"),
+            dec_sum(revenue).alias("revenue"),
             F.count(F.lit(1)).alias("n_lineitems"),
         )
     )
@@ -256,7 +256,7 @@ def q_partition_pruned_scan(spark, sf_dir):
         "o_orderpriority",
     ).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias("revenue"),
+        dec_sum("o_totalprice").alias("revenue"),
     )
 
 
@@ -435,9 +435,7 @@ def q_schema_evolution_union(spark, sf_dir):
         F.sum(F.col("o_orderpriority").isNotNull().cast("long")).alias(
             "n_with_priority"
         ),
-        F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias(
-            "revenue"
-        ),
+        dec_sum("o_totalprice").alias("revenue"),
     )
 
 
@@ -560,7 +558,7 @@ WITH sel AS (
 )
 SELECT l.l_year, l.l_returnflag,
        COUNT(*) AS n_items,
-       CAST(CAST(SUM(CAST(l.l_quantity AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE)
+       {dec_sum_sql("l.l_quantity")}
          AS sum_qty
 FROM (
   SELECT CAST(year(l_shipdate) AS INTEGER) AS l_year, l_returnflag, l_quantity
@@ -609,7 +607,7 @@ def q_dynamic_partition_pruning_join(spark, sf_dir):
         .groupBy("l_year", "l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_quantity").cast("decimal(30,6)")).cast("double").alias("sum_qty"),
+            dec_sum("l_quantity").alias("sum_qty"),
         )
     )
 
@@ -661,8 +659,6 @@ def q_pseudonymize_user_activity(spark, sf_dir):
         "event_type",
         "value",
     )
-    from ..functions.numeric import dec_sum
-
     return (
         pseudo.groupBy("pseudo_id")
         .agg(
@@ -892,8 +888,6 @@ def q_dynamic_partition_overwrite_roundtrip(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(base)
-    from ..functions.numeric import dec_sum
-
     return back.groupBy(F.col("yr").cast("int").alias("yr")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         dec_sum("o_totalprice").alias("revenue"),
@@ -1105,7 +1099,7 @@ def q_dict_encoding_report(spark, sf_dir):
 # WHEN NOT MATCHED INSERT, expressed as one full-outer join.
 # ---------------------------------------------------------------------------
 
-_MERGE_SQL = """
+_MERGE_SQL = f"""
 WITH changes AS (
   -- staged changeset derived deterministically from the fixture:
   -- keys ≡1 (mod 7): price bump update; ≡2 (mod 7): delete;
@@ -1135,7 +1129,7 @@ merged AS (
 )
 SELECT action,
        CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(CAST(SUM(CAST(price AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE)
+       {dec_sum_sql("price")}
          AS sum_price
 FROM merged GROUP BY action
 """
@@ -1188,10 +1182,7 @@ def q_merge_upsert_orders(spark, sf_dir):
     )
     return merged.groupBy("action").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("price").cast("decimal(30, 6)"))
-        .cast("string")
-        .cast("double")
-        .alias("sum_price"),
+        dec_sum("price").alias("sum_price"),
     )
 
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.numeric import dec_sum, dec_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -1071,7 +1071,7 @@ def q_conversion_latency_quantiles(spark, sf_dir):
 # signals (finance TWAP, IoT sensor means).
 # ---------------------------------------------------------------------------
 
-_TWAP_SQL = """
+_TWAP_SQL = f"""
 WITH s AS (
   SELECT event_type, CAST(ts AS DATE) AS d, epoch_us(ts) AS t, value,
          LEAD(epoch_us(ts)) OVER (PARTITION BY event_type, CAST(ts AS DATE)
@@ -1085,8 +1085,7 @@ seg AS (
 SELECT event_type, CAST(d AS TIMESTAMP) AS day,
        CAST(COUNT(*) AS BIGINT) AS n_segments,
        CAST(SUM(dur) AS BIGINT) AS span_us,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(30, 6)) * dur) AS VARCHAR)
-            AS DOUBLE) / SUM(dur) AS twap
+       {dec_double_sql("SUM(CAST(value AS DECIMAL(30, 6)) * dur)")} / SUM(dur) AS twap
 FROM seg GROUP BY event_type, d
 """
 
@@ -1118,7 +1117,6 @@ def q_twap_daily_value(spark, sf_dir):
         F.sum("dur").cast("long").alias("span_us"),
         (
             F.sum(F.col("value").cast("decimal(30, 6)") * F.col("dur"))
-            .cast("string")
             .cast("double")
             / F.sum("dur")
         ).alias("twap"),

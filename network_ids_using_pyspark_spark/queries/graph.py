@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.numeric import dec_double_sql
 from ..operators.graphops import pagerank_int, pagerank_sql_ctes
 from ..sources.tables import load_table
 from . import register
@@ -699,11 +700,11 @@ pairs AS (
 ),
 m AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(dx) AS VARCHAR) AS DOUBLE) AS sx,
-         CAST(CAST(SUM(dy) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(dx * dx) AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(SUM(dx * dy) AS VARCHAR) AS DOUBLE) AS sxy,
-         CAST(CAST(SUM(dy * dy) AS VARCHAR) AS DOUBLE) AS syy
+         {dec_double_sql("SUM(dx)")} AS sx,
+         {dec_double_sql("SUM(dy)")} AS sy,
+         {dec_double_sql("SUM(dx * dx)")} AS sxx,
+         {dec_double_sql("SUM(dx * dy)")} AS sxy,
+         {dec_double_sql("SUM(dy * dy)")} AS syy
   FROM pairs
 ),
 nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM deg)
@@ -756,11 +757,11 @@ def q_degree_assortativity_trade_graph(spark, sf_dir):
     )
     m = pairs.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("dx").cast("string").cast("double").alias("sx"),
-        F.sum("dy").cast("string").cast("double").alias("sy"),
-        F.sum(F.col("dx") * F.col("dx")).cast("string").cast("double").alias("sxx"),
-        F.sum(F.col("dx") * F.col("dy")).cast("string").cast("double").alias("sxy"),
-        F.sum(F.col("dy") * F.col("dy")).cast("string").cast("double").alias("syy"),
+        F.sum("dx").cast("double").alias("sx"),
+        F.sum("dy").cast("double").alias("sy"),
+        F.sum(F.col("dx") * F.col("dx")).cast("double").alias("sxx"),
+        F.sum(F.col("dx") * F.col("dy")).cast("double").alias("sxy"),
+        F.sum(F.col("dy") * F.col("dy")).cast("double").alias("syy"),
     )
     nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
     return m.crossJoin(F.broadcast(nn)).select(

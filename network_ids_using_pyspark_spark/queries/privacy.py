@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_uniform, portable_uniform_sql
+from ..functions.numeric import dec_double_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -313,8 +314,7 @@ WITH cb AS (
 cls AS (
   SELECT event_type, qh,
          SUM(bn) AS class_n,
-         CAST(CAST(SUM(CAST(bn * ln(bn) AS DECIMAL(30, 12))) AS VARCHAR)
-              AS DOUBLE) AS sum_nlogn
+         {dec_double_sql("SUM(CAST(bn * ln(bn) AS DECIMAL(30, 12)))")} AS sum_nlogn
   FROM cb GROUP BY 1, 2
 ),
 ent AS (

@@ -10,7 +10,7 @@ import pandas as pd  # module-level: pandas_udf resolves stringified type hints 
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -498,9 +498,9 @@ def q_windowed_native_rolling_median(spark, sf_dir):
 # SQL workflows without driver-side string splicing.
 # ---------------------------------------------------------------------------
 
-_SESSVAR_SQL = """
+_SESSVAR_SQL = f"""
 WITH t AS (
-  SELECT (CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS VARCHAR) AS DOUBLE)
+  SELECT ({dec_double_sql("SUM(CAST(o_totalprice AS DECIMAL(30,6)))")}
             / COUNT(o_totalprice)) * 1.5 AS threshold
   FROM orders
 )

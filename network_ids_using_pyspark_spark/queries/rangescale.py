@@ -40,7 +40,7 @@ from ..operators.rangepart import (
     ntile_boundaries,
     ntile_sizes,
 )
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 from .datamgmt import _BIN_CUT, _BIN_N, _BINNING_SQL
@@ -678,7 +678,7 @@ woe AS (
   FROM cells CROSS JOIN tot
 ),
 iv AS (
-  SELECT CAST(CAST(SUM(CAST(iv_term AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)
+  SELECT {dec_double_sql("SUM(CAST(iv_term AS DECIMAL(38, 9)))")}
            AS iv_total
   FROM woe
 )
@@ -703,7 +703,6 @@ def q_woe_iv_binning(spark, sf_dir):
     binning scan (map-side CASE) + arithmetic on the 5-row cell
     relation — no sort anywhere."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     vals = o.select("o_totalprice")
     n = vals.count()
     ranks = sorted({math.ceil(k * n / _WOE_BINS) for k in range(1, _WOE_BINS)})
@@ -744,7 +743,7 @@ def q_woe_iv_binning(spark, sf_dir):
         ).alias("iv_term"),
     )
     iv = woe.agg(
-        to_d(F.sum(F.col("iv_term").cast("decimal(38, 9)"))).alias("iv_total")
+        F.sum(F.col("iv_term").cast("decimal(38, 9)")).cast("double").alias("iv_total")
     )
     return (
         woe.crossJoin(F.broadcast(iv))

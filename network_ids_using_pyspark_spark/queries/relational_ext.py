@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_sum, dec_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql
 from ..operators.asof import asof_join
 from ..sources.tables import load_table
 from . import register
@@ -183,12 +183,11 @@ _CORR_DEC = "DECIMAL(19, 6)"
 def _corr_sql() -> str:
     dx = f"CAST(l_quantity AS {_CORR_DEC})"
     dy = f"CAST(l_extendedprice AS {_CORR_DEC})"
-    # via VARCHAR: correctly-rounded decimal→double (see dec_sum_sql)
-    sx = f"CAST(CAST(SUM({dx}) AS VARCHAR) AS DOUBLE)"
-    sy = f"CAST(CAST(SUM({dy}) AS VARCHAR) AS DOUBLE)"
-    sxx = f"CAST(CAST(SUM({dx} * {dx}) AS VARCHAR) AS DOUBLE)"
-    syy = f"CAST(CAST(SUM({dy} * {dy}) AS VARCHAR) AS DOUBLE)"
-    sxy = f"CAST(CAST(SUM({dx} * {dy}) AS VARCHAR) AS DOUBLE)"
+    sx = dec_double_sql(f"SUM({dx})")
+    sy = dec_double_sql(f"SUM({dy})")
+    sxx = dec_double_sql(f"SUM({dx} * {dx})")
+    syy = dec_double_sql(f"SUM({dy} * {dy})")
+    sxy = dec_double_sql(f"SUM({dx} * {dy})")
     n = "CAST(COUNT(*) AS DOUBLE)"
     return f"""
     SELECT l_returnflag,
@@ -475,12 +474,12 @@ def _corr_matrix_sql() -> str:
     # expression tree the Spark side builds, term for term
     moments = ["CAST(COUNT(*) AS DOUBLE) AS n"]
     for c in _CORR_COLS:
-        moments.append(f"CAST(CAST(SUM(CAST({c} AS {_CORR_DEC})) AS VARCHAR) AS DOUBLE) AS s_{c}")
+        moments.append(f"{dec_double_sql(f'SUM(CAST({c} AS {_CORR_DEC}))')} AS s_{c}")
     for i, a in enumerate(_CORR_COLS):
         for b in _CORR_COLS[i:]:
             moments.append(
-                f"CAST(CAST(SUM(CAST({a} AS {_CORR_DEC}) * CAST({b} AS {_CORR_DEC})) "
-                f"AS VARCHAR) AS DOUBLE) AS p_{a}_{b}"
+                dec_double_sql(f"SUM(CAST({a} AS {_CORR_DEC}) * CAST({b} AS {_CORR_DEC}))")
+                + f" AS p_{a}_{b}"
             )
     rows = []
     for i, a in enumerate(_CORR_COLS):
@@ -590,10 +589,10 @@ WITH pts AS (
 m AS (
   SELECT user_id,
          CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-         CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(x * x) AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(SUM(x * y) AS VARCHAR) AS DOUBLE) AS sxy,
+         {dec_double_sql("SUM(x)")} AS sx,
+         {dec_double_sql("SUM(y)")} AS sy,
+         {dec_double_sql("SUM(x * x)")} AS sxx,
+         {dec_double_sql("SUM(x * y)")} AS sxy,
          COUNT(*) AS n_events
   FROM pts GROUP BY user_id
 )
@@ -632,8 +631,8 @@ def q_user_value_trend(spark, sf_dir):
 
 def _outlier_sql() -> str:
     y = "CAST(value AS DECIMAL(30,6))"
-    sy = f"CAST(CAST(SUM({y}) AS VARCHAR) AS DOUBLE)"
-    syy = f"CAST(CAST(SUM({y} * {y}) AS VARCHAR) AS DOUBLE)"
+    sy = dec_double_sql(f"SUM({y})")
+    syy = dec_double_sql(f"SUM({y} * {y})")
     n = "CAST(COUNT(*) AS DOUBLE)"
     return f"""
     WITH m AS (
@@ -796,8 +795,8 @@ def q_data_quality_report(spark, sf_dir):
 
 def _value_stats_sql() -> str:
     y = "CAST(value AS DECIMAL(30,6))"
-    sy = f"CAST(CAST(SUM({y}) AS VARCHAR) AS DOUBLE)"
-    syy = f"CAST(CAST(SUM({y} * {y}) AS VARCHAR) AS DOUBLE)"
+    sy = dec_double_sql(f"SUM({y})")
+    syy = dec_double_sql(f"SUM({y} * {y})")
     n = "CAST(COUNT(*) AS DOUBLE)"
     return f"""
     SELECT event_type,
@@ -1127,7 +1126,7 @@ def q_pareto_frontier_orders(spark, sf_dir):
 # running share is bit-identical under any partitioning.
 # ---------------------------------------------------------------------------
 
-_P8020_SQL = """
+_P8020_SQL = f"""
 WITH rev AS (
   SELECT n.n_name,
          SUM(CAST(o.o_totalprice AS DECIMAL(30, 6))) AS rev_dec
@@ -1138,7 +1137,7 @@ WITH rev AS (
 ),
 ranked AS (
   SELECT n_name,
-         CAST(CAST(rev_dec AS VARCHAR) AS DOUBLE) AS revenue,
+         {dec_double_sql("rev_dec")} AS revenue,
          ROW_NUMBER() OVER (ORDER BY rev_dec DESC, n_name) AS rk,
          SUM(rev_dec) OVER (ORDER BY rev_dec DESC, n_name
                             ROWS UNBOUNDED PRECEDING) AS cum_dec,
@@ -1146,8 +1145,8 @@ ranked AS (
   FROM rev
 )
 SELECT n_name, revenue, CAST(rk AS BIGINT) AS rk,
-       CAST(CAST(cum_dec AS VARCHAR) AS DOUBLE)
-         / CAST(CAST(tot_dec AS VARCHAR) AS DOUBLE) AS cum_share,
+       {dec_double_sql("cum_dec")}
+         / {dec_double_sql("tot_dec")} AS cum_share,
        (cum_dec * 5 <= tot_dec * 4) AS in_head
 FROM ranked
 """
@@ -1176,7 +1175,7 @@ def q_revenue_pareto_8020(spark, sf_dir):
     w_all = Window.partitionBy()
     ranked = rev.select(
         "n_name",
-        F.col("rev_dec").cast("string").cast("double").alias("revenue"),
+        F.col("rev_dec").cast("double").alias("revenue"),
         F.row_number().over(w).alias("rk"),
         F.sum("rev_dec").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum_dec"),
         F.sum("rev_dec").over(w_all).alias("tot_dec"),
@@ -1186,8 +1185,8 @@ def q_revenue_pareto_8020(spark, sf_dir):
         "revenue",
         F.col("rk").cast("long").alias("rk"),
         (
-            F.col("cum_dec").cast("string").cast("double")
-            / F.col("tot_dec").cast("string").cast("double")
+            F.col("cum_dec").cast("double")
+            / F.col("tot_dec").cast("double")
         ).alias("cum_share"),
         (F.col("cum_dec") * 5 <= F.col("tot_dec") * 4).alias("in_head"),
     )
@@ -1392,7 +1391,7 @@ def q_pit_feature_join(spark, sf_dir):
 # BI hierarchy renders.
 # ---------------------------------------------------------------------------
 
-_SOP_SQL = """
+_SOP_SQL = f"""
 WITH rev AS (
   SELECT r.r_name, n.n_name,
          SUM(CAST(o.o_totalprice AS DECIMAL(30, 6))) AS rev_dec
@@ -1409,12 +1408,12 @@ w AS (
   FROM rev
 )
 SELECT r_name, n_name,
-       CAST(CAST(rev_dec AS VARCHAR) AS DOUBLE) AS revenue,
-       round(CAST(CAST(rev_dec AS VARCHAR) AS DOUBLE)
-             / CAST(CAST(region_dec AS VARCHAR) AS DOUBLE), 6)
+       {dec_double_sql("rev_dec")} AS revenue,
+       round({dec_double_sql("rev_dec")}
+             / {dec_double_sql("region_dec")}, 6)
          AS share_of_region,
-       round(CAST(CAST(region_dec AS VARCHAR) AS DOUBLE)
-             / CAST(CAST(world_dec AS VARCHAR) AS DOUBLE), 6)
+       round({dec_double_sql("region_dec")}
+             / {dec_double_sql("world_dec")}, 6)
          AS region_share_of_world
 FROM w
 """
@@ -1442,18 +1441,17 @@ def q_share_of_parent_rollup(spark, sf_dir):
     )
     w_region = Window.partitionBy("r_name")
     w_world = Window.partitionBy()
-    to_d = lambda col: F.col(col).cast("string").cast("double")  # noqa: E731
     out = rev.withColumn("region_dec", F.sum("rev_dec").over(w_region)).withColumn(
         "world_dec", F.sum("rev_dec").over(w_world)
     )
     return out.select(
         "r_name",
         "n_name",
-        to_d("rev_dec").alias("revenue"),
-        F.round(to_d("rev_dec") / to_d("region_dec"), 6).alias("share_of_region"),
-        F.round(to_d("region_dec") / to_d("world_dec"), 6).alias(
-            "region_share_of_world"
-        ),
+        F.col("rev_dec").cast("double").alias("revenue"),
+        F.round(F.col("rev_dec").cast("double") / F.col("region_dec").cast("double"), 6)
+        .alias("share_of_region"),
+        F.round(F.col("region_dec").cast("double") / F.col("world_dec").cast("double"), 6)
+        .alias("region_share_of_world"),
     )
 
 
@@ -1497,7 +1495,7 @@ w AS (
 )
 SELECT o_custkey,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
-       round(CAST(CAST(SUM(wq * price) AS VARCHAR) AS DOUBLE), 6)
+       round({dec_double_sql("SUM(wq * price)")}, 6)
          AS decayed_value
 FROM w GROUP BY o_custkey
 ORDER BY SUM(wq * price) DESC, o_custkey
@@ -1543,7 +1541,7 @@ def q_time_decayed_customer_value(spark, sf_dir):
         .select(
             "o_custkey",
             "n_orders",
-            F.round(F.col("dv_dec").cast("string").cast("double"), 6).alias(
+            F.round(F.col("dv_dec").cast("double"), 6).alias(
                 "decayed_value"
             ),
         )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.numeric import dec_double_sql
 from ..operators.search import bm25_topk, bm25_topk_sql
 from ..sources.tables import load_table
 from . import register
@@ -206,12 +207,12 @@ SELECT CAST((SELECT nr FROM n_rel) AS BIGINT) AS n_relevant,
        round(CAST(SUM(CASE WHEN rk <= {_IR_K} THEN is_rel ELSE 0 END) AS DOUBLE)
              / {_IR_K}, 6) AS p_at_{_IR_K},
        round(
-         CAST(CAST(SUM(CASE WHEN rk <= {_IR_K} AND is_rel = 1
-                  THEN CAST(round((SELECT disc FROM d WHERE d.i = rk), 9)
-                            AS DECIMAL(20, 9)) ELSE CAST(0 AS DECIMAL(20, 9)) END)
-              AS VARCHAR) AS DOUBLE)
-         / (SELECT CAST(CAST(SUM(CAST(round(disc, 9) AS DECIMAL(20, 9)))
-                    AS VARCHAR) AS DOUBLE)
+         {dec_double_sql(
+             f"SUM(CASE WHEN rk <= {_IR_K} AND is_rel = 1"
+             " THEN CAST(round((SELECT disc FROM d WHERE d.i = rk), 9)"
+             " AS DECIMAL(20, 9)) ELSE CAST(0 AS DECIMAL(20, 9)) END)"
+         )}
+         / (SELECT {dec_double_sql("SUM(CAST(round(disc, 9) AS DECIMAL(20, 9)))")}
             FROM d WHERE i <= LEAST({_IR_K}, (SELECT nr FROM n_rel))), 6)
          AS ndcg_at_{_IR_K}
 FROM j
@@ -262,7 +263,7 @@ def q_search_ranking_metrics(spark, sf_dir):
         F.sum(F.when(F.col("rk") <= _IR_K, F.col("is_rel")).otherwise(0)).alias(
             "hits_k"
         ),
-        F.sum(dcg_term).cast("string").cast("double").alias("dcg"),
+        F.sum(dcg_term).cast("double").alias("dcg"),
     )
     # ideal DCG over min(K, n_rel) positions, decimal-summed identically
     idcg_expr = None
@@ -278,7 +279,7 @@ def q_search_ranking_metrics(spark, sf_dir):
         ).alias("mrr"),
         F.round(F.col("hits_k").cast("double") / _IR_K, 6).alias(f"p_at_{_IR_K}"),
         F.round(
-            F.col("dcg") / idcg_expr.cast("string").cast("double"), 6
+            F.col("dcg") / idcg_expr.cast("double"), 6
         ).alias(f"ndcg_at_{_IR_K}"),
     )
 
@@ -545,8 +546,7 @@ SELECT CAST({_RBO_K} AS BIGINT) AS k,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM common) AS overlap_at_k,
        round((SELECT CAST(COUNT(*) AS DOUBLE) FROM common)
              / ({2 * _RBO_K} - (SELECT COUNT(*) FROM common)), 6) AS jaccard_topk,
-       CAST(CAST((SELECT SUM(CAST(wd * x AS DECIMAL(38, 12))) FROM xd)
-            AS VARCHAR) AS DOUBLE) AS rbo_at_k
+       {dec_double_sql("(SELECT SUM(CAST(wd * x AS DECIMAL(38, 12))) FROM xd)")} AS rbo_at_k
 """
 
 
@@ -602,7 +602,7 @@ def q_rank_biased_overlap_parts(spark, sf_dir):
     )
     body = xd.select(
         (F.col("wd") * F.col("x")).cast("decimal(38, 12)").alias("t")
-    ).agg(F.sum("t").cast("string").cast("double").alias("rbo"))
+    ).agg(F.sum("t").cast("double").alias("rbo"))
     n_common = common.count()
     return body.select(
         F.lit(_RBO_K).cast("long").alias("k"),

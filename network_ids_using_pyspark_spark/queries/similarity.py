@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_bucket_sql
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from ..operators.similarity import as_double_array, cosine_topk
 from . import register
@@ -561,7 +561,7 @@ def _pq_sql() -> str:
     ),
     adc AS (
       SELECT qd.q_vec_id, c.vec_id AS cand_vec_id,
-             CAST(CAST(SUM(CAST(qd.dq AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS approx_d
+             {dec_double_sql("SUM(CAST(qd.dq AS DECIMAL(38, 9)))")} AS approx_d
       FROM codes c JOIN qd ON c.m = qd.m AND c.code = qd.j
       WHERE c.vec_id <> qd.q_vec_id
       GROUP BY 1, 2
@@ -655,7 +655,6 @@ def q_pq_adc_recall(spark, sf_dir):
         .groupBy("q_vec_id", F.col("vec_id").alias("cand_vec_id"))
         .agg(
             F.sum(F.col("dq").cast("decimal(38, 9)"))
-            .cast("string")
             .cast("double")
             .alias("approx_d")
         )
@@ -726,7 +725,7 @@ def _kmeans_sql(k: int = _KM_K, iters: int = _KM_T) -> str:
         # per-dimension decimal-exact mean, array rebuilt in dim order
         parts.append(
             f"c{i} AS (SELECT cid, list(m ORDER BY dim) AS cv FROM ("
-            f"SELECT cid, dim, CAST(CAST(SUM(CAST(val AS DECIMAL(38, 12))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS m "
+            f"SELECT cid, dim, {dec_double_sql('SUM(CAST(val AS DECIMAL(38, 12)))')} / COUNT(*) AS m "
             f"FROM (SELECT cid, t.dim, v[t.dim] AS val FROM a{i} "
             f"CROSS JOIN (SELECT unnest(range(1, len((SELECT v FROM e LIMIT 1)) + 1)) AS dim) t) "
             f"GROUP BY cid, dim) GROUP BY cid)"
@@ -740,9 +739,9 @@ def _kmeans_sql(k: int = _KM_K, iters: int = _KM_T) -> str:
     return (
         "WITH "
         + ",\n".join(parts)
-        + """
+        + f"""
 SELECT CAST(cid AS BIGINT) AS cid, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(CAST(SUM(CAST(d2 AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS wcss
+       {dec_double_sql("SUM(CAST(d2 AS DECIMAL(38, 9)))")} AS wcss
 FROM scored GROUP BY cid
 """
     )
@@ -798,7 +797,6 @@ def q_kmeans_lloyd_exact(spark, sf_dir):
         means = dims.groupBy("cid", "dim").agg(
             (
                 F.sum(F.col("val").cast("decimal(38, 12)"))
-                .cast("string")
                 .cast("double")
                 / F.count(F.lit(1))
             ).alias("m")
@@ -821,7 +819,6 @@ def q_kmeans_lloyd_exact(spark, sf_dir):
     return scored.groupBy("cid").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("d2").cast("decimal(38, 9)"))
-        .cast("string")
         .cast("double")
         .alias("wcss"),
     ).select(F.col("cid").cast("long").alias("cid"), "n", "wcss")
@@ -1530,7 +1527,7 @@ vars_ AS (
 ),
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_dims,
-         CAST(CAST(SUM(CAST(var AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS sv,
+         {dec_double_sql("SUM(CAST(var AS DECIMAL(38, 9)))")} AS sv,
          {q9_sum_sql("var * var")} AS svv,
          MIN({{'var': var, 'dim': dim}}) AS lo,
          MAX({{'var': var, 'dim': dim}}) AS hi
@@ -1563,7 +1560,6 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     over the D-row relation.  No joins, no windows, no covariance
     matrix — the full Σ spectrum is `pca_embedding_variance`'s job."""
     emb = load_table(spark, sf_dir, "embeddings")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
 
     vals = emb.select(
         F.posexplode(as_double_array("embedding")).alias("dim", "val")
@@ -1583,7 +1579,7 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     )
     agg = vars_.agg(
         F.count(F.lit(1)).cast("long").alias("n_dims"),
-        to_d(F.sum(F.col("var").cast("decimal(38, 9)"))).alias("sv"),
+        F.sum(F.col("var").cast("decimal(38, 9)")).cast("double").alias("sv"),
         q9_sum(F.col("var") * F.col("var")).alias("svv"),
         F.min(F.struct("var", "dim")).alias("lo"),
         F.max(F.struct("var", "dim")).alias("hi"),

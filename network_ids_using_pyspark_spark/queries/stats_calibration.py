@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 from .stats_regression import (  # noqa: F401
@@ -151,7 +151,7 @@ def q_kendall_tau_contingency(spark, sf_dir):
 # is the other canonical rank correlation, same O(K) grid cost.
 # ---------------------------------------------------------------------------
 
-_SPEARMAN_SQL = """
+_SPEARMAN_SQL = f"""
 WITH cells AS (
   SELECT l_quantity AS x, l_discount AS y, CAST(COUNT(*) AS BIGINT) AS c
   FROM lineitem GROUP BY 1, 2
@@ -170,11 +170,11 @@ my AS (
 ),
 m AS (
   SELECT CAST(SUM(c) AS DOUBLE) AS n,
-         CAST(CAST(SUM(c * rx) AS VARCHAR) AS DOUBLE) AS sx,
-         CAST(CAST(SUM(c * ry) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(c * rx * rx) AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(SUM(c * rx * ry) AS VARCHAR) AS DOUBLE) AS sxy,
-         CAST(CAST(SUM(c * ry * ry) AS VARCHAR) AS DOUBLE) AS syy
+         {dec_double_sql("SUM(c * rx)")} AS sx,
+         {dec_double_sql("SUM(c * ry)")} AS sy,
+         {dec_double_sql("SUM(c * rx * rx)")} AS sxx,
+         {dec_double_sql("SUM(c * rx * ry)")} AS sxy,
+         {dec_double_sql("SUM(c * ry * ry)")} AS syy
   FROM cells JOIN mx USING (x) JOIN my USING (y)
 )
 SELECT CAST(n AS BIGINT) AS n,
@@ -221,14 +221,13 @@ def q_spearman_rho_contingency(spark, sf_dir):
         )
 
     joined = cells.join(marg("x", "rx"), "x").join(marg("y", "ry"), "y")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     m = joined.agg(
         F.sum("c").cast("double").alias("n"),
-        to_d(F.sum(F.col("c") * F.col("rx"))).alias("sx"),
-        to_d(F.sum(F.col("c") * F.col("ry"))).alias("sy"),
-        to_d(F.sum(F.col("c") * F.col("rx") * F.col("rx"))).alias("sxx"),
-        to_d(F.sum(F.col("c") * F.col("rx") * F.col("ry"))).alias("sxy"),
-        to_d(F.sum(F.col("c") * F.col("ry") * F.col("ry"))).alias("syy"),
+        F.sum(F.col("c") * F.col("rx")).cast("double").alias("sx"),
+        F.sum(F.col("c") * F.col("ry")).cast("double").alias("sy"),
+        F.sum(F.col("c") * F.col("rx") * F.col("rx")).cast("double").alias("sxx"),
+        F.sum(F.col("c") * F.col("rx") * F.col("ry")).cast("double").alias("sxy"),
+        F.sum(F.col("c") * F.col("ry") * F.col("ry")).cast("double").alias("syy"),
     )
     return m.select(
         F.col("n").cast("long").alias("n"),
@@ -278,14 +277,14 @@ _LDA_C = (
 
 
 def _lda_moments_sql(tag: str, cls: int) -> str:
-    only = lambda t: f"CASE WHEN y = {cls} THEN {t} END"  # noqa: E731
+    csum = lambda t: dec_double_sql(f"SUM(CASE WHEN y = {cls} THEN {t} END)")  # noqa: E731
     return (
         f"SUM(CASE WHEN y = {cls} THEN 1 ELSE 0 END) * 1.0 AS {tag}n,\n"
-        f"  CAST(CAST(SUM({only('x1')}) AS VARCHAR) AS DOUBLE) AS {tag}s1,\n"
-        f"  CAST(CAST(SUM({only('x2')}) AS VARCHAR) AS DOUBLE) AS {tag}s2,\n"
-        f"  CAST(CAST(SUM({only('x1 * x1')}) AS VARCHAR) AS DOUBLE) AS {tag}s11,\n"
-        f"  CAST(CAST(SUM({only('x1 * x2')}) AS VARCHAR) AS DOUBLE) AS {tag}s12,\n"
-        f"  CAST(CAST(SUM({only('x2 * x2')}) AS VARCHAR) AS DOUBLE) AS {tag}s22"
+        f"  {csum('x1')} AS {tag}s1,\n"
+        f"  {csum('x2')} AS {tag}s2,\n"
+        f"  {csum('x1 * x1')} AS {tag}s11,\n"
+        f"  {csum('x1 * x2')} AS {tag}s12,\n"
+        f"  {csum('x2 * x2')} AS {tag}s22"
     )
 
 
@@ -332,7 +331,6 @@ def q_lda_two_class_exact(spark, sf_dir):
     with a broadcast — the exact two-pass shape of
     `mahalanobis_outlier_topk`."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = o.select(
         F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("x2"),
@@ -343,11 +341,11 @@ def q_lda_two_class_exact(spark, sf_dir):
         only = lambda t: F.when(F.col("y") == cls, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}n"),
-            to_d(F.sum(only(F.col("x1")))).alias(f"{tag}s1"),
-            to_d(F.sum(only(F.col("x2")))).alias(f"{tag}s2"),
-            to_d(F.sum(only(F.col("x1") * F.col("x1")))).alias(f"{tag}s11"),
-            to_d(F.sum(only(F.col("x1") * F.col("x2")))).alias(f"{tag}s12"),
-            to_d(F.sum(only(F.col("x2") * F.col("x2")))).alias(f"{tag}s22"),
+            F.sum(only(F.col("x1"))).cast("double").alias(f"{tag}s1"),
+            F.sum(only(F.col("x2"))).cast("double").alias(f"{tag}s2"),
+            F.sum(only(F.col("x1") * F.col("x1"))).cast("double").alias(f"{tag}s11"),
+            F.sum(only(F.col("x1") * F.col("x2"))).cast("double").alias(f"{tag}s12"),
+            F.sum(only(F.col("x2") * F.col("x2"))).cast("double").alias(f"{tag}s22"),
         ]
 
     m = s.agg(*(cls_moments("a_", 0) + cls_moments("b_", 1)))
@@ -565,7 +563,7 @@ def _brier_sql() -> str:
     )
     parts.append(
         "bins AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_b, "
-        "CAST(CAST(SUM(CAST(p AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS sp, "
+        f"{dec_double_sql('SUM(CAST(p AS DECIMAL(38, 9)))')} AS sp, "
         "CAST(SUM(y) AS BIGINT) AS sy_b FROM scored GROUP BY bin)"
     )
     parts.append(
@@ -619,7 +617,6 @@ def q_brier_decomposition(spark, sf_dir):
     relation + one squared-error aggregate — all map-side combined,
     the 3 coefficients carried between passes as driver-side
     literals."""
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = _logreg_src(spark, sf_dir)
     scored = (
         irls_score(src, irls_fit(src))
@@ -632,7 +629,7 @@ def q_brier_decomposition(spark, sf_dir):
     )
     bins = scored.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("n_b"),
-        to_d(F.sum(F.col("p").cast("decimal(38, 9)"))).alias("sp"),
+        F.sum(F.col("p").cast("decimal(38, 9)")).cast("double").alias("sp"),
         F.sum("y").cast("long").alias("sy_b"),
     )
     tot = bins.agg(
@@ -1099,21 +1096,18 @@ _THEIL_BETWEEN = "(sx_g / tot.sx) * round(ln((sx_g / n_g) / (tot.sx / tot.n)), 6
 _THEIL_SQL = f"""
 WITH cust AS (
   SELECT c.c_nationkey AS nation, o.o_custkey,
-         CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30, 6))) AS VARCHAR)
-              AS DOUBLE) AS x
+         {dec_sum_sql("o.o_totalprice")} AS x
   FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
   GROUP BY 1, 2
 ),
 tot AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(CAST(round(x, 6) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS sx
+         {dec_double_sql("SUM(CAST(round(x, 6) AS DECIMAL(38, 9)))")} AS sx
   FROM cust
 ),
 grp AS (
   SELECT nation, CAST(COUNT(*) AS BIGINT) AS n_g,
-         CAST(CAST(SUM(CAST(round(x, 6) AS DECIMAL(38, 9))) AS VARCHAR)
-              AS DOUBLE) AS sx_g
+         {dec_double_sql("SUM(CAST(round(x, 6) AS DECIMAL(38, 9)))")} AS sx_g
   FROM cust GROUP BY nation
 ),
 within AS (
@@ -1151,13 +1145,10 @@ def q_theil_index_decomposition(spark, sf_dir):
     join — no windows, nothing driver-side."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    to_d = lambda col: col.cast("string").cast("double")  # noqa: E731
     cust = (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy(F.col("c_nationkey").alias("nation"), "o_custkey")
-        .agg(
-            to_d(F.sum(F.col("o_totalprice").cast("decimal(30, 6)"))).alias("x")
-        )
+        .agg(dec_sum("o_totalprice").alias("x"))
         .localCheckpoint(eager=True)
     )
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 from .stats_regression import (  # noqa: F401
@@ -345,10 +345,11 @@ WITH daily AS (
 ),
 walk AS (
   SELECT d, n_trials, n_success,
-         CAST(CAST(SUM(CAST(round(n_success * {_SPRT_L1}
-                                   + (n_trials - n_success) * {_SPRT_L0}, 9) AS DECIMAL(38, 9)))
-                   OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS VARCHAR) AS DOUBLE) AS llr
+         {dec_double_sql(
+             f"SUM(CAST(round(n_success * {_SPRT_L1}"
+             f" + (n_trials - n_success) * {_SPRT_L0}, 9) AS DECIMAL(38, 9)))"
+             " OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+         )} AS llr
   FROM daily
 ),
 flagged AS (
@@ -397,7 +398,6 @@ def q_sprt_ab_monitor(spark, sf_dir):
         "n_success",
         F.sum(inc.cast("decimal(38, 9)"))
         .over(wcum)
-        .cast("string")
         .cast("double")
         .alias("llr"),
     )
@@ -552,14 +552,14 @@ def q_propensity_ipw_ate(spark, sf_dir, beta=None):
 def _aipw_moments_sql(pred: str) -> str:
     return f"""
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(x1) AS VARCHAR) AS DOUBLE) AS s1,
-         CAST(CAST(SUM(x2) AS VARCHAR) AS DOUBLE) AS s2,
-         CAST(CAST(SUM(x1 * x1) AS VARCHAR) AS DOUBLE) AS s11,
-         CAST(CAST(SUM(x1 * x2) AS VARCHAR) AS DOUBLE) AS s12,
-         CAST(CAST(SUM(x2 * x2) AS VARCHAR) AS DOUBLE) AS s22,
-         CAST(CAST(SUM(yd) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(x1 * yd) AS VARCHAR) AS DOUBLE) AS s1y,
-         CAST(CAST(SUM(x2 * yd) AS VARCHAR) AS DOUBLE) AS s2y
+         {dec_double_sql("SUM(x1)")} AS s1,
+         {dec_double_sql("SUM(x2)")} AS s2,
+         {dec_double_sql("SUM(x1 * x1)")} AS s11,
+         {dec_double_sql("SUM(x1 * x2)")} AS s12,
+         {dec_double_sql("SUM(x2 * x2)")} AS s22,
+         {dec_double_sql("SUM(yd)")} AS sy,
+         {dec_double_sql("SUM(x1 * yd)")} AS s1y,
+         {dec_double_sql("SUM(x2 * yd)")} AS s2y
   FROM (SELECT x1, x2, CAST(yo AS DECIMAL(30, 6)) AS yd FROM s WHERE {pred})
 """
 
@@ -626,7 +626,6 @@ def q_aipw_doubly_robust_ate(spark, sf_dir, beta=None):
     the final pass as driver-side literals and the two 1-row outcome
     coefficient relations are broadcast into it — every pass map-side
     combined."""
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = _urgent_src(spark, sf_dir)
 
     if beta is None:
@@ -647,14 +646,14 @@ def q_aipw_doubly_robust_ate(spark, sf_dir, beta=None):
     def _arm_aggs(pred, tag):
         return [
             F.count(F.when(pred, F.lit(1))).cast("double").alias(f"n_{tag}"),
-            to_d(F.sum(F.when(pred, F.col("x1")))).alias(f"s1_{tag}"),
-            to_d(F.sum(F.when(pred, F.col("x2")))).alias(f"s2_{tag}"),
-            to_d(F.sum(F.when(pred, F.col("x1") * F.col("x1")))).alias(f"s11_{tag}"),
-            to_d(F.sum(F.when(pred, F.col("x1") * F.col("x2")))).alias(f"s12_{tag}"),
-            to_d(F.sum(F.when(pred, F.col("x2") * F.col("x2")))).alias(f"s22_{tag}"),
-            to_d(F.sum(F.when(pred, yd))).alias(f"sy_{tag}"),
-            to_d(F.sum(F.when(pred, F.col("x1") * yd))).alias(f"s1y_{tag}"),
-            to_d(F.sum(F.when(pred, F.col("x2") * yd))).alias(f"s2y_{tag}"),
+            F.sum(F.when(pred, F.col("x1"))).cast("double").alias(f"s1_{tag}"),
+            F.sum(F.when(pred, F.col("x2"))).cast("double").alias(f"s2_{tag}"),
+            F.sum(F.when(pred, F.col("x1") * F.col("x1"))).cast("double").alias(f"s11_{tag}"),
+            F.sum(F.when(pred, F.col("x1") * F.col("x2"))).cast("double").alias(f"s12_{tag}"),
+            F.sum(F.when(pred, F.col("x2") * F.col("x2"))).cast("double").alias(f"s22_{tag}"),
+            F.sum(F.when(pred, yd)).cast("double").alias(f"sy_{tag}"),
+            F.sum(F.when(pred, F.col("x1") * yd)).cast("double").alias(f"s1y_{tag}"),
+            F.sum(F.when(pred, F.col("x2") * yd)).cast("double").alias(f"s2y_{tag}"),
         ]
 
     moments = src.agg(
@@ -1041,7 +1040,7 @@ _MAHA_COV = (
 def _maha_sql() -> str:
     dx = "CAST(l_quantity AS DECIMAL(19, 6))"
     dy = "CAST(l_extendedprice AS DECIMAL(19, 6))"
-    d = lambda e: f"CAST(CAST(SUM({e}) AS VARCHAR) AS DOUBLE)"  # noqa: E731
+    d = lambda e: dec_double_sql(f"SUM({e})")  # noqa: E731
     return f"""
 WITH m AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
@@ -1089,11 +1088,11 @@ def q_mahalanobis_outlier_topk(spark, sf_dir):
     y = F.col("l_extendedprice").cast(dec)
     m = li.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).cast("string").cast("double").alias("sx"),
-        F.sum(y).cast("string").cast("double").alias("sy"),
-        F.sum(x * x).cast("string").cast("double").alias("sxx"),
-        F.sum(x * y).cast("string").cast("double").alias("sxy"),
-        F.sum(y * y).cast("string").cast("double").alias("syy"),
+        F.sum(x).cast("double").alias("sx"),
+        F.sum(y).cast("double").alias("sy"),
+        F.sum(x * x).cast("double").alias("sxx"),
+        F.sum(x * y).cast("double").alias("sxy"),
+        F.sum(y * y).cast("double").alias("syy"),
     )
     cov = m.selectExpr(
         "sx / n AS mx",
@@ -1338,7 +1337,7 @@ WITH per_doc AS (
 per_src AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(CAST(SUM(CAST(q AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS sq,
+         {dec_double_sql("SUM(CAST(q AS DECIMAL(38, 9)))")} AS sq,
          {q9_sum_sql("q * q")} AS sqq
   FROM per_doc GROUP BY source
 ),
@@ -1388,7 +1387,6 @@ def q_james_stein_source_means(spark, sf_dir):
     shrunk means are all arithmetic on that relation with 1-row
     broadcasts — the corpus is never rescanned."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     q = F.round(
         F.length(F.regexp_replace("text", "[^0-9a-zA-Z]", "")).cast("double")
         / F.length("text").cast("double"),
@@ -1400,7 +1398,7 @@ def q_james_stein_source_means(spark, sf_dir):
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            to_d(F.sum(F.col("q").cast("decimal(38, 9)"))).alias("sq"),
+            F.sum(F.col("q").cast("decimal(38, 9)")).cast("double").alias("sq"),
             q9_sum(F.col("q") * F.col("q")).alias("sqq"),
         )
         .localCheckpoint(eager=True)

@@ -18,7 +18,7 @@ from ..functions.hashing import (
     portable_uniform,
     portable_uniform_sql,
 )
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 
 from . import register
@@ -153,16 +153,14 @@ pw AS (
 ),
 means AS (
   SELECT rep,
-         CAST(CAST(SUM(wt * CAST(o_totalprice AS DECIMAL(30, 6))) AS VARCHAR)
-              AS DOUBLE) / SUM(wt) AS m
+         {dec_double_sql("SUM(wt * CAST(o_totalprice AS DECIMAL(30, 6)))")} / SUM(wt) AS m
   FROM pw GROUP BY rep
 ),
 ranked AS (
   SELECT m, ROW_NUMBER() OVER (ORDER BY m) AS rk FROM means
 ),
 full_mean AS (
-  SELECT CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30, 6))) AS VARCHAR)
-              AS DOUBLE) / COUNT(*) AS point FROM orders
+  SELECT {dec_sum_sql("o_totalprice")} / COUNT(*) AS point FROM orders
 )
 SELECT {_B} AS n_replicates,
        (SELECT point FROM full_mean) AS point_estimate,
@@ -209,7 +207,6 @@ def q_poisson_bootstrap_ci(spark, sf_dir):
     means = pw.groupBy("rep").agg(
         (
             F.sum(F.col("wt") * F.col("o_totalprice").cast("decimal(30, 6)"))
-            .cast("string")
             .cast("double")
             / F.sum("wt")
         ).alias("m")
@@ -217,12 +214,7 @@ def q_poisson_bootstrap_ci(spark, sf_dir):
     rk = Window.orderBy("m")
     ranked = means.select("m", F.row_number().over(rk).alias("rk"))
     point = o.agg(
-        (
-            F.sum(F.col("o_totalprice").cast("decimal(30, 6)"))
-            .cast("string")
-            .cast("double")
-            / F.count(F.lit(1))
-        ).alias("point_estimate")
+        (dec_sum("o_totalprice") / F.count(F.lit(1))).alias("point_estimate")
     )
     return (
         ranked.agg(
@@ -310,15 +302,14 @@ def _ab_sql() -> str:
 
     h = portable_hash64_sql("CAST(user_id AS VARCHAR)", seed="ab:")
     dec = "DECIMAL(30, 6)"
-    to_d = lambda e: f"CAST(CAST({e} AS VARCHAR) AS DOUBLE)"  # noqa: E731
     return f"""
 WITH b AS (SELECT CAST(date_trunc('day', MIN(ts)) AS TIMESTAMP)
              + INTERVAL {_AB_SPLIT_DAY} DAY AS cut FROM events),
 per_user AS (
   SELECT user_id, {h} % 2 AS grp,
-         {to_d(f"SUM(CASE WHEN ts < cut THEN CAST(value AS {dec}) END)")}
+         {dec_double_sql(f"SUM(CASE WHEN ts < cut THEN CAST(value AS {dec}) END)")}
            / COUNT(CASE WHEN ts < cut THEN 1 END) AS x,
-         {to_d(f"SUM(CASE WHEN ts >= cut THEN CAST(value AS {dec}) END)")}
+         {dec_double_sql(f"SUM(CASE WHEN ts >= cut THEN CAST(value AS {dec}) END)")}
            / COUNT(CASE WHEN ts >= cut THEN 1 END) AS y
   FROM events CROSS JOIN b
   GROUP BY user_id
@@ -343,18 +334,18 @@ adj AS (
 tot AS (
   SELECT grp, n_g, dx_g, dy_g,
          SUM(n_g) OVER () AS n,
-         {to_d('SUM(dx_g) OVER ()')} AS sx,
-         {to_d('SUM(dy_g) OVER ()')} AS sy,
-         {to_d('SUM(dxx_g) OVER ()')} AS sxx,
-         {to_d('SUM(dxy_g) OVER ()')} AS sxy
+         {dec_double_sql('SUM(dx_g) OVER ()')} AS sx,
+         {dec_double_sql('SUM(dy_g) OVER ()')} AS sy,
+         {dec_double_sql('SUM(dxx_g) OVER ()')} AS sxx,
+         {dec_double_sql('SUM(dxy_g) OVER ()')} AS sxy
   FROM adj
 )
 SELECT CAST(grp AS BIGINT) AS grp,
        CAST(n_g AS BIGINT) AS n_users,
-       round({to_d('dy_g')} / n_g, 6) AS mean_y,
-       round({to_d('dy_g')} / n_g
+       round({dec_double_sql('dy_g')} / n_g, 6) AS mean_y,
+       round({dec_double_sql('dy_g')} / n_g
              - ((n * sxy - sx * sy) / (n * sxx - sx * sx))
-               * ({to_d('dx_g')} / n_g - sx / n), 6) AS mean_y_cuped
+               * ({dec_double_sql('dx_g')} / n_g - sx / n), 6) AS mean_y_cuped
 FROM tot
 """
 
@@ -386,13 +377,11 @@ def q_ab_cuped_readout(spark, sf_dir):
             (portable_hash64("user_id", seed="ab:") % 2).alias("grp_raw"),
             (
                 F.sum(F.when(F.col("ts") < F.col("cut"), F.col("value").cast(dec)))
-                .cast("string")
                 .cast("double")
                 / F.count(F.when(F.col("ts") < F.col("cut"), 1))
             ).alias("x"),
             (
                 F.sum(F.when(F.col("ts") >= F.col("cut"), F.col("value").cast(dec)))
-                .cast("string")
                 .cast("double")
                 / F.count(F.when(F.col("ts") >= F.col("cut"), 1))
             ).alias("y"),
@@ -408,7 +397,6 @@ def q_ab_cuped_readout(spark, sf_dir):
         F.round("x", 9).cast("decimal(38, 9)").alias("xq"),
         F.round("y", 9).cast("decimal(38, 9)").alias("yq"),
     )
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     # per-arm DECIMAL moments; globals are window sums over the 2-row
     # arm relation — the event log is scanned once (plan-tested)
     adj = q.groupBy("grp").agg(
@@ -425,10 +413,10 @@ def q_ab_cuped_readout(spark, sf_dir):
         "dx_g",
         "dy_g",
         F.sum("n_g").over(w_all).alias("n"),
-        to_d(F.sum("dx_g").over(w_all)).alias("sx"),
-        to_d(F.sum("dy_g").over(w_all)).alias("sy"),
-        to_d(F.sum("dxx_g").over(w_all)).alias("sxx"),
-        to_d(F.sum("dxy_g").over(w_all)).alias("sxy"),
+        F.sum("dx_g").over(w_all).cast("double").alias("sx"),
+        F.sum("dy_g").over(w_all).cast("double").alias("sy"),
+        F.sum("dxx_g").over(w_all).cast("double").alias("sxx"),
+        F.sum("dxy_g").over(w_all).cast("double").alias("sxy"),
     )
     th = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -436,10 +424,10 @@ def q_ab_cuped_readout(spark, sf_dir):
     return tot.select(
         F.col("grp").cast("long").alias("grp"),
         F.col("n_g").cast("long").alias("n_users"),
-        F.round(to_d(F.col("dy_g")) / F.col("n_g"), 6).alias("mean_y"),
+        F.round(F.col("dy_g").cast("double") / F.col("n_g"), 6).alias("mean_y"),
         F.round(
-            to_d(F.col("dy_g")) / F.col("n_g")
-            - th * (to_d(F.col("dx_g")) / F.col("n_g") - F.col("sx") / F.col("n")),
+            F.col("dy_g").cast("double") / F.col("n_g")
+            - th * (F.col("dx_g").cast("double") / F.col("n_g") - F.col("sx") / F.col("n")),
             6,
         ).alias("mean_y_cuped"),
     )
@@ -560,7 +548,7 @@ km AS (
 SELECT CAST(t AS BIGINT) AS t_days,
        CAST(d_events AS BIGINT) AS d_events,
        CAST(at_risk AS BIGINT) AS at_risk,
-       round(exp(CAST(CAST(log_s AS VARCHAR) AS DOUBLE)), 6) AS survival
+       round(exp({dec_double_sql("log_s")}), 6) AS survival
 FROM km WHERE t <= {_KM_MAX_T}
 """
 
@@ -627,9 +615,7 @@ def q_kaplan_meier_repeat_purchase(spark, sf_dir):
         F.col("t").cast("long").alias("t_days"),
         F.col("d_events").cast("long").alias("d_events"),
         F.col("at_risk").cast("long").alias("at_risk"),
-        F.round(F.exp(F.col("log_s").cast("string").cast("double")), 6).alias(
-            "survival"
-        ),
+        F.round(F.exp(F.col("log_s").cast("double")), 6).alias("survival"),
     )
 
 
@@ -643,7 +629,6 @@ _MIX_CUT = "1997-01-01"
 
 def _mix_sql() -> str:
     dec = "DECIMAL(30, 6)"
-    to_d = lambda e: f"CAST(CAST({e} AS VARCHAR) AS DOUBLE)"  # noqa: E731
     return f"""
 WITH per AS (
   SELECT o_orderpriority AS segment,
@@ -657,8 +642,8 @@ wide AS (
   SELECT segment,
          SUM(CASE WHEN period = 'A' THEN n ELSE 0 END) AS n_a,
          SUM(CASE WHEN period = 'B' THEN n ELSE 0 END) AS n_b,
-         {to_d("SUM(CASE WHEN period = 'A' THEN rev_dec END)")} AS rev_a,
-         {to_d("SUM(CASE WHEN period = 'B' THEN rev_dec END)")} AS rev_b
+         {dec_double_sql("SUM(CASE WHEN period = 'A' THEN rev_dec END)")} AS rev_a,
+         {dec_double_sql("SUM(CASE WHEN period = 'B' THEN rev_dec END)")} AS rev_b
   FROM per GROUP BY segment
 )
 SELECT segment,
@@ -695,12 +680,11 @@ def q_revenue_mix_decomposition(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("o_totalprice").cast(dec)).alias("rev_dec"),
     )
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     wide = per.groupBy("segment").agg(
         F.sum(F.when(F.col("period") == "A", F.col("n")).otherwise(0)).alias("n_a"),
         F.sum(F.when(F.col("period") == "B", F.col("n")).otherwise(0)).alias("n_b"),
-        to_d(F.sum(F.when(F.col("period") == "A", F.col("rev_dec")))).alias("rev_a"),
-        to_d(F.sum(F.when(F.col("period") == "B", F.col("rev_dec")))).alias("rev_b"),
+        F.sum(F.when(F.col("period") == "A", F.col("rev_dec"))).cast("double").alias("rev_a"),
+        F.sum(F.when(F.col("period") == "B", F.col("rev_dec"))).cast("double").alias("rev_b"),
     )
     pa = F.col("rev_a") / F.col("n_a")
     pb = F.col("rev_b") / F.col("n_b")
@@ -726,7 +710,6 @@ _TRIM_PCT = 5  # percent trimmed from EACH tail
 
 
 def _trim_sql() -> str:
-    dec = "DECIMAL(30, 6)"
     return f"""
 WITH r AS (
   SELECT event_type, value,
@@ -743,7 +726,7 @@ kept AS (
 SELECT event_type,
        CAST(ANY_VALUE(n) AS BIGINT) AS n_total,
        CAST(COUNT(*) AS BIGINT) AS n_kept,
-       CAST(CAST(SUM(CAST(value AS {dec})) AS VARCHAR) AS DOUBLE) / COUNT(*)
+       {dec_sum_sql("value")} / COUNT(*)
          AS trimmed_mean
 FROM kept GROUP BY event_type
 """
@@ -775,12 +758,7 @@ def q_trimmed_mean_value(spark, sf_dir):
     return kept.groupBy("event_type").agg(
         F.first("n").cast("long").alias("n_total"),
         F.count(F.lit(1)).alias("n_kept"),
-        (
-            F.sum(F.col("value").cast("decimal(30, 6)"))
-            .cast("string")
-            .cast("double")
-            / F.count(F.lit(1))
-        ).alias("trimmed_mean"),
+        (dec_sum("value") / F.count(F.lit(1))).alias("trimmed_mean"),
     )
 
 
@@ -927,14 +905,13 @@ def q_lagged_cross_correlation(spark, sf_dir):
 
 def _moments_sql() -> str:
     dec = "DECIMAL(38, 6)"
-    to_d = lambda e: f"CAST(CAST({e} AS VARCHAR) AS DOUBLE)"  # noqa: E731
     return f"""
 WITH m AS (
   SELECT event_type, COUNT(*) AS n,
-         {to_d(f'SUM(CAST(value AS {dec}))')} AS s1,
-         {to_d(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s2,
-         {to_d(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s3,
-         {to_d(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}) * CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s4
+         {dec_double_sql(f'SUM(CAST(value AS {dec}))')} AS s1,
+         {dec_double_sql(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s2,
+         {dec_double_sql(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s3,
+         {dec_double_sql(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}) * CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s4
   FROM events GROUP BY event_type
 )
 SELECT event_type, CAST(n AS BIGINT) AS n,
@@ -965,13 +942,12 @@ def q_higher_moments_profile(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     dec = "decimal(38, 6)"
     v = F.col("value").cast(dec)
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        to_d(F.sum(v)).alias("s1"),
-        to_d(F.sum(v * v)).alias("s2"),
-        to_d(F.sum(v * v * v)).alias("s3"),
-        to_d(F.sum(v * v * v * v)).alias("s4"),
+        F.sum(v).cast("double").alias("s1"),
+        F.sum(v * v).cast("double").alias("s2"),
+        F.sum(v * v * v).cast("double").alias("s3"),
+        F.sum(v * v * v * v).cast("double").alias("s4"),
     )
     n = F.col("n")
     mu = F.col("s1") / n
@@ -1171,12 +1147,11 @@ _NEY_BUDGET = 1000
 
 def _neyman_sql() -> str:
     dec = "DECIMAL(38, 6)"
-    to_d = lambda e: f"CAST(CAST({e} AS VARCHAR) AS DOUBLE)"  # noqa: E731
     return f"""
 WITH m AS (
   SELECT event_type, COUNT(*) AS n,
-         {to_d(f'SUM(CAST(value AS {dec}))')} AS s1,
-         {to_d(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s2
+         {dec_double_sql(f'SUM(CAST(value AS {dec}))')} AS s1,
+         {dec_double_sql(f'SUM(CAST(value AS {dec}) * CAST(value AS {dec}))')} AS s2
   FROM events GROUP BY event_type
 ),
 wgt AS (
@@ -1225,11 +1200,10 @@ def q_neyman_allocation(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     dec = "decimal(38, 6)"
     v = F.col("value").cast(dec)
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        to_d(F.sum(v)).alias("s1"),
-        to_d(F.sum(v * v)).alias("s2"),
+        F.sum(v).cast("double").alias("s1"),
+        F.sum(v * v).cast("double").alias("s2"),
     )
     nh_sh = F.round(
         F.col("n")
@@ -1546,7 +1520,6 @@ _STUMP_BINS = 10
 
 def _stump_sql() -> str:
     qln = lambda e: f"CAST(round(ln({e}), 9) AS DECIMAL(38, 9))"  # noqa: E731
-    to_d = lambda e: f"CAST(CAST({e} AS VARCHAR) AS DOUBLE)"  # noqa: E731
     return f"""
 WITH b AS (
   SELECT event_type AS label, value,
@@ -1584,7 +1557,7 @@ thrs AS (
 -- root-entropy numerator from the label-total relation itself, not
 -- the bucket-k rows (independent of which labels bucket k contains)
 stn AS (
-  SELECT {to_d(f"SUM(CAST(tl AS DECIMAL(38, 9)) * {qln('CAST(tl AS DOUBLE)')})")} AS st
+  SELECT {dec_double_sql(f"SUM(CAST(tl AS DECIMAL(38, 9)) * {qln('CAST(tl AS DOUBLE)')})")} AS st
   FROM tot
 ),
 per_k AS (
@@ -1592,8 +1565,8 @@ per_k AS (
          SUM(cum.cl) AS n_left,
          ANY_VALUE(nn.n) AS n,
          ANY_VALUE(stn.st) AS st,
-         {to_d(f"SUM(CASE WHEN cum.cl > 0 THEN CAST(cum.cl AS DECIMAL(38, 9)) * {qln('CAST(cum.cl AS DOUBLE)')} ELSE CAST(0 AS DECIMAL(38,9)) END)")} AS sl,
-         {to_d(f"SUM(CASE WHEN cum.tl - cum.cl > 0 THEN CAST(cum.tl - cum.cl AS DECIMAL(38, 9)) * {qln('CAST(cum.tl - cum.cl AS DOUBLE)')} ELSE CAST(0 AS DECIMAL(38,9)) END)")} AS sr
+         {dec_double_sql(f"SUM(CASE WHEN cum.cl > 0 THEN CAST(cum.cl AS DECIMAL(38, 9)) * {qln('CAST(cum.cl AS DOUBLE)')} ELSE CAST(0 AS DECIMAL(38,9)) END)")} AS sl,
+         {dec_double_sql(f"SUM(CASE WHEN cum.tl - cum.cl > 0 THEN CAST(cum.tl - cum.cl AS DECIMAL(38, 9)) * {qln('CAST(cum.tl - cum.cl AS DOUBLE)')} ELSE CAST(0 AS DECIMAL(38,9)) END)")} AS sr
   FROM cum
   JOIN thrs ON cum.bucket = thrs.bucket
   CROSS JOIN (SELECT COUNT(*) AS n FROM b) nn
@@ -1683,7 +1656,6 @@ def stump_gains_from_bucketed(b):
     # broadcast, independent of which labels any bucket happens to hold
     stn = tot.agg(
         F.sum(F.col("tl").cast(d9) * qln(F.col("tl").cast("double")))
-        .cast("string")
         .cast("double")
         .alias("st")
     )
@@ -1701,13 +1673,11 @@ def stump_gains_from_bucketed(b):
         F.sum(
             F.when(cl > 0, cl.cast(d9) * qln(cl.cast("double"))).otherwise(zero9)
         )
-        .cast("string")
         .cast("double")
         .alias("sl"),
         F.sum(
             F.when(cr > 0, cr.cast(d9) * qln(cr.cast("double"))).otherwise(zero9)
         )
-        .cast("string")
         .cast("double")
         .alias("sr"),
     )
@@ -1740,12 +1710,12 @@ def stump_gains_from_bucketed(b):
 # are bit-stable before the final 1e-6 rounding.
 # ---------------------------------------------------------------------------
 
-_WELCH_SQL = """
+_WELCH_SQL = f"""
 WITH g AS (
   SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 'urgent' ELSE 'other' END AS grp,
          COUNT(*) AS n,
-         CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE) AS s,
-         CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30, 6)) * CAST(o_totalprice AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE) AS ss
+         {dec_sum_sql("o_totalprice")} AS s,
+         {dec_double_sql("SUM(CAST(o_totalprice AS DECIMAL(30, 6)) * CAST(o_totalprice AS DECIMAL(30, 6)))")} AS ss
   FROM orders GROUP BY 1
 ),
 m AS (
@@ -1780,7 +1750,6 @@ def q_welch_ttest_urgent_orders(spark, sf_dir):
     table size, the cheapest possible inference query."""
     o = load_table(spark, sf_dir, "orders")
     dec = "decimal(30, 6)"
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     x = F.col("o_totalprice").cast(dec)
     g = o.groupBy(
         F.when(F.col("o_orderpriority") == "1-URGENT", "urgent")
@@ -1788,8 +1757,8 @@ def q_welch_ttest_urgent_orders(spark, sf_dir):
         .alias("grp")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        to_d(F.sum(x)).alias("s"),
-        to_d(F.sum(x * x)).alias("ss"),
+        F.sum(x).cast("double").alias("s"),
+        F.sum(x * x).cast("double").alias("ss"),
     )
     mean = F.col("s") / F.col("n")
     m = g.select(
@@ -1828,25 +1797,25 @@ def q_welch_ttest_urgent_orders(spark, sf_dir):
     )
 
 
-_ANOVA_SQL = """
+_ANOVA_SQL = f"""
 WITH g AS (
   SELECT o_orderpriority AS grp, COUNT(*) AS n,
          SUM(CAST(o_totalprice AS DECIMAL(30, 6))) AS s_dec,
-         CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE) AS s,
-         CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30, 6)) * CAST(o_totalprice AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE) AS ss
+         {dec_sum_sql("o_totalprice")} AS s,
+         {dec_double_sql("SUM(CAST(o_totalprice AS DECIMAL(30, 6)) * CAST(o_totalprice AS DECIMAL(30, 6)))")} AS ss
   FROM orders GROUP BY 1
 ),
 tot AS (
   -- grand total stays DECIMAL across the k-row sum (a double sum here
   -- would be group-order-dependent and cascade into every SSB term)
   SELECT SUM(n) AS nn, COUNT(*) AS k,
-         CAST(CAST(SUM(s_dec) AS VARCHAR) AS DOUBLE) AS st
+         {dec_double_sql("SUM(s_dec)")} AS st
   FROM g
 ),
 parts AS (
   SELECT ANY_VALUE(t.nn) AS nn, ANY_VALUE(t.k) AS k,
-         CAST(CAST(SUM(CAST(round(g.n * (g.s / g.n - t.st / t.nn) * (g.s / g.n - t.st / t.nn), 6) AS DECIMAL(38, 6))) AS VARCHAR) AS DOUBLE) AS ssb,
-         CAST(CAST(SUM(CAST(round(g.ss - g.n * (g.s / g.n) * (g.s / g.n), 6) AS DECIMAL(38, 6))) AS VARCHAR) AS DOUBLE) AS ssw
+         {dec_double_sql("SUM(CAST(round(g.n * (g.s / g.n - t.st / t.nn) * (g.s / g.n - t.st / t.nn), 6) AS DECIMAL(38, 6)))")} AS ssb,
+         {dec_double_sql("SUM(CAST(round(g.ss - g.n * (g.s / g.n) * (g.s / g.n), 6) AS DECIMAL(38, 6)))")} AS ssw
   FROM g CROSS JOIN tot t
 )
 SELECT CAST(nn AS BIGINT) AS n, CAST(k AS BIGINT) AS n_groups,
@@ -1875,19 +1844,18 @@ def q_anova_oneway_priority(spark, sf_dir):
     scale factor."""
     o = load_table(spark, sf_dir, "orders")
     dec = "decimal(30, 6)"
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     x = F.col("o_totalprice").cast(dec)
     g = o.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(x).alias("s_dec"),
-        to_d(F.sum(x)).alias("s"),
-        to_d(F.sum(x * x)).alias("ss"),
+        F.sum(x).cast("double").alias("s"),
+        F.sum(x * x).cast("double").alias("ss"),
     )
     # grand total stays DECIMAL across the k-row sum (see oracle note)
     tot = g.agg(
         F.sum("n").alias("nn"),
         F.count(F.lit(1)).alias("k"),
-        to_d(F.sum("s_dec")).alias("st"),
+        F.sum("s_dec").cast("double").alias("st"),
     )
     j = g.crossJoin(F.broadcast(tot))
     gm = F.col("s") / F.col("n")
@@ -1895,20 +1863,12 @@ def q_anova_oneway_priority(spark, sf_dir):
     parts = j.agg(
         F.first("nn").alias("nn"),
         F.first("k").alias("k"),
-        to_d(
-            F.sum(
-                F.round(F.col("n") * (gm - ov) * (gm - ov), 6).cast(
-                    "decimal(38, 6)"
-                )
-            )
-        ).alias("ssb"),
-        to_d(
-            F.sum(
-                F.round(F.col("ss") - F.col("n") * gm * gm, 6).cast(
-                    "decimal(38, 6)"
-                )
-            )
-        ).alias("ssw"),
+        F.sum(F.round(F.col("n") * (gm - ov) * (gm - ov), 6).cast("decimal(38, 6)"))
+        .cast("double")
+        .alias("ssb"),
+        F.sum(F.round(F.col("ss") - F.col("n") * gm * gm, 6).cast("decimal(38, 6)"))
+        .cast("double")
+        .alias("ssw"),
     )
     return parts.select(
         F.col("nn").cast("long").alias("n"),

@@ -11,7 +11,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_bucket, hash_bucket_sql
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -24,77 +24,82 @@ from . import register
 
 _ACF_MAXLAG = 7
 
-_ACF_SQL = f"""
-WITH daily AS (
+# daily counts, mean, centered sum of squares and the per-lag numerators:
+# the ACF's CTEs, shared with the Ljung-Box test below
+_ACF_CTES = f"""WITH daily AS (
   SELECT CAST(ts AS DATE) AS d, COUNT(*) AS c FROM events GROUP BY 1
 ),
 m AS (
-  SELECT CAST(CAST(SUM(CAST(c AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS mean,
+  SELECT {dec_sum_sql("c")} / COUNT(*) AS mean,
          COUNT(*) AS n
   FROM daily
 ),
 den AS (
-  SELECT CAST(CAST(SUM(CAST(round((c - m.mean) * (c - m.mean), 6) AS DECIMAL(38, 6))) AS VARCHAR) AS DOUBLE) AS den
+  SELECT {dec_double_sql("SUM(CAST(round((c - m.mean) * (c - m.mean), 6) AS DECIMAL(38, 6)))")} AS den
   FROM daily CROSS JOIN m
 ),
 lags AS (SELECT unnest(range(1, {_ACF_MAXLAG + 1})) AS lag),
 num AS (
   SELECT l.lag,
-         CAST(CAST(SUM(CAST(round((a.c - m.mean) * (b.c - m.mean), 6) AS DECIMAL(38, 6))) AS VARCHAR) AS DOUBLE) AS num,
+         {dec_double_sql("SUM(CAST(round((a.c - m.mean) * (b.c - m.mean), 6) AS DECIMAL(38, 6)))")} AS num,
          COUNT(*) AS n_pairs
   FROM daily a
   CROSS JOIN lags l
   JOIN daily b ON b.d = a.d + CAST(l.lag AS INTEGER)
   CROSS JOIN m
   GROUP BY l.lag
-)
+)"""
+
+_ACF_SQL = f"""
+{_ACF_CTES}
 SELECT CAST(lag AS BIGINT) AS lag, CAST(n_pairs AS BIGINT) AS n_pairs,
        round(num / den.den, 6) AS acf
 FROM num CROSS JOIN den
 """
 
 
-@register("acf_daily_counts", _ACF_SQL)
-def q_acf_daily_counts(spark, sf_dir):
+def _acf_frames(spark, sf_dir):
+    """Spark twin of ``_ACF_CTES``: the ``m`` frame (mean, n) and the
+    per-lag ``rho`` frame (lag, n_pairs, acf)."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.count(F.lit(1)).alias("c")
     )
-    dec = "decimal(30, 6)"
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     m = daily.agg(
-        (to_d(F.sum(F.col("c").cast(dec))) / F.count(F.lit(1))).alias("mean"),
+        (dec_sum("c") / F.count(F.lit(1))).alias("mean"),
         F.count(F.lit(1)).alias("n"),
     )
     dm = daily.crossJoin(F.broadcast(m))
     cterm = F.round((F.col("c") - F.col("mean")) * (F.col("c") - F.col("mean")), 6)
-    den = dm.agg(
-        to_d(F.sum(cterm.cast("decimal(38, 6)"))).alias("den")
-    )
+    den = dm.agg(F.sum(cterm.cast("decimal(38, 6)")).cast("double").alias("den"))
     lags = (
         daily.sparkSession.range(1, _ACF_MAXLAG + 1)
         .select(F.col("id").cast("int").alias("lag"))
     )
-    a = dm.select("d", "c", "mean")
     b = daily.select(F.col("d").alias("d2"), F.col("c").alias("c2"))
     paired = (
-        a.crossJoin(F.broadcast(lags))
+        dm.select("d", "c", "mean")
+        .crossJoin(F.broadcast(lags))
         .join(b, F.col("d2") == F.expr("date_add(d, lag)"))
     )
-    pterm = F.round(
-        (F.col("c") - F.col("mean")) * (F.col("c2") - F.col("mean")), 6
-    )
+    pterm = F.round((F.col("c") - F.col("mean")) * (F.col("c2") - F.col("mean")), 6)
     num = paired.groupBy("lag").agg(
-        to_d(F.sum(pterm.cast("decimal(38, 6)"))).alias("num"),
+        F.sum(pterm.cast("decimal(38, 6)")).cast("double").alias("num"),
         F.count(F.lit(1)).alias("n_pairs"),
     )
-    return (
-        num.crossJoin(F.broadcast(den))
-        .select(
-            F.col("lag").cast("long").alias("lag"),
-            F.col("n_pairs").cast("long").alias("n_pairs"),
-            F.round(F.col("num") / F.col("den"), 6).alias("acf"),
-        )
+    rho = num.crossJoin(F.broadcast(den)).select(
+        "lag", "n_pairs", F.round(F.col("num") / F.col("den"), 6).alias("acf")
+    )
+    return m, rho
+
+
+@register("acf_daily_counts", _ACF_SQL)
+def q_acf_daily_counts(spark, sf_dir):
+    _, rho = _acf_frames(spark, sf_dir)
+    return rho.select(
+        F.col("lag").cast("long").alias("lag"),
+        F.col("n_pairs").cast("long").alias("n_pairs"),
+        "acf",
     )
 
 q_acf_daily_counts.__doc__ = f"""Sample autocorrelation of the daily event count at lags
@@ -214,15 +219,15 @@ _OLS_SST = "(syy - sy * sy / n)"
 _OLS_SQL = f"""
 WITH m AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(x1) AS VARCHAR) AS DOUBLE) AS s1,
-         CAST(CAST(SUM(x2) AS VARCHAR) AS DOUBLE) AS s2,
-         CAST(CAST(SUM(x1 * x1) AS VARCHAR) AS DOUBLE) AS s11,
-         CAST(CAST(SUM(x1 * x2) AS VARCHAR) AS DOUBLE) AS s12,
-         CAST(CAST(SUM(x2 * x2) AS VARCHAR) AS DOUBLE) AS s22,
-         CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(x1 * y) AS VARCHAR) AS DOUBLE) AS s1y,
-         CAST(CAST(SUM(x2 * y) AS VARCHAR) AS DOUBLE) AS s2y,
-         CAST(CAST(SUM(y * y) AS VARCHAR) AS DOUBLE) AS syy
+         {dec_double_sql("SUM(x1)")} AS s1,
+         {dec_double_sql("SUM(x2)")} AS s2,
+         {dec_double_sql("SUM(x1 * x1)")} AS s11,
+         {dec_double_sql("SUM(x1 * x2)")} AS s12,
+         {dec_double_sql("SUM(x2 * x2)")} AS s22,
+         {dec_double_sql("SUM(y)")} AS sy,
+         {dec_double_sql("SUM(x1 * y)")} AS s1y,
+         {dec_double_sql("SUM(x2 * y)")} AS s2y,
+         {dec_double_sql("SUM(y * y)")} AS syy
   FROM (
     SELECT CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS x1,
            CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS x2,
@@ -256,7 +261,6 @@ def q_ols_regression_exact(spark, sf_dir):
     LinearRegression needs iterative passes for, p=2 needs none).  The
     same moment template extends to any p with p²/2 decimal sums."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("x2"),
@@ -264,15 +268,15 @@ def q_ols_regression_exact(spark, sf_dir):
     )
     m = src.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        to_d(F.sum("x1")).alias("s1"),
-        to_d(F.sum("x2")).alias("s2"),
-        to_d(F.sum(F.col("x1") * F.col("x1"))).alias("s11"),
-        to_d(F.sum(F.col("x1") * F.col("x2"))).alias("s12"),
-        to_d(F.sum(F.col("x2") * F.col("x2"))).alias("s22"),
-        to_d(F.sum("y")).alias("sy"),
-        to_d(F.sum(F.col("x1") * F.col("y"))).alias("s1y"),
-        to_d(F.sum(F.col("x2") * F.col("y"))).alias("s2y"),
-        to_d(F.sum(F.col("y") * F.col("y"))).alias("syy"),
+        F.sum("x1").cast("double").alias("s1"),
+        F.sum("x2").cast("double").alias("s2"),
+        F.sum(F.col("x1") * F.col("x1")).cast("double").alias("s11"),
+        F.sum(F.col("x1") * F.col("x2")).cast("double").alias("s12"),
+        F.sum(F.col("x2") * F.col("x2")).cast("double").alias("s22"),
+        F.sum("y").cast("double").alias("sy"),
+        F.sum(F.col("x1") * F.col("y")).cast("double").alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).cast("double").alias("s2y"),
+        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
     )
     return m.select(
         F.col("n").cast("long").alias("n"),
@@ -484,19 +488,14 @@ def q_logreg_irls_exact(spark, sf_dir):
 
 _GNB_PI2 = "6.283185307179586"  # 2*pi as an exact literal on both engines
 
-
-def _gnb_sql() -> str:
-    split = hash_bucket_sql("o_orderkey", 10, seed="gnb:")
-    ll = (
-        "(prior_ln - 0.5 * (lnv1 + (x1 - m1) * (x1 - m1) / v1)"
-        " - 0.5 * (lnv2 + (x2 - m2) * (x2 - m2) / v2))"
-    )
-    return f"""
+# src -> hash split -> per-class 1e-9-grid moments -> model: the CTE
+# prefix every GNB oracle shares (``_gnb_scored`` is the Spark twin)
+_GNB_CTES = f"""
 WITH src AS (
   SELECT o_orderkey, o_orderstatus AS cls,
          CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS DOUBLE) AS x1,
          o_totalprice / 1000.0 AS x2,
-         ({split}) AS bkt
+         ({hash_bucket_sql("o_orderkey", 10, seed="gnb:")}) AS bkt
   FROM orders
 ),
 train AS (SELECT * FROM src WHERE bkt < 8),
@@ -517,40 +516,19 @@ model AS (
          m2, s22 - m2 * m2 AS v2,
          round(ln({_GNB_PI2} * (s22 - m2 * m2)), 9) AS lnv2
   FROM stats
-),
-scored AS (
-  SELECT t.o_orderkey, t.cls AS actual, m.cls AS predicted,
-         ROW_NUMBER() OVER (PARTITION BY t.o_orderkey
-           ORDER BY {ll} DESC, m.cls ASC) AS rk
-  FROM test t CROSS JOIN model m
+),"""
+
+# log-likelihood of test row t under class model m
+_GNB_LL = (
+    "(prior_ln - 0.5 * (lnv1 + (x1 - m1) * (x1 - m1) / v1)"
+    " - 0.5 * (lnv2 + (x2 - m2) * (x2 - m2) / v2))"
 )
-SELECT actual, predicted, CAST(COUNT(*) AS BIGINT) AS n
-FROM scored WHERE rk = 1
-GROUP BY actual, predicted
-"""
 
 
-@register("gnb_train_confusion_exact", _gnb_sql())
-def q_gnb_train_confusion_exact(spark, sf_dir):
-    """Gaussian Naive Bayes end to end: train per-class Gaussians of
-    (order year, price/1000) on the hash-80% split, classify the held
-    -out 20% by quantized-log-likelihood argmax (class-name tiebreak),
-    output the confusion matrix — the certified-exact counterpart of
-    the reference's NaiveBayes stage (modelling.py:139-151), whose
-    MLlib twin is necessarily rows-only.
-
-    Determinism: moments are 1e-9-quantized DECIMAL sums (row order
-    can't move a bit), each ln() is rounded to the same grid before it
-    enters the likelihood (libm differences can't leak), and the
-    remaining arithmetic is identical-double expressions — so the
-    argmax, and therefore every confusion cell, matches the oracle
-    exactly.
-
-    Scale plan: training is one grouped aggregate (|classes| rows);
-    scoring is a |classes|-row broadcast cross join + per-row argmax —
-    both map-side; the confusion rollup is |classes|² cells."""
-    from pyspark.sql import Window
-
+def _gnb_scored(spark, sf_dir):
+    """Every held-out order x class-model pair: ``actual``, ``mcls``,
+    the 1e-9-quantized log-likelihood ``ll`` and the argmax rank ``rk``
+    (unquantized likelihood descending, class name ascending)."""
     o = load_table(spark, sf_dir, "orders")
     src = o.select(
         "o_orderkey",
@@ -572,7 +550,7 @@ def q_gnb_train_confusion_exact(spark, sf_dir):
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
     model = stats.crossJoin(F.broadcast(n_train)).select(
-        "cls",
+        F.col("cls").alias("mcls"),
         F.round(F.log(F.col("n_c").cast("double") / F.col("n_train")), 9).alias(
             "prior_ln"
         ),
@@ -586,21 +564,6 @@ def q_gnb_train_confusion_exact(spark, sf_dir):
         F.round(F.log(pi2 * (F.col("s22") - F.col("m2") * F.col("m2"))), 9).alias(
             "lnv2"
         ),
-    )
-    m = model
-    paired = test.crossJoin(
-        F.broadcast(
-            m.select(
-                F.col("cls").alias("mcls"),
-                "prior_ln",
-                "m1",
-                "v1",
-                "lnv1",
-                "m2",
-                "v2",
-                "lnv2",
-            )
-        )
     )
     ll = (
         F.col("prior_ln")
@@ -616,14 +579,52 @@ def q_gnb_train_confusion_exact(spark, sf_dir):
         )
     )
     w = Window.partitionBy("o_orderkey").orderBy(ll.desc(), F.col("mcls").asc())
-    scored = paired.select(
+    return test.crossJoin(F.broadcast(model)).select(
         "o_orderkey",
         F.col("cls").alias("actual"),
-        F.col("mcls").alias("predicted"),
+        "mcls",
+        F.round(ll, 9).alias("ll"),
         F.row_number().over(w).alias("rk"),
-    ).filter(F.col("rk") == 1)
-    return scored.groupBy("actual", "predicted").agg(
-        F.count(F.lit(1)).alias("n")
+    )
+
+
+_GNB_SQL = f"""{_GNB_CTES}
+scored AS (
+  SELECT t.o_orderkey, t.cls AS actual, m.cls AS predicted,
+         ROW_NUMBER() OVER (PARTITION BY t.o_orderkey
+           ORDER BY {_GNB_LL} DESC, m.cls ASC) AS rk
+  FROM test t CROSS JOIN model m
+)
+SELECT actual, predicted, CAST(COUNT(*) AS BIGINT) AS n
+FROM scored WHERE rk = 1
+GROUP BY actual, predicted
+"""
+
+
+@register("gnb_train_confusion_exact", _GNB_SQL)
+def q_gnb_train_confusion_exact(spark, sf_dir):
+    """Gaussian Naive Bayes end to end: train per-class Gaussians of
+    (order year, price/1000) on the hash-80% split, classify the held
+    -out 20% by quantized-log-likelihood argmax (class-name tiebreak),
+    output the confusion matrix — the certified-exact counterpart of
+    the reference's NaiveBayes stage (modelling.py:139-151), whose
+    MLlib twin is necessarily rows-only.
+
+    Determinism: moments are 1e-9-quantized DECIMAL sums (row order
+    can't move a bit), each ln() is rounded to the same grid before it
+    enters the likelihood (libm differences can't leak), and the
+    remaining arithmetic is identical-double expressions — so the
+    argmax, and therefore every confusion cell, matches the oracle
+    exactly.
+
+    Scale plan: training is one grouped aggregate (|classes| rows);
+    scoring is a |classes|-row broadcast cross join + per-row argmax —
+    both map-side; the confusion rollup is |classes|² cells."""
+    return (
+        _gnb_scored(spark, sf_dir)
+        .filter(F.col("rk") == 1)
+        .groupBy("actual", F.col("mcls").alias("predicted"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -635,7 +636,7 @@ def q_gnb_train_confusion_exact(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _GNB_METRICS_SQL = f"""
-WITH conf AS (SELECT * FROM ({_gnb_sql()})),
+WITH conf AS (SELECT * FROM ({_GNB_SQL})),
 classes AS (
   SELECT actual AS cls FROM conf UNION SELECT predicted FROM conf
 ),
@@ -725,45 +726,12 @@ def q_gnb_per_class_metrics(spark, sf_dir):
 # and badly calibrated; serving thresholds need THIS table).
 # ---------------------------------------------------------------------------
 
-
-def _gnb_calib_sql() -> str:
-    split = hash_bucket_sql("o_orderkey", 10, seed="gnb:")
-    ll = (
-        "(prior_ln - 0.5 * (lnv1 + (x1 - m1) * (x1 - m1) / v1)"
-        " - 0.5 * (lnv2 + (x2 - m2) * (x2 - m2) / v2))"
-    )
-    return f"""
-WITH src AS (
-  SELECT o_orderkey, o_orderstatus AS cls,
-         CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS DOUBLE) AS x1,
-         o_totalprice / 1000.0 AS x2,
-         ({split}) AS bkt
-  FROM orders
-),
-train AS (SELECT * FROM src WHERE bkt < 8),
-test AS (SELECT * FROM src WHERE bkt >= 8),
-stats AS (
-  SELECT cls, COUNT(*) AS n_c,
-         {q9_sum_sql('x1')} / COUNT(*) AS m1,
-         {q9_sum_sql('x1 * x1')} / COUNT(*) AS s11,
-         {q9_sum_sql('x2')} / COUNT(*) AS m2,
-         {q9_sum_sql('x2 * x2')} / COUNT(*) AS s22
-  FROM train GROUP BY cls
-),
-model AS (
-  SELECT cls, n_c,
-         round(ln(CAST(n_c AS DOUBLE) / (SELECT COUNT(*) FROM train)), 9) AS prior_ln,
-         m1, s11 - m1 * m1 AS v1,
-         round(ln({_GNB_PI2} * (s11 - m1 * m1)), 9) AS lnv1,
-         m2, s22 - m2 * m2 AS v2,
-         round(ln({_GNB_PI2} * (s22 - m2 * m2)), 9) AS lnv2
-  FROM stats
-),
+_GNB_CALIB_SQL = f"""{_GNB_CTES}
 scored AS (
   SELECT t.o_orderkey, t.cls AS actual, m.cls AS predicted,
-         round({ll}, 9) AS ll,
+         round({_GNB_LL}, 9) AS ll,
          ROW_NUMBER() OVER (PARTITION BY t.o_orderkey
-           ORDER BY {ll} DESC, m.cls ASC) AS rk
+           ORDER BY {_GNB_LL} DESC, m.cls ASC) AS rk
   FROM test t CROSS JOIN model m
 ),
 -- softmax over the (quantized) log-likelihoods: confidence of the
@@ -785,7 +753,7 @@ FROM conf GROUP BY 1
 """
 
 
-@register("gnb_calibration_curve", _gnb_calib_sql())
+@register("gnb_calibration_curve", _GNB_CALIB_SQL)
 def q_gnb_calibration_curve(spark, sf_dir):
     """Reliability diagram for the certified GNB: the argmax class's
     softmax confidence (log-sum-exp anchored at the row max, quantized
@@ -802,84 +770,17 @@ def q_gnb_calibration_curve(spark, sf_dir):
     Scale plan: same broadcast scoring join as the confusion query,
     plus one per-row window max over the |classes|-row group and a
     <=100-cell rollup."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    src = o.select(
-        "o_orderkey",
-        F.col("o_orderstatus").alias("cls"),
-        F.year(F.col("o_orderdate").cast("date")).cast("double").alias("x1"),
-        (F.col("o_totalprice") / 1000.0).alias("x2"),
-        hash_bucket("o_orderkey", 10, seed="gnb:").alias("bkt"),
-    )
-    train = src.filter(F.col("bkt") < 8)
-    test = src.filter(F.col("bkt") >= 8)
-
-    stats = train.groupBy("cls").agg(
-        F.count(F.lit(1)).alias("n_c"),
-        (q9_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
-    )
-    n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
-    pi2 = float(_GNB_PI2)
-    model = stats.crossJoin(F.broadcast(n_train)).select(
-        F.col("cls").alias("mcls"),
-        F.round(F.log(F.col("n_c").cast("double") / F.col("n_train")), 9).alias(
-            "prior_ln"
-        ),
-        "m1",
-        (F.col("s11") - F.col("m1") * F.col("m1")).alias("v1"),
-        F.round(F.log(pi2 * (F.col("s11") - F.col("m1") * F.col("m1"))), 9).alias(
-            "lnv1"
-        ),
-        "m2",
-        (F.col("s22") - F.col("m2") * F.col("m2")).alias("v2"),
-        F.round(F.log(pi2 * (F.col("s22") - F.col("m2") * F.col("m2"))), 9).alias(
-            "lnv2"
-        ),
-    )
-    paired = test.crossJoin(F.broadcast(model))
-    ll_raw = (
-        F.col("prior_ln")
-        - 0.5
-        * (
-            F.col("lnv1")
-            + (F.col("x1") - F.col("m1")) * (F.col("x1") - F.col("m1")) / F.col("v1")
-        )
-        - 0.5
-        * (
-            F.col("lnv2")
-            + (F.col("x2") - F.col("m2")) * (F.col("x2") - F.col("m2")) / F.col("v2")
-        )
-    )
-    w_rk = Window.partitionBy("o_orderkey").orderBy(ll_raw.desc(), F.col("mcls").asc())
-    scored = paired.select(
-        "o_orderkey",
-        F.col("cls").alias("actual"),
-        F.col("mcls").alias("predicted"),
-        F.round(ll_raw, 9).alias("ll"),
-        F.row_number().over(w_rk).alias("rk"),
-    )
+    scored = _gnb_scored(spark, sf_dir)
     w_mx = Window.partitionBy("o_orderkey")
     conf = (
         scored.withColumn("mx", F.max("ll").over(w_mx))
         .groupBy("o_orderkey")
         .agg(
             F.max(F.when(F.col("rk") == 1, F.col("actual"))).alias("actual"),
-            F.max(F.when(F.col("rk") == 1, F.col("predicted"))).alias("predicted"),
-            F.round(
-                1.0
-                / F.sum(
-                    F.round(F.exp(F.col("ll") - F.col("mx")), 9).cast(
-                        "decimal(38, 9)"
-                    )
-                )
-                .cast("string")
-                .cast("double"),
-                9,
-            ).alias("confidence"),
+            F.max(F.when(F.col("rk") == 1, F.col("mcls"))).alias("predicted"),
+            F.round(1.0 / q9_sum(F.exp(F.col("ll") - F.col("mx"))), 9).alias(
+                "confidence"
+            ),
         )
     )
     return conf.groupBy(
@@ -910,15 +811,15 @@ _RIDGE_LAMBDA = 1000.0
 _RIDGE_SQL = f"""
 WITH m AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(x1) AS VARCHAR) AS DOUBLE) AS s1,
-         CAST(CAST(SUM(x2) AS VARCHAR) AS DOUBLE) AS s2,
-         CAST(CAST(SUM(x1 * x1) AS VARCHAR) AS DOUBLE) + {_RIDGE_LAMBDA} AS s11,
-         CAST(CAST(SUM(x1 * x2) AS VARCHAR) AS DOUBLE) AS s12,
-         CAST(CAST(SUM(x2 * x2) AS VARCHAR) AS DOUBLE) + {_RIDGE_LAMBDA} AS s22,
-         CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(x1 * y) AS VARCHAR) AS DOUBLE) AS s1y,
-         CAST(CAST(SUM(x2 * y) AS VARCHAR) AS DOUBLE) AS s2y,
-         CAST(CAST(SUM(y * y) AS VARCHAR) AS DOUBLE) AS syy
+         {dec_double_sql("SUM(x1)")} AS s1,
+         {dec_double_sql("SUM(x2)")} AS s2,
+         {dec_double_sql("SUM(x1 * x1)")} + {_RIDGE_LAMBDA} AS s11,
+         {dec_double_sql("SUM(x1 * x2)")} AS s12,
+         {dec_double_sql("SUM(x2 * x2)")} + {_RIDGE_LAMBDA} AS s22,
+         {dec_double_sql("SUM(y)")} AS sy,
+         {dec_double_sql("SUM(x1 * y)")} AS s1y,
+         {dec_double_sql("SUM(x2 * y)")} AS s2y,
+         {dec_double_sql("SUM(y * y)")} AS syy
   FROM (
     SELECT CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS x1,
            CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS x2,
@@ -947,7 +848,6 @@ def q_ridge_regression_exact(spark, sf_dir):
     Scale plan: identical to OLS — one map-side-combined aggregate IS
     the fit."""
     o = load_table(spark, sf_dir, "orders")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     src = o.select(
         F.month(F.col("o_orderdate").cast("date")).cast("long").alias("x1"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("x2"),
@@ -955,14 +855,14 @@ def q_ridge_regression_exact(spark, sf_dir):
     )
     m = src.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        to_d(F.sum("x1")).alias("s1"),
-        to_d(F.sum("x2")).alias("s2"),
-        (to_d(F.sum(F.col("x1") * F.col("x1"))) + _RIDGE_LAMBDA).alias("s11"),
-        to_d(F.sum(F.col("x1") * F.col("x2"))).alias("s12"),
-        (to_d(F.sum(F.col("x2") * F.col("x2"))) + _RIDGE_LAMBDA).alias("s22"),
-        to_d(F.sum("y")).alias("sy"),
-        to_d(F.sum(F.col("x1") * F.col("y"))).alias("s1y"),
-        to_d(F.sum(F.col("x2") * F.col("y"))).alias("s2y"),
+        F.sum("x1").cast("double").alias("s1"),
+        F.sum("x2").cast("double").alias("s2"),
+        (F.sum(F.col("x1") * F.col("x1")).cast("double") + _RIDGE_LAMBDA).alias("s11"),
+        F.sum(F.col("x1") * F.col("x2")).cast("double").alias("s12"),
+        (F.sum(F.col("x2") * F.col("x2")).cast("double") + _RIDGE_LAMBDA).alias("s22"),
+        F.sum("y").cast("double").alias("sy"),
+        F.sum(F.col("x1") * F.col("y")).cast("double").alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).cast("double").alias("s2y"),
     )
     return m.select(
         F.col("n").cast("long").alias("n"),
@@ -979,42 +879,9 @@ def q_ridge_regression_exact(spark, sf_dir):
 # integer counts.
 # ---------------------------------------------------------------------------
 
-
-def _gnb_auc_sql() -> str:
-    split = hash_bucket_sql("o_orderkey", 10, seed="gnb:")
-    ll = (
-        "(prior_ln - 0.5 * (lnv1 + (x1 - m1) * (x1 - m1) / v1)"
-        " - 0.5 * (lnv2 + (x2 - m2) * (x2 - m2) / v2))"
-    )
-    return f"""
-WITH src AS (
-  SELECT o_orderkey, o_orderstatus AS cls,
-         CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS DOUBLE) AS x1,
-         o_totalprice / 1000.0 AS x2,
-         ({split}) AS bkt
-  FROM orders
-),
-train AS (SELECT * FROM src WHERE bkt < 8),
-test AS (SELECT * FROM src WHERE bkt >= 8),
-stats AS (
-  SELECT cls, COUNT(*) AS n_c,
-         {q9_sum_sql('x1')} / COUNT(*) AS m1,
-         {q9_sum_sql('x1 * x1')} / COUNT(*) AS s11,
-         {q9_sum_sql('x2')} / COUNT(*) AS m2,
-         {q9_sum_sql('x2 * x2')} / COUNT(*) AS s22
-  FROM train GROUP BY cls
-),
-model AS (
-  SELECT cls, n_c,
-         round(ln(CAST(n_c AS DOUBLE) / (SELECT COUNT(*) FROM train)), 9) AS prior_ln,
-         m1, s11 - m1 * m1 AS v1,
-         round(ln({_GNB_PI2} * (s11 - m1 * m1)), 9) AS lnv1,
-         m2, s22 - m2 * m2 AS v2,
-         round(ln({_GNB_PI2} * (s22 - m2 * m2)), 9) AS lnv2
-  FROM stats
-),
+_GNB_AUC_SQL = f"""{_GNB_CTES}
 scored AS (
-  SELECT t.o_orderkey, t.cls AS actual, m.cls AS mcls, round({ll}, 9) AS ll
+  SELECT t.o_orderkey, t.cls AS actual, m.cls AS mcls, round({_GNB_LL}, 9) AS ll
   FROM test t CROSS JOIN model m
 ),
 probs AS (
@@ -1051,7 +918,7 @@ FROM u
 """
 
 
-@register("gnb_auc_exact", _gnb_auc_sql())
+@register("gnb_auc_exact", _GNB_AUC_SQL)
 def q_gnb_auc_exact(spark, sf_dir):
     """Exact ROC-AUC of the GNB's class-'F' posterior on the held-out
     split: the tie-aware Mann-Whitney identity 2U = Σ_v n_pos(v) ·
@@ -1064,64 +931,7 @@ def q_gnb_auc_exact(spark, sf_dir):
     Scale plan: scoring is the broadcast model join; the U statistic
     runs on the DISTINCT-score relation (grid-bounded), one ordered
     window over it."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    src = o.select(
-        "o_orderkey",
-        F.col("o_orderstatus").alias("cls"),
-        F.year(F.col("o_orderdate").cast("date")).cast("double").alias("x1"),
-        (F.col("o_totalprice") / 1000.0).alias("x2"),
-        hash_bucket("o_orderkey", 10, seed="gnb:").alias("bkt"),
-    )
-    train = src.filter(F.col("bkt") < 8)
-    test = src.filter(F.col("bkt") >= 8)
-
-    stats = train.groupBy("cls").agg(
-        F.count(F.lit(1)).alias("n_c"),
-        (q9_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
-    )
-    n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
-    pi2 = float(_GNB_PI2)
-    model = stats.crossJoin(F.broadcast(n_train)).select(
-        F.col("cls").alias("mcls"),
-        F.round(F.log(F.col("n_c").cast("double") / F.col("n_train")), 9).alias(
-            "prior_ln"
-        ),
-        "m1",
-        (F.col("s11") - F.col("m1") * F.col("m1")).alias("v1"),
-        F.round(F.log(pi2 * (F.col("s11") - F.col("m1") * F.col("m1"))), 9).alias(
-            "lnv1"
-        ),
-        "m2",
-        (F.col("s22") - F.col("m2") * F.col("m2")).alias("v2"),
-        F.round(F.log(pi2 * (F.col("s22") - F.col("m2") * F.col("m2"))), 9).alias(
-            "lnv2"
-        ),
-    )
-    paired = test.crossJoin(F.broadcast(model))
-    ll_raw = (
-        F.col("prior_ln")
-        - 0.5
-        * (
-            F.col("lnv1")
-            + (F.col("x1") - F.col("m1")) * (F.col("x1") - F.col("m1")) / F.col("v1")
-        )
-        - 0.5
-        * (
-            F.col("lnv2")
-            + (F.col("x2") - F.col("m2")) * (F.col("x2") - F.col("m2")) / F.col("v2")
-        )
-    )
-    scored = paired.select(
-        "o_orderkey",
-        F.col("cls").alias("actual"),
-        F.col("mcls").alias("mcls"),
-        F.round(ll_raw, 9).alias("ll"),
-    )
+    scored = _gnb_scored(spark, sf_dir)
     w_mx = Window.partitionBy("o_orderkey")
     probs = (
         scored.withColumn("mx", F.max("ll").over(w_mx))
@@ -1136,13 +946,7 @@ def q_gnb_auc_exact(spark, sf_dir):
                     ),
                     F.lit(0.0),
                 )
-                / F.sum(
-                    F.round(F.exp(F.col("ll") - F.col("mx")), 9).cast(
-                        "decimal(38, 9)"
-                    )
-                )
-                .cast("string")
-                .cast("double"),
+                / q9_sum(F.exp(F.col("ll") - F.col("mx"))),
                 9,
             ).alias("score"),
         )
@@ -1548,8 +1352,10 @@ _DID_CELL = f"""
          CASE WHEN CAST(ts AS DATE) >= DATE '{{cut}}' THEN 'post' ELSE 'pre' END AS period,
          CAST(COUNT(*) AS BIGINT) AS n,
          {q9_sum_sql("value")} AS s,
-         CAST(CAST(SUM(CAST(round(value, 9) AS DECIMAL(38, 9))
-                       * CAST(round(value, 9) AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS ss
+         {dec_double_sql(
+             "SUM(CAST(round(value, 9) AS DECIMAL(38, 9))"
+             " * CAST(round(value, 9) AS DECIMAL(38, 9)))"
+         )} AS ss
   FROM events WHERE event_type = 'purchase'
   GROUP BY 1, 2
 """
@@ -1603,7 +1409,6 @@ def q_diff_in_diff_readout(spark, sf_dir):
     Moments accumulate as 1e-9-quantized DECIMAL so cell means are
     bit-identical across engines and partitionings."""
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     x = F.round(F.col("value"), 9).cast("decimal(38, 9)")
     cells = e.groupBy(
         F.when(F.col("user_id") % 2 == 1, "T").otherwise("C").alias("grp"),
@@ -1615,7 +1420,7 @@ def q_diff_in_diff_readout(spark, sf_dir):
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         q9_sum(F.col("value")).alias("s"),
-        to_d(F.sum(x * x)).alias("ss"),
+        F.sum(x * x).cast("double").alias("ss"),
     )
     mean = F.col("s") / F.col("n")
     m = cells.select(
@@ -1694,7 +1499,7 @@ det AS (
 seas AS (
   SELECT dow,
          CAST(COUNT(*) AS BIGINT) AS n_days,
-         round(CAST(CAST(SUM(CAST(dt AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)
+         round({dec_double_sql("SUM(CAST(dt AS DECIMAL(38, 9)))")}
                / COUNT(*), 9) AS seasonal
   FROM det GROUP BY dow
 ),
@@ -1703,7 +1508,7 @@ resid AS (
   FROM det JOIN seas ON det.dow = seas.dow
 )
 SELECT s.dow, s.n_days, round(s.seasonal, 6) AS seasonal,
-       round(CAST(CAST(SUM(CAST(r.r AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE)
+       round({dec_double_sql("SUM(CAST(r.r AS DECIMAL(38, 9)))")}
              / s.n_days, 6) + 0.0 AS resid_mean,
        round({q9_sum_sql("r.r * r.r")}
              / s.n_days, 6) AS resid_msq
@@ -1746,11 +1551,10 @@ def q_stl_decompose_profile(spark, sf_dir):
         F.round(F.col("y") - F.col("trend"), 9).alias("dt"),
     )
     det = det.localCheckpoint(eager=False)  # feeds seasonal AND residual
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     seas = det.groupBy("dow").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.round(
-            to_d(F.sum(F.col("dt").cast("decimal(38, 9)"))) / F.count(F.lit(1)), 9
+            F.sum(F.col("dt").cast("decimal(38, 9)")).cast("double") / F.count(F.lit(1)), 9
         ).alias("seasonal"),
     )
     resid = det.join(F.broadcast(seas), "dow").select(
@@ -1759,7 +1563,7 @@ def q_stl_decompose_profile(spark, sf_dir):
     return resid.groupBy("dow", "n_days", "seasonal").agg(
         (
             F.round(
-                to_d(F.sum(F.col("r").cast("decimal(38, 9)"))) / F.col("n_days"), 6
+                F.sum(F.col("r").cast("decimal(38, 9)")).cast("double") / F.col("n_days"), 6
             )
             + F.lit(0.0)  # −0.0 → +0.0: DuckDB's round keeps the sign bit
         ).alias("resid_mean"),
@@ -1782,41 +1586,19 @@ def q_stl_decompose_profile(spark, sf_dir):
 # DECIMAL — bit-identical on both engines.
 # ---------------------------------------------------------------------------
 
-_LB_H = 7
 _LB_CHI2_95_DF7 = "14.067140449340169"  # qchisq(0.95, df=7), shared literal
 
 _LB_SQL = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, COUNT(*) AS c FROM events GROUP BY 1
-),
-m AS (
-  SELECT CAST(CAST(SUM(CAST(c AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS mean,
-         COUNT(*) AS n
-  FROM daily
-),
-den AS (
-  SELECT CAST(CAST(SUM(CAST(round((c - m.mean) * (c - m.mean), 6) AS DECIMAL(38, 6))) AS VARCHAR) AS DOUBLE) AS den
-  FROM daily CROSS JOIN m
-),
-lags AS (SELECT unnest(range(1, {_LB_H + 1})) AS lag),
-num AS (
-  SELECT l.lag,
-         CAST(CAST(SUM(CAST(round((a.c - m.mean) * (b.c - m.mean), 6) AS DECIMAL(38, 6))) AS VARCHAR) AS DOUBLE) AS num
-  FROM daily a
-  CROSS JOIN lags l
-  JOIN daily b ON b.d = a.d + CAST(l.lag AS INTEGER)
-  CROSS JOIN m
-  GROUP BY l.lag
-),
+{_ACF_CTES},
 rho AS (
   SELECT lag, round(num / den.den, 6) AS r FROM num CROSS JOIN den
 ),
 q AS (
-  SELECT CAST(CAST(SUM(CAST(round(r * r / (m.n - lag), 12) AS DECIMAL(38, 12))) AS VARCHAR) AS DOUBLE) AS body
+  SELECT {dec_double_sql("SUM(CAST(round(r * r / (m.n - lag), 12) AS DECIMAL(38, 12)))")} AS body
   FROM rho CROSS JOIN m
 )
 SELECT CAST(m.n AS BIGINT) AS n_days,
-       CAST({_LB_H} AS BIGINT) AS h,
+       CAST({_ACF_MAXLAG} AS BIGINT) AS h,
        round(m.n * (m.n + 2) * q.body, 6) AS q_stat,
        (m.n * (m.n + 2) * q.body) > {_LB_CHI2_95_DF7} AS reject_white_noise_95
 FROM m CROSS JOIN q
@@ -1834,50 +1616,21 @@ def q_ljung_box_acf_test(spark, sf_dir):
     Scale plan: identical to the ACF — the fact collapses to one row
     per day in a single map-side-combined agg; everything after runs
     on the dim-sized daily relation."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    dec = "decimal(30, 6)"
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    m = daily.agg(
-        (to_d(F.sum(F.col("c").cast(dec))) / F.count(F.lit(1))).alias("mean"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    dm = daily.crossJoin(F.broadcast(m))
-    cterm = F.round((F.col("c") - F.col("mean")) * (F.col("c") - F.col("mean")), 6)
-    den = dm.agg(to_d(F.sum(cterm.cast("decimal(38, 6)"))).alias("den"))
-    lags = (
-        daily.sparkSession.range(1, _LB_H + 1)
-        .select(F.col("id").cast("int").alias("lag"))
-    )
-    b = daily.select(F.col("d").alias("d2"), F.col("c").alias("c2"))
-    paired = (
-        dm.select("d", "c", "mean")
-        .crossJoin(F.broadcast(lags))
-        .join(b, F.col("d2") == F.expr("date_add(d, lag)"))
-    )
-    pterm = F.round((F.col("c") - F.col("mean")) * (F.col("c2") - F.col("mean")), 6)
-    num = paired.groupBy("lag").agg(
-        to_d(F.sum(pterm.cast("decimal(38, 6)"))).alias("num")
-    )
-    rho = num.crossJoin(F.broadcast(den)).select(
-        "lag", F.round(F.col("num") / F.col("den"), 6).alias("r")
-    )
+    m, rho = _acf_frames(spark, sf_dir)
     q_body = (
         rho.crossJoin(F.broadcast(m))
         .select(
-            F.round(F.col("r") * F.col("r") / (F.col("n") - F.col("lag")), 12)
+            F.round(F.col("acf") * F.col("acf") / (F.col("n") - F.col("lag")), 12)
             .cast("decimal(38, 12)")
             .alias("t")
         )
-        .agg(to_d(F.sum("t")).alias("body"))
+        .agg(F.sum("t").cast("double").alias("body"))
     )
     return (
         m.crossJoin(F.broadcast(q_body))
         .select(
             F.col("n").cast("long").alias("n_days"),
-            F.lit(_LB_H).cast("long").alias("h"),
+            F.lit(_ACF_MAXLAG).cast("long").alias("h"),
             F.round(F.col("n") * (F.col("n") + 2) * F.col("body"), 6).alias("q_stat"),
             (
                 F.col("n") * (F.col("n") + 2) * F.col("body")

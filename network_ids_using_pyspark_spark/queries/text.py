@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64_sql
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
 from ..sources.tables import load_table
 from ..operators.textops import (
     doc_fingerprint,
@@ -572,10 +572,10 @@ pts AS (
 ),
 m AS (
   SELECT COUNT(*) AS n,
-         CAST(CAST(SUM(lx) AS VARCHAR) AS DOUBLE) AS sx,
-         CAST(CAST(SUM(ly) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(lx * lx) AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(SUM(lx * ly) AS VARCHAR) AS DOUBLE) AS sxy
+         {dec_double_sql("SUM(lx)")} AS sx,
+         {dec_double_sql("SUM(ly)")} AS sy,
+         {dec_double_sql("SUM(lx * lx)")} AS sxx,
+         {dec_double_sql("SUM(lx * ly)")} AS sxy
   FROM pts
 )
 SELECT n_points, zipf_slope,
@@ -622,10 +622,10 @@ def q_zipf_fit_report(spark, sf_dir):
     )
     m = pts.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum("lx").cast("string").cast("double").alias("sx"),
-        F.sum("ly").cast("string").cast("double").alias("sy"),
-        F.sum(F.col("lx") * F.col("lx")).cast("string").cast("double").alias("sxx"),
-        F.sum(F.col("lx") * F.col("ly")).cast("string").cast("double").alias("sxy"),
+        F.sum("lx").cast("double").alias("sx"),
+        F.sum("ly").cast("double").alias("sy"),
+        F.sum(F.col("lx") * F.col("lx")).cast("double").alias("sxx"),
+        F.sum(F.col("lx") * F.col("ly")).cast("double").alias("sxy"),
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
+from ..functions.numeric import dec_avg, dec_avg_sql, dec_double_sql, dec_sum, dec_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -560,7 +560,7 @@ WITH revenue AS (
   GROUP BY l_suppkey
 )
 SELECT s.s_suppkey, s.s_name,
-       CAST(CAST(r.total AS VARCHAR) AS DOUBLE) AS total_revenue
+       {dec_double_sql("r.total")} AS total_revenue
 FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
 WHERE r.total = (SELECT MAX(total) FROM revenue)
 """
@@ -994,7 +994,7 @@ WITH natl AS (
 tot AS (
   SELECT SUM(value) AS total, COUNT(*) AS n_parts FROM natl
 )
-SELECT l_partkey, CAST(CAST(value AS VARCHAR) AS DOUBLE) AS value
+SELECT l_partkey, {dec_double_sql("value")} AS value
 FROM natl, tot
 WHERE value * tot.n_parts > tot.total * {_Q11_MULT}
 """
@@ -1027,7 +1027,7 @@ def q_q11_important_stock_value(spark, sf_dir):
     return (
         natl.join(F.broadcast(total))
         .filter(F.col("value") * F.col("n_parts") > F.col("total") * _Q11_MULT)
-        .select("l_partkey", F.col("value").cast("string").cast("double").alias("value"))
+        .select("l_partkey", F.col("value").cast("double").alias("value"))
     )
 
 

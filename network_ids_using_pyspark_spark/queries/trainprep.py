@@ -28,7 +28,14 @@ from ..functions.hashing import (
     portable_hash64,
     portable_hash64_sql,
 )
-from ..functions.numeric import dec_avg, dec_avg_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import (
+    dec_avg,
+    dec_avg_sql,
+    dec_double_sql,
+    dec_sum_sql,
+    q9_sum,
+    q9_sum_sql,
+)
 from ..sources.tables import load_table
 from . import register
 
@@ -316,18 +323,17 @@ def q_semantic_decontam_report(spark, sf_dir):
     candidate generator — same contract as `cosine_topk` vs
     `cosine_topk_lsh`.  The max-cosine fold is order-independent
     (MAX of identical doubles), so the report is oracle-exact."""
-    from ..operators.similarity import dot, l2_norm
+    from ..operators.similarity import as_double_array, dot, l2_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    to_d = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
     ev = (
         emb.filter(F.col("label") == _EVAL_LABEL)
-        .select(F.col("vec_id").alias("eval_id"), to_d("embedding").alias("ev"))
+        .select(F.col("vec_id").alias("eval_id"), as_double_array("embedding").alias("ev"))
         .withColumn("en", l2_norm(F.col("ev")))
     )
     corpus = (
         emb.filter(F.col("label") != _EVAL_LABEL)
-        .select("vec_id", "label", to_d("embedding").alias("cv"))
+        .select("vec_id", "label", as_double_array("embedding").alias("cv"))
         .withColumn("cn", l2_norm(F.col("cv")))
     )
     # one fold per pair; norms were folded once per row above
@@ -388,7 +394,7 @@ scored AS (
 )
 SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       (CAST(CAST(SUM(CAST(lr AS DECIMAL(30, 6))) AS VARCHAR) AS DOUBLE)
+       ({dec_sum_sql("lr")}
           / COUNT(*)) AS mean_log2_weight
 FROM scored
 GROUP BY doc_id
@@ -555,7 +561,6 @@ _TE_MOD = 40  # deterministic output sample: every 40th order key
 
 def _te_sql() -> str:
     dec = "DECIMAL(30, 6)"
-    to_d = lambda e: f"CAST(CAST({e} AS VARCHAR) AS DOUBLE)"  # noqa: E731
     return f"""
 WITH cat AS (
   SELECT o_orderpriority AS cat,
@@ -567,10 +572,10 @@ g AS (
   SELECT SUM(CAST(o_totalprice AS {dec})) AS g_sum, COUNT(*) AS g_n FROM orders
 )
 SELECT o.o_orderkey, o.o_orderpriority AS cat, o.o_totalprice AS target,
-       {to_d('c.cat_sum - CAST(o.o_totalprice AS ' + dec + ')')}
+       {dec_double_sql(f"c.cat_sum - CAST(o.o_totalprice AS {dec})")}
          / (c.cat_n - 1) AS te_loo,
-       ({to_d('c.cat_sum - CAST(o.o_totalprice AS ' + dec + ')')}
-          + {_TE_ALPHA} * ({to_d('g.g_sum')} / g.g_n))
+       ({dec_double_sql(f"c.cat_sum - CAST(o.o_totalprice AS {dec})")}
+          + {_TE_ALPHA} * ({dec_double_sql('g.g_sum')} / g.g_n))
          / (c.cat_n - 1 + {_TE_ALPHA}) AS te_smooth
 FROM orders o
 JOIN cat c ON o.o_orderpriority = c.cat
@@ -586,7 +591,7 @@ def q_target_encoding_loo(spark, sf_dir):
     the supervised categorical encoder whose naive (non-LOO) form leaks
     the label.  Category sums are exact DECIMAL; each row's encoding is
     then a fixed sequence of double ops identical in both engines
-    (numerators cleared through the correctly-rounded VARCHAR cast).
+    (numerators read back as correctly rounded doubles).
     Output is a deterministic 1-in-{_TE_MOD} key sample.
 
     Scale plan: the category stats are a |cats|-row broadcast and the
@@ -603,7 +608,6 @@ def q_target_encoding_loo(spark, sf_dir):
         F.sum(F.col("o_totalprice").cast(dec)).alias("g_sum"),
         F.count(F.lit(1)).alias("g_n"),
     )
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     num = F.col("cat_sum") - F.col("o_totalprice").cast(dec)
     out = (
         o.filter(F.col("o_orderkey") % _TE_MOD == 0)
@@ -614,9 +618,9 @@ def q_target_encoding_loo(spark, sf_dir):
         "o_orderkey",
         F.col("o_orderpriority").alias("cat"),
         F.col("o_totalprice").alias("target"),
-        (to_d(num) / (F.col("cat_n") - 1)).alias("te_loo"),
+        (num.cast("double") / (F.col("cat_n") - 1)).alias("te_loo"),
         (
-            (to_d(num) + _TE_ALPHA * (to_d(F.col("g_sum")) / F.col("g_n")))
+            (num.cast("double") + _TE_ALPHA * (F.col("g_sum").cast("double") / F.col("g_n")))
             / (F.col("cat_n") - 1 + _TE_ALPHA)
         ).alias("te_smooth"),
     )
@@ -635,7 +639,6 @@ def _mi_pair_sql(pair: str, table: str, x: str, y: str) -> str:
     # the sum is exact, N divides once at the end (same discipline as
     # bigram_lm_logloss).  H(X) = ln(N) − (1/N)·Σ n_x·ln(n_x) likewise.
     t9 = "DECIMAL(38, 9)"
-    to_d = lambda e: f"CAST(CAST({e} AS VARCHAR) AS DOUBLE)"  # noqa: E731
     return f"""
   SELECT pair, n, mi, h_x, h_y,
          -- NMI from the ROUNDED mi/h values (identical across engines);
@@ -650,9 +653,9 @@ def _mi_pair_sql(pair: str, table: str, x: str, y: str) -> str:
          round(ln(nn) - hy_num / nn, 6) AS h_y
   FROM (
     SELECT ANY_VALUE(nn) AS nn,
-           {to_d(f"SUM(CAST(nxy AS {t9}) * CAST(round(ln((CAST(nxy AS DOUBLE) * nn) / (CAST(nx AS DOUBLE) * ny)), 9) AS {t9}))")} AS mi_num,
-           {to_d(f"SUM(CASE WHEN first_x THEN CAST(nx AS {t9}) * CAST(round(ln(CAST(nx AS DOUBLE)), 9) AS {t9}) ELSE CAST(0 AS {t9}) END)")} AS hx_num,
-           {to_d(f"SUM(CASE WHEN first_y THEN CAST(ny AS {t9}) * CAST(round(ln(CAST(ny AS DOUBLE)), 9) AS {t9}) ELSE CAST(0 AS {t9}) END)")} AS hy_num
+           {dec_double_sql(f"SUM(CAST(nxy AS {t9}) * CAST(round(ln((CAST(nxy AS DOUBLE) * nn) / (CAST(nx AS DOUBLE) * ny)), 9) AS {t9}))")} AS mi_num,
+           {dec_double_sql(f"SUM(CASE WHEN first_x THEN CAST(nx AS {t9}) * CAST(round(ln(CAST(nx AS DOUBLE)), 9) AS {t9}) ELSE CAST(0 AS {t9}) END)")} AS hx_num,
+           {dec_double_sql(f"SUM(CASE WHEN first_y THEN CAST(ny AS {t9}) * CAST(round(ln(CAST(ny AS DOUBLE)), 9) AS {t9}) ELSE CAST(0 AS {t9}) END)")} AS hy_num
     FROM (
       SELECT nxy, nx, ny, nn,
              ROW_NUMBER() OVER (PARTITION BY x ORDER BY y) = 1 AS first_x,
@@ -736,9 +739,9 @@ def q_mutual_information_report(spark, sf_dir):
         ).otherwise(F.lit(0).cast(t9))
         agg = base.agg(
             F.first("nn").alias("nn"),
-            F.sum(mi_term).cast("string").cast("double").alias("mi_num"),
-            F.sum(hx_term).cast("string").cast("double").alias("hx_num"),
-            F.sum(hy_term).cast("string").cast("double").alias("hy_num"),
+            F.sum(mi_term).cast("double").alias("mi_num"),
+            F.sum(hx_term).cast("double").alias("hx_num"),
+            F.sum(hy_term).cast("double").alias("hy_num"),
         )
         mi = F.col("mi_num") / F.col("nn")
         hx = F.log(F.col("nn").cast("double")) - F.col("hx_num") / F.col("nn")
@@ -938,11 +941,11 @@ cum AS (
   FROM wt CROSS JOIN tot
 )
 SELECT word, n,
-       round(CAST(CAST(w AS VARCHAR) AS DOUBLE) / CAST(CAST(t AS VARCHAR) AS DOUBLE), 9) AS prob,
-       round(CAST(CAST(ch - w AS VARCHAR) AS DOUBLE) / CAST(CAST(t AS VARCHAR) AS DOUBLE), 9) AS cum_lo,
-       round(CAST(CAST(ch AS VARCHAR) AS DOUBLE) / CAST(CAST(t AS VARCHAR) AS DOUBLE), 9) AS cum_hi,
-       CAST(floor(CAST(CAST(ch AS VARCHAR) AS DOUBLE) / CAST(CAST(t AS VARCHAR) AS DOUBLE) * {_NEG_B})
-            - floor(CAST(CAST(ch - w AS VARCHAR) AS DOUBLE) / CAST(CAST(t AS VARCHAR) AS DOUBLE) * {_NEG_B}) AS BIGINT) AS n_buckets
+       round({dec_double_sql("w")} / {dec_double_sql("t")}, 9) AS prob,
+       round({dec_double_sql("ch - w")} / {dec_double_sql("t")}, 9) AS cum_lo,
+       round({dec_double_sql("ch")} / {dec_double_sql("t")}, 9) AS cum_hi,
+       CAST(floor({dec_double_sql("ch")} / {dec_double_sql("t")} * {_NEG_B})
+            - floor({dec_double_sql("ch - w")} / {dec_double_sql("t")} * {_NEG_B}) AS BIGINT) AS n_buckets
 FROM cum
 """
 
@@ -985,13 +988,12 @@ def q_negative_sampling_table(spark, sf_dir):
     cum = wt.crossJoin(F.broadcast(tot)).select(
         "word", "n", "w", F.sum("w").over(wcum).alias("ch"), "t"
     )
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    lo = to_d(F.col("ch") - F.col("w")) / to_d(F.col("t"))
-    hi = to_d(F.col("ch")) / to_d(F.col("t"))
+    lo = (F.col("ch") - F.col("w")).cast("double") / F.col("t").cast("double")
+    hi = F.col("ch").cast("double") / F.col("t").cast("double")
     return cum.select(
         "word",
         "n",
-        F.round(to_d(F.col("w")) / to_d(F.col("t")), 9).alias("prob"),
+        F.round(F.col("w").cast("double") / F.col("t").cast("double"), 9).alias("prob"),
         F.round(lo, 9).alias("cum_lo"),
         F.round(hi, 9).alias("cum_hi"),
         (F.floor(hi * _NEG_B) - F.floor(lo * _NEG_B)).cast("long").alias("n_buckets"),
@@ -1172,7 +1174,7 @@ def q_preference_pair_mining(spark, sf_dir):
 # sibling of `dsir_importance_weights` / `domain_mixture_weights`).
 # ---------------------------------------------------------------------------
 
-_LOO_SQL = """
+_LOO_SQL = f"""
 WITH per_doc AS (
   SELECT source,
          len(regexp_split_to_array(trim(text), '\\s+')) AS n_toks,
@@ -1184,13 +1186,13 @@ per_src AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM(n_toks) AS BIGINT) AS n_toks,
-         CAST(CAST(SUM(CAST(q AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS sq
+         {dec_double_sql("SUM(CAST(q AS DECIMAL(38, 9)))")} AS sq
   FROM per_doc GROUP BY source
 ),
 tot AS (
   SELECT CAST(SUM(n_docs) AS BIGINT) AS t_docs,
          CAST(SUM(n_toks) AS BIGINT) AS t_toks,
-         CAST(CAST(SUM(CAST(sq AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS t_q
+         {dec_double_sql("SUM(CAST(sq AS DECIMAL(38, 9)))")} AS t_q
   FROM per_src
 )
 SELECT source, n_docs,
@@ -1231,7 +1233,6 @@ def q_loo_source_ablation(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_toks").cast("long").alias("n_toks"),
         F.sum(F.col("q").cast("decimal(38, 9)"))
-        .cast("string")
         .cast("double")
         .alias("sq"),
     ).localCheckpoint(eager=True)  # |sources| rows: totals reuse it, no rescan
@@ -1239,7 +1240,6 @@ def q_loo_source_ablation(spark, sf_dir):
         F.sum("n_docs").cast("long").alias("t_docs"),
         F.sum("n_toks").cast("long").alias("t_toks"),
         F.sum(F.col("sq").cast("decimal(38, 9)"))
-        .cast("string")
         .cast("double")
         .alias("t_q"),
     )
@@ -1304,8 +1304,9 @@ tot AS (
 ),
 corpus AS (
   SELECT tot.v, tot.n,
-         CAST(CAST(SUM(CAST(round(log2((c_w + 1.0) / (tot.n + tot.v)), 6)
-                            AS DECIMAL(38, 9))) AS VARCHAR) AS DOUBLE) AS lp_sum
+         {dec_double_sql(
+             "SUM(CAST(round(log2((c_w + 1.0) / (tot.n + tot.v)), 6) AS DECIMAL(38, 9)))"
+         )} AS lp_sum
   FROM wc CROSS JOIN tot GROUP BY tot.v, tot.n
 ),
 src AS (
@@ -1349,7 +1350,6 @@ def q_kl_divergence_by_source(spark, sf_dir):
     per-source divergence is a histogram-space aggregate.  Nothing is
     V×|sources|."""
     docs = load_table(spark, sf_dir, "documents")
-    to_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     toks = docs.select(
         "source",
         F.explode(F.split(F.trim(F.lower("text")), "[^0-9a-z]+")).alias("w"),
@@ -1370,13 +1370,9 @@ def q_kl_divergence_by_source(spark, sf_dir):
         .agg(
             F.first("v").alias("v"),
             F.first("n").alias("n"),
-            to_d(
-                F.sum(
-                    lg6((F.col("c_w") + 1.0) / (F.col("n") + F.col("v"))).cast(
-                        "decimal(38, 9)"
-                    )
-                )
-            ).alias("lp_sum"),
+            F.sum(
+                lg6((F.col("c_w") + 1.0) / (F.col("n") + F.col("v"))).cast("decimal(38, 9)")
+            ).cast("double").alias("lp_sum"),
         )
     )
     src = sw.groupBy("source").agg(

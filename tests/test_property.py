@@ -154,3 +154,65 @@ def test_percentile_median_bitwise_match_duckdb(spark):
             assert bits(s[f"p{i}"]) == bits(d[2 + i]), (
                 ps[i], groups[g], s[f"p{i}"], d[2 + i],
             )
+
+
+# ---------------------------------------------------------------------------
+# Decimal -> double read-back: every exact DECIMAL aggregate must come
+# back as the same double on both engines.  Spark's plain
+# ``cast("double")`` is correctly rounded on every decimal width (the
+# long-backed p <= 18 ones included); DuckDB's direct cast is not once
+# the unscaled value exceeds 2^53, so ``dec_double_sql`` goes through the
+# digit string.  Both must equal Python's correctly rounded
+# ``float(str(d))`` bit for bit.
+# ---------------------------------------------------------------------------
+
+_READBACK_TYPES = [(38, 9), (30, 6), (18, 6), (38, 0)]
+
+
+def test_decimal_readback_bitwise_match_duckdb(spark):
+    import random
+    import struct
+    from decimal import Decimal
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from network_ids_using_pyspark_spark.functions.numeric import dec_double_sql
+
+    rnd = random.Random(20261020)
+
+    def draw(p, s):
+        # unscaled values of 16..p digits, all above 2^53
+        nd = rnd.randint(16, p)
+        u = rnd.randrange(max(2**53 + 1, 10 ** (nd - 1)), 10**nd)
+        return str(Decimal(rnd.choice((-1, 1)) * u).scaleb(-s))
+
+    n = 500
+    cols = [f"c{p}_{s}" for p, s in _READBACK_TYPES]
+    rows = [(k, *(draw(p, s) for p, s in _READBACK_TYPES)) for k in range(n)]
+
+    def bits(x):
+        return struct.pack("<d", x)
+
+    want = [[bits(float(r[1 + i])) for r in rows] for i in range(len(cols))]
+
+    df = spark.createDataFrame(rows, "k int, " + ", ".join(f"{c} string" for c in cols))
+    got = sorted(df.select("k", *[
+        F.col(c).cast(f"decimal({p}, {s})").cast("double").alias(c)
+        for c, (p, s) in zip(cols, _READBACK_TYPES)
+    ]).collect())
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t(k INTEGER, {', '.join(f'{c} VARCHAR' for c in cols)})")
+    con.executemany(f"INSERT INTO t VALUES ({', '.join('?' * (1 + len(cols)))})", rows)
+    duck = con.execute(
+        "SELECT k, "
+        + ", ".join(
+            dec_double_sql(f"CAST({c} AS DECIMAL({p}, {s}))")
+            for c, (p, s) in zip(cols, _READBACK_TYPES)
+        )
+        + " FROM t ORDER BY k"
+    ).fetchall()
+    for i, c in enumerate(cols):
+        assert [bits(r[1 + i]) for r in got] == want[i], c
+        assert [bits(r[1 + i]) for r in duck] == want[i], c

@@ -221,6 +221,39 @@ def test_package_has_one_portable_hash_kernel():
     assert found == []
 
 
+_VARCHAR_HOP = re.compile(r"AS VARCHAR\)\s+AS DOUBLE", re.I)
+
+
+def _is_cast_to(node, dtype) -> bool:
+    return (isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "cast"
+            and len(node.args) == 1 and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == dtype)
+
+
+def test_package_has_one_decimal_readback_rule():
+    """``functions/numeric.py`` owns the decimal → double read-back: Spark
+    casts a decimal straight to double, so no ``.cast("string")`` is read
+    back as ``"double"`` and no ``to_d`` closure wraps either engine's
+    hop; the DuckDB ``CAST(CAST(… AS VARCHAR) AS DOUBLE)`` text is only
+    spelled by ``dec_double_sql``."""
+    found = []
+    for rel, tree in _package_trees():
+        for scope, node in _scoped_nodes(tree):
+            if _is_cast_to(node, "double") and _is_cast_to(node.func.value, "string"):
+                hit = "string hop"
+            elif (isinstance(node, ast.Assign) and isinstance(node.value, ast.Lambda)
+                  and any(getattr(t, "id", None) == "to_d" for t in node.targets)):
+                hit = "to_d"
+            elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                  and _VARCHAR_HOP.search(node.value)
+                  and rel != os.path.join("functions", "numeric.py")):
+                hit = "VARCHAR hop"
+            else:
+                continue
+            found.append((rel, scope, node.lineno, hit))
+    assert found == []
+
+
 def test_repeated_queries_reuse_generated_classes(spark):
     """One pass of the 8 cohort entries compiles ~156 classes at
     sf0.001, more than Spark's default cache of 100, so without a larger
