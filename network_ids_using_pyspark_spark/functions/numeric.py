@@ -19,6 +19,18 @@ correctly rounded — it equals ``float(str(d))`` bit for bit on every
 ``dec_double_sql``, because its direct ``CAST(d AS DOUBLE)`` double-rounds
 once the unscaled value exceeds 2^53, while the exact digit string read
 by ``strtod`` is correctly rounded.
+
+Grid rule: a derived double goes onto the 10^-k grid only through
+``quantize[_sql](term, k)`` (round to k places, cast to ``DECIMAL(38, k)``),
+and ``grid_sum[_sql](term, k)`` sums those exactly and reads the sum back.
+Widening a narrower cast to 38 is safe only inside a read-back ``SUM``,
+which keeps the scale in both engines: Spark types ``decimal(38, 9) +
+decimal(38, 9)`` as ``decimal(38, 8)``, so a term that feeds decimal ``+``
+/ ``*`` at a narrower width keeps its own cast.  The engines' ``round``
+agree only away from decimal half-way points (Spark rounds ``-0.5035445``
+to ``-0.503545``, DuckDB to ``-0.503544``): the twins are bit-identical
+while no term lands on a tie, true of every oracled entry on the fixture.
+A fix for ties is an edit to ``quantize_sql`` alone.
 """
 
 from __future__ import annotations
@@ -57,12 +69,22 @@ def dec_avg_sql(expr: str) -> str:
     return f"({dec_sum_sql(expr)} / COUNT({expr}))"
 
 
-def q9_sum(term: Column) -> Column:
+def quantize(term: Column, places: int) -> Column:
+    """``term`` rounded onto the 10^-places grid, as ``decimal(38, places)``."""
+    return F.round(term, places).cast(f"decimal(38, {places})")
+
+
+def quantize_sql(expr: str, places: int) -> str:
+    """Oracle twin of ``quantize``."""
+    return f"CAST(round({expr}, {places}) AS DECIMAL(38, {places}))"
+
+
+def grid_sum(term: Column, places: int) -> Column:
     """Exact sum of a derived double term: each row quantized to the
-    1e-9 grid, summed in DECIMAL(38, 9), then read back as a double."""
-    return F.sum(F.round(term, 9).cast("decimal(38, 9)")).cast("double")
+    10^-places grid, summed in DECIMAL, then read back as a double."""
+    return F.sum(quantize(term, places)).cast("double")
 
 
-def q9_sum_sql(term: str) -> str:
-    """Oracle twin of ``q9_sum``."""
-    return dec_double_sql(f"SUM(CAST(round({term}, 9) AS DECIMAL(38, 9)))")
+def grid_sum_sql(expr: str, places: int) -> str:
+    """Oracle twin of ``grid_sum``."""
+    return dec_double_sql(f"SUM({quantize_sql(expr, places)})")

@@ -11,6 +11,9 @@ Cross-engine reproducibility rules used throughout (see
   * double SUM/AVG → exact DECIMAL accumulation, final cast to double;
   * DECIMAL → double read-back: a plain ``.cast("double")`` on Spark,
     ``dec_double_sql`` (the correctly rounded VARCHAR hop) on DuckDB;
+  * a derived double goes onto the 10^-k grid only through
+    ``quantize[_sql](term, k)``, and its exact sum is read back only
+    through ``grid_sum[_sql](term, k)``;
   * anything hash-dependent → the portable md5-based hash;
   * query outputs never contain NaN/±Inf *values* (only counts of them) —
     cleaning ops exist precisely to strip those;

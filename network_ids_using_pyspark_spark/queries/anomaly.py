@@ -21,7 +21,7 @@ from ..functions.hashing import (
     portable_uniform,
     portable_uniform_sql,
 )
-from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -1087,7 +1087,7 @@ m AS (
 ),
 v AS (
   SELECT round(sqrt(
-           {dec_double_sql("SUM(CAST(round((y - m.mean) * (y - m.mean), 6) AS DECIMAL(38, 6)))")}
+           {grid_sum_sql("(y - m.mean) * (y - m.mean)", 6)}
            / (ANY_VALUE(m.n) - 1)), 9) AS sd
   FROM daily CROSS JOIN m
 ),
@@ -1138,11 +1138,9 @@ def q_cusum_mean_shift_daily(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
     )
     dm = daily.crossJoin(F.broadcast(m))
-    sq = F.round((F.col("y") - F.col("mean")) * (F.col("y") - F.col("mean")), 6)
+    sq = (F.col("y") - F.col("mean")) * (F.col("y") - F.col("mean"))
     sd = dm.agg(
-        F.round(
-            F.sqrt(F.sum(sq.cast("decimal(38, 6)")).cast("double") / (F.first("n") - 1)), 9
-        ).alias("sd")
+        F.round(F.sqrt(grid_sum(sq, 6) / (F.first("n") - 1)), 9).alias("sd")
     )
     ser = (
         dm.crossJoin(F.broadcast(sd))

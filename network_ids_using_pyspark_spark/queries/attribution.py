@@ -28,7 +28,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -100,7 +100,7 @@ def _attribution_sql() -> str:
         for k in range(1, _K + 1):
             parts.append(
                 f"v{k}_{tag} AS MATERIALIZED (SELECT m.dst AS state, "
-                + q9_sum_sql("v.prob * m.p")
+                + grid_sum_sql("v.prob * m.p", 9)
                 + f" AS prob FROM v{k-1}_{tag} v JOIN pm_{tag} m ON m.src = v.state "
                 "GROUP BY 1)"
             )
@@ -492,7 +492,7 @@ np AS (
 per_src AS (
   SELECT src, CAST(SUM(n) AS BIGINT) AS tot,
          """
-    + q9_sum_sql("-p * round(log2(p), 6)")
+    + grid_sum_sql("-p * round(log2(p), 6)", 9)
     + """ AS h_bits
   FROM np GROUP BY src
 ),
@@ -555,7 +555,7 @@ def q_markov_entropy_rate(spark, sf_dir):
         .groupBy("src")
         .agg(
             F.sum("n").cast("long").alias("tot"),
-            q9_sum(F.col("term")).alias("h_bits"),
+            grid_sum(F.col("term"), 9).alias("h_bits"),
         )
     )
     t = per_src.agg(F.sum("tot").cast("long").alias("t"))

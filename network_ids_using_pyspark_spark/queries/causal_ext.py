@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -100,10 +100,10 @@ def _rdd_sql() -> str:
         sy = dec_double_sql(f"SUM({only('y')})")
         return (
             f"SUM(CASE WHEN {pred} THEN 1 ELSE 0 END) * 1.0 AS {tag}_n,\n"
-            f"  {q9_sum_sql(only('u'))} AS {tag}_s1,\n"
-            f"  {q9_sum_sql(only('u * u'))} AS {tag}_s11,\n"
+            f"  {grid_sum_sql(only('u'), 9)} AS {tag}_s1,\n"
+            f"  {grid_sum_sql(only('u * u'), 9)} AS {tag}_s11,\n"
             f"  {sy} AS {tag}_sy,\n"
-            f"  {q9_sum_sql(only('u * y'))} AS {tag}_s1y"
+            f"  {grid_sum_sql(only('u * y'), 9)} AS {tag}_s1y"
         )
 
     return f"""
@@ -156,10 +156,10 @@ def q_rdd_cutoff_effect(spark, sf_dir):
         only = lambda t: F.when(F.col("side") == tag, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}_n"),
-            q9_sum(only(F.col("u"))).alias(f"{tag}_s1"),
-            q9_sum(only(F.col("u") * F.col("u"))).alias(f"{tag}_s11"),
+            grid_sum(only(F.col("u")), 9).alias(f"{tag}_s1"),
+            grid_sum(only(F.col("u") * F.col("u")), 9).alias(f"{tag}_s11"),
             F.sum(only(F.col("y"))).cast("double").alias(f"{tag}_sy"),
-            q9_sum(only(F.col("u") * F.col("y"))).alias(f"{tag}_s1y"),
+            grid_sum(only(F.col("u") * F.col("y")), 9).alias(f"{tag}_s1y"),
         ]
 
     m = u.agg(*(side_agg("l") + side_agg("r")))
@@ -333,9 +333,9 @@ agg AS (
          {dec_double_sql(
              "SUM(CASE WHEN m_t > 0 AND m_c > 0 THEN CAST(sy_t AS DECIMAL(38, 9)) END)"
          )} AS sum_y_t,
-         {q9_sum_sql(
+         {grid_sum_sql(
              "CASE WHEN m_t > 0 AND m_c > 0 "
-             "THEN (CAST(m_t AS DOUBLE) / CAST(m_c AS DOUBLE)) * sy_c END"
+             "THEN (CAST(m_t AS DOUBLE) / CAST(m_c AS DOUBLE)) * sy_c END", 9
          )} AS sum_wy_c
   FROM strata
 )
@@ -390,7 +390,7 @@ def q_cem_matching_att(spark, sf_dir):
         F.sum(F.when(matched, F.col("sy_t").cast("decimal(38, 9)"))).cast("double").alias(
             "sum_y_t"
         ),
-        q9_sum(F.when(matched, w_term)).alias("sum_wy_c"),
+        grid_sum(F.when(matched, w_term), 9).alias("sum_wy_c"),
     )
     return agg.select(
         "n_strata_total",
@@ -428,11 +428,11 @@ def _chow_moments_sql(tag: str, pred: str) -> str:
     only = lambda t: f"CASE WHEN {pred} THEN {t} END"  # noqa: E731
     return (
         f"SUM(CASE WHEN {pred} THEN 1 ELSE 0 END) * 1.0 AS {tag}_n,\n"
-        f"  {q9_sum_sql(only('t'))} AS {tag}_s1,\n"
-        f"  {q9_sum_sql(only('t * t'))} AS {tag}_s11,\n"
-        f"  {q9_sum_sql(only('r'))} AS {tag}_sy,\n"
-        f"  {q9_sum_sql(only('t * r'))} AS {tag}_s1y,\n"
-        f"  {q9_sum_sql(only('r * r'))} AS {tag}_syy"
+        f"  {grid_sum_sql(only('t'), 9)} AS {tag}_s1,\n"
+        f"  {grid_sum_sql(only('t * t'), 9)} AS {tag}_s11,\n"
+        f"  {grid_sum_sql(only('r'), 9)} AS {tag}_sy,\n"
+        f"  {grid_sum_sql(only('t * r'), 9)} AS {tag}_s1y,\n"
+        f"  {grid_sum_sql(only('r * r'), 9)} AS {tag}_syy"
     )
 
 
@@ -510,11 +510,11 @@ def q_chow_break_test(spark, sf_dir):
         only = lambda c: F.when(F.col("pre") == flag, c)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}_n"),
-            q9_sum(only(F.col("t"))).alias(f"{tag}_s1"),
-            q9_sum(only(F.col("t") * F.col("t"))).alias(f"{tag}_s11"),
-            q9_sum(only(F.col("r"))).alias(f"{tag}_sy"),
-            q9_sum(only(F.col("t") * F.col("r"))).alias(f"{tag}_s1y"),
-            q9_sum(only(F.col("r") * F.col("r"))).alias(f"{tag}_syy"),
+            grid_sum(only(F.col("t")), 9).alias(f"{tag}_s1"),
+            grid_sum(only(F.col("t") * F.col("t")), 9).alias(f"{tag}_s11"),
+            grid_sum(only(F.col("r")), 9).alias(f"{tag}_sy"),
+            grid_sum(only(F.col("t") * F.col("r")), 9).alias(f"{tag}_s1y"),
+            grid_sum(only(F.col("r") * F.col("r")), 9).alias(f"{tag}_syy"),
         ]
 
     m = daily.agg(*(seg("a", 1) + seg("b", 0)))
@@ -567,7 +567,7 @@ UNION ALL
 SELECT 'd_cem_att' AS estimator, att_cem AS estimate FROM ({_CEM_SQL})
 UNION ALL
 SELECT 'e_tlearner_pop' AS estimator,
-       round({q9_sum_sql("(n_t + n_c) * uplift_pred")}
+       round({grid_sum_sql("(n_t + n_c) * uplift_pred", 9)}
              / SUM(n_t + n_c), 6) AS estimate
 FROM ({_TL_SQL})
 ORDER BY estimator
@@ -627,7 +627,7 @@ def q_causal_e2e_readout(spark, sf_dir):
         q_uplift_tlearner_segments(spark, sf_dir)
         .agg(
             F.round(
-                q9_sum((F.col("n_t") + F.col("n_c")) * F.col("uplift_pred"))
+                grid_sum((F.col("n_t") + F.col("n_c")) * F.col("uplift_pred"), 9)
                 / F.sum(F.col("n_t") + F.col("n_c")),
                 6,
             ).alias("estimate")
@@ -794,8 +794,8 @@ def q_rdd_density_check(spark, sf_dir):
 def _smd_sql() -> str:
     mom = lambda p, arm, x: (  # noqa: E731
         f"SUM(CASE WHEN t = {arm} THEN 1 ELSE 0 END) * 1.0 AS {p}n,\n"
-        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN {x} END')} AS {p}s,\n"
-        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN {x} * {x} END')} AS {p}ss"
+        f"    {grid_sum_sql(f'CASE WHEN t = {arm} THEN {x} END', 9)} AS {p}s,\n"
+        f"    {grid_sum_sql(f'CASE WHEN t = {arm} THEN {x} * {x} END', 9)} AS {p}ss"
     )
     var = lambda p: f"(({p}ss - {p}s * {p}s / {p}n) / ({p}n - 1.0))"  # noqa: E731
     smd = (
@@ -816,7 +816,7 @@ FROM (
     {mom('c_', 0, x)}
   FROM s
 ) raw CROSS JOIN (
-  SELECT {q9_sum_sql(f'w * {x}')} AS wc_s, {q9_sum_sql('w')} AS wc_n
+  SELECT {grid_sum_sql(f'w * {x}', 9)} AS wc_s, {grid_sum_sql('w', 9)} AS wc_n
   FROM sw WHERE t = 0
 ) wtd
 """
@@ -887,15 +887,15 @@ def q_covariate_balance_smd(spark, sf_dir):
         only = lambda arm, term: F.when(F.col("t") == arm, term)  # noqa: E731
         raw = sw.agg(
             F.count(only(1, F.lit(1))).cast("double").alias("t_n"),
-            q9_sum(only(1, x)).alias("t_s"),
-            q9_sum(only(1, x * x)).alias("t_ss"),
+            grid_sum(only(1, x), 9).alias("t_s"),
+            grid_sum(only(1, x * x), 9).alias("t_ss"),
             F.count(only(0, F.lit(1))).cast("double").alias("c_n"),
-            q9_sum(only(0, x)).alias("c_s"),
-            q9_sum(only(0, x * x)).alias("c_ss"),
+            grid_sum(only(0, x), 9).alias("c_s"),
+            grid_sum(only(0, x * x), 9).alias("c_ss"),
         )
         wtd = sw.filter(F.col("t") == 0).agg(
-            q9_sum(F.col("w") * x).alias("wc_s"),
-            q9_sum(F.col("w")).alias("wc_n"),
+            grid_sum(F.col("w") * x, 9).alias("wc_s"),
+            grid_sum(F.col("w"), 9).alias("wc_n"),
         )
         var = lambda p: (  # noqa: E731
             (F.col(f"{p}ss") - F.col(f"{p}s") * F.col(f"{p}s") / F.col(f"{p}n"))

@@ -20,7 +20,7 @@ from ..operators.relational import (
     top_k_per_group,
 )
 from ..operators.windowed import ranked, rolling_dec_sum, sessionize
-from ..functions.numeric import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
+from ..functions.numeric import dec_avg, dec_avg_sql, dec_double_sql, dec_sum, dec_sum_sql
 from . import register
 
 _LINEITEM_NUMERICS = [
@@ -242,12 +242,13 @@ def top_parts_per_brand(spark, sf_dir):
 
 @register(
     "user_rolling_value",
-    """
+    f"""
     SELECT event_id, user_id,
-           CAST(SUM(CAST(value AS DECIMAL(30, 6))) OVER (
-             PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS rolling_sum
+           {dec_double_sql(
+               "SUM(CAST(value AS DECIMAL(30, 6))) OVER ("
+               "PARTITION BY user_id ORDER BY ts ASC, event_id ASC"
+               " ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)"
+           )} AS rolling_sum
     FROM events
     """,
 )

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_sum_sql
+from ..functions.numeric import grid_sum, grid_sum_sql
 from ..operators.textops import (
     PII_PATTERNS,
     chunk_documents,
@@ -337,7 +337,7 @@ probs AS (
 )
 SELECT t.doc_id,
        COUNT(*) AS n_tokens,
-       (-{dec_sum_sql("round(log2(p), 6)")} / COUNT(*)) AS mean_surprisal_bits
+       (-{grid_sum_sql("log2(p)", 6)} / COUNT(*)) AS mean_surprisal_bits
 FROM toks t JOIN probs pr ON t.tok = pr.tok
 GROUP BY t.doc_id
 """
@@ -371,15 +371,12 @@ def q_unigram_surprisal_score(spark, sf_dir):
         toks.groupBy("tok")
         .agg((F.count(F.lit(1)).cast("double") / F.lit(float(total))).alias("p"))
     )
-    quantized = F.round(F.log2("p"), 6).cast("decimal(30, 6)")
     return (
         toks.join(F.broadcast(probs), "tok")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
-            (-F.sum(quantized).cast("double") / F.count(F.lit(1))).alias(
-                "mean_surprisal_bits"
-            ),
+            (-grid_sum(F.log2("p"), 6) / F.count(F.lit(1))).alias("mean_surprisal_bits"),
         )
     )
 
@@ -700,10 +697,8 @@ cb AS (SELECT w1, w2, COUNT(*) AS n_bi FROM big GROUP BY 1, 2),
 cu AS (SELECT w1, COUNT(*) AS n_ctx FROM big GROUP BY 1)
 SELECT b.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       CAST(-SUM(CAST(round(log2((cb.n_bi + {_LM_A})
-                                 / (cu.n_ctx + {_LM_A} * vocab.v)), 6)
-                      AS DECIMAL(30, 6))) AS DOUBLE) / COUNT(*)
-         AS mean_logloss_bits
+       -{grid_sum_sql(f"log2((cb.n_bi + {_LM_A}) / (cu.n_ctx + {_LM_A} * vocab.v))", 6)}
+         / COUNT(*) AS mean_logloss_bits
 FROM big b
 JOIN cb ON b.w1 = cb.w1 AND b.w2 = cb.w2
 JOIN cu ON b.w1 = cu.w1
@@ -744,13 +739,9 @@ def q_bigram_lm_logloss(spark, sf_dir):
     )
     cb = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_bi"))
     cu = big.groupBy("w1").agg(F.count(F.lit(1)).alias("n_ctx"))
-    logp = F.round(
-        F.log2(
-            (F.col("n_bi") + F.lit(_LM_A))
-            / (F.col("n_ctx") + F.lit(_LM_A) * F.col("v"))
-        ),
-        6,
-    ).cast("decimal(30, 6)")
+    logp = F.log2(
+        (F.col("n_bi") + F.lit(_LM_A)) / (F.col("n_ctx") + F.lit(_LM_A) * F.col("v"))
+    )
     return (
         big.join(F.broadcast(cb), ["w1", "w2"])
         .join(F.broadcast(cu), "w1")
@@ -758,9 +749,7 @@ def q_bigram_lm_logloss(spark, sf_dir):
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            (-F.sum(logp).cast("double") / F.count(F.lit(1))).alias(
-                "mean_logloss_bits"
-            ),
+            (-grid_sum(logp, 6) / F.count(F.lit(1))).alias("mean_logloss_bits"),
         )
     )
 

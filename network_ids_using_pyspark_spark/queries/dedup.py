@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64_sql
-from ..functions.numeric import q9_sum, q9_sum_sql
+from ..functions.numeric import grid_sum, grid_sum_sql
 from ..operators.dedup import (
     embedding_near_dup_pairs,
     hyperplanes,
@@ -947,7 +947,7 @@ SELECT d.source,
        CAST(SUM(p.n) AS BIGINT) AS n_instances,
        CAST(SUM(p.h) AS BIGINT) AS n_heavy_instances,
        CAST(SUM(p.h) AS DOUBLE) / SUM(p.n) AS heavy_share,
-       {q9_sum_sql("CAST(p.h AS DOUBLE) / p.n")} / COUNT(*) AS mean_heavy_frac,
+       {grid_sum_sql("CAST(p.h AS DOUBLE) / p.n", 9)} / COUNT(*) AS mean_heavy_frac,
        CAST(ANY_VALUE(cut.c) AS BIGINT) AS heavy_df_cutoff
 FROM per_doc p JOIN documents d ON d.doc_id = p.doc_id CROSS JOIN cut
 GROUP BY d.source
@@ -998,7 +998,7 @@ def q_stop_shingle_profile(spark, sf_dir):
             F.sum("h").cast("long").alias("n_heavy_instances"),
             (F.sum("h").cast("double") / F.sum("n")).alias("heavy_share"),
             (
-                q9_sum(F.col("h").cast("double") / F.col("n")) / F.count(F.lit(1))
+                grid_sum(F.col("h").cast("double") / F.col("n"), 9) / F.count(F.lit(1))
             ).alias("mean_heavy_frac"),
             F.first("c").cast("long").alias("heavy_df_cutoff"),
         )

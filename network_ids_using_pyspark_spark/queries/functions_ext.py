@@ -37,12 +37,13 @@ def q_lag_value_delta(spark, sf_dir):
 
 @register(
     "range_frame_hour_sum",
-    """
+    f"""
     SELECT event_id, user_id,
-           CAST(SUM(CAST(value AS DECIMAL(30, 6))) OVER (
-             PARTITION BY user_id ORDER BY epoch_us(ts) ASC
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS hour_sum
+           {dec_double_sql(
+               "SUM(CAST(value AS DECIMAL(30, 6))) OVER ("
+               "PARTITION BY user_id ORDER BY epoch_us(ts) ASC"
+               " RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)"
+           )} AS hour_sum
     FROM events
     """,
 )

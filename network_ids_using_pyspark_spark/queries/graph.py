@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_double_sql
+from ..functions.numeric import dec_double_sql, grid_sum, grid_sum_sql
 from ..operators.graphops import pagerank_int, pagerank_sql_ctes
 from ..sources.tables import load_table
 from . import register
@@ -363,12 +363,12 @@ wedges AS (
 ),
 aa AS (
   SELECT x, y,
-         SUM(CAST(round(1.0 / ln(d.d), 6) AS DECIMAL(30, 6))) AS aa_dec,
+         {grid_sum_sql("1.0 / ln(d.d)", 6)} AS aa_score,
          CAST(COUNT(*) AS BIGINT) AS n_common
   FROM wedges w JOIN okz d ON w.z = d.node
   GROUP BY x, y
 )
-SELECT x, y, CAST(aa.aa_dec AS DOUBLE) AS aa_score, n_common
+SELECT x, y, aa_score, n_common
 FROM aa
 LEFT JOIN pairs p ON aa.x = p.p1 AND aa.y = p.p2
 WHERE p.p1 IS NULL
@@ -427,11 +427,8 @@ def q_adamic_adar_link_prediction(spark, sf_dir):
     # whole point (the hub never reaches the self-join)
     e1 = e1.join(F.broadcast(okz.select(F.col("node").alias("z"), "d")), "z")
     wedges = e1.join(e2, "z").filter(F.col("x") < F.col("y"))
-    term = F.round(F.lit(1.0) / F.log(F.col("d").cast("double")), 6).cast(
-        "decimal(30, 6)"
-    )
     aa = wedges.groupBy("x", "y").agg(
-        F.sum(term).cast("double").alias("aa_score"),
+        grid_sum(F.lit(1.0) / F.log(F.col("d").cast("double")), 6).alias("aa_score"),
         F.count(F.lit(1)).alias("n_common"),
     )
     out = aa.join(

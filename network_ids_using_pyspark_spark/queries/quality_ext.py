@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.numeric import grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from ..operators.textops import tokens
 from . import register
@@ -330,6 +331,12 @@ def q_hits_hub_authority(spark, sf_dir):
 
 _KN_D = 0.75
 
+_KN_LOG2_P = f"""log2(
+           (GREATEST(CAST(cb.n_bi AS DOUBLE) - {_KN_D}, 0.0)
+            + {_KN_D} * CAST(cu.n_follow AS DOUBLE)
+              * (CAST(cc.n_prec AS DOUBLE) / CAST(tt.n_types AS DOUBLE)))
+           / CAST(cu.n_ctx AS DOUBLE))"""
+
 _KN_SQL = f"""
 WITH t AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
@@ -348,12 +355,7 @@ cc AS (SELECT w2, COUNT(DISTINCT w1) AS n_prec FROM big GROUP BY 1),
 tt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_types FROM cb)
 SELECT b.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       CAST(-SUM(CAST(round(log2(
-           (GREATEST(CAST(cb.n_bi AS DOUBLE) - {_KN_D}, 0.0)
-            + {_KN_D} * CAST(cu.n_follow AS DOUBLE)
-              * (CAST(cc.n_prec AS DOUBLE) / CAST(tt.n_types AS DOUBLE)))
-           / CAST(cu.n_ctx AS DOUBLE)), 6) AS DECIMAL(30, 6)))
-         AS DOUBLE) / COUNT(*) AS mean_kn_bits
+       -{grid_sum_sql(_KN_LOG2_P, 6)} / COUNT(*) AS mean_kn_bits
 FROM big b
 JOIN cb ON b.w1 = cb.w1 AND b.w2 = cb.w2
 JOIN cu ON b.w1 = cu.w1
@@ -400,7 +402,7 @@ def q_kn_bigram_score(spark, sf_dir):
         * F.col("n_follow").cast("double")
         * (F.col("n_prec").cast("double") / F.col("n_types").cast("double"))
     ) / F.col("n_ctx").cast("double")
-    logp = F.round(F.log2(p), 6).cast("decimal(30, 6)")
+    logp = F.log2(p)
     return (
         big.join(F.broadcast(cb), ["w1", "w2"])
         .join(F.broadcast(cu), "w1")
@@ -409,6 +411,6 @@ def q_kn_bigram_score(spark, sf_dir):
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            (-F.sum(logp).cast("double") / F.count(F.lit(1))).alias("mean_kn_bits"),
+            (-grid_sum(logp, 6) / F.count(F.lit(1))).alias("mean_kn_bits"),
         )
     )

@@ -40,7 +40,7 @@ from ..operators.rangepart import (
     ntile_boundaries,
     ntile_sizes,
 )
-from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from . import register
 from .datamgmt import _BIN_CUT, _BIN_N, _BINNING_SQL
@@ -400,7 +400,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
        caps.lo AS cap_lo, caps.hi AS cap_hi,
        CAST(SUM(CASE WHEN v < caps.lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped_lo,
        CAST(SUM(CASE WHEN v > caps.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped_hi,
-       round({q9_sum_sql("GREATEST(caps.lo, LEAST(caps.hi, v))")}
+       round({grid_sum_sql("GREATEST(caps.lo, LEAST(caps.hi, v))", 9)}
              / COUNT(*), 6) AS mean_winsorized
 FROM ranked CROSS JOIN caps
 GROUP BY caps.lo, caps.hi
@@ -431,7 +431,7 @@ def q_winsorized_mean_orders(spark, sf_dir):
         F.sum(F.when(F.col("v") < lo, 1).otherwise(0)).cast("long").alias("n_clamped_lo"),
         F.sum(F.when(F.col("v") > hi, 1).otherwise(0)).cast("long").alias("n_clamped_hi"),
         F.round(
-            q9_sum(clamped) / F.count(F.lit(1)),
+            grid_sum(clamped, 9) / F.count(F.lit(1)),
             6,
         ).alias("mean_winsorized"),
     )

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_double_sql
+from ..functions.numeric import dec_double_sql, grid_sum_sql
 from ..operators.search import bm25_topk, bm25_topk_sql
 from ..sources.tables import load_table
 from . import register
@@ -212,7 +212,7 @@ SELECT CAST((SELECT nr FROM n_rel) AS BIGINT) AS n_relevant,
              " THEN CAST(round((SELECT disc FROM d WHERE d.i = rk), 9)"
              " AS DECIMAL(20, 9)) ELSE CAST(0 AS DECIMAL(20, 9)) END)"
          )}
-         / (SELECT {dec_double_sql("SUM(CAST(round(disc, 9) AS DECIMAL(20, 9)))")}
+         / (SELECT {grid_sum_sql("disc", 9)}
             FROM d WHERE i <= LEAST({_IR_K}, (SELECT nr FROM n_rel))), 6)
          AS ndcg_at_{_IR_K}
 FROM j

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_bucket_sql
-from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum_sql, grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from ..operators.similarity import as_double_array, cosine_topk
 from . import register
@@ -51,10 +51,10 @@ def q_cosine_topk(spark, sf_dir):
 
 @register(
     "embedding_label_centroid_norms",
-    """
+    f"""
     SELECT label,
            COUNT(*) AS n,
-           CAST(SUM(CAST(sq AS DECIMAL(30, 6))) AS DOUBLE) AS sum_sq_norm
+           {dec_sum_sql("sq")} AS sum_sq_norm
     FROM (
       SELECT label, list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])) AS sq
       FROM embeddings
@@ -842,21 +842,21 @@ def _pca_sql() -> str:
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
         f"dims AS (SELECT unnest(range(1, {_PCA_D + 1})) AS i)",
         "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM e)",
-        f"m AS (SELECT d.i, {q9_sum_sql('e.v[d.i]')} / ANY_VALUE(nn.n) AS mi "
+        f"m AS (SELECT d.i, {grid_sum_sql('e.v[d.i]', 9)} / ANY_VALUE(nn.n) AS mi "
         "FROM e CROSS JOIN dims d CROSS JOIN nn GROUP BY d.i)",
         "cells AS (SELECT e.vec_id, d.i, e.v[d.i] - m.mi AS c "
         "FROM e CROSS JOIN dims d JOIN m ON m.i = d.i)",
-        f"cov AS MATERIALIZED (SELECT a.i, b.i AS j, {q9_sum_sql('a.c * b.c')} / ANY_VALUE(nn.n) AS cij "
+        f"cov AS MATERIALIZED (SELECT a.i, b.i AS j, {grid_sum_sql('a.c * b.c', 9)} / ANY_VALUE(nn.n) AS cij "
         "FROM cells a JOIN cells b USING (vec_id) CROSS JOIN nn GROUP BY a.i, b.i)",
         "w0 AS (SELECT i, 1.0 AS w FROM dims)",
     ]
     for t in range(1, _PCA_T + 1):
         parts.append(
-            f"u{t} AS (SELECT cov.i, {q9_sum_sql('cov.cij * w.w')} AS u "
+            f"u{t} AS (SELECT cov.i, {grid_sum_sql('cov.cij * w.w', 9)} AS u "
             f"FROM cov JOIN w{t-1} w ON w.i = cov.j GROUP BY cov.i)"
         )
         parts.append(
-            f"nm{t} AS (SELECT round(sqrt({q9_sum_sql('u * u')}), 9) AS s FROM u{t})"
+            f"nm{t} AS (SELECT round(sqrt({grid_sum_sql('u * u', 9)}), 9) AS s FROM u{t})"
         )
         parts.append(
             f"w{t} AS (SELECT u.i, u.u / nm.s AS w FROM u{t} u CROSS JOIN nm{t} nm)"
@@ -923,7 +923,7 @@ def q_pca_power_iteration_exact(spark, sf_dir):
     m = (
         base.crossJoin(F.broadcast(nn))
         .groupBy("i")
-        .agg((q9_sum(F.col("xi")) / F.first("n")).alias("mi"))
+        .agg((grid_sum(F.col("xi"), 9) / F.first("n")).alias("mi"))
     )
     # Centered vectors via the 1-row broadcast mean array; the outer
     # product explodes MAP-SIDE (flatten of the nested transform), so
@@ -953,7 +953,7 @@ def q_pca_power_iteration_exact(spark, sf_dir):
             (F.floor(F.col("p") / _PCA_D) + 1).cast("int").alias("i"),
             (F.col("p") % _PCA_D + 1).cast("int").alias("j"),
         )
-        .agg((q9_sum(F.col("val")) / F.first("n")).alias("cij"))
+        .agg((grid_sum(F.col("val"), 9) / F.first("n")).alias("cij"))
     )
     # Config-bounded reduced collect (D² = 4096 exact cells): the five
     # matvec steps below are float-identical to the former Spark
@@ -1518,8 +1518,8 @@ WITH vals AS (
 per_dim AS (
   SELECT dim,
          CAST(COUNT(*) AS DOUBLE) AS n,
-         {q9_sum_sql("val")} AS s,
-         {q9_sum_sql("val * val")} AS ss
+         {grid_sum_sql("val", 9)} AS s,
+         {grid_sum_sql("val * val", 9)} AS ss
   FROM vals GROUP BY dim
 ),
 vars_ AS (
@@ -1528,7 +1528,7 @@ vars_ AS (
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_dims,
          {dec_double_sql("SUM(CAST(var AS DECIMAL(38, 9)))")} AS sv,
-         {q9_sum_sql("var * var")} AS svv,
+         {grid_sum_sql("var * var", 9)} AS svv,
          MIN({{'var': var, 'dim': dim}}) AS lo,
          MAX({{'var': var, 'dim': dim}}) AS hi
   FROM vars_
@@ -1566,8 +1566,8 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     )
     per_dim = vals.groupBy("dim").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q9_sum(F.col("val")).alias("s"),
-        q9_sum(F.col("val") * F.col("val")).alias("ss"),
+        grid_sum(F.col("val"), 9).alias("s"),
+        grid_sum(F.col("val") * F.col("val"), 9).alias("ss"),
     )
     vars_ = per_dim.select(
         "dim",
@@ -1580,7 +1580,7 @@ def q_embedding_isotropy_profile(spark, sf_dir):
     agg = vars_.agg(
         F.count(F.lit(1)).cast("long").alias("n_dims"),
         F.sum(F.col("var").cast("decimal(38, 9)")).cast("double").alias("sv"),
-        q9_sum(F.col("var") * F.col("var")).alias("svv"),
+        grid_sum(F.col("var") * F.col("var"), 9).alias("svv"),
         F.min(F.struct("var", "dim")).alias("lo"),
         F.max(F.struct("var", "dim")).alias("hi"),
     )

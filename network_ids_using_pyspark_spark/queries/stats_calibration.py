@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from . import register
 from .stats_regression import (  # noqa: F401
@@ -398,8 +398,8 @@ def _circ_sql() -> str:
 WITH m AS (
   SELECT event_type,
          CAST(COUNT(*) AS BIGINT) AS n,
-         {q9_sum_sql(f'cos({theta})')} AS c,
-         {q9_sum_sql(f'sin({theta})')} AS s
+         {grid_sum_sql(f'cos({theta})', 9)} AS c,
+         {grid_sum_sql(f'sin({theta})', 9)} AS s
   FROM events GROUP BY event_type
 )
 SELECT event_type, n,
@@ -432,8 +432,8 @@ def q_circular_hour_stats(spark, sf_dir):
 
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        q9_sum(F.cos(theta)).alias("c"),
-        q9_sum(F.sin(theta)).alias("s"),
+        grid_sum(F.cos(theta), 9).alias("c"),
+        grid_sum(F.sin(theta), 9).alias("s"),
     )
     ang = F.atan2(F.col("s"), F.col("c"))
     return m.select(
@@ -475,9 +475,9 @@ def _pglm_sql() -> str:
     parts.append(f"rf AS (SELECT x1, x2, y, {_PGLM_MU} AS mu FROM s CROSS JOIN b{t}_)")
     parts.append(
         "dev AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        + q9_sum_sql(
+        + grid_sum_sql(
             "2.0 * (CASE WHEN y > 0 THEN y * round(ln(y / mu), 9) ELSE 0.0 END"
-            " - (y - mu))"
+            " - (y - mu))", 9
         )
         + " AS d FROM rf)"
     )
@@ -540,7 +540,7 @@ def q_poisson_glm_exact(spark, sf_dir):
             F.round(F.lit(b), 6).alias(c)
             for b, c in zip(beta, ("b_intercept", "b_month", "b_urgent"))
         ],
-        F.round(q9_sum(dev_term) / F.count(F.lit(1)), 6).alias("mean_deviance"),
+        F.round(grid_sum(dev_term, 9) / F.count(F.lit(1)), 6).alias("mean_deviance"),
     )
 
 
@@ -572,19 +572,19 @@ def _brier_sql() -> str:
     )
     parts.append(
         "bs AS (SELECT "
-        + q9_sum_sql("(p - y) * (p - y)")
+        + grid_sum_sql("(p - y) * (p - y)", 9)
         + " AS sq FROM scored)"
     )
     parts.append(
         "decomp AS (SELECT "
-        + q9_sum_sql(
+        + grid_sum_sql(
             "n_b * (sp / n_b - CAST(sy_b AS DOUBLE) / n_b)"
-            " * (sp / n_b - CAST(sy_b AS DOUBLE) / n_b)"
+            " * (sp / n_b - CAST(sy_b AS DOUBLE) / n_b)", 9
         )
         + " AS rel_num, "
-        + q9_sum_sql(
+        + grid_sum_sql(
             "n_b * (CAST(sy_b AS DOUBLE) / n_b - CAST(tot.sy AS DOUBLE) / tot.n)"
-            " * (CAST(sy_b AS DOUBLE) / n_b - CAST(tot.sy AS DOUBLE) / tot.n)"
+            " * (CAST(sy_b AS DOUBLE) / n_b - CAST(tot.sy AS DOUBLE) / tot.n)", 9
         )
         + " AS res_num FROM bins CROSS JOIN tot)"
     )
@@ -636,14 +636,14 @@ def q_brier_decomposition(spark, sf_dir):
         F.sum("n_b").cast("long").alias("n"), F.sum("sy_b").cast("long").alias("sy")
     )
     bs = scored.agg(
-        q9_sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias("sq")
+        grid_sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y")), 9).alias("sq")
     )
     pbar = F.col("sp") / F.col("n_b")
     ybar_b = F.col("sy_b").cast("double") / F.col("n_b")
     ybar = F.col("sy").cast("double") / F.col("n")
     decomp = bins.crossJoin(F.broadcast(tot)).agg(
-        q9_sum(F.col("n_b") * (pbar - ybar_b) * (pbar - ybar_b)).alias("rel_num"),
-        q9_sum(F.col("n_b") * (ybar_b - ybar) * (ybar_b - ybar)).alias("res_num"),
+        grid_sum(F.col("n_b") * (pbar - ybar_b) * (pbar - ybar_b), 9).alias("rel_num"),
+        grid_sum(F.col("n_b") * (ybar_b - ybar) * (ybar_b - ybar), 9).alias("res_num"),
     )
     return (
         tot.crossJoin(F.broadcast(bs))
@@ -769,11 +769,11 @@ cells AS (
 ),
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
-         {q9_sum_sql("a * d / n")} AS r,
-         {q9_sum_sql("b * c / n")} AS sstat,
-         {q9_sum_sql("(a + d) / n * (a * d / n)")} AS prr,
-         {q9_sum_sql("(a + d) / n * (b * c / n) + (b + c) / n * (a * d / n)")} AS psrq,
-         {q9_sum_sql("(b + c) / n * (b * c / n)")} AS qss
+         {grid_sum_sql("a * d / n", 9)} AS r,
+         {grid_sum_sql("b * c / n", 9)} AS sstat,
+         {grid_sum_sql("(a + d) / n * (a * d / n)", 9)} AS prr,
+         {grid_sum_sql("(a + d) / n * (b * c / n) + (b + c) / n * (a * d / n)", 9)} AS psrq,
+         {grid_sum_sql("(b + c) / n * (b * c / n)", 9)} AS qss
   FROM cells
 )
 SELECT n_strata,
@@ -819,11 +819,11 @@ def q_mantel_haenszel_or(spark, sf_dir):
     a, b, c, d, n = (F.col(x) for x in "abcdn")
     agg = cells.agg(
         F.count(F.lit(1)).cast("long").alias("n_strata"),
-        q9_sum(a * d / n).alias("r"),
-        q9_sum(b * c / n).alias("sstat"),
-        q9_sum((a + d) / n * (a * d / n)).alias("prr"),
-        q9_sum((a + d) / n * (b * c / n) + (b + c) / n * (a * d / n)).alias("psrq"),
-        q9_sum((b + c) / n * (b * c / n)).alias("qss"),
+        grid_sum(a * d / n, 9).alias("r"),
+        grid_sum(b * c / n, 9).alias("sstat"),
+        grid_sum((a + d) / n * (a * d / n), 9).alias("prr"),
+        grid_sum((a + d) / n * (b * c / n) + (b + c) / n * (a * d / n), 9).alias("psrq"),
+        grid_sum((b + c) / n * (b * c / n), 9).alias("qss"),
     )
     log_or = F.log(F.col("r") / F.col("sstat"))
     se = F.sqrt(
@@ -857,8 +857,8 @@ def _mde_moments(tag: str, arm: int) -> str:
     only = lambda t: f"CASE WHEN t = {arm} THEN {t} END"  # noqa: E731
     return (
         f"SUM(CASE WHEN t = {arm} THEN 1 ELSE 0 END) * 1.0 AS {tag}n,\n"
-        f"  {q9_sum_sql(only('yo'))} AS {tag}s,\n"
-        f"  {q9_sum_sql(only('yo * yo'))} AS {tag}ss"
+        f"  {grid_sum_sql(only('yo'), 9)} AS {tag}s,\n"
+        f"  {grid_sum_sql(only('yo * yo'), 9)} AS {tag}ss"
     )
 
 
@@ -912,8 +912,8 @@ def q_ab_mde_readout(spark, sf_dir):
         only = lambda c: F.when(F.col("t") == a, c)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{tag}n"),
-            q9_sum(only(F.col("yo"))).alias(f"{tag}s"),
-            q9_sum(only(F.col("yo") * F.col("yo"))).alias(f"{tag}ss"),
+            grid_sum(only(F.col("yo")), 9).alias(f"{tag}s"),
+            grid_sum(only(F.col("yo") * F.col("yo")), 9).alias(f"{tag}ss"),
         ]
 
     m = s.agg(*(arm("t_", 1) + arm("c_", 0)))
@@ -961,8 +961,8 @@ def _gs_sql() -> str:
     )
     m = lambda p, arm: (  # noqa: E731
         f"SUM(CASE WHEN t = {arm} THEN 1 ELSE 0 END) * 1.0 AS {p}n,\n"
-        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN yo END')} AS {p}s,\n"
-        f"    {q9_sum_sql(f'CASE WHEN t = {arm} THEN yo * yo END')} AS {p}ss"
+        f"    {grid_sum_sql(f'CASE WHEN t = {arm} THEN yo END', 9)} AS {p}s,\n"
+        f"    {grid_sum_sql(f'CASE WHEN t = {arm} THEN yo * yo END', 9)} AS {p}ss"
     )
     var = lambda p: f"(({p}ss_c - {p}s_c * {p}s_c / {p}n_c) / ({p}n_c - 1.0))"  # noqa: E731
     return f"""
@@ -1033,8 +1033,8 @@ def q_group_sequential_obf(spark, sf_dir):
         only = lambda c: F.when(F.col("t") == a, c)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{p}n"),
-            q9_sum(only(F.col("yo"))).alias(f"{p}s"),
-            q9_sum(only(F.col("yo") * F.col("yo"))).alias(f"{p}ss"),
+            grid_sum(only(F.col("yo")), 9).alias(f"{p}s"),
+            grid_sum(only(F.col("yo") * F.col("yo")), 9).alias(f"{p}ss"),
         ]
 
     per_slice = (
@@ -1102,22 +1102,22 @@ WITH cust AS (
 ),
 tot AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         {dec_double_sql("SUM(CAST(round(x, 6) AS DECIMAL(38, 9)))")} AS sx
+         {grid_sum_sql("x", 6)} AS sx
   FROM cust
 ),
 grp AS (
   SELECT nation, CAST(COUNT(*) AS BIGINT) AS n_g,
-         {dec_double_sql("SUM(CAST(round(x, 6) AS DECIMAL(38, 9)))")} AS sx_g
+         {grid_sum_sql("x", 6)} AS sx_g
   FROM cust GROUP BY nation
 ),
 within AS (
   SELECT nation, n_g, sx_g,
-         round({q9_sum_sql(_THEIL_WITHIN)} / n_g, 9) AS t_within
+         round({grid_sum_sql(_THEIL_WITHIN, 9)} / n_g, 9) AS t_within
   FROM cust JOIN grp USING (nation)
   GROUP BY nation, n_g, sx_g
 ),
 btw AS (
-  SELECT round({q9_sum_sql(_THEIL_BETWEEN)}, 9) AS t_between
+  SELECT round({grid_sum_sql(_THEIL_BETWEEN, 9)}, 9) AS t_between
   FROM grp CROSS JOIN tot
 )
 SELECT w.nation, w.n_g AS n_customers,
@@ -1152,7 +1152,7 @@ def q_theil_index_decomposition(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
 
-    sx = q9_sum(F.round(F.col("x"), 6))
+    sx = grid_sum(F.col("x"), 6)
     tot = cust.agg(
         F.count(F.lit(1)).cast("double").alias("n"), sx.alias("sx")
     )
@@ -1166,9 +1166,7 @@ def q_theil_index_decomposition(spark, sf_dir):
         .groupBy("nation", "n_g", "sx_g")
         .agg(
             F.round(
-                q9_sum(
-                    F.col("x") / mu_g * F.round(F.log(F.col("x") / mu_g), 6)
-                )
+                grid_sum(F.col("x") / mu_g * F.round(F.log(F.col("x") / mu_g), 6), 9)
                 / F.col("n_g").cast("double"),
                 9,
             ).alias("t_within")
@@ -1179,10 +1177,7 @@ def q_theil_index_decomposition(spark, sf_dir):
         grp.crossJoin(F.broadcast(tot))
         .agg(
             F.round(
-                q9_sum(
-                    (F.col("sx_g") / F.col("sx"))
-                    * F.round(F.log(mu_g / mu), 6)
-                ),
+                grid_sum((F.col("sx_g") / F.col("sx")) * F.round(F.log(mu_g / mu), 6), 9),
                 9,
             ).alias("t_between")
         )
@@ -1216,10 +1211,10 @@ _JB_SQL = f"""
 WITH m AS (
   SELECT event_type,
          CAST(COUNT(*) AS DOUBLE) AS n,
-         {q9_sum_sql("value")} AS s1,
-         {q9_sum_sql("value * value")} AS s2,
-         {q9_sum_sql("value * value * value")} AS s3,
-         {q9_sum_sql("value * value * value * value")} AS s4
+         {grid_sum_sql("value", 9)} AS s1,
+         {grid_sum_sql("value * value", 9)} AS s2,
+         {grid_sum_sql("value * value * value", 9)} AS s3,
+         {grid_sum_sql("value * value * value * value", 9)} AS s4
   FROM events GROUP BY event_type
 ),
 c AS (
@@ -1258,10 +1253,10 @@ def q_jarque_bera_normality(spark, sf_dir):
 
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q9_sum(v).alias("s1"),
-        q9_sum(v * v).alias("s2"),
-        q9_sum(v * v * v).alias("s3"),
-        q9_sum(v * v * v * v).alias("s4"),
+        grid_sum(v, 9).alias("s1"),
+        grid_sum(v * v, 9).alias("s2"),
+        grid_sum(v * v * v, 9).alias("s3"),
+        grid_sum(v * v * v * v, 9).alias("s4"),
     )
     mu = F.col("s1") / F.col("n")
     m2 = F.col("s2") / F.col("n") - mu * mu

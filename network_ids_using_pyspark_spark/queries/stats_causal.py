@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, grid_sum, grid_sum_sql, quantize, quantize_sql
 from ..sources.tables import load_table
 from . import register
 from .stats_regression import (  # noqa: F401
@@ -43,8 +43,8 @@ def _huber_iter_sql(i: int) -> str:
     return f"""
 mu{i + 1} AS MATERIALIZED (
   SELECT round(
-    {q9_sum_sql(f"({w}) * v")}
-    / {q9_sum_sql(w)}, 9) AS m
+    {grid_sum_sql(f"({w}) * v", 9)}
+    / {grid_sum_sql(w, 9)}, 9) AS m
   FROM vals
   WHERE v <> (SELECT m FROM mu{i}) OR abs(v - (SELECT m FROM mu{i})) > 0
 )"""
@@ -63,7 +63,7 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM vals) AS n,
        round((SELECT m FROM mu0), 6) AS median_init,
        round((SELECT s FROM scale), 6) AS mad_scale,
        round((SELECT m FROM mu{_HUB_T}), 6) AS mu_huber,
-       round((SELECT {q9_sum_sql("v")} / COUNT(*) FROM vals), 6) AS mean_plain,
+       round((SELECT {grid_sum_sql("v", 9)} / COUNT(*) FROM vals), 6) AS mean_plain,
        (SELECT CAST(SUM(CASE WHEN abs(v - (SELECT m FROM mu{_HUB_T}))
                               > {_HUB_K} * (SELECT s FROM scale) THEN 1 ELSE 0 END) AS BIGINT)
         FROM vals) AS n_downweighted
@@ -103,7 +103,7 @@ def q_huber_location_irls(spark, sf_dir):
         w = F.least(F.lit(1.0), F.lit(_HUB_K) * F.lit(s) / dev(m))
         m = (
             vals.filter((F.col("v") != F.lit(m)) | (dev(m) > 0))
-            .agg(F.round(q9_sum(w * F.col("v")) / q9_sum(w), 9))
+            .agg(F.round(grid_sum(w * F.col("v"), 9) / grid_sum(w, 9), 9))
             .first()[0]
         )
     return vals.agg(
@@ -111,7 +111,7 @@ def q_huber_location_irls(spark, sf_dir):
         F.round(F.lit(m0), 6).alias("median_init"),
         F.round(F.lit(s), 6).alias("mad_scale"),
         F.round(F.lit(m), 6).alias("mu_huber"),
-        F.round(q9_sum(F.col("v")) / F.count(F.lit(1)), 6).alias("mean_plain"),
+        F.round(grid_sum(F.col("v"), 9) / F.count(F.lit(1)), 6).alias("mean_plain"),
         F.sum(F.when(dev(m) > F.lit(_HUB_K) * F.lit(s), 1).otherwise(0))
         .cast("long")
         .alias("n_downweighted"),
@@ -336,6 +336,8 @@ _SPRT_L1 = round(__import__("math").log(_SPRT_P1 / _SPRT_P0), 9)  # per success
 _SPRT_L0 = round(__import__("math").log((1 - _SPRT_P1) / (1 - _SPRT_P0)), 9)  # per failure
 _SPRT_BOUND = round(__import__("math").log(0.95 / 0.05), 9)  # alpha = beta = 0.05
 
+_SPRT_INC = f"n_success * {_SPRT_L1} + (n_trials - n_success) * {_SPRT_L0}"
+
 _SPRT_SQL = f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS d,
@@ -346,8 +348,7 @@ WITH daily AS (
 walk AS (
   SELECT d, n_trials, n_success,
          {dec_double_sql(
-             f"SUM(CAST(round(n_success * {_SPRT_L1}"
-             f" + (n_trials - n_success) * {_SPRT_L0}, 9) AS DECIMAL(38, 9)))"
+             f"SUM({quantize_sql(_SPRT_INC, 9)})"
              " OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
          )} AS llr
   FROM daily
@@ -386,20 +387,15 @@ def q_sprt_ab_monitor(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    inc = F.round(
-        F.col("n_success") * F.lit(_SPRT_L1)
-        + (F.col("n_trials") - F.col("n_success")) * F.lit(_SPRT_L0),
-        9,
-    )
+    inc = F.col("n_success") * F.lit(_SPRT_L1) + (
+        F.col("n_trials") - F.col("n_success")
+    ) * F.lit(_SPRT_L0)
     wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     walk = daily.select(
         "d",
         "n_trials",
         "n_success",
-        F.sum(inc.cast("decimal(38, 9)"))
-        .over(wcum)
-        .cast("double")
-        .alias("llr"),
+        F.sum(quantize(inc, 9)).over(wcum).cast("double").alias("llr"),
     )
     flagged = walk.select(
         "*",
@@ -453,13 +449,13 @@ def _ipw_sql() -> str:
     parts.append(
         "ipw AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
         "CAST(SUM(y) AS BIGINT) AS n_treated, "
-        + q9_sum_sql("y / p")
+        + grid_sum_sql("y / p", 9)
         + " AS sw_t, "
-        + q9_sum_sql("y * yo / p")
+        + grid_sum_sql("y * yo / p", 9)
         + " AS swy_t, "
-        + q9_sum_sql("(1 - y) / (1.0 - p)")
+        + grid_sum_sql("(1 - y) / (1.0 - p)", 9)
         + " AS sw_c, "
-        + q9_sum_sql("(1 - y) * yo / (1.0 - p)")
+        + grid_sum_sql("(1 - y) * yo / (1.0 - p)", 9)
         + " AS swy_c FROM rf)"
     )
     return (
@@ -519,10 +515,10 @@ def q_propensity_ipw_ate(spark, sf_dir, beta=None):
             F.round(F.lit(b), 6).alias(c)
             for b, c in zip(beta, ("b_intercept", "b_month", "b_fstatus"))
         ],
-        q9_sum(t_col / p_col).alias("sw_t"),
-        q9_sum(t_col * yo / p_col).alias("swy_t"),
-        q9_sum((1 - t_col) / (1.0 - p_col)).alias("sw_c"),
-        q9_sum((1 - t_col) * yo / (1.0 - p_col)).alias("swy_c"),
+        grid_sum(t_col / p_col, 9).alias("sw_t"),
+        grid_sum(t_col * yo / p_col, 9).alias("swy_t"),
+        grid_sum((1 - t_col) / (1.0 - p_col), 9).alias("sw_c"),
+        grid_sum((1 - t_col) * yo / (1.0 - p_col), 9).alias("swy_c"),
     )
     return agg.select(
         "n",
@@ -590,7 +586,7 @@ def _aipw_sql() -> str:
         "fin AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
         "CAST(SUM(y) AS BIGINT) AS n_treated, "
         "ANY_VALUE(a0) AS a0, ANY_VALUE(c0) AS c0, "
-        + q9_sum_sql(_AIPW_DR)
+        + grid_sum_sql(_AIPW_DR, 9)
         + " AS sdr FROM rf)"
     )
     return (
@@ -686,7 +682,7 @@ def q_aipw_doubly_robust_ate(spark, sf_dir, beta=None):
         F.round(F.first("a0"), 6).alias("mt_intercept"),
         F.round(F.first("c0"), 6).alias("mc_intercept"),
         F.round(F.lit(beta[0]), 6).alias("ps_intercept"),
-        q9_sum(F.expr(_AIPW_DR)).alias("sdr"),
+        grid_sum(F.expr(_AIPW_DR), 9).alias("sdr"),
     )
     return fin.select(
         "n",
@@ -729,8 +725,8 @@ _BH_Z = (
 def _bh_sql() -> str:
     side = lambda p, g: (  # noqa: E731
         f"SUM(CASE WHEN grp = {g} THEN 1 ELSE 0 END) * 1.0 AS {p}n,\n"
-        f"  {q9_sum_sql(f'CASE WHEN grp = {g} THEN v END')} AS {p}sv,\n"
-        f"  {q9_sum_sql(f'CASE WHEN grp = {g} THEN v * v END')} AS {p}svv"
+        f"  {grid_sum_sql(f'CASE WHEN grp = {g} THEN v END', 9)} AS {p}sv,\n"
+        f"  {grid_sum_sql(f'CASE WHEN grp = {g} THEN v * v END', 9)} AS {p}svv"
     )
     return f"""
 WITH s AS (
@@ -798,8 +794,8 @@ def q_fdr_bh_metric_screen(spark, sf_dir):
         only = lambda t: F.when(F.col("grp") == g, t)  # noqa: E731
         return [
             F.count(only(F.lit(1))).cast("double").alias(f"{p}n"),
-            q9_sum(only(F.col("v"))).alias(f"{p}sv"),
-            q9_sum(only(F.col("v") * F.col("v"))).alias(f"{p}svv"),
+            grid_sum(only(F.col("v")), 9).alias(f"{p}sv"),
+            grid_sum(only(F.col("v") * F.col("v")), 9).alias(f"{p}svv"),
         ]
 
     m = s.groupBy("event_type").agg(*(side("a_", 0) + side("b_", 1)))
@@ -908,13 +904,13 @@ b0_ AS (SELECT 0.0 AS b)"""
     parts = [pre]
     for i in range(1, iters + 1):
         parts.append(
-            f"i{i} AS (SELECT ANY_VALUE(b) AS b, {q9_sum_sql(_COX_U)} AS su, "
-            f"{q9_sum_sql(_COX_I)} AS si FROM ev CROSS JOIN b{i-1}_)"
+            f"i{i} AS (SELECT ANY_VALUE(b) AS b, {grid_sum_sql(_COX_U, 9)} AS su, "
+            f"{grid_sum_sql(_COX_I, 9)} AS si FROM ev CROSS JOIN b{i-1}_)"
         )
         parts.append(f"b{i}_ AS (SELECT round(b + su / si, 9) AS b FROM i{i})")
     t = iters
     parts.append(
-        f"fin AS (SELECT ANY_VALUE(b) AS b, {q9_sum_sql(_COX_I)} AS si "
+        f"fin AS (SELECT ANY_VALUE(b) AS b, {grid_sum_sql(_COX_I, 9)} AS si "
         f"FROM ev CROSS JOIN b{t}_)"
     )
     return (
@@ -991,14 +987,14 @@ def q_cox_ph_exact(spark, sf_dir):
     for _ in range(_COX_T):
         it = ev.crossJoin(F.broadcast(beta)).agg(
             F.first("b").alias("b"),
-            q9_sum(F.expr(_COX_U)).alias("su"),
-            q9_sum(F.expr(_COX_I)).alias("si"),
+            grid_sum(F.expr(_COX_U), 9).alias("su"),
+            grid_sum(F.expr(_COX_I), 9).alias("si"),
         )
         beta = it.select(
             F.round(F.col("b") + F.col("su") / F.col("si"), 9).alias("b")
         )
     fin = ev.crossJoin(F.broadcast(beta)).agg(
-        F.first("b").alias("b"), q9_sum(F.expr(_COX_I)).alias("si")
+        F.first("b").alias("b"), grid_sum(F.expr(_COX_I), 9).alias("si")
     )
     tot = obs.agg(
         F.count(F.lit(1)).cast("long").alias("n_obs"),
@@ -1338,15 +1334,15 @@ per_src AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n,
          {dec_double_sql("SUM(CAST(q AS DECIMAL(38, 9)))")} AS sq,
-         {q9_sum_sql("q * q")} AS sqq
+         {grid_sum_sql("q * q", 9)} AS sqq
   FROM per_doc GROUP BY source
 ),
 g AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS k,
-         {q9_sum_sql("sq / n")} AS sum_means,
-         {q9_sum_sql("sqq - sq * sq / n")} AS sum_within,
+         {grid_sum_sql("sq / n", 9)} AS sum_means,
+         {grid_sum_sql("sqq - sq * sq / n", 9)} AS sum_within,
          CAST(SUM(n - 1) AS DOUBLE) AS df_within,
-         {q9_sum_sql("1.0 / n")} AS sum_inv_n
+         {grid_sum_sql("1.0 / n", 9)} AS sum_inv_n
   FROM per_src
 ),
 g2 AS (
@@ -1355,7 +1351,7 @@ g2 AS (
   FROM g
 ),
 spread AS (
-  SELECT {q9_sum_sql("(sq / n - g2.grand) * (sq / n - g2.grand)")} AS ss
+  SELECT {grid_sum_sql("(sq / n - g2.grand) * (sq / n - g2.grand)", 9)} AS ss
   FROM per_src CROSS JOIN g2
 ),
 fac AS (
@@ -1399,18 +1395,18 @@ def q_james_stein_source_means(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(F.col("q").cast("decimal(38, 9)")).cast("double").alias("sq"),
-            q9_sum(F.col("q") * F.col("q")).alias("sqq"),
+            grid_sum(F.col("q") * F.col("q"), 9).alias("sqq"),
         )
         .localCheckpoint(eager=True)
     )
     g = per_src.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        q9_sum(F.col("sq") / F.col("n")).alias("sum_means"),
-        q9_sum(F.col("sqq") - F.col("sq") * F.col("sq") / F.col("n")).alias(
+        grid_sum(F.col("sq") / F.col("n"), 9).alias("sum_means"),
+        grid_sum(F.col("sqq") - F.col("sq") * F.col("sq") / F.col("n"), 9).alias(
             "sum_within"
         ),
         F.sum(F.col("n") - 1).cast("double").alias("df_within"),
-        q9_sum(F.lit(1.0) / F.col("n")).alias("sum_inv_n"),
+        grid_sum(F.lit(1.0) / F.col("n"), 9).alias("sum_inv_n"),
     ).selectExpr(
         "k",
         "sum_means / k AS grand",
@@ -1420,9 +1416,9 @@ def q_james_stein_source_means(spark, sf_dir):
     spread = (
         per_src.crossJoin(F.broadcast(g))
         .agg(
-            q9_sum(
+            grid_sum(
                 (F.col("sq") / F.col("n") - F.col("grand"))
-                * (F.col("sq") / F.col("n") - F.col("grand"))
+                * (F.col("sq") / F.col("n") - F.col("grand")), 9
             ).alias("ss")
         )
     )

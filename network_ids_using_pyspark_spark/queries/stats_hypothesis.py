@@ -18,7 +18,8 @@ from ..functions.hashing import (
     portable_uniform,
     portable_uniform_sql,
 )
-from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, grid_sum, grid_sum_sql
+from ..functions.numeric import quantize, quantize_sql
 from ..sources.tables import load_table
 
 from . import register
@@ -318,8 +319,8 @@ per_user AS (
 ),
 q AS (
   SELECT user_id, grp,
-         CAST(round(x, 9) AS DECIMAL(38, 9)) AS xq,
-         CAST(round(y, 9) AS DECIMAL(38, 9)) AS yq
+         {quantize_sql("x", 9)} AS xq,
+         {quantize_sql("y", 9)} AS yq
   FROM per_user
 ),
 adj AS (
@@ -394,8 +395,8 @@ def q_ab_cuped_readout(spark, sf_dir):
     # per-row hash is identical for all rows of the user
     q = per_user.select(
         F.col("grp_raw").alias("grp"),
-        F.round("x", 9).cast("decimal(38, 9)").alias("xq"),
-        F.round("y", 9).cast("decimal(38, 9)").alias("yq"),
+        quantize(F.col("x"), 9).alias("xq"),
+        quantize(F.col("y"), 9).alias("yq"),
     )
     # per-arm DECIMAL moments; globals are window sums over the 2-row
     # arm relation — the event log is scanned once (plan-tested)
@@ -540,8 +541,7 @@ risk AS (
 ),
 km AS (
   SELECT t, d_events, at_risk,
-         SUM(CAST(round(ln(1.0 - CAST(d_events AS DOUBLE) / at_risk), 9)
-                  AS DECIMAL(38, 9)))
+         SUM({quantize_sql("ln(1.0 - CAST(d_events AS DOUBLE) / at_risk)", 9)})
            OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS log_s
   FROM risk WHERE d_events > 0 AND at_risk > d_events
 )
@@ -603,11 +603,7 @@ def q_kaplan_meier_repeat_purchase(spark, sf_dir):
         "t",
         "d_events",
         "at_risk",
-        F.sum(
-            F.round(
-                F.log(1.0 - F.col("d_events").cast("double") / F.col("at_risk")), 9
-            ).cast("decimal(38, 9)")
-        )
+        F.sum(quantize(F.log(1.0 - F.col("d_events").cast("double") / F.col("at_risk")), 9))
         .over(w_cum)
         .alias("log_s"),
     )
@@ -1156,7 +1152,7 @@ WITH m AS (
 ),
 wgt AS (
   SELECT event_type, n,
-         CAST(round(n * sqrt((s2 - s1 * s1 / n) / n), 6) AS DECIMAL(38, 6)) AS nh_sh
+         {quantize_sql("n * sqrt((s2 - s1 * s1 / n) / n)", 6)} AS nh_sh
   FROM m
 ),
 tot AS (
@@ -1205,11 +1201,11 @@ def q_neyman_allocation(spark, sf_dir):
         F.sum(v).cast("double").alias("s1"),
         F.sum(v * v).cast("double").alias("s2"),
     )
-    nh_sh = F.round(
+    nh_sh = quantize(
         F.col("n")
         * F.sqrt((F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")) / F.col("n")),
         6,
-    ).cast("decimal(38, 6)")
+    )
     wgt = m.select("event_type", "n", nh_sh.alias("nh_sh"))
     w_all = Window.partitionBy()
     tot = wgt.withColumn("tot_dec", F.sum("nh_sh").over(w_all))
@@ -1410,7 +1406,7 @@ def _cramer_pair_sql(pair: str, table: str, x: str, y: str) -> str:
            COUNT(DISTINCT x) AS rx, COUNT(DISTINCT y) AS cy,
            -- observed-cell terms + the closed-form zero-cell mass:
            -- Σ_zero n_x·n_y/N = (N² − Σ_obs n_x·n_y)/N
-           {q9_sum_sql(_CRAMER_CELL)}
+           {grid_sum_sql(_CRAMER_CELL, 9)}
            + round(CAST(ANY_VALUE(nn) AS DOUBLE)
                    - CAST(SUM(CAST(nx AS DECIMAL(38, 0)) * ny) AS DOUBLE)
                      / ANY_VALUE(nn), 9) AS chi2
@@ -1472,7 +1468,7 @@ def q_cramers_v_report(spark, sf_dir):
             F.countDistinct("x").alias("rx"),
             F.countDistinct("y").alias("cy"),
             (
-                q9_sum(term)
+                grid_sum(term, 9)
                 + F.round(
                     F.first("nn").cast("double")
                     - F.sum(
@@ -1519,7 +1515,7 @@ _STUMP_BINS = 10
 
 
 def _stump_sql() -> str:
-    qln = lambda e: f"CAST(round(ln({e}), 9) AS DECIMAL(38, 9))"  # noqa: E731
+    qln = lambda e: quantize_sql(f"ln({e})", 9)  # noqa: E731
     return f"""
 WITH b AS (
   SELECT event_type AS label, value,
@@ -1649,7 +1645,7 @@ def stump_gains_from_bucketed(b):
     )
     cum = cum.join(F.broadcast(thrs), "bucket")
     nn = b.agg(F.count(F.lit(1)).alias("n"))
-    qln = lambda c: F.round(F.log(c), 9).cast("decimal(38, 9)")  # noqa: E731
+    qln = lambda c: quantize(F.log(c), 9)  # noqa: E731
     d9 = "decimal(38, 9)"
     zero9 = F.lit(0).cast(d9)
     # root-entropy numerator from the label totals themselves — a 1-row
@@ -1814,8 +1810,8 @@ tot AS (
 ),
 parts AS (
   SELECT ANY_VALUE(t.nn) AS nn, ANY_VALUE(t.k) AS k,
-         {dec_double_sql("SUM(CAST(round(g.n * (g.s / g.n - t.st / t.nn) * (g.s / g.n - t.st / t.nn), 6) AS DECIMAL(38, 6)))")} AS ssb,
-         {dec_double_sql("SUM(CAST(round(g.ss - g.n * (g.s / g.n) * (g.s / g.n), 6) AS DECIMAL(38, 6)))")} AS ssw
+         {grid_sum_sql("g.n * (g.s / g.n - t.st / t.nn) * (g.s / g.n - t.st / t.nn)", 6)} AS ssb,
+         {grid_sum_sql("g.ss - g.n * (g.s / g.n) * (g.s / g.n)", 6)} AS ssw
   FROM g CROSS JOIN tot t
 )
 SELECT CAST(nn AS BIGINT) AS n, CAST(k AS BIGINT) AS n_groups,
@@ -1863,12 +1859,8 @@ def q_anova_oneway_priority(spark, sf_dir):
     parts = j.agg(
         F.first("nn").alias("nn"),
         F.first("k").alias("k"),
-        F.sum(F.round(F.col("n") * (gm - ov) * (gm - ov), 6).cast("decimal(38, 6)"))
-        .cast("double")
-        .alias("ssb"),
-        F.sum(F.round(F.col("ss") - F.col("n") * gm * gm, 6).cast("decimal(38, 6)"))
-        .cast("double")
-        .alias("ssw"),
+        grid_sum(F.col("n") * (gm - ov) * (gm - ov), 6).alias("ssb"),
+        grid_sum(F.col("ss") - F.col("n") * gm * gm, 6).alias("ssw"),
     )
     return parts.select(
         F.col("nn").cast("long").alias("n"),

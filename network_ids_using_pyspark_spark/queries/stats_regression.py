@@ -11,7 +11,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_bucket, hash_bucket_sql
-from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, dec_sum, dec_sum_sql, grid_sum, grid_sum_sql
+from ..functions.numeric import quantize, quantize_sql
 from ..sources.tables import load_table
 from . import register
 
@@ -35,13 +36,13 @@ m AS (
   FROM daily
 ),
 den AS (
-  SELECT {dec_double_sql("SUM(CAST(round((c - m.mean) * (c - m.mean), 6) AS DECIMAL(38, 6)))")} AS den
+  SELECT {grid_sum_sql("(c - m.mean) * (c - m.mean)", 6)} AS den
   FROM daily CROSS JOIN m
 ),
 lags AS (SELECT unnest(range(1, {_ACF_MAXLAG + 1})) AS lag),
 num AS (
   SELECT l.lag,
-         {dec_double_sql("SUM(CAST(round((a.c - m.mean) * (b.c - m.mean), 6) AS DECIMAL(38, 6)))")} AS num,
+         {grid_sum_sql("(a.c - m.mean) * (b.c - m.mean)", 6)} AS num,
          COUNT(*) AS n_pairs
   FROM daily a
   CROSS JOIN lags l
@@ -70,8 +71,8 @@ def _acf_frames(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
     )
     dm = daily.crossJoin(F.broadcast(m))
-    cterm = F.round((F.col("c") - F.col("mean")) * (F.col("c") - F.col("mean")), 6)
-    den = dm.agg(F.sum(cterm.cast("decimal(38, 6)")).cast("double").alias("den"))
+    cterm = (F.col("c") - F.col("mean")) * (F.col("c") - F.col("mean"))
+    den = dm.agg(grid_sum(cterm, 6).alias("den"))
     lags = (
         daily.sparkSession.range(1, _ACF_MAXLAG + 1)
         .select(F.col("id").cast("int").alias("lag"))
@@ -82,9 +83,9 @@ def _acf_frames(spark, sf_dir):
         .crossJoin(F.broadcast(lags))
         .join(b, F.col("d2") == F.expr("date_add(d, lag)"))
     )
-    pterm = F.round((F.col("c") - F.col("mean")) * (F.col("c2") - F.col("mean")), 6)
+    pterm = (F.col("c") - F.col("mean")) * (F.col("c2") - F.col("mean"))
     num = paired.groupBy("lag").agg(
-        F.sum(pterm.cast("decimal(38, 6)")).cast("double").alias("num"),
+        grid_sum(pterm, 6).alias("num"),
         F.count(F.lit(1)).alias("n_pairs"),
     )
     rho = num.crossJoin(F.broadcast(den)).select(
@@ -343,7 +344,7 @@ def irls_sql_ctes(link: str = "logit") -> list[str]:
     columns (x1, x2, y).  The caller prepends ``s`` and scores against
     the last 1-row ``b{_IRLS_T}_``."""
     m, mean_sql, _ = _IRLS_LINKS[link]
-    sums = ", ".join(f"{q9_sum_sql(t)} AS {n}" for n, t in _irls_moments(link))
+    sums = ", ".join(f"{grid_sum_sql(t, 9)} AS {n}" for n, t in _irls_moments(link))
     parts = ["b0_ AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"]
     for i in range(1, _IRLS_T + 1):
         parts.append(
@@ -382,7 +383,7 @@ def irls_fit(src, link: str = "logit") -> tuple[float, float, float]:
     beta = (0.0, 0.0, 0.0)
     for _ in range(_IRLS_T):
         a = irls_score(src, beta, link).agg(
-            *[q9_sum(F.expr(t)).alias(n) for n, t in _irls_moments(link)]
+            *[grid_sum(F.expr(t), 9).alias(n) for n, t in _irls_moments(link)]
         )
         beta = tuple(
             a.select(
@@ -423,8 +424,8 @@ def _irls_sql() -> str:
     )
     parts.append(
         "loss AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        + q9_sum_sql(
-            "y * round(ln(p), 9) + (1 - y) * round(ln(1.0 - p), 9)"
+        + grid_sum_sql(
+            "y * round(ln(p), 9) + (1 - y) * round(ln(1.0 - p), 9)", 9
         )
         + " AS ll FROM rf)"
     )
@@ -473,7 +474,7 @@ def q_logreg_irls_exact(spark, sf_dir):
             F.round(F.lit(b), 6).alias(c)
             for b, c in zip(beta, ("b_intercept", "b_month", "b_urgent"))
         ],
-        F.round(-q9_sum(ll_term) / F.count(F.lit(1)), 6).alias("log_loss"),
+        F.round(-grid_sum(ll_term, 9) / F.count(F.lit(1)), 6).alias("log_loss"),
     )
 
 
@@ -502,10 +503,10 @@ train AS (SELECT * FROM src WHERE bkt < 8),
 test AS (SELECT * FROM src WHERE bkt >= 8),
 stats AS (
   SELECT cls, COUNT(*) AS n_c,
-         {q9_sum_sql('x1')} / COUNT(*) AS m1,
-         {q9_sum_sql('x1 * x1')} / COUNT(*) AS s11,
-         {q9_sum_sql('x2')} / COUNT(*) AS m2,
-         {q9_sum_sql('x2 * x2')} / COUNT(*) AS s22
+         {grid_sum_sql('x1', 9)} / COUNT(*) AS m1,
+         {grid_sum_sql('x1 * x1', 9)} / COUNT(*) AS s11,
+         {grid_sum_sql('x2', 9)} / COUNT(*) AS m2,
+         {grid_sum_sql('x2 * x2', 9)} / COUNT(*) AS s22
   FROM train GROUP BY cls
 ),
 model AS (
@@ -542,10 +543,10 @@ def _gnb_scored(spark, sf_dir):
 
     stats = train.groupBy("cls").agg(
         F.count(F.lit(1)).alias("n_c"),
-        (q9_sum(F.col("x1")) / F.count(F.lit(1))).alias("m1"),
-        (q9_sum(F.col("x1") * F.col("x1")) / F.count(F.lit(1))).alias("s11"),
-        (q9_sum(F.col("x2")) / F.count(F.lit(1))).alias("m2"),
-        (q9_sum(F.col("x2") * F.col("x2")) / F.count(F.lit(1))).alias("s22"),
+        (grid_sum(F.col("x1"), 9) / F.count(F.lit(1))).alias("m1"),
+        (grid_sum(F.col("x1") * F.col("x1"), 9) / F.count(F.lit(1))).alias("s11"),
+        (grid_sum(F.col("x2"), 9) / F.count(F.lit(1))).alias("m2"),
+        (grid_sum(F.col("x2") * F.col("x2"), 9) / F.count(F.lit(1))).alias("s22"),
     )
     n_train = train.agg(F.count(F.lit(1)).alias("n_train"))
     pi2 = float(_GNB_PI2)
@@ -740,13 +741,13 @@ conf AS (
   SELECT o_orderkey,
          MAX(CASE WHEN rk = 1 THEN actual END) AS actual,
          MAX(CASE WHEN rk = 1 THEN predicted END) AS predicted,
-         round(1.0 / ({q9_sum_sql("exp(ll - mx)")}), 9) AS confidence
+         round(1.0 / ({grid_sum_sql("exp(ll - mx)", 9)}), 9) AS confidence
   FROM (SELECT *, MAX(ll) OVER (PARTITION BY o_orderkey) AS mx FROM scored)
   GROUP BY o_orderkey
 )
 SELECT LEAST(CAST(floor(confidence * 100) AS BIGINT), 99) AS conf_pctbin,
        CAST(COUNT(*) AS BIGINT) AS n,
-       {q9_sum_sql('confidence')} / COUNT(*) AS avg_confidence,
+       {grid_sum_sql('confidence', 9)} / COUNT(*) AS avg_confidence,
        round(CAST(SUM(CASE WHEN actual = predicted THEN 1 ELSE 0 END) AS DOUBLE)
              / COUNT(*), 6) AS accuracy
 FROM conf GROUP BY 1
@@ -778,7 +779,7 @@ def q_gnb_calibration_curve(spark, sf_dir):
         .agg(
             F.max(F.when(F.col("rk") == 1, F.col("actual"))).alias("actual"),
             F.max(F.when(F.col("rk") == 1, F.col("mcls"))).alias("predicted"),
-            F.round(1.0 / q9_sum(F.exp(F.col("ll") - F.col("mx"))), 9).alias(
+            F.round(1.0 / grid_sum(F.exp(F.col("ll") - F.col("mx")), 9), 9).alias(
                 "confidence"
             ),
         )
@@ -789,7 +790,7 @@ def q_gnb_calibration_curve(spark, sf_dir):
         )
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        (q9_sum(F.col("confidence")) / F.count(F.lit(1))).alias("avg_confidence"),
+        (grid_sum(F.col("confidence"), 9) / F.count(F.lit(1))).alias("avg_confidence"),
         F.round(
             F.sum(F.when(F.col("actual") == F.col("predicted"), 1).otherwise(0)).cast(
                 "double"
@@ -890,7 +891,7 @@ probs AS (
          round(
            (CASE WHEN MAX(CASE WHEN mcls = 'F' THEN ll END) IS NULL THEN 0.0
                  ELSE exp(MAX(CASE WHEN mcls = 'F' THEN ll END) - MAX(ll)) END)
-           / ({q9_sum_sql("exp(ll - mx)")}),
+           / ({grid_sum_sql("exp(ll - mx)", 9)}),
            9) AS score
   FROM (SELECT *, MAX(ll) OVER (PARTITION BY o_orderkey) AS mx FROM scored)
   GROUP BY o_orderkey
@@ -946,7 +947,7 @@ def q_gnb_auc_exact(spark, sf_dir):
                     ),
                     F.lit(0.0),
                 )
-                / q9_sum(F.exp(F.col("ll") - F.col("mx"))),
+                / grid_sum(F.exp(F.col("ll") - F.col("mx")), 9),
                 9,
             ).alias("score"),
         )
@@ -1011,7 +1012,7 @@ def _qcf_sql() -> str:
         + f"""
 SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n,
-       round({q9_sum_sql('p')} / COUNT(*), 6) AS mean_score,
+       round({grid_sum_sql('p', 9)} / COUNT(*), 6) AS mean_score,
        CAST(SUM(CASE WHEN p >= {_QCF_T} THEN 1 ELSE 0 END) AS BIGINT)
          AS n_retained,
        round(CAST(SUM(CASE WHEN p >= {_QCF_T} THEN 1 ELSE 0 END) AS DOUBLE)
@@ -1040,7 +1041,7 @@ def _qcf_retention(scored):
     keep = F.when(F.col("p") >= _QCF_T, 1).otherwise(0)
     return scored.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(q9_sum(F.col("p")) / F.count(F.lit(1)), 6).alias("mean_score"),
+        F.round(grid_sum(F.col("p"), 9) / F.count(F.lit(1)), 6).alias("mean_score"),
         F.sum(keep).cast("long").alias("n_retained"),
         F.round(
             F.sum(keep).cast("double") / F.count(F.lit(1)), 6
@@ -1351,11 +1352,8 @@ _DID_CELL = f"""
   SELECT CASE WHEN user_id % 2 = 1 THEN 'T' ELSE 'C' END AS grp,
          CASE WHEN CAST(ts AS DATE) >= DATE '{{cut}}' THEN 'post' ELSE 'pre' END AS period,
          CAST(COUNT(*) AS BIGINT) AS n,
-         {q9_sum_sql("value")} AS s,
-         {dec_double_sql(
-             "SUM(CAST(round(value, 9) AS DECIMAL(38, 9))"
-             " * CAST(round(value, 9) AS DECIMAL(38, 9)))"
-         )} AS ss
+         {grid_sum_sql("value", 9)} AS s,
+         {dec_double_sql(f"SUM({quantize_sql('value', 9)} * {quantize_sql('value', 9)})")} AS ss
   FROM events WHERE event_type = 'purchase'
   GROUP BY 1, 2
 """
@@ -1409,7 +1407,7 @@ def q_diff_in_diff_readout(spark, sf_dir):
     Moments accumulate as 1e-9-quantized DECIMAL so cell means are
     bit-identical across engines and partitionings."""
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    x = F.round(F.col("value"), 9).cast("decimal(38, 9)")
+    x = quantize(F.col("value"), 9)
     cells = e.groupBy(
         F.when(F.col("user_id") % 2 == 1, "T").otherwise("C").alias("grp"),
         F.when(
@@ -1419,7 +1417,7 @@ def q_diff_in_diff_readout(spark, sf_dir):
         .alias("period"),
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        q9_sum(F.col("value")).alias("s"),
+        grid_sum(F.col("value"), 9).alias("s"),
         F.sum(x * x).cast("double").alias("ss"),
     )
     mean = F.col("s") / F.col("n")
@@ -1510,7 +1508,7 @@ resid AS (
 SELECT s.dow, s.n_days, round(s.seasonal, 6) AS seasonal,
        round({dec_double_sql("SUM(CAST(r.r AS DECIMAL(38, 9)))")}
              / s.n_days, 6) + 0.0 AS resid_mean,
-       round({q9_sum_sql("r.r * r.r")}
+       round({grid_sum_sql("r.r * r.r", 9)}
              / s.n_days, 6) AS resid_msq
 FROM seas s JOIN resid r ON r.dow = s.dow
 GROUP BY s.dow, s.n_days, s.seasonal
@@ -1568,7 +1566,7 @@ def q_stl_decompose_profile(spark, sf_dir):
             + F.lit(0.0)  # −0.0 → +0.0: DuckDB's round keeps the sign bit
         ).alias("resid_mean"),
         F.round(
-            q9_sum(F.col("r") * F.col("r")) / F.col("n_days"),
+            grid_sum(F.col("r") * F.col("r"), 9) / F.col("n_days"),
             6,
         ).alias("resid_msq"),
     ).select("dow", "n_days", F.round("seasonal", 6).alias("seasonal"), "resid_mean", "resid_msq")
@@ -1594,7 +1592,7 @@ rho AS (
   SELECT lag, round(num / den.den, 6) AS r FROM num CROSS JOIN den
 ),
 q AS (
-  SELECT {dec_double_sql("SUM(CAST(round(r * r / (m.n - lag), 12) AS DECIMAL(38, 12)))")} AS body
+  SELECT {grid_sum_sql("r * r / (m.n - lag)", 12)} AS body
   FROM rho CROSS JOIN m
 )
 SELECT CAST(m.n AS BIGINT) AS n_days,
@@ -1619,12 +1617,7 @@ def q_ljung_box_acf_test(spark, sf_dir):
     m, rho = _acf_frames(spark, sf_dir)
     q_body = (
         rho.crossJoin(F.broadcast(m))
-        .select(
-            F.round(F.col("acf") * F.col("acf") / (F.col("n") - F.col("lag")), 12)
-            .cast("decimal(38, 12)")
-            .alias("t")
-        )
-        .agg(F.sum("t").cast("double").alias("body"))
+        .agg(grid_sum(F.col("acf") * F.col("acf") / (F.col("n") - F.col("lag")), 12).alias("body"))
     )
     return (
         m.crossJoin(F.broadcast(q_body))

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64_sql
-from ..functions.numeric import dec_double_sql, q9_sum, q9_sum_sql
+from ..functions.numeric import dec_double_sql, grid_sum, grid_sum_sql
 from ..sources.tables import load_table
 from ..operators.textops import (
     doc_fingerprint,
@@ -964,7 +964,7 @@ ws AS (
   FROM mem GROUP BY w
 ),
 oscore AS (
-  SELECT m.doc_id, m.phrase_id, m.phrase, m.plen, {q9_sum_sql("wscore")} AS score
+  SELECT m.doc_id, m.phrase_id, m.phrase, m.plen, {grid_sum_sql("wscore", 9)} AS score
   FROM mem m JOIN ws USING (w)
   GROUP BY m.doc_id, m.phrase_id, m.phrase, m.plen
 )
@@ -1039,7 +1039,7 @@ def q_rake_keyword_extraction(spark, sf_dir):
         mem.join(ws, "w")
         .groupBy("doc_id", "phrase_id", "phrase", "plen")
         .agg(
-            q9_sum(F.col("wscore")).alias("score")
+            grid_sum(F.col("wscore"), 9).alias("score")
         )
     )
     return (

@@ -33,8 +33,10 @@ from ..functions.numeric import (
     dec_avg_sql,
     dec_double_sql,
     dec_sum_sql,
-    q9_sum,
-    q9_sum_sql,
+    grid_sum,
+    grid_sum_sql,
+    quantize,
+    quantize_sql,
 )
 from ..sources.tables import load_table
 from . import register
@@ -929,7 +931,7 @@ WITH hist AS (
 ),
 wt AS (
   SELECT word, n,
-         CAST(round(pow(CAST(n AS DOUBLE), {_NEG_POW}), 9) AS DECIMAL(38, 9)) AS w
+         {quantize_sql(f"pow(CAST(n AS DOUBLE), {_NEG_POW})", 9)} AS w
   FROM hist
 ),
 tot AS (SELECT SUM(w) AS t FROM wt),
@@ -977,9 +979,7 @@ def q_negative_sampling_table(spark, sf_dir):
     wt = hist.select(
         "word",
         "n",
-        F.round(F.pow(F.col("n").cast("double"), F.lit(_NEG_POW)), 9)
-        .cast("decimal(38, 9)")
-        .alias("w"),
+        quantize(F.pow(F.col("n").cast("double"), F.lit(_NEG_POW)), 9).alias("w"),
     )
     tot = wt.agg(F.sum("w").alias("t"))
     wcum = Window.orderBy(F.desc("n"), F.asc("word")).rowsBetween(
@@ -1304,9 +1304,7 @@ tot AS (
 ),
 corpus AS (
   SELECT tot.v, tot.n,
-         {dec_double_sql(
-             "SUM(CAST(round(log2((c_w + 1.0) / (tot.n + tot.v)), 6) AS DECIMAL(38, 9)))"
-         )} AS lp_sum
+         {grid_sum_sql("log2((c_w + 1.0) / (tot.n + tot.v))", 6)} AS lp_sum
   FROM wc CROSS JOIN tot GROUP BY tot.v, tot.n
 ),
 src AS (
@@ -1316,8 +1314,8 @@ src AS (
 ),
 terms AS (
   SELECT sw.source,
-         {q9_sum_sql(_KL_OBS_TERM)} AS obs_term,
-         {q9_sum_sql(_KL_OBS_CORR)} AS obs_corr
+         {grid_sum_sql(_KL_OBS_TERM, 9)} AS obs_term,
+         {grid_sum_sql(_KL_OBS_CORR, 9)} AS obs_corr
   FROM sw JOIN wc USING (w) JOIN src ON sw.source = src.source
   CROSS JOIN corpus
   GROUP BY sw.source
@@ -1370,9 +1368,7 @@ def q_kl_divergence_by_source(spark, sf_dir):
         .agg(
             F.first("v").alias("v"),
             F.first("n").alias("n"),
-            F.sum(
-                lg6((F.col("c_w") + 1.0) / (F.col("n") + F.col("v"))).cast("decimal(38, 9)")
-            ).cast("double").alias("lp_sum"),
+            grid_sum(F.log2((F.col("c_w") + 1.0) / (F.col("n") + F.col("v"))), 6).alias("lp_sum"),
         )
     )
     src = sw.groupBy("source").agg(
@@ -1388,8 +1384,8 @@ def q_kl_divergence_by_source(spark, sf_dir):
     p_sw = (F.col("c_sw") + 1.0) / (F.col("n_s") + F.col("v"))
     lgp_w = lg6((F.col("c_w") + 1.0) / (F.col("n") + F.col("v")))
     terms = j.groupBy("source").agg(
-        q9_sum(p_sw * (lg6(p_sw) - lgp_w)).alias("obs_term"),
-        q9_sum(q_s * (lg6(q_s) - lgp_w)).alias("obs_corr"),
+        grid_sum(p_sw * (lg6(p_sw) - lgp_w), 9).alias("obs_term"),
+        grid_sum(q_s * (lg6(q_s) - lgp_w), 9).alias("obs_corr"),
     )
     out = (
         src.join(terms, "source")

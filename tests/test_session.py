@@ -16,7 +16,7 @@ import re
 import subprocess
 import sys
 
-from network_ids_using_pyspark_spark.queries import REGISTRY
+from network_ids_using_pyspark_spark.queries import REGISTRY, oracle_sql
 
 from .conftest import SF_DIR
 
@@ -222,6 +222,9 @@ def test_package_has_one_portable_hash_kernel():
 
 
 _VARCHAR_HOP = re.compile(r"AS VARCHAR\)\s+AS DOUBLE", re.I)
+_GRID_CAST = re.compile(r"^round\(.*\bAS DECIMAL\(38,\s*\d+\)$", re.I | re.S)
+_TO_DOUBLE = re.compile(r"\s+AS\s+DOUBLE$", re.I)
+_SCALED_DECIMAL = r"AS DECIMAL\(\d+,\s*[1-9]\d*\)"
 
 
 def _is_cast_to(node, dtype) -> bool:
@@ -230,27 +233,103 @@ def _is_cast_to(node, dtype) -> bool:
             and node.args[0].value == dtype)
 
 
+def _is_round(node) -> bool:
+    return (isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "round")
+
+
+def _name_of(node):
+    """The name a node binds or refers to: a variable, attribute, import
+    alias or definition."""
+    return getattr(node, "id", getattr(node, "attr", getattr(node, "name", None)))
+
+
+def _closing_paren(text: str, i: int) -> int:
+    depth = 0
+    for j in range(i, len(text)):
+        depth += {"(": 1, ")": -1}.get(text[j], 0)
+        if depth == 0:
+            return j
+    return len(text)
+
+
+def _sql_cast_bodies(text: str):
+    """The operand and target type of every ``CAST(…)`` in SQL text."""
+    for m in re.finditer(r"\bCAST\(", text, re.I):
+        yield text[m.end():_closing_paren(text, m.end() - 1)].strip()
+
+
+def _direct_decimal_to_double(sql: str) -> list[str]:
+    """``CAST(x AS DOUBLE)`` where ``x`` is a scaled decimal: a ``SUM``
+    (windowed or negated too) of a scaled ``DECIMAL`` cast, or a column
+    the same SQL defines as one."""
+    found = []
+    for body in _sql_cast_bodies(sql):
+        to_double = _TO_DOUBLE.search(body)
+        if not to_double:
+            continue
+        inner = body[:to_double.start()].strip().lstrip("-").strip()
+        if re.match(r"SUM\(", inner, re.I):
+            hit = re.search(_SCALED_DECIMAL, inner[4:_closing_paren(inner, 3)], re.I)
+        elif re.fullmatch(r"(\w+\.)?\w+", inner):
+            alias = inner.rsplit(".", 1)[-1]
+            hit = re.search(_SCALED_DECIMAL + r"\)*\s+AS\s+" + alias + r"\b", sql, re.I)
+        else:
+            hit = None
+        if hit:
+            found.append(body)
+    return found
+
+
 def test_package_has_one_decimal_readback_rule():
-    """``functions/numeric.py`` owns the decimal → double read-back: Spark
-    casts a decimal straight to double, so no ``.cast("string")`` is read
-    back as ``"double"`` and no ``to_d`` closure wraps either engine's
-    hop; the DuckDB ``CAST(CAST(… AS VARCHAR) AS DOUBLE)`` text is only
-    spelled by ``dec_double_sql``."""
+    """``functions/numeric.py`` owns the decimal → double read-back and
+    the decimal grid.  Spark casts a decimal straight to double, so no
+    ``.cast("string")`` is read back as ``"double"`` and no ``to_d``
+    closure wraps either engine's hop; the DuckDB
+    ``CAST(CAST(… AS VARCHAR) AS DOUBLE)`` text is only spelled by
+    ``dec_double_sql``, and no oracle casts a scaled decimal to double
+    directly (DuckDB's direct cast double-rounds).  A term is put on the
+    ``DECIMAL(38, k)`` grid only by ``quantize[_sql]`` / ``grid_sum[_sql]``:
+    no ``q9_sum`` name, no ``CAST(round(…) AS DECIMAL(38, k))`` text and
+    no Spark ``.cast("decimal(38, k)")`` of a ``round`` call, or of a
+    name or lambda bound to one, outside ``numeric.py``."""
     found = []
     for rel, tree in _package_trees():
+        rounded = {
+            (scope, node.targets[0].id)
+            for scope, node in _scoped_nodes(tree)
+            if isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name)
+            and _is_round(getattr(node.value, "body", node.value))
+        }
         for scope, node in _scoped_nodes(tree):
+            text = (node.value if isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    else ast.unparse(node) if isinstance(node, ast.JoinedStr) else None)
+            cast_of = node.func.value if (
+                isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "cast"
+                and node.args and str(getattr(node.args[0], "value", "")).startswith("decimal(38,")
+            ) else None
             if _is_cast_to(node, "double") and _is_cast_to(node.func.value, "string"):
                 hit = "string hop"
             elif (isinstance(node, ast.Assign) and isinstance(node.value, ast.Lambda)
                   and any(getattr(t, "id", None) == "to_d" for t in node.targets)):
                 hit = "to_d"
-            elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
-                  and _VARCHAR_HOP.search(node.value)
+            elif (isinstance(node, ast.Constant) and text and _VARCHAR_HOP.search(text)
                   and rel != os.path.join("functions", "numeric.py")):
                 hit = "VARCHAR hop"
+            elif _name_of(node) in ("q9_sum", "q9_sum_sql"):
+                hit = "q9_sum"
+            elif text and any(_GRID_CAST.match(b) for b in _sql_cast_bodies(text)):
+                hit = "SQL grid cast"
+            elif cast_of is not None and (
+                    _is_round(cast_of)
+                    or (scope, getattr(cast_of, "id", None)) in rounded
+                    or (scope, getattr(getattr(cast_of, "func", None), "id", None)) in rounded):
+                hit = "Spark grid cast"
             else:
                 continue
             found.append((rel, scope, node.lineno, hit))
+    found += [(name, "oracle", 0, body) for name, sql in oracle_sql().items()
+              for body in _direct_decimal_to_double(sql)]
     assert found == []
 
 
